@@ -1609,8 +1609,8 @@ object Dedup {
     * shard's array within [[adaptiveBloomBits]]' range (1 until ~10^8
     * keys — where sharded ≡ flat row-for-row, spec-pinned), then the
     * per-shard bits for the per-shard share. Callers that size from a
-    * count instead of picking constants ([[graft.serve.Retrieval
-    * .screenIngest]]) never hit the flat form's refusal. */
+    * count instead of picking constants never hit the flat form's
+    * refusal. */
   def adaptiveBloomGeometry(n: Long): (Int, Int) = {
     val want = math.max(1L << 10, 10L * math.max(n, 1L))
     var shards = (1L + (want - 1) / (1L << 30)).toInt
@@ -1650,8 +1650,7 @@ object Dedup {
     * (~2 GB per 10^9 keys as parquet rows), equi-joined or broadcast.
     * Deterministic (md5 positions, no RNG), so two builds of the same
     * corpus are row-identical and the oracle can replay it in SQL.
-    * Bits are one-way — corpus DELETES need a rebuild (or the
-    * [[graft.serve.Retrieval]] per-publish regeneration); a
+    * Bits are one-way — corpus DELETES need a rebuild; a
     * delete-heavy corpus uses [[countingBloomBits]] instead, which
     * trades ~128× the metadata for O(delta) decrements. */
   def bloomBits(keys: DataFrame, mbits: Int = BloomMBits,
@@ -1783,9 +1782,8 @@ object Dedup {
     // `screened` feeds BOTH the confirm filter and the final audit
     // join, and its lineage carries the corpus bit-array aggregate —
     // the call's dominant cost; materialize so it runs exactly
-    // once (the [[graft.serve.Retrieval]] ingestBloom materialize
-    // convention; cache() matches canonicalized plans and can alias
-    // across rebuilt inputs, the bug the x99 spec caught)
+    // once (localCheckpoint, not cache(): cache() matches
+    // canonicalized plans and can alias across rebuilt inputs)
     val screened = materialize(screen(ik, ck), checkpointDir)
     // hint broadcast only while the suspect set is COUNTED small (one
     // bounded aggregate over the checkpointed screen output): a bulk
@@ -1837,8 +1835,7 @@ object Dedup {
     * summed). A filter past HALF full is past re-indexing time: FP =
     * fill^k compounds fast beyond it (0.5^5 ≈ 3%, 0.7^5 ≈ 17%), and
     * bits cannot be un-set, so the fix is a fresh, larger (or sharded)
-    * artifact — the [[graft.serve.Retrieval]] cell-drift rule on the
-    * dedup axis.
+    * artifact.
     *
     * `shards` scales the denominator for a [[shardedBloomBits]] frame
     * (total capacity is shards·mbits); a frame that carries a `shard`
@@ -2032,36 +2029,6 @@ object Dedup {
       .putLong(GeomKhashKey, khash.toLong)
       .build()
 
-  /** The `(shards, mbits, khash)` geometry pin a counting frame's
-    * `cnt` column carries, when it carries one — None for a pin-less
-    * frame (built by something other than the builders here). Lets a
-    * LOAD path cross-check a persisted frame against its external
-    * geometry record ([[graft.serve.Retrieval]]'s `_bloomgeom`
-    * sidecar) and take its documented fallback on disagreement,
-    * instead of deferring the mismatch to
-    * [[requireCountingGeometry]]'s refusal at first screen. */
-  def countingGeometryPinOf(counts: DataFrame): Option[(Int, Int, Int)] =
-    counts.schema.fields.find(_.name == "cnt").map(_.metadata)
-      .filter(_.contains(GeomMbitsKey)).map { m =>
-        val fs =
-          if (m.contains(GeomShardsKey)) m.getLong(GeomShardsKey) else 1L
-        (fs.toInt, m.getLong(GeomMbitsKey).toInt,
-          m.getLong(GeomKhashKey).toInt)
-      }
-
-  /** Wrap a FLAT folded counting state `(pos, cnt)` — a
-    * [[graft.streaming.StreamingCountingBloom]] chain's
-    * `countingState`, whose aggregate stripped the pin — as the
-    * sharded frame at shards=1 with the geometry pin attached: the
-    * shape [[graft.serve.Retrieval]] persists and screens against.
-    * The CALLER asserts the state was built at exactly `(mbits,
-    * khash)` — that is what attaching the pin means. */
-  def adoptedCountingFrame(flatCounts: DataFrame, mbits: Int,
-      khash: Int = BloomHashes): DataFrame =
-    flatCounts.select(lit(0L).as("shard"), col("pos"),
-      col("cnt").cast("long")
-        .as("cnt", countingGeomMetadata(1, mbits, khash)))
-
   /** Validate a counting frame's pinned geometry against the caller's
     * knobs — refuse a mismatch LOUDLY instead of letting colliding
     * decrements pass the negative check silently. A frame whose `cnt`
@@ -2123,9 +2090,8 @@ object Dedup {
     * per-position increment over the merged frame, no refusal needed
     * (adding evidence can never void the guarantee). With add and
     * remove, a delete-heavy deployment's filter follows its corpus
-    * through any churn without EVER re-aggregating it — exactly the
-    * publish path [[graft.serve.Retrieval]] wires for counting-backed
-    * snapshots. Same geometry pin discipline; lazy (no refusal
+    * through any churn without EVER re-aggregating it. Same geometry
+    * pin discipline; lazy (no refusal
     * aggregate to run), so callers chain it freely. */
   def countingBloomAdd(counts: DataFrame, addedKeys: DataFrame,
       mbits: Int = BloomMBits, khash: Int = BloomHashes): DataFrame = {
@@ -2691,58 +2657,6 @@ object Dedup {
     * `highestOneBit` mirror). */
   def adaptiveBloomBitsSql(countSql: String): String =
     s"(1::BIGINT << length(format('{:b}', GREATEST(1024, 10 * ($countSql)) - 1)))"
-
-  /** Oracle for [[graft.serve.Retrieval.screenIngest]] (x99): the
-    * snapshot's ingest filter replayed in SQL — the corpus is ALL of
-    * `documents` (what the registry snapshot indexes), the key is the
-    * snapshot fingerprint `md5(text)` EXACT (the dh column, not the
-    * normalized dedup key), and mbits derives from the corpus count in
-    * SQL exactly as [[adaptiveBloomBits]] does on the handle, so the
-    * same oracle string is correct at every fixture scale. `incSql`
-    * selects the increment's `(doc_id, text)`. */
-  def snapshotScreenSql(incSql: String,
-      khash: Int = BloomHashes, corpusPred: String = "TRUE"): String = {
-    def pos(key: String) =
-      s"('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || $key), 1, 8))::BIGINT" +
-        s" % (SELECT m FROM mb)"
-    // `corpusPred` selects the snapshot's LIVE corpus (x105 rebuilds
-    // with a fifth of the docs dropped). Geometry derives from the
-    // SURVIVING count in every case: the engine keeps its pinned
-    // geometry only while adaptiveBloomGeometry(newCount) still equals
-    // it (the O(delta) staging guard) and regenerates at the fresh
-    // derivation otherwise — both branches land on
-    // adaptive(survivingCount). The replay stays the flat BIT filter
-    // even against a counting-backed snapshot: with the decrements
-    // in (counts built over the surviving multiset), cnt > 0 occupies
-    // exactly the positions the bit filter of the survivors sets — the
-    // cross-flavor equivalence that makes the counting serve
-    // bit-oracle-checkable.
-    s"""WITH mb AS (
-       |  SELECT ${adaptiveBloomBitsSql(
-      s"SELECT count(*) FROM documents WHERE $corpusPred")} AS m
-       |), ck AS (
-       |  SELECT md5(text) AS k FROM documents WHERE $corpusPred
-       |), bloom AS (
-       |  SELECT pos // 32 AS word, bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS bits
-       |  FROM (SELECT ${pos("k")} AS pos FROM ck, range(0, $khash) r(i))
-       |  GROUP BY word
-       |), ik AS (
-       |$incSql
-       |), ikk AS (
-       |  SELECT doc_id, md5(text) AS content_key FROM ik
-       |), lk AS (
-       |  SELECT doc_id, content_key, pos // 32 AS word,
-       |    1::BIGINT << CAST(pos % 32 AS INT) AS mask
-       |  FROM (
-       |    SELECT doc_id, content_key, ${pos("content_key")} AS pos
-       |    FROM ikk, range(0, $khash) r(i)
-       |  )
-       |)
-       |SELECT doc_id, content_key,
-       |  bool_and((coalesce(b.bits, 0) & mask) <> 0) AS maybe_seen
-       |FROM lk LEFT JOIN bloom b USING (word)
-       |GROUP BY doc_id, content_key""".stripMargin
-  }
 
   /** [[ingestScreen]] oracle: the bloom frame replayed in SQL —
     * corpus keys × khash hash positions, bit-OR'd into the same

@@ -213,11 +213,9 @@ object HybridOps {
        |QUALIFY rn <= $k""".stripMargin
   }
 
-  /** The doc-level RRF fusion block shared by [[snapshotSearchSql]]
-    * and [[rebuildSearchSql]]: full-outer join of the two ranked
-    * halves, exact integer RRF, rank + QUALIFY — single-sourced so the
-    * fused arithmetic can never drift between the snapshot and
-    * rebuild oracles. */
+  /** The doc-level RRF fusion block of [[snapshotSearchSql]]:
+    * full-outer join of the two ranked halves, exact integer RRF,
+    * rank + QUALIFY. */
   private def docFusedSql(lexSql: String, denseSql: String, k: Int): String = {
     val d = rrfDenom(k)
     VectorOps.materializedCtes(s"""WITH lex AS (
@@ -240,8 +238,7 @@ object HybridOps {
        |QUALIFY rn <= $k""".stripMargin)
   }
 
-  /** The chunk-attributed twin of [[docFusedSql]], shared by
-    * [[chunkSearchSql]], [[rebuildChunkSearchSql]] and
+  /** The chunk-attributed twin of [[docFusedSql]], used by
     * [[chunkHybridTopKSql]]: both halves rank chunks and dedup to
     * docs, so attribution rides the fusion join from EITHER side —
     * the lexical best chunk wins, the dense best chunk covers
@@ -285,37 +282,6 @@ object HybridOps {
       VectorOps.ivfPqRefineTopKSql(queries.map(_._1), k, r, nprobe,
         cellsSql = cellsSql), k)
 
-  /** Oracle for [[graft.serve.Retrieval.searchChunks]]' default serve:
-    * the chunk-ranked, doc-deduped lexical half ([[TextOps
-    * .bm25ChunkTopKSql]]) RRF-fused with the CHUNK-vector
-    * residual-IVFADC dense half ([[VectorOps.chunkIvfPqMaxSimSql]] —
-    * the stored chunk index's probe-pruned ADC + MaxSim chain, exactly
-    * what the handle's `chunkDenseTopK` serves), the fused row
-    * carrying the lex half's best chunk_id, the dense half's where
-    * only it surfaced the doc. */
-  def chunkSearchSql(queries: Seq[(Long, Seq[String])], k: Int,
-      nprobe: Int, refine: Option[Int] = None,
-      cellsSql: String = VectorOps.NumCentroids.toString): String =
-    chunkFusedSql(TextOps.bm25ChunkTopKSql(queries, k),
-      VectorOps.chunkIvfPqMaxSimSql(queries.map(_._1), k, nprobe,
-        refine = refine, cellsSql = cellsSql), k)
-
-  /** Oracle for [[graft.serve.Retrieval.searchChunksFiltered]] (x86):
-    * [[chunkSearchSql]]'s fusion with BOTH halves candidate-restricted
-    * to the allowed doc-id list BEFORE their ranks (all of a filtered
-    * doc's chunks drop together) while df/N/avgdl and the probed cells
-    * stay collection-global — the Lucene filter-query semantics the
-    * doc-level [[searchFilteredSql]] pins, at chunk level. */
-  def chunkSearchFilteredSql(queries: Seq[(Long, Seq[String])], k: Int,
-      nprobe: Int, allowedSql: String,
-      refine: Option[Int] = None,
-      cellsSql: String = VectorOps.NumCentroids.toString): String =
-    chunkFusedSql(
-      TextOps.bm25ChunkTopKSql(queries, k, allowedSql = Some(allowedSql)),
-      VectorOps.chunkIvfPqMaxSimSql(queries.map(_._1), k, nprobe,
-        allowedSql = Some(allowedSql), refine = refine,
-        cellsSql = cellsSql), k)
-
   /** Oracle for the BPE-METERED chunk hybrid (x90): both halves rank
     * model-context-true windows — the lexical half over BPE-SYMBOL
     * chunk stats with the queries encoded to symbols IN SQL through
@@ -337,8 +303,8 @@ object HybridOps {
     // refine composes in the SAME scope: the shortlist/rerank CTEs
     // ([[VectorOps.chunkRefineCtesSql]], leading-comma convention)
     // reference cscored/cke/ses, all defined by the shared chain;
-    // `allowedSql` restricts BOTH halves before their ranks (the x86
-    // pre-filter semantics at the BPE meter)
+    // `allowedSql` restricts BOTH halves before their ranks (the
+    // [[searchFilteredSql]] pre-filter semantics at the BPE meter)
     val (denseSrc, refineCtes) = refine match {
       case None => ("cscored", "")
       case Some(r) => ("crfx", VectorOps.chunkRefineCtesSql(
@@ -377,39 +343,6 @@ object HybridOps {
          |FROM cfused
          |QUALIFY rn <= $k""".stripMargin)
   }
-
-  /** Oracle for the chunk-level serve over a REBUILT snapshot (x80):
-    * [[chunkSearchSql]]'s fusion where BOTH halves see the REFRESHED
-    * corpus but the dense half's coarse + residual books train on the
-    * PRIOR corpus only ([[VectorOps.chunkIvfPqMaxSimSql]]'s
-    * train/serve split) — so the incremental ctf/cdl bucket merge AND
-    * the incremental chunk-index cell merge are oracle-gated
-    * end-to-end under exactly the fixed-codebook refresh semantics
-    * x70 pins for the doc-level serve. */
-  def rebuildChunkSearchSql(queries: Seq[(Long, Seq[String])], k: Int,
-      nprobe: Int, trainEmbSql: String, serveEmbSql: String,
-      serveDocsSql: String,
-      cellsSql: String = VectorOps.NumCentroids.toString): String =
-    chunkFusedSql(
-      TextOps.bm25ChunkTopKSql(queries, k, docsSql = Some(serveDocsSql)),
-      VectorOps.chunkIvfPqMaxSimSql(queries.map(_._1), k, nprobe,
-        trainEmbSql = trainEmbSql, serveEmbSql = serveEmbSql,
-        serveDocsSql = Some(serveDocsSql), cellsSql = cellsSql), k)
-
-  /** Oracle for [[graft.serve.Retrieval.rebuild]]'s end-to-end serve
-    * (x70): the [[snapshotSearchSql]] fusion where the dense half's
-    * codebooks train on the PRIOR corpus only
-    * ([[VectorOps.ivfPqFixedBookRefineSql]]) and both halves serve the
-    * REFRESHED corpus — so the incremental merge path is oracle-gated
-    * against exactly the fixed-codebook semantics the handle promises. */
-  def rebuildSearchSql(queries: Seq[(Long, Seq[String])], k: Int,
-      r: Int, nprobe: Int, trainEmbSql: String, serveEmbSql: String,
-      serveDocsSql: String,
-      cellsSql: String = VectorOps.NumCentroids.toString): String =
-    docFusedSql(
-      TextOps.bm25TopKSql(queries, k, docsSql = Some(serveDocsSql)),
-      VectorOps.ivfPqFixedBookRefineSql(queries.map(_._1), k, r,
-        nprobe, trainEmbSql, serveEmbSql, cellsSql = cellsSql), k)
 
   /** Chunk-level HYBRID retrieval — the full production RAG shape
     * composed from the two audited chunk-ranked, doc-deduped halves:
@@ -453,10 +386,11 @@ object HybridOps {
 
   /** Artifact-fed chunk-level hybrid — [[chunkHybridTopK]]'s serve
     * composition over PREBUILT frames: a stored/streamed chunk-lexical
-    * index (`ctf`/`cdl` — [[graft.serve.Retrieval]]'s v3 frames or
-    * [[graft.streaming.StreamingLexical]]'s resolved artifact) and a
-    * composite-key chunk-code frame (the snapshot's `cindex` or
-    * [[graft.streaming.StreamingVectorIndex]]'s resolved `civf`). The
+    * index (`ctf`/`cdl` — [[graft.streaming.StreamingLexical]]'s
+    * resolved artifact or frames written by [[TextOps.chunkBm25Stats]])
+    * and a composite-key chunk-code frame
+    * ([[graft.streaming.StreamingVectorIndex]]'s resolved `civf` or a
+    * cell-partitioned [[VectorOps.chunkIvfPqIndex]] write). The
     * [[searchFrom]] convention at chunk level: scoring and fusion are
     * the one batch code path, so batch and streamed chunk-hybrid
     * serves stay equivalence-comparable row for row. */
@@ -506,15 +440,6 @@ object HybridOps {
       // driver-side query tokens could diverge from indexed tokens
       id -> text.toLowerCase(java.util.Locale.ROOT).split(" ", -1).toSeq
     }
-
-  /** [[search]] over raw query strings — tokenized by
-    * [[tokenizeQueries]], then the standard serve. */
-  def searchText(docs: DataFrame, embeddings: DataFrame,
-      queries: Seq[(Long, String)], k: Int, policy: Fusion = Rrf,
-      numPlanes: Int = VectorOps.NumPlanes,
-      checkpointDir: Option[String] = None): DataFrame =
-    search(docs, embeddings, tokenizeQueries(queries), k, policy,
-      numPlanes, checkpointDir)
 
   /** End-to-end RRF hybrid — [[search]] under the `Rrf` policy (kept as
     * the named two-arg form the specs and streaming serves call). */

@@ -41,27 +41,38 @@ object Par {
     * points are independent by construction (each reads its own
     * artifacts and checkpoints its own frames). A small fixed pool —
     * 2–3 jobs in flight is enough to fill the tail without fighting
-    * for executors (§2.6); results return in input order and
-    * exceptions propagate unwrapped, so failure behavior matches the
-    * sequential form. */
+    * for executors (§2.6); results return in input order.
+    *
+    * Failure cancels the siblings: results are awaited in COMPLETION
+    * order, so the first task to fail is seen at once (not after every
+    * earlier-submitted sibling finishes), the pool is shut down NOW —
+    * running siblings are interrupted and queued ones never start —
+    * and after a bounded wait for them to unwind the original cause
+    * propagates unwrapped, as in the sequential form. */
   def concurrently[A](tasks: Seq[() => A]): Seq[A] =
     if (tasks.lengthCompare(2) < 0) tasks.map(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(tasks.length, 3))
+      import java.util.concurrent._
+      val pool = Executors.newFixedThreadPool(math.min(tasks.length, 3))
+      val done = new ExecutorCompletionService[A](pool)
       try {
         val fs = tasks.map { t =>
-          pool.submit(new java.util.concurrent.Callable[A] {
-            override def call(): A = t()
-          })
+          done.submit(new Callable[A] { override def call(): A = t() })
         }
-        fs.map { f =>
-          try f.get()
+        fs.foreach { _ =>
+          try done.take().get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
+            case e: ExecutionException =>
+              pool.shutdownNow()
+              pool.awaitTermination(CancelWaitSeconds, TimeUnit.SECONDS)
               throw e.getCause
           }
         }
+        fs.map(_.get())
       } finally { pool.shutdown(); () }
     }
+
+  /** How long a failed [[concurrently]] waits for its interrupted
+    * siblings to unwind before rethrowing. */
+  private val CancelWaitSeconds = 10L
 }

@@ -840,18 +840,11 @@ object TextOps {
     * subquery restricting candidates before the rank (global stats,
     * the filter-query semantics above). */
   def bm25TopKSql(queries: Seq[(Long, Seq[String])], k: Int,
-      allowedSql: Option[String] = None,
-      docsSql: Option[String] = None): String = {
+      allowedSql: Option[String] = None): String = {
     val restrict = allowedSql
       .map(a => s"WHERE doc_id IN ($a)\n").getOrElse("")
-    // docsSql swaps the corpus for a derived `(doc_id, text)` SELECT
-    // (the x70 refreshed-corpus serve); absent, the emitted text is
-    // byte-identical to the historical generator
-    val (srcCte, srcName) = docsSql
-      .map(d => (s"docs_src AS (\n$d\n), ", "docs_src"))
-      .getOrElse(("", "documents"))
-    s"""WITH ${srcCte}tok AS (
-       |  SELECT doc_id, unnest(${tokensSql("text")}) AS token FROM $srcName
+    s"""WITH tok AS (
+       |  SELECT doc_id, unnest(${tokensSql("text")}) AS token FROM documents
        |), tf AS (
        |  SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token
        |), dl AS (
@@ -1181,9 +1174,9 @@ object TextOps {
     * [[bpeChunkIds]] and [[bpeChunkBm25Stats]] — one encode + window
     * pass, three projections. PUBLIC as the chunk-once seam for
     * builders that feed several consumers from one materialized pass
-    * (the [[chunkBm25StatsFrom]] convention at the BPE meter —
-    * [[graft.serve.Retrieval.build]] derives the subword postings AND
-    * the chunk-vector keys from one slice frame). */
+    * (the [[chunkBm25StatsFrom]] convention at the BPE meter — the
+    * subword postings AND the chunk-vector keys from one slice
+    * frame). */
   def bpeChunkSlices(docs: DataFrame, rules: Seq[(String, String)],
       window: Int = BpeChunkWindow,
       overlap: Int = BpeChunkOverlap): DataFrame =
@@ -1435,8 +1428,8 @@ object TextOps {
     * Scale shape: pure per-doc column work — tokenize, one bounded
     * `sequence` explode (fan-out = chunks per doc, data-proportional),
     * an array slice per row. Map-only, no shuffle, no window; chunk
-    * rows land embedding-ready for [[graft.serve.Retrieval.build]]'s
-    * corpus or the streaming indexes (chunk_id composes into the vec_id
+    * rows land embedding-ready for the chunk-vector encode or the
+    * streaming indexes (chunk_id composes into the vec_id
     * space as `doc_id * maxChunks + chunk_id`). */
   /** THE window arithmetic, shared by [[chunkDocs]] (whitespace meter)
     * and [[bpeChunkDocs]] (learned-token meter): explode a per-doc
@@ -1495,10 +1488,9 @@ object TextOps {
     * `slice(a, window)`. */
   def chunkDocsSql(window: Int = ChunkWindow,
       overlap: Int = ChunkOverlap, docsSql: Option[String] = None): String = {
-    // docsSql swaps the corpus for a derived `(doc_id, text)` SELECT
-    // (the bm25TopKSql convention) — chunk-level oracles over evolved
-    // corpora compose through here instead of duplicating the chunk
-    // arithmetic
+    // docsSql swaps the corpus for a derived `(doc_id, text)` SELECT —
+    // chunk-level oracles over evolved corpora compose through here
+    // instead of duplicating the chunk arithmetic
     val (srcCte, srcName) = docsSql
       .map(d => (s"cdocs_src AS (\n$d\n), ", "cdocs_src"))
       .getOrElse(("", "documents"))
@@ -1510,7 +1502,7 @@ object TextOps {
        |FROM c""".stripMargin
   }
 
-  // --- chunk-level BM25 retrieval (x78/x79) -------------------------------
+  // --- chunk-level BM25 retrieval (x78) ------------------------------------
 
   /** The chunk-level lexical index frames: `(doc_id, chunk_id, token,
     * tf)` and `(doc_id, chunk_id, dl)` over [[chunkDocs]]' windows —
@@ -1521,8 +1513,7 @@ object TextOps {
     * doc's chunk rows depend on its text alone — so the [[bm25Stats]]
     * incremental-maintenance argument carries over verbatim: a corpus
     * slice's chunk stats computed in isolation equal its stats within
-    * the full corpus, and [[graft.serve.Retrieval.rebuild]] merges
-    * these by doc-id bucket exactly like tf/dl.
+    * the full corpus.
     *
     * `ctf` is MATERIALIZED for [[bm25Stats]]' three-consumer reason
     * (scoring join, `cdl`, df). Chunking itself is the map-only
@@ -1583,7 +1574,7 @@ object TextOps {
 
   /** [[bm25ChunkTopKFrom]] over a raw corpus — chunk, index, serve in
     * one plan (the batch/oracle-gated entry; a deployment serves from
-    * [[graft.serve.Retrieval]]'s stored chunk frames instead). */
+    * stored chunk frames through [[bm25ChunkTopKFrom]] instead). */
   def bm25ChunkTopK(docs: DataFrame, queries: Seq[(Long, Seq[String])],
       k: Int, window: Int = ChunkWindow, overlap: Int = ChunkOverlap,
       checkpointDir: Option[String] = None): DataFrame = {

@@ -132,10 +132,9 @@ object VectorOps {
 
   /** [[chunkEmbeddings]] over a PREBUILT chunk frame — shares one
     * [[TextOps.chunkDocs]] pass with the lexical chunk index instead of
-    * re-chunking the corpus per consumer ([[graft.serve.Retrieval
-    * .build]] and [[HybridOps.chunkHybridTopK]] both chunk exactly once
-    * and feed this plus [[TextOps.chunkBm25StatsFrom]] from the same
-    * frame). This (and every chunk-dense builder downstream —
+    * re-chunking the corpus per consumer ([[HybridOps.chunkHybridTopK]]
+    * chunks exactly once and feeds this plus
+    * [[TextOps.chunkBm25StatsFrom]] from the same frame). This (and every chunk-dense builder downstream —
     * [[multiVectorTopK]], [[chunkIvfPqIndex]]) is ALSO the
     * external-model ingestion seam: a deployment that embeds chunks
     * with a real model hands any `(doc_id, chunk_id, embedding)` frame
@@ -258,8 +257,7 @@ object VectorOps {
     * `partitionBy(cell)` and serves partition-pruned exactly like the
     * doc-level index. Books are the snapshot's own coarse + residual
     * codebooks — chunk vectors live in the doc-vector space, so the
-    * doc-trained books encode them under the same fixed-codebook
-    * contract [[graft.serve.Retrieval.rebuild]] pins. */
+    * doc-trained books encode them under the same fixed codebooks. */
   def chunkIvfPqIndex(chunkEmb: DataFrame, cents: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]]): DataFrame =
     ivfPqIndex(
@@ -364,8 +362,8 @@ object VectorOps {
   }
 
   /** [[chunkIvfPqTopKFromIndex]] oracle, generalized over train/serve
-    * corpora exactly like [[ivfPqFixedBookRefineSql]]: coarse + residual
-    * books train on `trainEmbSql`'s corpus ONLY; the chunk frame derives
+    * corpora: coarse + residual books train on `trainEmbSql`'s corpus
+    * ONLY; the chunk frame derives
     * from `serveDocsSql`'s docs × `serveEmbSql`'s vectors ([[
     * chunkEmbeddings]]' parity rule, composite key); chunk vectors are
     * assigned + residual-encoded under the FIXED books; probes draw the
@@ -479,8 +477,8 @@ object VectorOps {
       // chains (the engine sized cells from the corpus count), a
       // literal for fixed-codebook artifact chains
       cellsSql: String = NumCentroids.toString): String = {
-    // pre-filter semantics, the [[graft.serve.Retrieval]] filtered
-    // serve's: the allowed doc-id list restricts candidates BEFORE the
+    // pre-filter semantics ([[HybridOps.searchFilteredSql]]'s): the
+    // allowed doc-id list restricts candidates BEFORE the
     // MaxSim/rank (all of a filtered doc's chunks drop together); the
     // probed cells stay collection-global
     val restrict = allowedSql
@@ -819,8 +817,8 @@ object VectorOps {
     * x94 codebook curve MEASURED (recall@5 at the shipped serve point
     * ran 0.448 → 0.628 → 0.840 for 16 → 32 → 64 cells on the
     * 2,000-vector fixture) turned into the behavior a build gets by
-    * default: [[graft.serve.Retrieval.build]]/`retrain` size their
-    * coarse codebook with this instead of baking [[NumCentroids]], so
+    * default: [[graft.serve.Retrieval.build]] sizes its coarse
+    * codebook with this instead of baking [[NumCentroids]], so
     * a 10⁹-vector corpus trains ~31,623 cells without the operator
     * knowing to override anything, and the trained count persists with
     * the codebook (cells = the stored centroid rows). Clamped to
@@ -957,7 +955,7 @@ object VectorOps {
     * corpus, the inverted-file scale path (vs. LSH's hash buckets).
     * `centroids` defaults to the trained codebook (see
     * [[trainedCentroids]]); pass one explicitly to reuse a snapshot's
-    * codebook artifact instead of retraining per query. */
+    * codebook artifact instead of training it again per query. */
   def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int, nprobe: Int,
       centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
     val cents = centroids.getOrElse(trainedCentroids(embeddings))
@@ -1025,7 +1023,7 @@ object VectorOps {
     * skewed count histogram says the codebook under-fits (hot cells →
     * probe cost); low coherence says vectors sit far from their
     * centroid (recall risk) — both are what an operator consults before
-    * retraining with more cells. One map-only assignment scan + one
+    * training again with more cells. One map-only assignment scan + one
     * hash aggregate; NaN members (zero vectors) are excluded from the
     * report like every scorer here. Mean is computed by EXACT decimal
     * summation of 6-dp-rounded cosines, so partial-agg order cannot
@@ -1397,7 +1395,7 @@ object VectorOps {
   /** The registration-facing long form: one `(vec_id, sub, code)` row
     * per subspace. NOTE: constructing this under the default books RUNS
     * the training loop (the x13/x18/x26 eager-build exception); pass a
-    * snapshot's codebook artifact to reuse instead of retraining. */
+    * snapshot's codebook artifact to reuse instead of training again. */
   def pqCodes(embeddings: DataFrame,
       books: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
     val bks = books.getOrElse(pqTrainedCodebooks(embeddings))
@@ -1918,118 +1916,6 @@ object VectorOps {
        |WHERE cosine IS NOT NULL AND NOT isnan(cosine)
        |QUALIFY rn <= $k""".stripMargin)
 
-  /** Dense half of the incremental-snapshot oracle (x70) — the SQL
-    * mirror of [[graft.serve.Retrieval.rebuild]]'s fixed-codebook
-    * contract: the coarse codebook AND the residual PQ books train on
-    * `trainSql`'s corpus ONLY (the prior snapshot's corpus), the
-    * refreshed corpus `serveSql` is assigned + residual-encoded under
-    * those FIXED books, and the serve is the x63 two-stage refine over
-    * the re-encoded index. Both args are complete `(vec_id, v)` SELECTs
-    * (v already double). The train chains are [[kmeansCtes]] /
-    * [[pqKmeansCtes]] verbatim; only the encode pass reads the serve
-    * corpus — exactly the split `rebuild` makes physical. */
-  def ivfPqFixedBookRefineSql(queryIds: Seq[Long], k: Int, r: Int,
-      nprobe: Int, trainSql: String, serveSql: String,
-      iters: Int = KMeansIters, m: Int = PqSubspaces,
-      ksub: Int = PqSubCentroids, pqIters: Int = PqIters,
-      cellsSql: String = NumCentroids.toString): String = {
-    val d = Dim / m
-    val perSub = (0 until m).map { mi =>
-      val a = mi * d + 1
-      val b = (mi + 1) * d
-      s"""sc_$mi AS (
-         |  SELECT s.vec_id, p.cent_id AS code,
-         |    row_number() OVER (PARTITION BY s.vec_id ORDER BY
-         |      ${l2sqSql("s.sv", "p.cv", d)}, p.cent_id) AS rn
-         |  FROM (SELECT vec_id, v[$a:$b] AS sv FROM sres) s
-         |  CROSS JOIN (SELECT cent_id, cv FROM pcents WHERE sub = $mi) p
-         |  QUALIFY rn = 1
-         |)""".stripMargin
-    }
-    val scodes = (0 until m)
-      .map(mi => s"SELECT vec_id, CAST($mi AS INT) AS sub, code FROM sc_$mi")
-      .mkString("scodes AS (\n", "\n  UNION ALL\n", "\n)")
-    materializedCtes(s"""WITH e AS (
-       |$trainSql
-       |),
-       |${kmeansCtes(cellsSql, iters)},
-       |cents AS (SELECT cent_id, cv FROM cents$iters),
-       |tassign AS (
-       |  SELECT vec_id, v, cent_id AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      ${dotSql("v", "cv")} / (${normSql("v")} * ${normSql("cv")}) DESC,
-       |      cent_id) AS rn
-       |  FROM e CROSS JOIN cents
-       |  QUALIFY rn = 1
-       |), res AS (
-       |  SELECT a.vec_id,
-       |    list_transform(range(1, ${Dim + 1}), i -> a.v[i] - c.cv[i]) AS v
-       |  FROM tassign a JOIN cents c ON c.cent_id = a.cell
-       |),
-       |${pqKmeansCtes(m, ksub, pqIters, src = "res")},
-       |es AS (
-       |$serveSql
-       |), sassign AS (
-       |  SELECT vec_id, v, cent_id AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      ${dotSql("v", "cv")} / (${normSql("v")} * ${normSql("cv")}) DESC,
-       |      cent_id) AS rn
-       |  FROM es CROSS JOIN cents
-       |  QUALIFY rn = 1
-       |), sres AS (
-       |  SELECT a.vec_id,
-       |    list_transform(range(1, ${Dim + 1}), i -> a.v[i] - c.cv[i]) AS v
-       |  FROM sassign a JOIN cents c ON c.cent_id = a.cell
-       |),
-       |${perSub.mkString(",\n")},
-       |$scodes,
-       |srecon AS (
-       |  SELECT c.vec_id, flatten(list(p.cv ORDER BY c.sub)) AS rv
-       |  FROM scodes c JOIN pcents p ON p.sub = c.sub AND p.cent_id = c.code
-       |  GROUP BY c.vec_id
-       |), sxhat AS (
-       |  SELECT r.vec_id, a.cell,
-       |    list_transform(range(1, ${Dim + 1}), i -> c.cv[i] + r.rv[i]) AS rv
-       |  FROM srecon r
-       |  JOIN sassign a ON a.vec_id = r.vec_id
-       |  JOIN cents c ON c.cent_id = a.cell
-       |), sprobes AS (
-       |  SELECT q.vec_id AS query_id, q.v AS qv, cent_id AS cell,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${dotSql("q.v", "cv")} / (${normSql("q.v")} * ${normSql("cv")}) DESC,
-       |      cent_id) AS rn
-       |  FROM es q CROSS JOIN cents
-       |  WHERE q.vec_id IN (${queryIds.mkString(",")})
-       |  QUALIFY rn <= $nprobe
-       |), sscored AS (
-       |  SELECT p.query_id, x.vec_id,
-       |    round(${dotSql("p.qv", "x.rv")} /
-       |      (${normSql("p.qv")} * ${normSql("x.rv")}), 6) AS cosine
-       |  FROM sprobes p JOIN sxhat x ON x.cell = p.cell AND x.vec_id <> p.query_id
-       |), rshort AS (
-       |  SELECT query_id, vec_id,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
-       |  FROM sscored
-       |  WHERE cosine IS NOT NULL AND NOT isnan(cosine)
-       |  QUALIFY rn <= $r
-       |), rq AS (
-       |  SELECT vec_id AS query_id, v AS qv FROM es
-       |  WHERE vec_id IN (${queryIds.mkString(",")})
-       |), rscored AS (
-       |  SELECT s.query_id, s.vec_id,
-       |    round(${dotSql("q.qv", "e2.v")} /
-       |      (${normSql("q.qv")} * ${normSql("e2.v")}), 6) AS cosine
-       |  FROM rshort s
-       |  JOIN es e2 ON e2.vec_id = s.vec_id
-       |  JOIN rq q ON q.query_id = s.query_id
-       |)
-       |SELECT query_id, vec_id, cosine,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
-       |FROM rscored
-       |WHERE cosine IS NOT NULL AND NOT isnan(cosine)
-       |QUALIFY rn <= $k""".stripMargin)
-  }
-
   // --- binary (sign-bit) quantization + Hamming shortlist (x64) -----------
 
   /** Shortlist size of the two-stage binary/prefix serves — 4× the
@@ -2038,7 +1924,7 @@ object VectorOps {
   val BinaryShortlist = 20
 
   /** DEFAULT refine shortlist of the IVFADC snapshot serves
-    * ([[graft.serve.Retrieval.denseTopK]] / `searchFiltered`) — set
+    * ([[graft.serve.Retrieval!.denseTopK]]) — set
     * from the [[recallCurve]] measurement (x91, 50-query sample,
     * sf0.1, [[NumCentroids]]=32 cells), not guessed: r is the serve's
     * strong knob (doc refine recall@5 at nprobe=2 measured
@@ -2675,8 +2561,8 @@ object VectorOps {
   // --- serve-knob tuning curve (x91) ---------------------------------------
 
   /** The nprobe sweep [[recallCurve]] measures — every serve entry's
-    * probe-width knob ([[graft.serve.Retrieval.denseTopK]] /
-    * `chunkDenseTopK`), from the cheapest setting to a quarter of the
+    * probe-width knob ([[graft.serve.Retrieval!.denseTopK]]), from the
+    * cheapest setting to a quarter of the
     * [[NumCentroids]] cells (scan fraction 1/32 … 1/4). */
   val CurveNprobes: Seq[Int] = Seq(1, 2, 4, 8)
 
@@ -2765,13 +2651,11 @@ object VectorOps {
       docExact = docExact, chunkExact = chunkExact)
   }
 
-  /** [[recallCurve]] over PREBUILT frames — the form a LIVE snapshot
-    * meters itself with ([[graft.serve.Retrieval.measureRecall]]):
-    * `chunkEmb` is the full-precision chunk frame (the stored `cemb/`
-    * — on an external-model snapshot, the real vectors the derivation
-    * cannot reproduce), `docIndex`/`chunkIndex` the stored
-    * cell-partitioned code frames, `cents`/`books` the loaded
-    * codebooks. */
+  /** [[recallCurve]] over PREBUILT frames: `chunkEmb` is the
+    * full-precision chunk frame (for an external embedding model, the
+    * real vectors the derivation cannot reproduce), `docIndex`/
+    * `chunkIndex` the cell-partitioned code frames, `cents`/`books`
+    * the codebooks they were encoded under. */
   def recallCurveFrom(embeddings: DataFrame, chunkEmb: => DataFrame,
       docIndex: => DataFrame, chunkIndex: => DataFrame,
       cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
@@ -2972,8 +2856,9 @@ object VectorOps {
   /** Codebook-size TUNING CURVE (x94) — [[recallCurveFrom]] swept over
     * coarse centroid counts: for each cell count a fresh codebook +
     * residual books train and both indexes re-encode (that is what the
-    * knob COSTS — a codebook migration, [[graft.serve.Retrieval
-    * .retrain]]), then the same (nprobe × refine) grid scores against
+    * knob COSTS — a codebook migration, a full
+    * [[graft.serve.Retrieval.build]]), then the same (nprobe × refine)
+    * grid scores against
     * the SHARED exact baselines (computed once — they are codebook-
     * independent). Output adds a leading `cells` column to the
     * [[recallCurve]] row shape.
@@ -2987,7 +2872,7 @@ object VectorOps {
     * Scale shape: |cells| independent train+encode chains over the
     * corpus (each the priced [[ivfPqIndex]] build) + ONE pair of brute
     * baselines + per-grid-point window arithmetic — an offline harness
-    * run at retrain-evaluation cadence, never in a serve path. */
+    * run when choosing a codebook, never in a serve path. */
   def codebookCurve(embeddings: DataFrame, docs: DataFrame,
       queryIds: Seq[Long], k: Int,
       cells: Seq[Int] = CurveCells,
@@ -3067,9 +2952,9 @@ object VectorOps {
   /** PQ-subspace TUNING CURVE (x95) — [[recallCurveFrom]] swept over
     * the subspace count at a FIXED coarse codebook: the cells (and the
     * probe geometry with them) hold still while the residual books
-    * retrain per `m` and both indexes re-encode — that re-encode is
+    * train afresh per `m` and both indexes re-encode — that re-encode is
     * what the knob COSTS, a code migration at held cell layout (cheaper
-    * than x94's full retrain: the coarse codebook survives). The same
+    * than x94's full re-training: the coarse codebook survives). The same
     * (nprobe × refine) grid scores against the SHARED exact baselines
     * (codebook- and code-independent, computed once). Output adds a
     * leading `m` column to the [[recallCurve]] row shape.
@@ -3161,7 +3046,7 @@ object VectorOps {
   /** PQ sub-centroid TUNING CURVE (x97) — [[recallCurveFrom]] swept
     * over the per-subspace codebook size at FIXED coarse codebook and
     * FIXED subspace count: the cells and the code COUNT hold still
-    * while each `ksub` retrains the residual books and re-encodes both
+    * while each `ksub` trains fresh residual books and re-encodes both
     * indexes — the same migration x95 prices (held cell layout, the
     * coarse codebook survives), but the byte cost moves by BITS per
     * code (log2(ksub)) instead of whole codes, the cheaper axis to buy

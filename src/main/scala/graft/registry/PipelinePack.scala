@@ -379,257 +379,32 @@ object PipelinePack extends QueryPack {
       s"graft_retrieval_$key")
     // memoize the HANDLE, not just the snapshot: a serve process holds
     // its handle open across queries, and the handle's lazy relations
-    // resolve the pb-partitioned listings once. Safe here because the
-    // snapshot under a key is immutable (built once, never rebuilt) —
-    // x70's mutating scenario deliberately does NOT memoize.
-    cachedHandle(s, root) { r =>
+    // resolve the frame listings once. Safe because the snapshot under
+    // a key is immutable (built once, never rebuilt). Keyed by
+    // (snapshot path, SparkContext): a handle's lazy relations bind to
+    // the session of the first call, so a path-only key would hand a
+    // later, different (or restarted) context a handle executing on
+    // the stale one. The context OBJECT is the key component (reference
+    // equality), and entries for stopped contexts are evicted on the
+    // way in so a context-cycling JVM doesn't pin dead object graphs.
+    liveHandles.keySet.removeIf(k => k._2.isStopped)
+    liveHandles.computeIfAbsent((root.toString, s.sparkContext), { r =>
       if (new java.io.File(root, "codebook.txt").exists())
-        graft.serve.Retrieval.load(s, r)
+        graft.serve.Retrieval.load(s, r._1)
       else graft.serve.Retrieval.build(
         Tables.documents(s, dir).select("doc_id", "text"),
         Tables.embeddings(s, dir).select("vec_id", "embedding"),
-        r)
-    }
-  }
-  /** The COUNTING-backed snapshot handle (x105): the x99 snapshot
-    * recipe with the delete-capable ingest filter
-    * ([[graft.serve.Retrieval.build]]'s `countingIngestFilter`), then
-    * an in-place rebuild DROPS every `doc_id % 5 = 1` so the persisted
-    * filter follows its corpus by O(delta) decrements — the
-    * delete-heavy deployment shape, gated end to end. Codebooks reuse
-    * the x99 snapshot's (the filter is a flavor, not a geometry — no
-    * second training pass); the rebuild re-runs per call
-    * (idempotent — the steady-state empty delta exercises the staged
-    * O(delta) path at zero cost), so a crashed first build converges
-    * on the next run. NOT handle-memoized: the dir mutates (x70's
-    * rule). */
-  private def countingRetrievalFor(s: SparkSession,
-      dir: String): graft.serve.Retrieval = {
-    val fe = new java.io.File(s"$dir/embeddings.parquet")
-    val fd = new java.io.File(s"$dir/documents.parquet")
-    val key = artifactKey(dir, fe.lastModified(), fe.length(),
-      fd.lastModified(), fd.length(), "retrieval_counting", 5,
-      graft.serve.Retrieval.LayoutVersion,
-      "cells-adaptive", VectorOps.KMeansIters, VectorOps.PqSubspaces,
-      VectorOps.PqSubCentroids, VectorOps.PqIters, VectorOps.KMeansGrid,
-      VectorOps.Dim)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_cntdel_$key")
-    // serialize the check-then-build AND the per-call rebuild: rebuild
-    // is single-writer maintenance (the x70/x96/x102/x106 mutating-
-    // fixture rule), so concurrent x105 invocations in one JVM must
-    // not run overlapping rebuilds on the same snapshot dir
-    rootLocks.computeIfAbsent(root.toString, _ => new Object).synchronized {
-      if (!new java.io.File(root, "codebook.txt").exists()) {
-        val base = retrievalFor(s, dir)
-        graft.serve.Retrieval.build(
-          Tables.documents(s, dir).select("doc_id", "text"),
-          Tables.embeddings(s, dir).select("vec_id", "embedding"),
-          root.toString, codebooks = Some((base.cents, base.books)),
-          countingIngestFilter = true)
-      }
-      graft.serve.Retrieval.rebuild(
-        Tables.documents(s, dir).select("doc_id", "text")
-          .where(col("doc_id") % 5 =!= 1),
-        Tables.embeddings(s, dir).select("vec_id", "embedding")
-          .where(col("vec_id") % 5 =!= 1),
-        root.toString)
-    }
+        r._1)
+    })
   }
 
   private val liveHandles = new java.util.concurrent.ConcurrentHashMap[
     (String, org.apache.spark.SparkContext), graft.serve.Retrieval]()
 
-  /** Handle memoization keyed by (snapshot path, SparkContext) — a
-    * handle's lazy relations bind to the session of the first call, so
-    * a path-only key would hand a later, different (or restarted)
-    * context a handle executing on the stale one. The context OBJECT
-    * is the key component (reference equality — an identity hash
-    * would make a post-restart collision improbable, not impossible),
-    * and entries for stopped contexts are evicted on the way in so a
-    * context-cycling JVM doesn't pin dead object graphs. A fresh
-    * context therefore builds/loads its own handle; the snapshot on
-    * disk is still shared. */
-  private def cachedHandle(s: SparkSession, root: java.io.File)(
-      make: String => graft.serve.Retrieval): graft.serve.Retrieval = {
-    liveHandles.keySet.removeIf(k => k._2.isStopped)
-    liveHandles.computeIfAbsent((root.toString, s.sparkContext),
-      _ => make(root.toString))
-  }
-
-  // --- the x70 incremental-refresh scenario ------------------------------
-  // One deterministic corpus evolution, spelled identically in both
-  // engines: the PRIOR snapshot holds ids `< 16 OR id % 5 <> 0` (the
-  // `< 16` clause keeps the k-means/PQ seed range dense — both trainers
-  // seed from ids [0, 16)); the REFRESH drops `id % 101 = 23` (23, not
-  // a value under 16: x77 RETRAINS on the refreshed corpus, so the
-  // seed range must stay dense there too), re-crawls `id % 97 = 3`
-  // (text suffixed, embedding reversed), and thereby adds every
-  // `id % 5 = 0, id >= 16` doc the prior snapshot never held.
-
-  /** Scenario constants of the corpus evolution above — cache-key
-    * components for the x70/x77 snapshot artifacts, so editing the
-    * scenario can never serve a snapshot built under the previous
-    * one. */
-  private val RefreshDropMod = 23L
-  private val RefreshRecrawlMod = 97L
-
-  private def initialDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text")
-      .where(col("doc_id") < 16 || col("doc_id") % 5 =!= 0)
-  private def initialEmb(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).select("vec_id", "embedding")
-      .where(col("vec_id") < 16 || col("vec_id") % 5 =!= 0)
-  private def refreshedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text")
-      .where(col("doc_id") % 101 =!= RefreshDropMod)
-      .withColumn("text", when(col("doc_id") % RefreshRecrawlMod === 3,
-        concat(col("text"), lit(" refreshed"))).otherwise(col("text")))
-  private def refreshedEmb(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).select("vec_id", "embedding")
-      .where(col("vec_id") % 101 =!= RefreshDropMod)
-      .withColumn("embedding", when(col("vec_id") % RefreshRecrawlMod === 3,
-        reverse(col("embedding"))).otherwise(col("embedding")))
-
-  private val TrainEmbSql =
-    """SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |FROM embeddings WHERE vec_id < 16 OR vec_id % 5 <> 0""".stripMargin
-  private val ServeEmbSql =
-    s"""SELECT vec_id, list_transform(
-      |    CASE WHEN vec_id % $RefreshRecrawlMod = 3 THEN list_reverse(embedding)
-      |         ELSE embedding END, x -> CAST(x AS DOUBLE)) AS v
-      |FROM embeddings WHERE vec_id % 101 <> $RefreshDropMod""".stripMargin
-  private val ServeDocsSql =
-    s"""SELECT doc_id,
-      |  CASE WHEN doc_id % $RefreshRecrawlMod = 3 THEN text || ' refreshed' ELSE text END AS text
-      |FROM documents WHERE doc_id % 101 <> $RefreshDropMod""".stripMargin
-
-  /** The refreshed snapshot handle: a cached PRIOR build (fixture-keyed
-    * like [[retrievalFor]]) brought current by [[graft.serve.Retrieval
-    * .rebuild]] on every call — after the first merge the rebuild is
-    * idempotent, so the registered query measures the steady-state
-    * refresh (delta diff scans) plus the serve, never a retrain. */
-  private def rebuildRetrievalFor(s: SparkSession,
-      dir: String): graft.serve.Retrieval = {
-    val fe = new java.io.File(s"$dir/embeddings.parquet")
-    val fd = new java.io.File(s"$dir/documents.parquet")
-    val key = artifactKey(dir, fe.lastModified(), fe.length(),
-      fd.lastModified(), fd.length(), "retrieval_rebuild",
-      RefreshDropMod, RefreshRecrawlMod,
-      graft.serve.Retrieval.LayoutVersion,
-      "cells-adaptive", VectorOps.KMeansIters, VectorOps.PqSubspaces,
-      VectorOps.PqSubCentroids, VectorOps.PqIters, VectorOps.KMeansGrid,
-      VectorOps.Dim)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_rebuild_$key")
-    if (!new java.io.File(root, "codebook.txt").exists())
-      graft.serve.Retrieval.build(initialDocs(s, dir), initialEmb(s, dir),
-        root.toString)
-    graft.serve.Retrieval.rebuild(refreshedDocs(s, dir),
-      refreshedEmb(s, dir), root.toString)
-  }
-
-  /** The RETRAINED snapshot handle: the prior generation (trained on
-    * the initial corpus, like x70's) migrated by [[graft.serve
-    * .Retrieval.retrain]] on the refreshed corpus — fresh books, full
-    * re-encode, atomic swap over the live dir. Built once per key (the
-    * migration is scheduled maintenance, not per-query work); the
-    * registered serve then gates that a retrained live dir is
-    * bit-identical to a snapshot freshly trained on the current corpus
-    * — the migration contract, end to end. */
-  private def retrainRetrievalFor(s: SparkSession,
-      dir: String): graft.serve.Retrieval = {
-    val fe = new java.io.File(s"$dir/embeddings.parquet")
-    val fd = new java.io.File(s"$dir/documents.parquet")
-    val key = artifactKey(dir, fe.lastModified(), fe.length(),
-      fd.lastModified(), fd.length(), "retrieval_retrain",
-      RefreshDropMod, RefreshRecrawlMod,
-      graft.serve.Retrieval.LayoutVersion,
-      "cells-adaptive", VectorOps.KMeansIters, VectorOps.PqSubspaces,
-      VectorOps.PqSubCentroids, VectorOps.PqIters, VectorOps.KMeansGrid,
-      VectorOps.Dim)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_retrain_$key")
-    // liveness keys on a distinct done-marker written AFTER the
-    // retrain, not on codebook.txt: the initial build also publishes a
-    // codebook, so a crash between build(initial) and retrain would
-    // otherwise leave a live but UN-retrained snapshot that every
-    // later run silently serves. No marker → redo both steps (build
-    // atomically replaces the half-done generation) → mark. The
-    // build→retrain→mark section is serialized per root JVM-wide:
-    // handle keys are per-context, so two contexts could otherwise
-    // interleave (A retrains, B's initial build swaps the dir BACK,
-    // A marks — the marker would bless an un-retrained generation).
-    // Cross-PROCESS builds of the same tmp cache stay out of scope,
-    // as for every snapshotArtifact cache.
-    cachedHandle(s, root) { r =>
-      rootLocks.computeIfAbsent(r, _ => new Object).synchronized {
-        val done = new java.io.File(root, "retrain.done")
-        if (done.exists()) graft.serve.Retrieval.load(s, r)
-        else {
-          graft.serve.Retrieval.build(initialDocs(s, dir),
-            initialEmb(s, dir), r)
-          val h = graft.serve.Retrieval.retrain(refreshedDocs(s, dir),
-            refreshedEmb(s, dir), r)
-          done.createNewFile()
-          h
-        }
-      }
-    }
-  }
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val singleByteValidated =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** The STREAM-BUILT v6 chunk artifact for a fixture (x96): the
-    * snapshot handle's FIXED constants (rules + codebooks — the
-    * streamed index's constructor contract) replayed through
-    * [[graft.streaming.StreamingBpeChunkIndex]] as three micro-batch
-    * slices plus a compaction, built once per key. The registered
-    * serve then gates that a stream-accumulated artifact answers the
-    * production BPE chunk query IDENTICALLY to the batch snapshot
-    * (x92's oracle, verbatim) — the spec pins streamed ≡ rebuild at
-    * the frame level; this prices and hash-checks the serve itself.
-    * Liveness keys on a done-marker written AFTER the batches + the
-    * compaction (a crashed partial build replays: same batch ids
-    * overwrite their slices — the checkpoint-replay contract). */
-  private def streamedBpeIndexFor(s: SparkSession, dir: String)
-      : graft.streaming.StreamingBpeChunkIndex = {
-    val h = retrievalFor(s, dir)
-    val fe = new java.io.File(s"$dir/embeddings.parquet")
-    val fd = new java.io.File(s"$dir/documents.parquet")
-    val key = artifactKey(dir, fe.lastModified(), fe.length(),
-      fd.lastModified(), fd.length(), "streambpe",
-      graft.serve.Retrieval.LayoutVersion, "cells-adaptive",
-      VectorOps.KMeansIters, VectorOps.PqSubspaces,
-      VectorOps.PqSubCentroids, VectorOps.PqIters, VectorOps.KMeansGrid,
-      VectorOps.Dim, TextOps.BpeMerges, TextOps.BpeChunkWindow,
-      TextOps.BpeChunkOverlap)
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_streambpe_$key")
-    root.mkdirs()
-    val idx = new graft.streaming.StreamingBpeChunkIndex(root.toString,
-      h.bpeRules, h.cents, h.books)
-    val done = new java.io.File(root, "STREAM_DONE")
-    if (!done.exists())
-      rootLocks.computeIfAbsent(root.toString, _ => new Object).synchronized {
-        if (!done.exists()) {
-          val joined = Tables.documents(s, dir).select("doc_id", "text")
-            .join(Tables.embeddings(s, dir)
-              .select(col("vec_id").as("doc_id"), col("embedding")),
-              Seq("doc_id"))
-          idx.indexBatch(joined.where(col("doc_id") < 150), 0)
-          idx.indexBatch(
-            joined.where(col("doc_id") >= 150 && col("doc_id") < 300), 1)
-          idx.indexBatch(joined.where(col("doc_id") >= 300), 2)
-          idx.compact(s)
-          done.createNewFile()
-          ()
-        }
-      }
-    idx
-  }
 
   /** The GENERATIONAL [[graft.streaming.StreamingBloom]] chain for a
     * fixture (x102): gen-1 screens two micro-batches at a geometry
@@ -756,103 +531,11 @@ object PipelinePack extends QueryPack {
     "x67_snapshot_search" -> ((s, dir) =>
       retrievalFor(s, dir).search(Bm25Queries, 5)
         .orderBy("query_id", "rn")),
-    // the refresh path end-to-end: a prior snapshot is brought current
-    // by the incremental rebuild (fixed codebooks, delta-only encode +
-    // write) and served — the oracle trains on the PRIOR corpus only
-    // and serves the refreshed one, pinning the fixed-book semantics
-    "x70_rebuild_search" -> ((s, dir) =>
-      rebuildRetrievalFor(s, dir).search(Bm25Queries, 5)
-        .orderBy("query_id", "rn")),
-    // the maintenance path end-to-end: the prior snapshot MIGRATED by
-    // retrain (fresh books on the refreshed corpus, full re-encode,
-    // atomic swap) and served — the oracle trains AND serves on the
-    // refreshed corpus, pinning that a retrained live dir equals a
-    // freshly trained snapshot (x70 gates the fixed-book refresh
-    // between retrains; this gates the retrain itself)
-    "x77_retrain_search" -> ((s, dir) =>
-      retrainRetrievalFor(s, dir).search(Bm25Queries, 5)
-        .orderBy("query_id", "rn")),
     // chunk-ranked, doc-deduped lexical retrieval over the raw corpus:
     // chunks are the BM25 documents, each doc keeps its best chunk
     // (the RAG attribution), docs ranked by best-chunk score
     "x78_chunk_topk" -> ((s, dir) =>
       TextOps.bm25ChunkTopK(Tables.documents(s, dir), Bm25Queries, 5)
-        .orderBy("query_id", "rn")),
-    // the chunk-level SERVE end-to-end: the snapshot's stored ctf/cdl
-    // chunk index ranks chunks, dedups to docs at fusion with the
-    // stored IVFADC dense half, fused rows carrying the best chunk_id
-    "x79_chunk_search" -> ((s, dir) =>
-      retrievalFor(s, dir).searchChunks(Bm25Queries, 5)
-        .orderBy("query_id", "rn")),
-    // the chunk serve over the REBUILT snapshot: x70's fixed-codebook
-    // refresh scenario served at chunk level, so the incremental
-    // ctf/cdl bucket merge is oracle-gated end-to-end (not just
-    // spec-gated) — the oracle chunks the refreshed corpus and holds
-    // the dense books to the prior generation
-    "x80_rebuild_chunk_search" -> ((s, dir) =>
-      rebuildRetrievalFor(s, dir).searchChunks(Bm25Queries, 5)
-        .orderBy("query_id", "rn")),
-    // the chunk serve under the REFINE policy: the snapshot's stored
-    // full-precision chunk column (v5's cemb) reranks the ADC
-    // shortlist exactly before MaxSim — the recall knob the x91 curve
-    // prices (chunk recall@5 at nprobe=2: 0.136 ADC vs 0.444 refined
-    // at the shipped r), served end-to-end from the handle at the
-    // curve-justified default shortlist
-    "x88_chunk_refine_search" -> ((s, dir) =>
-      retrievalFor(s, dir).searchChunks(Bm25Queries, 5,
-        refine = Some(VectorOps.RefineShortlist))
-        .orderBy("query_id", "rn")),
-    // metadata-filtered chunk serve: the allowed doc-id frame
-    // restricts BOTH chunk-ranked halves before their ranks (a
-    // filtered doc's chunks all drop together; stats and probed cells
-    // stay collection-global) — the production "search within this
-    // collection/tenant" RAG shape, previously spec-only
-    "x86_chunk_search_filtered" -> ((s, dir) =>
-      retrievalFor(s, dir).searchChunksFiltered(Bm25Queries,
-        Tables.documents(s, dir).select("doc_id")
-          .where(col("doc_id") % 3 === 0), 5)
-        .orderBy("query_id", "rn")),
-    // filtered AND refined — the production RAG query ("search within
-    // this tenant, exact-reranked"): x86's pre-filter composed with
-    // x88's two-stage refine, the shortlist drawn from the
-    // allowed-filtered probed slice and reranked against the stored
-    // full-precision cemb frame. The one user-reachable chunk-serve
-    // combination that previously had no oracle row.
-    "x89_chunk_refine_filtered" -> ((s, dir) =>
-      retrievalFor(s, dir).searchChunksFiltered(Bm25Queries,
-        Tables.documents(s, dir).select("doc_id")
-          .where(col("doc_id") % 3 === 0), 5,
-        refine = Some(VectorOps.RefineShortlist))
-        .orderBy("query_id", "rn")),
-    // the model-context-true chunk serve FROM THE SNAPSHOT HANDLE
-    // (v6): x90's composition served off the published bctf/bcdl/
-    // bcindex/bcemb frames and the snapshot's fixed bperules.txt, with
-    // the two-stage exact rerank against the stored BPE chunk floats —
-    // the full production RAG serve in model units, one handle call
-    "x92_bpe_snapshot_search" -> ((s, dir) =>
-      retrievalFor(s, dir).searchBpeChunks(Bm25Queries, 5,
-        refine = Some(VectorOps.RefineShortlist))
-        .orderBy("query_id", "rn")),
-    // the STREAMED twin of x92: the same production BPE chunk query
-    // served from a stream-accumulated sliced artifact (three
-    // micro-batches + compaction) under the snapshot's fixed constants
-    // — streamed ≡ batch, priced and hash-gated at the serve (the spec
-    // pins it at the frame level; the oracle is x92's verbatim)
-    "x96_streamed_bpe_search" -> ((s, dir) =>
-      streamedBpeIndexFor(s, dir)
-        .searchBpeChunks(s, Bm25Queries, 5, nprobe = 2,
-          refine = Some(VectorOps.RefineShortlist))
-        .getOrElse(sys.error("streamed BPE artifact empty"))
-        .orderBy("query_id", "rn")),
-    // filtered AND refined at the BPE meter — the tenant-scoped
-    // model-context RAG query, completing the chunk-serve matrix
-    // (x86/x89 are its whitespace twins): allowed ids restrict both
-    // halves before their ranks, composing with the partition prune
-    "x93_bpe_chunk_filtered" -> ((s, dir) =>
-      retrievalFor(s, dir).searchBpeChunksFiltered(Bm25Queries,
-        Tables.documents(s, dir).select("doc_id")
-          .where(col("doc_id") % 3 === 0), 5,
-        refine = Some(VectorOps.RefineShortlist))
         .orderBy("query_id", "rn")),
     // --- dedup -----------------------------------------------------------
     "x1_exact_dedup" -> ((s, dir) =>
@@ -863,7 +546,7 @@ object PipelinePack extends QueryPack {
     // the corpus — x1's question at ingest cost. Both the
     // no-false-negative guarantee AND the exact (deterministic)
     // false-positive set are hash-gated. doc_id % 3 splits corpus vs
-    // genuinely-new increment (the x54/x86 convention), and corpus
+    // genuinely-new increment (the x54 convention), and corpus
     // docs RE-PRESENTED under shifted ids join the increment — the
     // re-crawl rows that make exact_seen/maybe_seen non-vacuous at
     // every SF (the fixtures plant near-dups, not cross-id exact dups)
@@ -972,8 +655,8 @@ object PipelinePack extends QueryPack {
     // the STREAMED generational chain, gated (x102): two gen-1
     // micro-batches at a batch-0-sized geometry, rebuildInto a 4×
     // gen-2, the increment screened against the inherited history as
-    // gen-2's batch 0 — the x96 promotion convention applied to the
-    // bloom rebuild (the spec pins the frames; this prices and
+    // gen-2's batch 0 — the streamed chain promoted to a registry
+    // query (the spec pins the frames; this prices and
     // hash-checks the chain's verdicts against a full SQL replay)
     "x102_bloom_rebuild_screen" -> ((s, dir) =>
       streamedBloomVerdicts(s, dir).orderBy("doc_id")),
@@ -994,42 +677,6 @@ object PipelinePack extends QueryPack {
     // chain, and the full sharded chain replays in SQL
     "x108_streamed_counting_sharded" -> ((s, dir) =>
       streamedCountingVerdicts(s, dir, shards = 4).orderBy("doc_id")),
-    // the SNAPSHOT ingest screen: the deployment handle's own filter
-    // (persisted per publish next to the dh fingerprint frame, sized
-    // adaptively from the corpus count; pre-persistence snapshots
-    // derive it from dh — verdict-identical) gate-checked end-to-end —
-    // half the increment re-presents indexed content verbatim (must
-    // all flag), half is salted never-indexed text (passes at the
-    // sized-for FP rate, and the FPs are deterministic, so they
-    // hash-check too)
-    "x99_snapshot_screen" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select("doc_id", "text")
-      val inc = d.where(col("doc_id") % 2 === 0).unionByName(
-        d.where(col("doc_id") % 2 === 1).select(col("doc_id"),
-          concat(col("text"), lit(" fresh "),
-            col("doc_id").cast("string")).as("text")))
-      retrievalFor(s, dir).screenIngest(inc).orderBy("doc_id")
-    }),
-    // the COUNTING-backed snapshot serve after a delete rebuild
-    // (x105): the publish chose the delete-capable filter, a rebuild
-    // dropped a fifth of the corpus, and the persisted filter followed
-    // by O(delta) decrements — never a regeneration at stable
-    // geometry. The increment re-presents EVERY original doc (deleted
-    // unique texts must screen never-seen — the frozen-bits verdict a
-    // one-way filter can't reach without a full rebuild) plus salted
-    // fresh rows (the deterministic FP set). The oracle replays the
-    // BIT filter of the surviving corpus: after decrements, cnt > 0
-    // occupies exactly the positions the survivors' bit filter sets —
-    // the cross-flavor equivalence is itself the gate.
-    "x105_counting_snapshot_screen" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select("doc_id", "text")
-      val inc = d.unionByName(
-        d.where(col("doc_id") % 2 === 1).select(
-          (col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" fresh "),
-            col("doc_id").cast("string")).as("text")))
-      countingRetrievalFor(s, dir).screenIngest(inc).orderBy("doc_id")
-    }),
     "x2_minhash_pairs" -> ((s, dir) =>
       Dedup.nearDupPairs(Tables.documents(s, dir), PairJaccard)
         .orderBy("doc_a", "doc_b")),
@@ -1437,7 +1084,7 @@ object PipelinePack extends QueryPack {
         centroids = Some(codebookFor(s, dir)))
         .orderBy("query_id", "rn")),
     // IVF index-health report: per-cell member count + centroid coherence
-    // (the ANALYZE surface consulted before retraining with more cells)
+    // (the ANALYZE surface consulted before training with more cells)
     "x41_ivf_cell_stats" -> ((s, dir) =>
       VectorOps.ivfCellStats(Tables.embeddings(s, dir),
         centroids = Some(codebookFor(s, dir)))
@@ -1491,7 +1138,7 @@ object PipelinePack extends QueryPack {
     // nprobe/r only trade along it. Each cell count trains its own
     // codebook + residual books (cached per (fixture, cells) key, the
     // x60 artifact convention) and re-encodes both indexes — priced as
-    // a retrain, run at retrain-evaluation cadence. The exact
+    // a codebook migration, run when choosing a codebook. The exact
     // baselines are computed once and shared (codebook-independent)
     "x94_codebook_curve" -> ((s, dir) => {
       val (dEx, cEx) = exactTopKFor(s, dir, CurveQueryIds, 5)
@@ -1516,7 +1163,7 @@ object PipelinePack extends QueryPack {
     // count m ∈ {4, 8, 16} at the FIXED 32-cell codebook — the third
     // index axis (x91 = serve knobs, x94 = cell count, x95 = bytes per
     // vector). The coarse codebook is shared across the sweep (cells
-    // don't move when m does); per m the residual books retrain and
+    // don't move when m does); per m the residual books train afresh and
     // both indexes re-encode from cached per-(fixture, m) artifacts.
     // Exact baselines computed once (code-independent)
     "x95_pq_curve" -> ((s, dir) => {
@@ -1545,7 +1192,7 @@ object PipelinePack extends QueryPack {
     // recall here than on the m axis when storage is tight: doubling
     // ksub adds one BIT per code (m·log2(ksub) stored bits) where
     // doubling m adds whole codes. Coarse codebook shared across the
-    // sweep; per ksub the residual books retrain and both indexes
+    // sweep; per ksub the residual books train afresh and both indexes
     // re-encode from cached per-(fixture, ksub) artifacts. Exact
     // baselines computed once (code-independent)
     "x97_ksub_curve" -> ((s, dir) => {
@@ -2066,22 +1713,6 @@ object PipelinePack extends QueryPack {
           |  FROM documents WHERE doc_id % 3 = 0 AND doc_id % 4 = 1""".stripMargin,
         shards = 4) +
         "\nORDER BY doc_id"),
-    "x99_snapshot_screen" ->
-      (Dedup.snapshotScreenSql(
-        """  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
-          |  UNION ALL
-          |  SELECT doc_id, text || ' fresh ' || CAST(doc_id AS VARCHAR) AS text
-          |  FROM documents WHERE doc_id % 2 = 1""".stripMargin) +
-        "\nORDER BY doc_id"),
-    "x105_counting_snapshot_screen" ->
-      (Dedup.snapshotScreenSql(
-        """  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 2000000 AS doc_id,
-          |    text || ' fresh ' || CAST(doc_id AS VARCHAR) AS text
-          |  FROM documents WHERE doc_id % 2 = 1""".stripMargin,
-        corpusPred = "doc_id % 5 != 1") +
-        "\nORDER BY doc_id"),
     "x2_minhash_pairs" ->
       (Dedup.nearDupPairsSql(PairJaccard) + "\nORDER BY doc_a, doc_b"),
     "x71_edit_pairs" ->
@@ -2285,50 +1916,8 @@ object PipelinePack extends QueryPack {
         r = VectorOps.RefineShortlist, nprobe = 2,
         cellsSql = VectorOps.adaptiveCellsSql()) +
         "\nORDER BY query_id, rn"),
-    "x70_rebuild_search" ->
-      (graft.operators.HybridOps.rebuildSearchSql(Bm25Queries, 5,
-        r = VectorOps.RefineShortlist, nprobe = 2,
-        TrainEmbSql, ServeEmbSql, ServeDocsSql,
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    // retrain: train = serve = the refreshed corpus — the same
-    // fixed-book chain with the training view swapped, which IS the
-    // "retrained live dir == freshly trained snapshot" contract
-    "x77_retrain_search" ->
-      (graft.operators.HybridOps.rebuildSearchSql(Bm25Queries, 5,
-        r = VectorOps.RefineShortlist, nprobe = 2,
-        ServeEmbSql, ServeEmbSql, ServeDocsSql,
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
     "x78_chunk_topk" ->
       (TextOps.bm25ChunkTopKSql(Bm25Queries, 5) + "\nORDER BY query_id, rn"),
-    "x79_chunk_search" ->
-      (graft.operators.HybridOps.chunkSearchSql(Bm25Queries, 5,
-        nprobe = 2, cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    "x80_rebuild_chunk_search" ->
-      (graft.operators.HybridOps.rebuildChunkSearchSql(Bm25Queries, 5,
-        nprobe = 2, TrainEmbSql, ServeEmbSql, ServeDocsSql,
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    "x86_chunk_search_filtered" ->
-      (graft.operators.HybridOps.chunkSearchFilteredSql(Bm25Queries, 5,
-        nprobe = 2,
-        "SELECT doc_id FROM documents WHERE doc_id % 3 = 0",
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    "x88_chunk_refine_search" ->
-      (graft.operators.HybridOps.chunkSearchSql(Bm25Queries, 5,
-        nprobe = 2, refine = Some(VectorOps.RefineShortlist),
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    "x89_chunk_refine_filtered" ->
-      (graft.operators.HybridOps.chunkSearchFilteredSql(Bm25Queries, 5,
-        nprobe = 2,
-        "SELECT doc_id FROM documents WHERE doc_id % 3 = 0",
-        refine = Some(VectorOps.RefineShortlist),
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
     "x91_recall_curve" ->
       (VectorOps.recallCurveSql(CurveQueryIds, 5) +
         "\nORDER BY method, nprobe, r"),
@@ -2344,29 +1933,9 @@ object PipelinePack extends QueryPack {
       (VectorOps.pqKsubCurveSql(CurveQueryIds, 5,
         refines = Seq(VectorOps.RefineShortlist)) +
         "\nORDER BY ksub, method, nprobe, r"),
-    // deliberately x92's oracle verbatim: the streamed artifact's serve
-    // must be indistinguishable from the batch snapshot's (the x48/x43
-    // convention applied to the v6 serve)
-    "x96_streamed_bpe_search" ->
-      (graft.operators.HybridOps.bpeChunkHybridSql(Bm25Queries, 5,
-        nprobe = 2, refine = Some(VectorOps.RefineShortlist),
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
     "x90_bpe_chunk_search" ->
       (graft.operators.HybridOps.bpeChunkHybridSql(Bm25Queries, 5,
         nprobe = 2) +
-        "\nORDER BY query_id, rn"),
-    "x92_bpe_snapshot_search" ->
-      (graft.operators.HybridOps.bpeChunkHybridSql(Bm25Queries, 5,
-        nprobe = 2, refine = Some(VectorOps.RefineShortlist),
-        cellsSql = VectorOps.adaptiveCellsSql()) +
-        "\nORDER BY query_id, rn"),
-    "x93_bpe_chunk_filtered" ->
-      (graft.operators.HybridOps.bpeChunkHybridSql(Bm25Queries, 5,
-        nprobe = 2, refine = Some(VectorOps.RefineShortlist),
-        allowedSql =
-          Some("SELECT doc_id FROM documents WHERE doc_id % 3 = 0"),
-        cellsSql = VectorOps.adaptiveCellsSql()) +
         "\nORDER BY query_id, rn"),
     "x68_pair_pagerank" ->
       (Dedup.pairGraphRankSql(PairJaccard) + "\nORDER BY doc_id"),

@@ -1,18 +1,18 @@
 package graft.serve
 
 import graft.operators.{HybridOps, TextOps, VectorOps}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-handle retrieval over a corpus snapshot — the serve surface a
-  * user actually deploys, packaging every index artifact this engine
-  * builds behind `build`/`load`/`search` instead of five hand-wired
-  * frames.
+/** One-handle hybrid retrieval over a corpus snapshot — the serve
+  * surface over what the sync publishes, behind `build`/`load`/`search`
+  * instead of hand-wired frames.
   *
   * The reference's whole job is feeding documents INTO a search service
   * (reference: flows/main_flow.py:528-563 bulk-indexes and never reads
   * back); this is the Spark-native answer to the half the reference
-  * outsources. A snapshot directory holds:
+  * outsources. A snapshot directory holds exactly what [[search]]
+  * reads:
   *
   *  - `codebook.txt` / `pqbooks.txt` — the coarse IVF codebook and the
   *    residual PQ books, doubles as raw IEEE-754 bits (bit-identical
@@ -20,18 +20,14 @@ import org.apache.spark.sql.functions._
   *  - `index/` — the residual IVFADC frame `(vec_id, codes, cell)`
   *    written `partitionBy(cell)`, so a probed serve read
   *    PARTITION-PRUNES to ~nprobe/cells of the files;
-  *  - `cindex/` — the CHUNK-vector residual IVFADC frame under the
-  *    composite `(doc·2²⁰+chunk)` key, same cell-partitioned layout,
-  *    serving the multi-vector MaxSim half of the chunk-level serve;
-  *  - `cemb/` — the full-precision chunk vectors (v5), read only for
-  *    the chunk refine's bounded shortlist rerank; when the snapshot
-  *    was built from caller-supplied chunk embeddings this frame IS
-  *    the durable copy of the external model's output;
-  *  - `emb/` — the float column, read only for query-vector lookup and
-  *    the bounded exact rerank (never scanned as stage 1);
-  *  - `tf/` / `dl/` — the lexical index frames BM25 serves from;
-  *  - `ctf/` / `cdl/` — their chunk-level twins, the RAG passage
-  *    index.
+  *  - `emb/` — the float column `(vec_id, embedding)`, read only for
+  *    query-vector lookup and the bounded exact rerank (never scanned
+  *    as stage 1);
+  *  - `tf/` / `dl/` — the lexical index frames BM25 serves from.
+  *
+  * `emb`, `tf` and `dl` are written unpartitioned: no serve read
+  * filters on a partition of them, so partition directories would only
+  * add files to list.
   *
   * Publish is atomic: everything stages into a sibling tmp directory
   * and a rename-aside swap commits it (the [[graft.sync.IndexStore]]
@@ -50,340 +46,37 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
     val cents: Seq[Seq[Double]], val books: Seq[Seq[Seq[Double]]]) {
 
   /** Serve-tuned session, shared per SparkContext (see [[Retrieval
-    * .serveSessionFor]] for the tuning rationale) — LAZY, so only a
-    * handle that actually serves resolves it: the handles [[Retrieval
-    * .rebuild]]/[[Retrieval.retrain]] construct internally just to
-    * publish never create a session, and repeated handle construction
-    * cannot accumulate sessions. Index BUILD work stays on the
-    * caller's session, wide and adaptive as batch work should be. */
+    * .serveSessionFor]] for the tuning rationale). Index BUILD work
+    * stays on the caller's session, wide and adaptive as batch work
+    * should be. */
   private lazy val serve: SparkSession = Retrieval.serveSessionFor(spark)
 
-  // accessors drop the `pb` merge-bucket partition column ([[Retrieval
-  // .MergeBuckets]]) — it is physical layout for [[Retrieval.rebuild]]'s
-  // per-partition swaps, not part of any frame's logical schema.
   // `lazy val` + explicit schema, not `def` + inference: a serve handle
   // is long-lived, and each `spark.read.parquet` otherwise re-lists the
-  // partitioned directory and re-reads parquet footers — fixed per-query
-  // latency that dominated the snapshot serve once the frames went
-  // pb-partitioned (measured ~0.4 s/query of pure listing+inference jobs
-  // at sf0.1). One relation per frame per handle resolves once.
+  // directory and re-reads parquet footers — fixed per-query latency.
+  // One relation per frame per handle resolves once.
   private lazy val emb = serve.read
     .schema(Retrieval.EmbSchema).parquet(s"$dir/emb")
-    .select("vec_id", "embedding")
   private lazy val tf = serve.read
     .schema(Retrieval.TfSchema).parquet(s"$dir/tf")
-    .select("doc_id", "token", "tf")
   private lazy val dl = serve.read
     .schema(Retrieval.DlSchema).parquet(s"$dir/dl")
-    .select("doc_id", "dl")
   private lazy val index = serve.read
     .schema(Retrieval.IndexSchema).parquet(s"$dir/index")
-  // chunk-frame accessors guard the layout AT THE CHUNK ENTRY, not in
-  // load(): a pre-v4 snapshot keeps serving every doc-level query
-  // during its migration window (search/searchFiltered need nothing
-  // from these frames), and the first CHUNK serve fails with the
-  // upgrade message instead of a raw missing-path error mid-plan.
-  // PER FRAME, not all-four: each accessor checks only the directory
-  // it actually reads, so a v3 snapshot keeps serving its lexical
-  // chunk queries (ctf/cdl exist) through the cindex/cemb migration
-  // window, and a v4 snapshot keeps serving plain (non-refine) chunk
-  // queries that never read cemb — the same availability-over-
-  // strictness rule load() applies to the doc-level frames.
-  private def requireChunkFrame(frame: String): Unit =
-    require(new java.io.File(s"$dir/$frame").isDirectory,
-      s"$dir predates the v${Retrieval.LayoutVersion} chunk-index " +
-        s"layout (missing $frame/); publish once with build() to " +
-        "upgrade — serves not reading this frame remain available " +
-        "meanwhile")
-  private lazy val ctf = {
-    requireChunkFrame("ctf")
-    serve.read.schema(Retrieval.CtfSchema).parquet(s"$dir/ctf")
-      .select("doc_id", "chunk_id", "token", "tf")
-  }
-  private lazy val cdl = {
-    requireChunkFrame("cdl")
-    serve.read.schema(Retrieval.CdlSchema).parquet(s"$dir/cdl")
-      .select("doc_id", "chunk_id", "dl")
-  }
-  private lazy val cindex = {
-    requireChunkFrame("cindex")
-    serve.read.schema(Retrieval.IndexSchema).parquet(s"$dir/cindex")
-  }
-  private lazy val cemb = {
-    requireChunkFrame("cemb")
-    serve.read.schema(Retrieval.CembSchema).parquet(s"$dir/cemb")
-      .select("doc_id", "chunk_id", "embedding")
-  }
-  // the BPE-metered twins (v6) — same schemas, window unit = the
-  // snapshot's fixed subword rules
-  private lazy val bctf = {
-    requireChunkFrame("bctf")
-    serve.read.schema(Retrieval.CtfSchema).parquet(s"$dir/bctf")
-      .select("doc_id", "chunk_id", "token", "tf")
-  }
-  private lazy val bcdl = {
-    requireChunkFrame("bcdl")
-    serve.read.schema(Retrieval.CdlSchema).parquet(s"$dir/bcdl")
-      .select("doc_id", "chunk_id", "dl")
-  }
-  private lazy val bcindex = {
-    requireChunkFrame("bcindex")
-    serve.read.schema(Retrieval.IndexSchema).parquet(s"$dir/bcindex")
-  }
-  private lazy val bcemb = {
-    requireChunkFrame("bcemb")
-    serve.read.schema(Retrieval.CembSchema).parquet(s"$dir/bcemb")
-      .select("doc_id", "chunk_id", "embedding")
-  }
-
-  /** The snapshot's FIXED BPE merge rules (v6's `bperules.txt`) —
-    * trained once at [[Retrieval.build]], reused by every refresh and
-    * every query encode, so indexing and querying can never disagree
-    * on subword boundaries. Lazy: doc-level and whitespace-chunk
-    * serves on a pre-v6 snapshot never touch it. */
-  lazy val bpeRules: Seq[(String, String)] = Retrieval.readRules(dir)
-
-  /** The snapshot's ACCEPTED serve points by family (`doc`/`chunk`/
-    * `bpe`) — `(nprobe, r)` pairs persisted by [[acceptServePoints]]
-    * as the `servepoints.txt` sidecar (the `cellspinned.txt`
-    * convention: the pin rides the snapshot). Empty when nothing is
-    * pinned. Every serve entry whose knobs are left at their sentinel
-    * defaults resolves through this map, so a deployment tunes ONCE —
-    * `maintain(servePointFloor=...)` → [[acceptServePoints]] — and
-    * every subsequent default serve runs at the measured cheapest
-    * point instead of the shipped constants; explicit knob arguments
-    * always win. Lazy per handle (the [[bpeRules]] convention): a pin
-    * accepted through THIS handle is visible to handles loaded after
-    * it. A full [[Retrieval.build]]/[[Retrieval.retrain]] republishes
-    * the whole snapshot directory and therefore CLEARS the pin (new
-    * codebooks void the old measurement); the in-place
-    * [[Retrieval.rebuild]] keeps codebooks and keeps the pin —
-    * re-meter at maintenance cadence and re-accept when recall
-    * drifts. */
-  lazy val pinnedServePoints: Map[String, (Int, Int)] =
-    Retrieval.readServePoints(dir)
-
-  /** Persist `report`'s selected serve points as this snapshot's
-    * serving defaults — the missing half of the maintain loop (picks
-    * used to die in the report): write `family nprobe r` lines to the
-    * sidecar via a tmp-file atomic move, one entry per family the
-    * report carries a pick for. The report's entries MERGE OVER any
-    * already-accepted pins (a partial re-meter — e.g.
-    * `servePointFamilies = Seq("doc")` — refreshes its own family and
-    * leaves the others' earlier pins serving, instead of silently
-    * reverting them to shipped defaults with the sidecar rewrite).
-    * Returns the families pinned BY THIS CALL. Refuses a report with
-    * NO picks: either maintain ran without `servePointFloor`, a
-    * selected family's frames were absent
-    * ([[Retrieval.MaintenanceReport.servePointFramesAbsent]]), or no
-    * measured point reached the floor — all three need an operator
-    * decision, not a silent no-op. */
-  def acceptServePoints(report: Retrieval.MaintenanceReport): Seq[String] = {
-    val entries = Seq(
-      "doc" -> report.servePoint,
-      "chunk" -> report.chunkServePoint,
-      "bpe" -> report.bpeServePoint).collect { case (f, Some(p)) => (f, p) }
-    require(entries.nonEmpty,
-      "the report carries no selected serve points — run " +
-        "maintain(servePointFloor = Some(...), servePointFamilies = ...) " +
-        "first; if a selected family still returned None, check " +
-        "servePointFramesAbsent (frames missing) or the floor's " +
-        "attainability on the measured curve")
-    // merge over the pins already on disk (NOT this handle's lazy
-    // cache, which may predate another handle's accept): a partial
-    // re-meter must never drop a family it didn't measure
-    val merged = Retrieval.readServePoints(dir) ++
-      entries.map { case (f, p) => f -> ((p.nprobe, p.r)) }.toMap
-    val body = merged.toSeq.sortBy(_._1)
-      .map { case (f, (np, r)) => s"$f $np $r" }
-      .mkString("", "\n", "\n")
-    val tmp = java.nio.file.Paths.get(dir,
-      s".servepoints-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(dir, Retrieval.ServePointsFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    entries.map(_._1)
-  }
-
-  /** Resolve a serve entry's `nprobe`: the sentinel default takes the
-    * family's pinned point when one is accepted, else the shipped
-    * constant [[Retrieval.ShippedNprobe]]; an explicit argument always
-    * wins. */
-  private def pinNprobe(family: String, nprobe: Int): Int =
-    if (nprobe != Retrieval.PinnedKnob) nprobe
-    else pinnedServePoints.get(family).map(_._1)
-      .getOrElse(Retrieval.ShippedNprobe)
-
-  /** [[pinNprobe]] for the doc serves' mandatory refine knob. The
-    * pinned r is FLOORED at the serve's k (maintain's own rShip
-    * convention): the pin was measured at maintenance k, and a serve
-    * asking for more rows than that must widen the shortlist, not
-    * throw — the widened cost is the honest price of out-serving the
-    * measurement. */
-  private def pinRefine(family: String, refine: Int, k: Int): Int =
-    if (refine != Retrieval.PinnedKnob) refine
-    else pinnedServePoints.get(family).map(p => math.max(k, p._2))
-      .getOrElse(VectorOps.RefineShortlist)
-
-  /** [[pinRefine]] for the chunk serves' OPTIONAL refine knob: the
-    * sentinel resolves to the pinned r floored at k (a pinned r ≤ 0 —
-    * a measured no-refine point — stays None), no pin resolves to the
-    * shipped no-refine default. */
-  private def pinRefineOpt(family: String, refine: Option[Int],
-      k: Int): Option[Int] =
-    refine match {
-      case Some(Retrieval.PinnedKnob) =>
-        pinnedServePoints.get(family).map(_._2).filter(_ > 0)
-          .map(math.max(k, _))
-      case other => other
-    }
-
-  /** The snapshot's ingest filter. PERSISTED PER PUBLISH since v6:
-    * [[Retrieval.build]] stages a `bloomdh` frame next to `dh` in one
-    * of two FLAVORS (the `ingestfilter.txt` marker, publish-atomic) —
-    *
-    *  - `bit` (default): the sharded Bloom bit array; deletes cannot
-    *    un-set bits, so [[Retrieval.rebuild]] REGENERATES it from the
-    *    merged dh — one corpus-thin aggregate per scheduled rebuild;
-    *  - `counting` ([[Retrieval.build]]'s `countingIngestFilter`): the
-    *    sharded counting frame ([[graft.operators.Dedup
-    *    .shardedCountingBloomBits]]); rebuild applies O(delta)
-    *    DECREMENTS/increments from its own fingerprint diff instead of
-    *    re-aggregating — the right flavor for high-frequency small
-    *    delete batches, at ~128× the (still metadata-small) frame.
-    *
-    * Handle load is O(frame) either way, never O(corpus). A snapshot
-    * that predates the persisted frame (or a reader landing inside a
-    * regenerate swap) falls back to deriving from the `dh` fingerprint
-    * frame AT THE MARKER'S FLAVOR — one corpus-thin aggregate,
-    * verdict-identical because both paths share the
-    * [[graft.operators.Dedup.adaptiveBloomGeometry]] recipe.
-    * materialize = localCheckpoint, NOT cache(): a cached plan is
-    * keyed by its canonicalized form, so after a rebuild the NEW
-    * handle's identical-looking scan would silently alias the old
-    * handle's pre-rebuild cache entry and serve a stale filter — the
-    * checkpoint's frozen lineage is keyed by RDD identity and cannot
-    * alias across handles. */
-  private lazy val ingestBloom: Retrieval.IngestFilter =
-    persistedIngestBloom.getOrElse {
-      require(new java.io.File(s"$dir/dh").isDirectory,
-        s"$dir has no dh fingerprint frame (predates incremental " +
-          "rebuild); publish once with build() to upgrade — serves not " +
-          "reading it remain available meanwhile")
-      val keys = serve.read.schema(Retrieval.DhSchema).parquet(s"$dir/dh")
-        .select(col("dh").as("content_key"))
-      // geometry fully derived from the count: shards stay 1 until
-      // ~10^8 docs — where the sharded form is row-identical to the
-      // flat one — and grow past it, so the handle never hits the flat
-      // form's refusal
-      val (shards, mbits) =
-        graft.operators.Dedup.adaptiveBloomGeometry(keys.count())
-      val counting = Retrieval.ingestFilterFlavorOf(dir) == "counting"
-      Retrieval.IngestFilter(graft.operators.Dedup.materialize(
-        if (counting)
-          graft.operators.Dedup.shardedCountingBloomBits(keys, shards, mbits)
-        else graft.operators.Dedup.shardedBloomBits(keys, shards, mbits),
-        None), shards, mbits, counting)
-    }
-
-  /** The persisted-path load, None on ANY doubt: the geometry sidecar
-    * is read BEFORE and re-read AFTER the frame materializes — a
-    * concurrent [[Retrieval.regenerateIngestBloom]] swap between the
-    * two leaves different bytes (or none), and serving old-geometry
-    * positions against a new bit array would break the
-    * no-false-negative guarantee silently. Any mismatch or read
-    * failure (the swap's vanished-dir window) falls back to the dh
-    * derivation, which is verdict-identical — so doubting is always
-    * correct, never just safe. */
-  private def persistedIngestBloom: Option[Retrieval.IngestFilter] = try {
-    val geom = java.nio.file.Paths.get(dir, "bloomdh", "_bloomgeom")
-    def sidecar = new String(
-      java.nio.file.Files.readAllBytes(geom), "UTF-8").trim
-    if (!java.nio.file.Files.isRegularFile(geom)) None
-    else {
-      val before = sidecar
-      val counting = before.startsWith("counting ")
-      // eager materialize: the frame's bytes are fully read here,
-      // bracketed by the two sidecar reads. The counting frame reads
-      // WITHOUT an explicit schema so its geometry-pin column metadata
-      // (parquet footer) survives into the screen's validation — the
-      // frame is metadata-small, so the footer inference the serve
-      // accessors avoid costs nothing here. `shard` casts back to
-      // long: the partitioned delta-IO layout surfaces it as an
-      // inferred INT partition column (legacy unpartitioned frames
-      // carry it as the written long — the cast is a no-op there);
-      // the layout-only `cb` column is dropped by the select.
-      val frame = graft.operators.Dedup.materialize(
-        if (counting) serve.read.parquet(s"$dir/bloomdh")
-          .select(col("shard").cast("long").as("shard"), col("pos"),
-            col("cnt"))
-        else serve.read.schema(Retrieval.BloomDhSchema)
-          .parquet(s"$dir/bloomdh"), None)
-      if (sidecar != before) None
-      else {
-        val parts = if (counting) before.split(" ").drop(1)
-          else before.split(" ")
-        val (shards, mbits) = (parts(0).toInt, parts(1).toInt)
-        // counting flavor: the frame's own in-frame geometry pin
-        // (column metadata on cnt) must AGREE with the sidecar — a
-        // partially corrupted frame (pin ≠ sidecar) is a doubt like
-        // any other on this path, so it falls back to the
-        // verdict-identical dh derivation instead of surfacing as the
-        // pin refusal at the first screenIngest
-        val pinAgrees = !counting ||
-          graft.operators.Dedup.countingGeometryPinOf(frame).forall {
-            case (ps, pm, pk) => ps == shards && pm == mbits &&
-              pk == graft.operators.Dedup.BloomHashes
-          }
-        if (!pinAgrees) None
-        else Some(Retrieval.IngestFilter(frame, shards, mbits, counting))
-      }
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Ingest pre-screen ([[graft.operators.Dedup.ingestScreen]]'s
-    * snapshot serve): which of `docs` were definitely never in THIS
-    * snapshot's corpus — `maybe_seen = false` is a guarantee (no false
-    * negatives), `true` is "seen, at the sized-for false-positive
-    * rate". The key is the snapshot's own fingerprint, `md5(text)`
-    * EXACT — not the normalized x98 dedup key: the question a snapshot
-    * answers is "is this exact content indexed", and it must match
-    * what `dh` certifies. Cost per call: khash position rows per doc
-    * against the cached broadcast-size bloom frame; the corpus is
-    * never read. */
-  def screenIngest(docs: DataFrame): DataFrame = {
-    val f = ingestBloom
-    val keys = docs.select(col("doc_id"), md5(col("text")).as("content_key"))
-    (if (f.counting)
-      graft.operators.Dedup.shardedCountingBloomScreen(keys, f.frame,
-        f.shards, f.mbits)
-    else graft.operators.Dedup.shardedBloomScreen(keys, f.frame,
-      f.shards, f.mbits))
-      .select("doc_id", "content_key", "maybe_seen")
-  }
 
   /** Dense top-k from the stored index: driver probe ranking → the
     * probed-cell filter prunes the partitioned index read → residual
-    * ADC on survivors → exact rerank of the `refine` shortlist against
-    * the float column (bounded lookups, not a scan). The sentinel
-    * defaults resolve to the snapshot's ACCEPTED serve point when one
-    * is pinned ([[pinnedServePoints]]) and otherwise to the
-    * x91-curve-justified shipped pair ([[VectorOps.RefineShortlist]]'s
-    * scaladoc has the measured numbers): nprobe=2 because probe
-    * widening buys little recall per doubling of scan cost, r=40
-    * because the refine shortlist is the strong knob at bounded float
-    * reads. Explicit arguments always win over the pin. */
-  def denseTopK(queryIds: Seq[Long], k: Int,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Int = Retrieval.PinnedKnob): DataFrame = {
-    val np = pinNprobe("doc", nprobe)
-    val r = pinRefine("doc", refine, k)
-    val probe = VectorOps.probePlanOf(emb, queryIds, cents, np)
+    * ADC on survivors → exact rerank of the refine shortlist against
+    * the float column (bounded lookups, not a scan). The knobs are the
+    * x91-curve-justified pair ([[VectorOps.RefineShortlist]]'s scaladoc
+    * has the measured numbers): nprobe=2 because probe widening buys
+    * little recall per doubling of scan cost, r=40 because the refine
+    * shortlist is the strong knob at bounded float reads. */
+  def denseTopK(queryIds: Seq[Long], k: Int): DataFrame = {
+    val probe = VectorOps.probePlanOf(emb, queryIds, cents, Retrieval.Nprobe)
     VectorOps.ivfPqRefineTopK(
       index.where(col("cell").isin(probe.cells: _*)),
-      emb, queryIds, k, r, np,
+      emb, queryIds, k, VectorOps.RefineShortlist, Retrieval.Nprobe,
       cents, books, residual = true, probes = Some(probe.frame))
   }
 
@@ -396,9 +89,8 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
     * policy (each query id doubles as its query vector's vec_id — the
     * shared-id hybrid layout). */
   def search(queries: Seq[(Long, Seq[String])], k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob): DataFrame = {
-    def dense = denseTopK(queries.map(_._1), k, nprobe)
+      policy: HybridOps.Fusion = HybridOps.Rrf): DataFrame = {
+    def dense = denseTopK(queries.map(_._1), k)
       .withColumnRenamed("vec_id", "doc_id")
     policy match {
       case HybridOps.LexicalOnly => lexicalTopK(queries, k)
@@ -406,852 +98,28 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
       case p => HybridOps.fuse(lexicalTopK(queries, k), dense, k, p)
     }
   }
-
-  /** Chunk-ranked lexical top-k from the stored chunk frames —
-    * [[TextOps.bm25ChunkTopKFrom]] over `ctf`/`cdl`: chunks scored,
-    * each doc reduced to its best chunk, docs ranked. The chunk_id in
-    * each row is the passage a RAG caller hands to generation. */
-  def chunkLexicalTopK(queries: Seq[(Long, Seq[String])], k: Int): DataFrame =
-    TextOps.bm25ChunkTopKFrom(ctf, cdl, queries, k)
-
-  /** Chunk-DENSE top-k from the stored composite-key chunk index
-    * (layout v4's `cindex/`): driver probe ranking → the probed-cell
-    * filter partition-prunes the cell-partitioned chunk-code read →
-    * residual ADC on the surviving CHUNK codes → MaxSim (best chunk
-    * per doc, the attribution) → docs ranked by best-chunk cosine.
-    * The production multi-vector serve — candidates ∝ nprobe/cells of
-    * the CHUNK corpus, never a per-chunk corpus scan (the brute
-    * [[VectorOps.multiVectorTopK]] is the labeled exact baseline this
-    * path's recall is measured against — `chunk_ivfpq` in
-    * [[VectorOps.annRecall]]). */
-  def chunkDenseTopK(queryIds: Seq[Long], k: Int,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    val np = pinNprobe("chunk", nprobe)
-    val probe = VectorOps.probePlanOf(emb, queryIds, cents, np)
-    val pruned = cindex.where(col("cell").isin(probe.cells: _*))
-    pinRefineOpt("chunk", refine, k) match {
-      // two-stage serve: ADC shortlist of r chunks, exact rerank
-      // against the stored full-precision chunk column (layout v5's
-      // cemb — the external-model frame when the snapshot was built
-      // with caller-supplied chunk vectors), MaxSim over exact scores.
-      // The x91 tuning curve prices the trade (50-query sample,
-      // sf0.1): chunk recall@5 at nprobe=2 is 0.136 plain ADC vs
-      // 0.216/0.336/0.444 refined at r=10/20/40 — refine is the
-      // strong knob, at r·|q| bounded float reads. The default stays
-      // None (no cemb reads) for cost unless the snapshot pins a
-      // measured point ([[pinnedServePoints]]); a RAG deployment
-      // passes Some(VectorOps.RefineShortlist) or accepts a pin.
-      case Some(r) => VectorOps.chunkIvfPqRefineTopK(pruned, cemb, emb,
-        queryIds, k, r, np, cents, books, probes = Some(probe.frame))
-      case None => VectorOps.chunkIvfPqTopKFromIndex(pruned, emb,
-        queryIds, k, np, cents, books, probes = Some(probe.frame))
-    }
-  }
-
-  /** Chunk-level serve — the production RAG shape the doc-level
-    * [[search]] can't express: the LEXICAL half ranks CHUNKS and
-    * dedups to docs at fusion (max-chunk-score per doc, the passage
-    * kept as attribution), the DENSE half ranks docs from the stored
-    * CHUNK index ([[chunkDenseTopK]] — per-chunk vectors, MaxSim), and
-    * the fused doc list carries each doc's best chunk_id: the lexical
-    * half's where a chunk matched a query term, the dense half's ADC
-    * best chunk otherwise — every served doc names a passage.
-    *
-    * Scale shape: both halves are the audited serves ([[TextOps
-    * .bm25ChunkTopKFrom]]'s pruned posting reads, [[chunkDenseTopK]]'s
-    * partition-pruned probe over the chunk cells); fusion and
-    * attribution join k-row lists. */
-  def searchChunks(queries: Seq[(Long, Seq[String])], k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    def dense = chunkDenseTopK(queries.map(_._1), k, nprobe, refine)
-    // attribution rides each fusion join itself — each half's subtree
-    // (posting prune + chunk scoring; pruned ADC + MaxSim) executes
-    // exactly once per serve under every policy
-    policy match {
-      case HybridOps.LexicalOnly => chunkLexicalTopK(queries, k)
-      case HybridOps.DenseOnly => dense
-      case HybridOps.Rrf =>
-        HybridOps.rrfFuseChunked(chunkLexicalTopK(queries, k), dense, k)
-      case HybridOps.Weighted(w) =>
-        HybridOps.weightedFuseChunked(chunkLexicalTopK(queries, k),
-          dense, k, w)
-    }
-  }
-
-  /** The filtered dense half shared by [[searchFiltered]] and
-    * [[searchChunksFiltered]]: restrict candidates BEFORE the final
-    * rank by semi-joining the allowed id list onto the probed index
-    * slice, so the filter composes with the partition-pruned read
-    * instead of replacing it; the shortlist widens to `refine` before
-    * the filter, so selective predicates still fill k from the probed
-    * cells. */
-  private def denseTopKAllowed(qids: Seq[Long], allowed: DataFrame,
-      k: Int, nprobe: Int, refine: Int): DataFrame = {
-    val probe = VectorOps.probePlanOf(emb, qids, cents, nprobe)
-    val pruned = index.where(col("cell").isin(probe.cells: _*))
-      .join(broadcast(allowed.toDF("vec_id")), Seq("vec_id"), "left_semi")
-    VectorOps.ivfPqRefineTopK(pruned, emb, qids, k, refine, nprobe,
-      cents, books, residual = true, probes = Some(probe.frame))
-      .withColumnRenamed("vec_id", "doc_id")
-  }
-
-  /** The filtered chunk-dense half of [[searchChunksFiltered]]: the
-    * allowed doc-id list semi-joins onto the PROBED chunk-index slice
-    * on the decomposed composite key (all of a filtered doc's chunks
-    * drop together), so the filter composes with the partition-pruned
-    * read instead of replacing it — the [[denseTopKAllowed]] shape at
-    * chunk level. */
-  private def chunkDenseTopKAllowed(qids: Seq[Long], allowed: DataFrame,
-      k: Int, nprobe: Int, refine: Option[Int]): DataFrame = {
-    val probe = VectorOps.probePlanOf(emb, qids, cents, nprobe)
-    val pruned = cindex.where(col("cell").isin(probe.cells: _*))
-      .join(broadcast(allowed.toDF("a_id")),
-        expr(s"vec_id DIV ${VectorOps.ChunkStride}") === col("a_id"),
-        "left_semi")
-    refine match {
-      // the shortlist draws from the ALLOWED-filtered probed slice, so
-      // the exact rerank needs no second filter
-      case Some(r) => VectorOps.chunkIvfPqRefineTopK(pruned, cemb, emb,
-        qids, k, r, nprobe, cents, books, probes = Some(probe.frame))
-      case None => VectorOps.chunkIvfPqTopKFromIndex(pruned, emb, qids,
-        k, nprobe, cents, books, probes = Some(probe.frame))
-    }
-  }
-
-  /** Metadata-filtered chunk-level serve — [[searchFiltered]]'s
-    * pre-filter semantics on the chunk serve: the allowed doc-id frame
-    * restricts candidates on BOTH halves before each rank (all of a
-    * filtered doc's chunks drop together; df/N/avgdl and the probed
-    * cells stay collection-global), then the usual attributed fusion
-    * over the two chunk-ranked halves. */
-  def searchChunksFiltered(queries: Seq[(Long, Seq[String])],
-      allowed: DataFrame, k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    def lex = TextOps.bm25ChunkTopKFrom(ctf, cdl, queries, k, Some(allowed))
-    def dense = chunkDenseTopKAllowed(queries.map(_._1), allowed, k,
-      pinNprobe("chunk", nprobe), pinRefineOpt("chunk", refine, k))
-    policy match {
-      case HybridOps.LexicalOnly => lex
-      case HybridOps.DenseOnly => dense
-      case HybridOps.Rrf => HybridOps.rrfFuseChunked(lex, dense, k)
-      case HybridOps.Weighted(w) =>
-        HybridOps.weightedFuseChunked(lex, dense, k, w)
-    }
-  }
-
-  /** Snapshot-health report for the CHUNK artifacts — the ANALYZE
-    * surface a 100 TB operator consults before retuning nprobe or
-    * scheduling a compaction, closing the observability gap between
-    * [[graft.sync.IndexStore.stats]] / [[graft.operators.VectorOps
-    * .ivfCellStats]] (store + doc-level IVF) and the chunk frames
-    * nothing reported on: one row per live partition of `cindex/`
-    * (cell-partitioned chunk codes) and `cemb/` (doc-id-bucketed
-    * full-precision chunk vectors) with its ROW count, FILE count and
-    * BYTES on disk. Cell skew reads directly off the cindex rows
-    * (a hot cell degrades every probe that hits it); file counts and
-    * bytes surface rebuild churn (per-partition merge swaps rewrite
-    * whole partitions, but many small incremental generations show up
-    * here as file fragmentation — the compaction trigger).
-    *
-    * Scale shape: the filesystem side is a bounded driver listing
-    * (≤ cells + [[Retrieval.MergeBuckets]] directories); the row side
-    * scans ONLY each frame's partition column (column-pruned — the
-    * codes and float columns are never read). */
-  def chunkArtifactStats(): DataFrame = {
-    import org.apache.spark.sql.types._
-    // PRESENT chunk frames only — the per-frame availability rule all
-    // the way down: a snapshot reports on whichever of the four chunk
-    // frames it holds (a v4 snapshot with cindex but no cemb keeps the
-    // stats surface for the frame it has); only a snapshot with NO
-    // chunk frame at all has nothing to report on and gets the
-    // upgrade message
-    val frames = Seq("cindex" -> ("cell", Retrieval.IndexSchema),
-      "cemb" -> ("pb", Retrieval.CembSchema),
-      "bcindex" -> ("cell", Retrieval.IndexSchema),
-      "bcemb" -> ("pb", Retrieval.CembSchema))
-      .filter { case (f, _) => new java.io.File(s"$dir/$f").isDirectory }
-    require(frames.nonEmpty,
-      s"$dir holds none of the chunk frames (cindex/, cemb/, " +
-        s"bcindex/, bcemb/) — it predates the v${Retrieval.LayoutVersion}" +
-        " chunk-index layout; publish once with build() to upgrade")
-    val fsRows = frames.flatMap { case (frame, (partCol, _)) =>
-      val d = new java.io.File(s"$dir/$frame")
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith(partCol + "="))
-        .map { pd =>
-          val files = Option(pd.listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(f => f.isFile && !f.getName.startsWith(".") &&
-              !f.getName.startsWith("_"))
-          org.apache.spark.sql.Row(frame, pd.getName,
-            files.length, files.map(_.length()).sum)
-        }
-    }
-    val fsSchema = StructType(Seq(StructField("frame", StringType),
-      StructField("part", StringType), StructField("files", IntegerType),
-      StructField("bytes", LongType)))
-    val fs = serve.createDataFrame(
-      serve.sparkContext.parallelize(fsRows, 1), fsSchema)
-    // row counts off the partition column alone — explicit re-reads
-    // (not the accessors) because the logical frames drop pb on purpose
-    val rows = frames.map { case (frame, (partCol, schema)) =>
-      serve.read.schema(schema).parquet(s"$dir/$frame")
-        .groupBy(concat(lit(partCol + "="), col(partCol)).as("part"))
-        .agg(count(lit(1)).as("rows")).withColumn("frame", lit(frame))
-    }.reduce(_ unionByName _)
-    fs.join(rows, Seq("frame", "part"), "left")
-      .select(col("frame"), col("part"),
-        coalesce(col("rows"), lit(0L)).as("rows"),
-        col("files"), col("bytes"))
-  }
-
-  /** The retrain-cadence METER, one call on the live handle —
-    * [[VectorOps.recallCurveFrom]] over THIS snapshot's stored
-    * artifacts: queries and both exact baselines read the stored float
-    * columns (`emb/`, `cemb/` — on an external-model snapshot, the
-    * real chunk vectors the engine derivation cannot reproduce), the
-    * approximate sides the stored cell-partitioned code frames under
-    * the loaded codebooks. As the corpus drifts away from the
-    * generation the books were trained on, these recall rows decay —
-    * the measurement [[Retrieval.retrain]]'s scaladoc says should
-    * dictate the retrain schedule, now one call instead of a hand-
-    * wired harness. Output: one row per (serve shape × nprobe × r)
-    * grid point with recall@k over the query sample.
-    *
-    * `bpeWindows = true` meters the MODEL-CONTEXT-TRUE chunk serve
-    * instead: the chunk family reads the v6 `bcemb`/`bcindex` frames,
-    * so its `chunk_adc`/`chunk_refine` rows are the recall of
-    * [[bpeChunkDenseTopK]] (x90/x92's dense half) against the brute
-    * MaxSim baseline over the SAME BPE windows — the production RAG
-    * serve is metered at its own window unit, not approximated by the
-    * whitespace twin's numbers. The doc-family rows are meter-
-    * independent (doc vectors know no windows). */
-  def measureRecall(queryIds: Seq[Long], k: Int,
-      nprobes: Seq[Int] = VectorOps.CurveNprobes,
-      refines: Seq[Int] = VectorOps.CurveRefines,
-      bpeWindows: Boolean = false,
-      families: Seq[String] = VectorOps.CurveFamilies): DataFrame = {
-    // maintenance work runs on the CALLER's batch session (the build/
-    // rebuild convention), not the narrow serve session: the curve's
-    // exact baselines are deliberate brute scans, exactly the work the
-    // serve session's fixed 8-task shuffles are wrong for.
-    // `families` scopes the meter: a chunk-only pass skips the brute
-    // doc baseline entirely (maintain()'s BPE pass re-used to compute
-    // it redundantly), and a doc-only pass never touches the chunk
-    // frames — so a pre-chunk-layout snapshot can still meter its doc
-    // serve. When the chunk family IS requested, the curve reads BOTH
-    // chunk frames of its meter (floats for the exact baseline, codes
-    // for the approximate side) — guard each so a partial snapshot
-    // fails with the named frame and the upgrade path, not a raw
-    // missing-path error mid-plan
-    val (embFrame, idxFrame) =
-      if (bpeWindows) ("bcemb", "bcindex") else ("cemb", "cindex")
-    if (families.contains("chunk")) {
-      requireChunkFrame(embFrame)
-      requireChunkFrame(idxFrame)
-    }
-    def read(frame: String, schema: String) =
-      spark.read.schema(schema).parquet(s"$dir/$frame")
-    VectorOps.recallCurveFrom(
-      read("emb", Retrieval.EmbSchema).select("vec_id", "embedding"),
-      read(embFrame, Retrieval.CembSchema)
-        .select("doc_id", "chunk_id", "embedding"),
-      read("index", Retrieval.IndexSchema),
-      read(idxFrame, Retrieval.IndexSchema),
-      cents, books, queryIds, k, nprobes, refines,
-      families = families)
-  }
-
-  /** The ACTION [[chunkArtifactStats]]'s file counts trigger —
-    * compaction of fragmented snapshot partitions: every partition of
-    * every merge-swapped frame holding more than
-    * `maxFilesPerPartition` data files is rewritten (rows unchanged)
-    * to a single file via the same per-partition staged swap
-    * [[Retrieval.rebuild]] merges through, so the crash contract is
-    * identical (each partition is always one complete generation; a
-    * crashed swap heals on the next load). Fragmentation comes from
-    * [[Retrieval.build]] itself — a wide build writes one file per
-    * task per partition value — and from external tooling; rebuild's
-    * swaps already consolidate the partitions they touch.
-    *
-    * Single-writer maintenance (the rebuild contract). Returns the
-    * `(frame, partition)` pairs rewritten — empty means the snapshot
-    * was already compact. Cost ∝ the fragmented partitions' bytes
-    * only; untouched partitions are never read. */
-  def compact(maxFilesPerPartition: Int = 1): Seq[(String, String)] = {
-    require(maxFilesPerPartition >= 1,
-      s"maxFilesPerPartition=$maxFilesPerPartition must be >= 1")
-    Retrieval.healMergeAsides(dir)
-    Retrieval.MergeFrames.flatMap { case (frame, partCol) =>
-      val frameDir = new java.io.File(s"$dir/$frame")
-      val fragmented = Option(frameDir.listFiles())
-        .getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith(partCol + "="))
-        .filter { pd =>
-          Option(pd.listFiles()).getOrElse(Array.empty[java.io.File])
-            .count(f => f.isFile && !f.getName.startsWith(".") &&
-              !f.getName.startsWith("_")) > maxFilesPerPartition
-        }
-        .map(_.getName.stripPrefix(partCol + "="))
-      if (fragmented.isEmpty) Nil
-      else {
-        // IN-list via expr so the literals coerce to the partition
-        // column's type (cell BIGINT / pb INT) and the read prunes
-        val rows = spark.read
-          .schema(Retrieval.frameSchemas(frame)).parquet(frameDir.toString)
-          .where(expr(s"$partCol IN (${fragmented.mkString(",")})"))
-        Retrieval.replacePartitions(frameDir.toString, partCol, rows,
-          fragmented)
-        fragmented.map(v => frame -> s"$partCol=$v")
-      }
-    }
-  }
-
-  /** The MAINTENANCE RUNBOOK, one call — what a 100 TB operator runs
-    * on a cadence instead of hand-wiring three scaladocs together:
-    *
-    *  1. **Heal**: crashed per-partition merge swaps recover first
-    *     (the rebuild/compact crash contract's idempotent converge).
-    *  2. **Compact** ([[chunkArtifactStats]]' file counts are the
-    *     trigger, [[compact]] the action): every merge-swapped
-    *     partition holding more than `maxFilesPerPartition` data files
-    *     rewrites to one file — cost ∝ fragmented bytes, rows
-    *     unchanged. Fragmentation accrues from wide builds and
-    *     external tooling; rebuild's swaps already consolidate what
-    *     they touch.
-    *  3. **Meter recall** ([[measureRecall]] at the SHIPPED serve
-    *     point — nprobe=2, r=[[VectorOps.RefineShortlist]], the x91
-    *     grid point the serve defaults are justified against): as the
-    *     corpus drifts from the generation the codebooks were trained
-    *     on, these numbers decay. When the doc-refine or chunk-refine
-    *     recall@k drops below `recallFloor`, the report recommends
-    *     [[Retrieval.retrain]] — the codebook migration [[Retrieval
-    *     .rebuild]] deliberately never performs.
-    *
-    * The report carries the numbers, the action taken, and the
-    * recommendation; retrain itself needs the full corpus frames, so
-    * it stays a separate, deliberate call. `recallFloor` is
-    * deployment policy — size it against the snapshot's own curve
-    * ([[measureRecall]]'s full grid, or the x94 codebook sweep when
-    * considering a cell-count change), e.g. "alert at 80% of the
-    * recall the curve measured at publish time".
-    *
-    * Scale shape: heal + compact are bounded driver listings plus
-    * rewrites of fragmented partitions only; the meter is the priced
-    * brute-baseline harness over |queryIds| queries (run it on the
-    * batch session at maintenance cadence, never in a serve path). */
-  def maintain(queryIds: Seq[Long], k: Int = 5,
-      maxFilesPerPartition: Int = 1,
-      recallFloor: Double = 0.0,
-      servePointFloor: Option[Double] = None,
-      servePointFamilies: Seq[String] = Seq("doc"))
-      : Retrieval.MaintenanceReport = {
-    require(servePointFamilies.nonEmpty &&
-        servePointFamilies.forall(Set("doc", "chunk", "bpe")),
-      s"servePointFamilies must be drawn from doc/chunk/bpe: " +
-        servePointFamilies.mkString(","))
-    def frameDir(f: String) = new java.io.File(s"$dir/$f").isDirectory
-    // the shipped refine point, floored at k: recallCurveFrom requires
-    // every r >= k, so a k above RefineShortlist degenerates the
-    // shipped point to r = k instead of throwing mid-runbook
-    val rShip = math.max(k, VectorOps.RefineShortlist)
-    def shipped(curve: Array[org.apache.spark.sql.Row]): Map[String, Double] =
-      curve.filter(r =>
-        r.getInt(r.fieldIndex("nprobe")) == Retrieval.ShippedNprobe &&
-          (r.getInt(r.fieldIndex("r")) == rShip ||
-            r.getInt(r.fieldIndex("r")) == 0))
-        .map(r => r.getString(r.fieldIndex("method")) ->
-          r.getDouble(r.fieldIndex("recall"))).toMap
-    val compacted = compact(maxFilesPerPartition) // heals asides first
-    // meter only the families whose frames this snapshot holds (the
-    // per-frame availability rule: a pre-chunk snapshot keeps the heal
-    // + compact steps and its doc meter), and widen to the full
-    // (nprobe × refine) grid ONLY for the families `servePointFamilies`
-    // selects and only under a floor — a family metered at the shipped
-    // point alone contributes 1–2 rows, so grid-metering one nobody
-    // selects from would price 16 points to consume 2. Each family's
-    // brute baseline computes exactly once either way.
-    val hasChunk = frameDir("cindex") && frameDir("cemb")
-    val hasBpe = frameDir("bcindex") && frameDir("bcemb")
-    val grid = servePointFloor.isDefined
-    val docGrid = grid && servePointFamilies.contains("doc")
-    val chunkGrid = grid && servePointFamilies.contains("chunk") && hasChunk
-    val bpeGrid = grid && servePointFamilies.contains("bpe") && hasBpe
-    // a family the caller explicitly selected but this snapshot cannot
-    // meter (frames absent) is REPORTED, not silently skipped — its
-    // serve point would come back None either way, and without the
-    // marker that None is indistinguishable from an unattainable floor
-    val framesAbsent = servePointFamilies.distinct.filter {
-      case "chunk" => !hasChunk
-      case "bpe" => !hasBpe
-      case _ => false
-    }
-    // refines below k would throw in the meter; k past the widest
-    // grid value collapses the refine axis to rShip alone
-    def rsWide = (VectorOps.CurveRefines.filter(_ >= k) :+ rShip).distinct
-    def meter(wide: Boolean, bpe: Boolean, fams: Seq[String]) =
-      measureRecall(queryIds, k,
-        nprobes =
-          if (wide) VectorOps.CurveNprobes
-          else Seq(Retrieval.ShippedNprobe),
-        refines = if (wide) rsWide else Seq(rShip),
-        bpeWindows = bpe, families = fams).collect()
-    val (docCurve, chunkCurve) =
-      if (docGrid || chunkGrid) {
-        val dc = meter(docGrid, bpe = false, Seq("doc"))
-        val cc =
-          if (hasChunk) meter(chunkGrid, bpe = false, Seq("chunk"))
-          else Array.empty[org.apache.spark.sql.Row]
-        (dc, cc)
-      } else {
-        val fams = Seq("doc") ++ (if (hasChunk) Seq("chunk") else Nil)
-        val c = meter(wide = false, bpe = false, fams)
-        (c, c)
-      }
-    val ws = shipped(docCurve) ++ shipped(chunkCurve)
-    val bpeCurve =
-      if (hasBpe) meter(bpeGrid, bpe = true, Seq("chunk"))
-      else Array.empty[org.apache.spark.sql.Row]
-    val bpeChunk =
-      if (hasBpe) Some(shipped(bpeCurve)("chunk_refine")) else None
-    val doc = ws("doc_refine")
-    val chunk = if (hasChunk) Some(ws("chunk_refine")) else None
-    // the emb count feeds BOTH the serve-point cost model and the
-    // cell-drift check — one metadata count job, not two
-    val liveVectors = emb.count()
-    def rowsOf(curve: Array[org.apache.spark.sql.Row]) =
-      curve.toSeq.map(r => (r.getString(r.fieldIndex("method")),
-        r.getInt(r.fieldIndex("nprobe")), r.getInt(r.fieldIndex("r")),
-        r.getDouble(r.fieldIndex("recall"))))
-    // cheapest grid point meeting the serve floor per SELECTED family,
-    // from the same measured rows. The cost model's scan term is the
-    // probed fraction of the family's OWN index rows — chunk/BPE
-    // serves scan chunk codes, not doc vectors, so their corpusN is
-    // the (metadata-cheap) count of the family's index frame.
-    def pointOf(curve: Array[org.apache.spark.sql.Row], n: Long) =
-      servePointFloor.flatMap(floor =>
-        Retrieval.cheapestServePointOf(rowsOf(curve), "doc_refine", floor,
-          corpusN = n, cells = cents.size))
-    def chunkPointOf(curve: Array[org.apache.spark.sql.Row], frame: String) =
-      servePointFloor.flatMap(floor =>
-        Retrieval.cheapestServePointOf(rowsOf(curve), "chunk_refine", floor,
-          corpusN = spark.read.schema(Retrieval.IndexSchema)
-            .parquet(s"$dir/$frame").count(),
-          cells = cents.size))
-    val servePoint =
-      if (docGrid) pointOf(docCurve, liveVectors) else None
-    val chunkServePoint =
-      if (chunkGrid) chunkPointOf(chunkCurve, "cindex") else None
-    val bpeServePoint =
-      if (bpeGrid) chunkPointOf(bpeCurve, "bcindex") else None
-    // cell-count drift: the trained codebook sized cells ≈ √n for the
-    // corpus it was trained on ([[Retrieval.build]]'s adaptive sizing);
-    // when the LIVE count drifts ≥4× from that trained k² the cell
-    // geometry is off by ≥2× from the measured k ≈ √n shape (the x94
-    // curve) and a retrain — which re-derives cells from the corpus as
-    // it is now — is the recommended migration. The count is the emb
-    // frame's metadata-cheap row count; clamped recommendations that
-    // land back on the trained count (tiny corpora at the 16-cell
-    // floor) recommend nothing.
-    val trainedCells = cents.size
-    val recommendedCells = VectorOps.adaptiveCells(liveVectors)
-    val k2 = trainedCells.toLong * trainedCells
-    // an operator-PINNED cell count (build/retrain's explicit `cells`
-    // — a deployment tuned against its own x94 sweep) suppresses the
-    // drift nag: the √n shape is the default the override deliberately
-    // declined, and there is nothing to recommend back. The pin rides
-    // the snapshot (cellspinned.txt, written per publish), so a later
-    // adaptive retrain clears it. Pinned CODEBOOKS still drift-check:
-    // outgrowing them is the scenario retrain exists for.
-    val cellsPinned =
-      new java.io.File(dir, Retrieval.CellsPinnedFile).exists()
-    val cellDrift = !cellsPinned &&
-      (liveVectors >= 4L * k2 || 4L * liveVectors <= k2) &&
-        recommendedCells != trainedCells
-    // counting ingest-filter health (the delete-heavy deployment's
-    // "time to resize" nag, surfaced where its operator already looks
-    // instead of a hand-run countingBloomStats against the raw
-    // bloomdh): fill, implied FP rate, the EXACT live count
-    // (Σcnt = khash·live), the half-full resize recommendation, and
-    // the geometry a resize should target
-    // ([[graft.operators.Dedup.adaptiveCountingGeometry]] of the live
-    // count). Bit-backed snapshots carry None — the bit filter
-    // regenerates per rebuild at adaptive geometry, so it can never
-    // silently outgrow itself the way the delta-maintained counting
-    // frame can. One bounded aggregate over the ≤ shards·mbits-row
-    // frame, at maintenance cadence.
-    val ingestStats: Option[graft.operators.Dedup.BloomStats] =
-      if (Retrieval.ingestFilterFlavorOf(dir) != "counting") None
-      else {
-        val f = ingestBloom
-        Some(graft.operators.Dedup.countingBloomStats(f.frame, f.mbits,
-          graft.operators.Dedup.BloomHashes, f.shards))
-      }
-    Retrieval.MaintenanceReport(compacted, doc, chunk, bpeChunk,
-      recallFloor,
-      retrainRecommended = doc < recallFloor ||
-        chunk.exists(_ < recallFloor) || bpeChunk.exists(_ < recallFloor),
-      servePoint = servePoint,
-      chunkServePoint = chunkServePoint,
-      bpeServePoint = bpeServePoint,
-      servePointFramesAbsent = framesAbsent,
-      trainedCells = trainedCells,
-      liveVectors = liveVectors,
-      recommendedCells = recommendedCells,
-      cellMigrationRecommended = cellDrift,
-      cellsPinned = cellsPinned,
-      ingestFilterStats = ingestStats,
-      ingestFilterResizeRecommended =
-        ingestStats.exists(_.fillRatio > 0.5),
-      ingestFilterRecommendedGeometry = ingestStats
-        .filter(_.fillRatio > 0.5)
-        .map(s => graft.operators.Dedup.adaptiveCountingGeometry(
-          s.estimatedKeys)))
-  }
-
-  /** BPE-window chunk-DENSE top-k — [[chunkDenseTopK]] over the v6
-    * frames: same probe-pruned composite-key ADC → MaxSim chain, the
-    * chunk unit swapped to the snapshot's model-context-true windows;
-    * `refine` reranks the shortlist against the stored `bcemb/`
-    * floats. */
-  def bpeChunkDenseTopK(queryIds: Seq[Long], k: Int,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    val np = pinNprobe("bpe", nprobe)
-    val probe = VectorOps.probePlanOf(emb, queryIds, cents, np)
-    val pruned = bcindex.where(col("cell").isin(probe.cells: _*))
-    pinRefineOpt("bpe", refine, k) match {
-      case Some(r) => VectorOps.chunkIvfPqRefineTopK(pruned, bcemb, emb,
-        queryIds, k, r, np, cents, books, probes = Some(probe.frame))
-      case None => VectorOps.chunkIvfPqTopKFromIndex(pruned, emb,
-        queryIds, k, np, cents, books, probes = Some(probe.frame))
-    }
-  }
-
-  /** The MODEL-CONTEXT-TRUE chunk serve (v6) — [[searchChunks]] with
-    * both halves metered in the snapshot's fixed subword rules: the
-    * lexical half ranks BPE-window SYMBOL postings (`bctf`/`bcdl`)
-    * with the query terms encoded by the SAME rules driver-side
-    * ([[TextOps.bpeEncodeTerms]] — the tokenizer symmetry at subword
-    * level), the dense half is [[bpeChunkDenseTopK]], and the fused
-    * doc list carries each doc's best BPE window as the attribution —
-    * the passage a RAG caller hands to a model whose context budget is
-    * denominated in these exact units. `queries` carry plain
-    * whitespace terms (the [[search]] convention); encoding is the
-    * serve's job. */
-  def searchBpeChunks(queries: Seq[(Long, Seq[String])], k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    val bq = queries.map { case (id, ts) =>
-      id -> TextOps.bpeEncodeTerms(ts, bpeRules)
-    }
-    def lex = TextOps.bm25ChunkTopKFrom(bctf, bcdl, bq, k)
-    def dense = bpeChunkDenseTopK(queries.map(_._1), k, nprobe, refine)
-    policy match {
-      case HybridOps.LexicalOnly => lex
-      case HybridOps.DenseOnly => dense
-      case HybridOps.Rrf => HybridOps.rrfFuseChunked(lex, dense, k)
-      case HybridOps.Weighted(w) =>
-        HybridOps.weightedFuseChunked(lex, dense, k, w)
-    }
-  }
-
-  /** Metadata-filtered model-context-true chunk serve —
-    * [[searchChunksFiltered]]'s pre-filter semantics at the BPE meter:
-    * the allowed doc-id frame restricts BOTH halves before each rank
-    * (a filtered doc's BPE windows all drop together; subword df/N/
-    * avgdl and the probed cells stay collection-global), the dense
-    * half semi-joining the allowed list onto the probed `bcindex`
-    * slice on the decomposed composite key so the filter COMPOSES
-    * with the partition prune. */
-  def searchBpeChunksFiltered(queries: Seq[(Long, Seq[String])],
-      allowed: DataFrame, k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame = {
-    val np = pinNprobe("bpe", nprobe)
-    val rr = pinRefineOpt("bpe", refine, k)
-    val bq = queries.map { case (id, ts) =>
-      id -> TextOps.bpeEncodeTerms(ts, bpeRules)
-    }
-    def lex = TextOps.bm25ChunkTopKFrom(bctf, bcdl, bq, k, Some(allowed))
-    def dense = {
-      val qids = queries.map(_._1)
-      val probe = VectorOps.probePlanOf(emb, qids, cents, np)
-      val pruned = bcindex.where(col("cell").isin(probe.cells: _*))
-        .join(broadcast(allowed.toDF("a_id")),
-          expr(s"vec_id DIV ${VectorOps.ChunkStride}") === col("a_id"),
-          "left_semi")
-      rr match {
-        case Some(r) => VectorOps.chunkIvfPqRefineTopK(pruned, bcemb, emb,
-          qids, k, r, np, cents, books, probes = Some(probe.frame))
-        case None => VectorOps.chunkIvfPqTopKFromIndex(pruned, emb, qids,
-          k, np, cents, books, probes = Some(probe.frame))
-      }
-    }
-    policy match {
-      case HybridOps.LexicalOnly => lex
-      case HybridOps.DenseOnly => dense
-      case HybridOps.Rrf => HybridOps.rrfFuseChunked(lex, dense, k)
-      case HybridOps.Weighted(w) =>
-        HybridOps.weightedFuseChunked(lex, dense, k, w)
-    }
-  }
-
-  /** [[search]] over raw query strings — tokenized with the engine's
-    * own rule ([[HybridOps.tokenizeQueries]]), so querying can never
-    * disagree with indexing on token boundaries. */
-  def searchText(queries: Seq[(Long, String)], k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob): DataFrame =
-    search(HybridOps.tokenizeQueries(queries), k, policy, nprobe)
-
-  /** [[searchChunks]] over raw query strings — the same tokenizer
-    * symmetry as [[searchText]], for the chunk-level serve. */
-  def searchTextChunks(queries: Seq[(Long, String)], k: Int,
-      policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Option[Int] = Retrieval.PinnedRefine): DataFrame =
-    searchChunks(HybridOps.tokenizeQueries(queries), k, policy, nprobe,
-      refine)
-
-  /** Metadata-filtered serve from the stored artifacts — pre-filter
-    * candidates, global stats ([[HybridOps.searchFiltered]]'s
-    * semantics). The dense half semi-joins the allowed id list onto the
-    * probed index slice BEFORE ADC, so the filter composes with the
-    * partition-pruned read instead of replacing it. */
-  def searchFiltered(queries: Seq[(Long, Seq[String])], allowed: DataFrame,
-      k: Int, policy: HybridOps.Fusion = HybridOps.Rrf,
-      nprobe: Int = Retrieval.PinnedKnob,
-      refine: Int = Retrieval.PinnedKnob): DataFrame = {
-    def lex = TextOps.bm25TopKFrom(tf, dl, queries, k, Some(allowed))
-    def dense = denseTopKAllowed(queries.map(_._1), allowed, k,
-      pinNprobe("doc", nprobe), pinRefine("doc", refine, k))
-    policy match {
-      case HybridOps.LexicalOnly => lex
-      case HybridOps.DenseOnly => dense
-      case p => HybridOps.fuse(lex, dense, k, p)
-    }
-  }
 }
 
 object Retrieval {
 
-  /** What one [[Retrieval!.maintain maintain]] pass did and measured:
-    * the `(frame, partition)` pairs compacted (empty = already
-    * compact), recall@k of the refine serves at the SHIPPED grid
-    * point — each chunk meter present only when the snapshot holds its
-    * frames (the per-frame availability rule: a pre-v5 snapshot still
-    * heals, compacts, and meters its doc serve; a pre-v6 one skips
-    * only the BPE meter) — the caller's floor, whether any metered
-    * serve fell below it (the [[retrain]] trigger — the one action
-    * maintain recommends but never takes, since a codebook migration
-    * needs the full corpus and an operator's intent), and, when a
-    * serve floor was passed, the cheapest measured (nprobe, r) grid
-    * point meeting it ([[cheapestServePointOf]]). */
-  final case class MaintenanceReport(
-      compacted: Seq[(String, String)],
-      docRefineRecall: Double,
-      chunkRefineRecall: Option[Double],
-      bpeChunkRefineRecall: Option[Double],
-      recallFloor: Double,
-      retrainRecommended: Boolean,
-      servePoint: Option[ServePoint] = None,
-      // per-family serve points (maintain(servePointFamilies = ...)):
-      // the chunk and BPE-window serves — the RAG paths a deployment
-      // actually tunes — selected from their OWN measured grids under
-      // their own index-row cost scale; None when the family was not
-      // selected or its frames are absent
-      chunkServePoint: Option[ServePoint] = None,
-      bpeServePoint: Option[ServePoint] = None,
-      // cell-count drift (the x94 k ≈ √n shape): the snapshot's trained
-      // cell count, the live corpus count, what [[VectorOps
-      // .adaptiveCells]] would size for it, and whether the ≥4×-from-k²
-      // drift rule recommends a cell migration (a [[retrain]], which
-      // re-derives cells from the corpus as it is now)
-      trainedCells: Int = 0,
-      liveVectors: Long = 0L,
-      recommendedCells: Int = 0,
-      cellMigrationRecommended: Boolean = false,
-      cellsPinned: Boolean = false,
-      // families the caller EXPLICITLY selected in servePointFamilies
-      // whose frames this snapshot does not hold — so a None in that
-      // family's serve point is unambiguous (frames absent, not "no
-      // measured point reached the floor"); a maintain run tuning a
-      // family it cannot meter is a runbook mistake the report must
-      // surface, never silently skip
-      servePointFramesAbsent: Seq[String] = Nil,
-      // COUNTING ingest-filter health ([[graft.operators.Dedup
-      // .countingBloomStats]] over the snapshot's filter): present
-      // only on counting-backed snapshots — the delta-maintained
-      // flavor is the one that can silently outgrow its pinned
-      // geometry (fill → FP rate fill^khash, degrading with no error
-      // anywhere), so ITS operator gets the resize nag here; the bit
-      // flavor re-derives adaptive geometry every rebuild and carries
-      // None. `estimatedKeys` inside is EXACT for counting frames
-      // (Σcnt = khash·live). Past half fill the resize flag trips and
-      // the recommended geometry is adaptiveCountingGeometry of that
-      // exact live count — the migration is a counting-flavored
-      // rebuild/regeneration at it
-      ingestFilterStats: Option[graft.operators.Dedup.BloomStats] = None,
-      ingestFilterResizeRecommended: Boolean = false,
-      ingestFilterRecommendedGeometry: Option[(Int, Int)] = None)
-
-  /** Sentinel default for every serve entry's `nprobe`/`refine` knob:
-    * "resolve to the snapshot's accepted serve point
-    * ([[Retrieval!.pinnedServePoints pinnedServePoints]]) when one is
-    * pinned for the family, else the shipped constant". Any explicit
-    * non-sentinel argument wins unconditionally. */
-  val PinnedKnob: Int = -1
-
-  /** The SHIPPED nprobe default — what a sentinel knob resolves to
-    * when no serve point is pinned, and the point
-    * [[Retrieval!.maintain maintain]] meters as "shipped" on its
-    * curves. One constant for both so pinned-sentinel resolution and
-    * the maintenance meter can never silently diverge. */
-  val ShippedNprobe: Int = 2
-
-  /** [[PinnedKnob]] for the chunk serves' `Option[Int]` refine knob. */
-  val PinnedRefine: Option[Int] = Some(PinnedKnob)
-
-  private[serve] val ServePointsFile = "servepoints.txt"
-
-  /** Parse a snapshot's accepted serve points — empty when the sidecar
-    * is absent; LOUD on a malformed line (the file exists only if an
-    * accept wrote it, so damage is corruption, not legacy). */
-  private[serve] def readServePoints(dir: String): Map[String, (Int, Int)] = {
-    val p = java.nio.file.Paths.get(dir, ServePointsFile)
-    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
-    else new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      .split("\n").map(_.trim).filter(_.nonEmpty).map { ln =>
-        val parts = ln.split("\\s+")
-        require(parts.length == 3 &&
-            Set("doc", "chunk", "bpe")(parts(0)) &&
-            parts.drop(1).forall(_.matches("-?\\d+")),
-          s"malformed serve-point line in $dir/$ServePointsFile: '$ln' " +
-            "— expected 'family nprobe r'; delete the sidecar to fall " +
-            "back to shipped defaults")
-        parts(0) -> ((parts(1).toInt, parts(2).toInt))
-      }.toMap
-  }
-
-  /** One measured serve setting and its cost under the serve-read
-    * model: `bytesPerQuery` = ADC codes scanned (nprobe/cells of the
-    * corpus × one byte-ish code per subspace) + refine float reads
-    * (r vectors × Dim × 4 bytes) — the two bandwidth terms the x91
-    * scaladoc trades ("r=40 beats (nprobe=8, r=20) at a quarter of the
-    * probed bandwidth"), made one comparable number. */
-  final case class ServePoint(method: String, nprobe: Int, r: Int,
-      recall: Double, bytesPerQuery: Double)
-
-  /** The serve-read cost of a grid point — see [[ServePoint]]. */
-  private[graft] def servePointCost(nprobe: Int, r: Int, corpusN: Long,
-      cells: Int): Double =
-    nprobe.toDouble / cells * corpusN * VectorOps.PqSubspaces +
-      r.toDouble * VectorOps.Dim * 4
-
-  /** Pick the CHEAPEST measured grid point of `method` whose recall
-    * meets `floor` — the serve-point selection a deployment runs over
-    * a [[Retrieval!.measureRecall measureRecall]] (or x91) frame
-    * instead of eyeballing the grid: ties on cost break to the higher
-    * recall, then to the smaller (nprobe, r) pair for determinism.
-    * None when no measured point reaches the floor (the curve says the
-    * floor needs a retrain or a codebook migration, not a knob turn).
-    * `corpusN`/`cells` size the scan-fraction term of the cost model
-    * ([[servePointCost]]) — pass the LIVE corpus count and the
-    * snapshot's trained cell count. */
-  def cheapestServePoint(curve: org.apache.spark.sql.DataFrame,
-      method: String, floor: Double, corpusN: Long,
-      cells: Int): Option[ServePoint] =
-    cheapestServePointOf(
-      curve.select("method", "nprobe", "r", "recall").collect().toSeq
-        .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
-          r.getDouble(3))),
-      method, floor, corpusN, cells)
-
-  /** [[cheapestServePoint]] over already-collected curve rows
-    * `(method, nprobe, r, recall)`. */
-  def cheapestServePointOf(rows: Seq[(String, Int, Int, Double)],
-      method: String, floor: Double, corpusN: Long,
-      cells: Int): Option[ServePoint] = {
-    require(cells > 0, s"cells=$cells must be positive")
-    rows.filter(p => p._1 == method && p._4 >= floor)
-      .map { case (m, np, r, rec) =>
-        ServePoint(m, np, r, rec, servePointCost(np, r, corpusN, cells))
-      }
-      .sortBy(p => (p.bytesPerQuery, -p.recall, p.nprobe, p.r))
-      .headOption
-  }
+  /** Probe width of the dense half — see [[Retrieval!.denseTopK]]. */
+  private val Nprobe = 2
 
   /** Explicit read schema so the `cell` PARTITION column keeps its
     * written BIGINT type (inference would narrow it to INT and put the
     * pruning filter's long literals behind a cast). */
   private[graft] val IndexSchema = "vec_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT"
 
-  /** Explicit read schemas for the pb-partitioned id-keyed frames —
-    * skipping footer inference on every handle (the `pb` partition
-    * column reads as INT, matching [[pb]]'s cast on write). */
-  private[graft] val EmbSchema =
-    "vec_id BIGINT, embedding ARRAY<FLOAT>, pb INT"
-  private[graft] val TfSchema = "doc_id BIGINT, token STRING, tf BIGINT, pb INT"
-  private[graft] val DlSchema = "doc_id BIGINT, dl BIGINT, pb INT"
-  private[graft] val CtfSchema =
-    "doc_id BIGINT, chunk_id BIGINT, token STRING, tf BIGINT, pb INT"
-  private[graft] val CdlSchema =
-    "doc_id BIGINT, chunk_id BIGINT, dl BIGINT, pb INT"
-  private[graft] val CembSchema =
-    "doc_id BIGINT, chunk_id BIGINT, embedding ARRAY<FLOAT>, pb INT"
-  private[graft] val DhSchema = "doc_id BIGINT, dh STRING, pb INT"
-  private[graft] val BloomDhSchema = "shard BIGINT, word BIGINT, bits BIGINT"
-
-  /** A loaded ingest filter: the persisted (or derived) frame, its
-    * geometry, and its flavor — `counting = false` is the bit array
-    * (`(shard, word, bits)`), `true` the delete-capable counting frame
-    * (`(shard, pos, cnt)`). */
-  private[serve] final case class IngestFilter(frame: DataFrame,
-      shards: Int, mbits: Int, counting: Boolean)
-
-  /** A streamed chain's folded counting state offered to
-    * [[Retrieval.build]] for ingest-filter ADOPTION: the flat
-    * `(pos, cnt)` frame ([[graft.streaming.StreamingCountingBloom
-    * .countingState]] of an `exactKeys = true` chain) plus the
-    * geometry it was folded at — the state aggregate strips the
-    * in-frame pin, so the caller re-asserts it here and the build
-    * validates it against the corpus before persisting. */
-  final case class AdoptedCountingState(counts: DataFrame, mbits: Int,
-      khash: Int = graft.operators.Dedup.BloomHashes)
-
-  /** Root marker recording the snapshot's ingest-filter flavor —
-    * written per publish so crash-recovery regeneration and the
-    * derive-from-dh fallback rebuild the SAME flavor the snapshot was
-    * published with (a flavor flip would change the deterministic
-    * false-positive set under a reader's feet). Absent = `bit`
-    * (pre-marker snapshots are all bit-backed). */
-  private[graft] val IngestFilterFile = "ingestfilter.txt"
-
-  private[graft] def ingestFilterFlavorOf(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, IngestFilterFile)
-    if (!java.nio.file.Files.isRegularFile(p)) "bit"
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-      require(s == "bit" || s == "counting",
-        s"unknown ingest-filter flavor '$s' in $dir/$IngestFilterFile")
-      s
-    }
-  }
-  private[graft] val VhSchema = "vec_id BIGINT, vh BIGINT, pb INT"
+  /** Explicit read schemas for the id-keyed frames — skipping footer
+    * inference on every handle. */
+  private val EmbSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+  private val TfSchema = "doc_id BIGINT, token STRING, tf BIGINT"
+  private val DlSchema = "doc_id BIGINT, dl BIGINT"
 
   /** Shuffle width of the serve session — serve exchanges move
     * shortlists (≤ |queries| · refine rows), so a handful of tasks is
-    * the right width; a deployment with large query batches raises
-    * this with the batch size. */
-  val ServeShufflePartitions = 8
+    * the right width. */
+  private val ServeShufflePartitions = 8
 
   /** ONE serve-tuned child session per SparkContext, shared by every
     * handle on that context: same cluster and artifacts, its own
@@ -1269,20 +137,20 @@ object Retrieval {
     * once per created session, not once per handle. */
   private val serveSessions = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext, SparkSession]()
-  private[graft] def serveSessionFor(spark: SparkSession): SparkSession = {
+  private def serveSessionFor(spark: SparkSession): SparkSession = {
     // evict sessions of stopped contexts on the way in — a context-
     // cycling JVM must not pin dead SparkContext object graphs forever
-    // (the PipelinePack.cachedHandle convention)
+    // (the PipelinePack.retrievalFor handle-cache convention)
     serveSessions.keySet.removeIf(_.isStopped)
     serveSessions.computeIfAbsent(spark.sparkContext, { _ =>
       val s = spark.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")
       s.conf.set("spark.sql.shuffle.partitions",
         ServeShufflePartitions.toString)
-      // let the scan pack the snapshot's small bucket files instead of
-      // fanning every read to one task per core (the default
-      // minPartitionNum = defaultParallelism): a pruned serve read is
-      // a few MB, not a corpus scan
+      // let the scan pack the snapshot's small files instead of fanning
+      // every read to one task per core (the default minPartitionNum =
+      // defaultParallelism): a pruned serve read is a few MB, not a
+      // corpus scan
       s.conf.set("spark.sql.files.minPartitionNum", "1")
       graft.functions.VectorFunctions.register(s)
       // the serve towers are exactly the shape RankTowerFusion plans
@@ -1295,16 +163,9 @@ object Retrieval {
 
   /** On-disk snapshot layout version — a cache-key component for
     * anything that keys cached snapshots by fixture identity, so a
-    * layout change (v2: pb-bucketed frames + dh/vh fingerprints;
-    * v3: ctf/cdl chunk-level lexical frames; v4: the cell-partitioned
-    * composite-key chunk-vector IVFADC frame `cindex/`; v5: the
-    * full-precision chunk-vector frame `cemb/` the refine serve
-    * reranks against; v6: the BPE-METERED chunk frames — `bperules.txt`
-    * (the snapshot's fixed tokenizer), subword postings `bctf/`/`bcdl/`,
-    * the BPE-window chunk-vector index `bcindex/` and its
-    * full-precision twin `bcemb/`) invalidates stale caches instead of
-    * tripping the chunk-entry layout check. */
-  val LayoutVersion = 6
+    * layout change invalidates stale caches. Bump it whenever the set
+    * or shape of the published frames changes. */
+  val LayoutVersion = 7
 
   private def writeBooks(path: java.nio.file.Path,
       rows: Seq[Seq[Double]]): Unit = {
@@ -1320,1323 +181,36 @@ object Retrieval {
       .map(_.split(",").toSeq
         .map(b => java.lang.Double.longBitsToDouble(b.toLong)))
 
-  /** The chunk frames a snapshot directory is missing (empty = fully
-    * current layout) — [[rebuild]]'s pre-merge check (it merges every
-    * one of these, so it needs the full v6 layout; the serve accessors
-    * guard PER FRAME instead, keeping older snapshots serving what
-    * they can). */
-  private[serve] def missingChunkFrames(dir: String): Seq[String] =
-    (Seq("ctf", "cdl", "cindex", "cemb", "bctf", "bcdl", "bcindex",
-      "bcemb").filterNot(f => new java.io.File(s"$dir/$f").isDirectory)) ++
-      (if (new java.io.File(dir, BpeRulesFile).exists()) Nil
-       else Seq(BpeRulesFile))
-
-  /** The snapshot's fixed BPE merge table (v6) — trained once at
-    * [[build]], held FIXED across every [[rebuild]] exactly like the
-    * vector codebooks: a refresh that re-learned the tokenizer would
-    * move every window boundary and silently re-chunk the whole
-    * corpus. Symbols are joined with the encode separator (U+0001),
-    * which no symbol can contain (the encode itself splits on it). */
-  private val BpeRulesFile = "bperules.txt"
-  private val RuleSep = "\u0001"
-  private def writeRules(path: java.nio.file.Path,
-      rules: Seq[(String, String)]): Unit = {
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.writeString(path,
-      rules.map { case (l, r) => s"$l$RuleSep$r" }.mkString("\n"))
-    ()
-  }
-  private[serve] def readRules(dir: String): Seq[(String, String)] = {
-    val p = java.nio.file.Paths.get(dir, BpeRulesFile)
-    require(java.nio.file.Files.exists(p),
-      s"$dir predates the v$LayoutVersion BPE chunk layout (missing " +
-        s"$BpeRulesFile); publish once with build() to upgrade")
-    val s = java.nio.file.Files.readString(p)
-    if (s.isEmpty) Nil
-    else s.split("\n", -1).toSeq.map { line =>
-      val i = line.indexOf(RuleSep)
-      (line.substring(0, i), line.substring(i + 1))
-    }
-  }
-
-  /** Chunk-vector provenance marker file + its two values — written by
-    * [[build]] beside the codebooks, consulted by [[rebuild]] and
-    * [[retrain]] before any chunk-frame merge. */
-  private val CembSourceFile = "cembsource.txt"
-
-  /** Marker recording that this publish's cell count was OPERATOR-
-    * CHOSEN (explicit `cells`) rather than adaptive —
-    * [[Retrieval!.maintain]] reads it to suppress the cell-drift
-    * recommendation the override deliberately declined. Pinned
-    * codebooks do NOT write it: they pin codes for comparability, and
-    * outgrowing them is the drift the check exists to surface.
-    * Per-publish: an adaptive retrain rewrites the whole snapshot dir
-    * without it, clearing the pin. */
-  private[serve] val CellsPinnedFile = "cellspinned.txt"
-  private val CembExternal = "external"
-  private val CembDerived = "derived"
-
-  /** The snapshot's recorded chunk-vector provenance; `None` means the
-    * marker is missing. A missing marker is NOT evidence of derivation:
-    * the `chunkEmb` seam predates the marker (layout v5), so a
-    * markerless snapshot holding `cemb/` may carry either provenance —
-    * callers must treat `None` as indeterminate whenever chunk vectors
-    * exist to degrade, never default it to derived. */
-  private def cembSourceOf(dir: String): Option[String] = {
-    val f = java.nio.file.Paths.get(dir, CembSourceFile)
-    if (java.nio.file.Files.exists(f))
-      Some(java.nio.file.Files.readString(f).trim)
-    else None
-  }
-
-  /** Refuse a refresh whose `chunkEmb` argument disagrees with the
-    * snapshot's recorded chunk-vector provenance — EITHER direction
-    * silently mixes vector generations in cemb/cindex (touched docs on
-    * one derivation, untouched on the other) and the refine serve
-    * would rerank against inconsistent floats with no error anywhere.
-    * Switching provenance is a full [[build]] (every chunk row
-    * rewritten), never an incremental merge. */
-  private def requireCembSourceMatch(dir: String, verb: String,
-      chunkEmb: Option[DataFrame]): Unit = {
-    // an incremental refresh can only reach here on a full v6 layout
-    // (marker ships with the same build), so a missing marker means
-    // someone deleted it — indeterminate, refuse rather than guess
-    requireCembKnownOrAbsent(dir, verb)
-    val external = cembSourceOf(dir).contains(CembExternal)
-    require(!external || chunkEmb.isDefined,
-      s"$dir was built with caller-supplied (external-model) chunk " +
-        s"embeddings; $verb(chunkEmb = ...) is required — omitting it " +
-        "would replace touched docs' cemb/cindex rows with the engine " +
-        "parity derivation and the refine serve would rerank against " +
-        "mixed vector generations")
-    require(external || chunkEmb.isEmpty,
-      s"$dir holds engine-derived chunk embeddings; $verb(chunkEmb = " +
-        "...) would leave untouched docs on the derivation while " +
-        "touched docs take external vectors — switch provenance with a " +
-        "full build(chunkEmb = ...) instead")
-  }
-
-  /** Refuse any chunk-frame refresh on a snapshot whose chunk-vector
-    * provenance is INDETERMINATE: `cemb/` exists (there are real chunk
-    * vectors to degrade) but `cembsource.txt` does not (the seam
-    * predates the marker — a markerless v5 snapshot may hold EITHER
-    * external-model or derived vectors, and guessing 'derived' is
-    * exactly the silent-degradation hazard the guard exists to stop).
-    * A snapshot with no `cemb/` has nothing to degrade and passes. The
-    * only exit is a full [[build]], which records provenance. */
-  private def requireCembKnownOrAbsent(dir: String, verb: String): Unit =
-    require(cembSourceOf(dir).isDefined ||
-        !new java.io.File(dir, "cemb").isDirectory,
-      s"$dir holds chunk embeddings (cemb/) but no $CembSourceFile " +
-        "provenance marker (pre-provenance layout) — whether they are " +
-        s"external-model or engine-derived is indeterminate, so $verb " +
-        "refuses rather than risk silently replacing real-model chunk " +
-        "vectors with the parity derivation; record provenance with a " +
-        "full build() (pass chunkEmb = ... iff the vectors are " +
-        "external), then refresh incrementally")
-
-  /** Merge-bucket count for the id-keyed frames (emb/tf/dl/dh): each is
-    * written `partitionBy("pb")` with `pb = vec_id|doc_id mod this`, so
-    * [[rebuild]] can rewrite only the buckets a delta touches (the
-    * [[graft.sync.InPlaceMerge]] bucket convention). 32 suits the
-    * fixtures; a corpus deployment sizes it so a bucket stays near the
-    * block size, exactly like the sync store's bucket count. */
-  val MergeBuckets = 32
-
-  private def pb(idCol: String): org.apache.spark.sql.Column =
-    pmod(col(idCol), lit(MergeBuckets.toLong)).cast("int")
-
-  /** Per-doc content fingerprint frame `(doc_id, dh)` — the cheap
-    * change detector [[rebuild]] diffs instead of re-tokenizing the
-    * corpus (md5 of the text: one map pass, no explode/agg). */
-  private def dhOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), md5(col("text")).as("dh"))
-
-  /** Per-vector fingerprint frame `(vec_id, vh)` — the dense twin of
-    * [[dhOf]]: xxhash64 over the float array, so [[rebuild]]'s change
-    * detection diffs two thin BIGINT columns instead of reading the
-    * stored FLOAT COLUMN corpus-wide (at corpus scale the emb frame IS
-    * the bulk of the snapshot; the diff must not scan it). Internal
-    * layout only — never crosses the oracle boundary, so a Spark-native
-    * hash is fine where the doc side uses cross-engine md5. */
-  private def vhOf(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), xxhash64(col("embedding")).as("vh"))
-
-  /** Train, encode, and publish every artifact for the snapshot, then
-    * return the loaded handle. Training cost is the documented
-    * once-per-snapshot work ([[VectorOps.trainedCentroids]] +
-    * [[VectorOps.pqResidualCodebooks]]); encoding and the lexical
-    * aggregates are single corpus passes. Atomic: stage + rename-aside
-    * swap.
+  /** Train, encode, and publish the snapshot, then return the loaded
+    * handle. Training cost is the documented once-per-snapshot work
+    * ([[VectorOps.trainedCentroids]] + [[VectorOps
+    * .pqResidualCodebooks]]); encoding and the lexical aggregates are
+    * single corpus passes. Atomic: stage + rename-aside swap.
     *
-    * `codebooks` pins the coarse + residual books instead of training —
-    * the production convention (train once on an initial sample, keep
-    * codes comparable across snapshots; the same fixed-codebook rule the
-    * streaming index enforces by constructor). [[rebuild]] is this
-    * applied automatically with the PRIOR snapshot's books plus
-    * delta-proportional encode/write.
-    *
-    * The coarse codebook is sized from the CORPUS COUNT by default
+    * The coarse codebook is sized from the CORPUS COUNT
     * ([[VectorOps.adaptiveCells]] — cells ≈ √n, the shape the x94
     * codebook curve measured), so a build gets the scale-right cell
-    * count without the operator knowing the knob exists; the trained
-    * count persists with the codebook (`codebook.txt`'s rows) and
-    * every loaded handle serves under it. `cells` overrides the
-    * derivation (a deployment tuning against its own x94 sweep);
-    * meaningless with `codebooks` (their rows ARE the cells) — passing
-    * both refuses. */
-  def build(docs: DataFrame, embeddings: DataFrame, dir: String,
-      checkpointDir: Option[String] = None,
-      codebooks: Option[(Seq[Seq[Double]], Seq[Seq[Seq[Double]]])] = None,
-      chunkEmb: Option[DataFrame] = None,
-      bpeRules: Option[Seq[(String, String)]] = None,
-      cells: Option[Int] = None,
-      countingIngestFilter: Boolean = false,
-      adoptCountingState: Option[Retrieval.AdoptedCountingState] = None)
-      : Retrieval = {
+    * count without a knob; the trained count persists with the
+    * codebook (`codebook.txt`'s rows) and every loaded handle serves
+    * under it. */
+  def build(docs: DataFrame, embeddings: DataFrame, dir: String): Retrieval = {
     val spark = docs.sparkSession
-    require(cells.isEmpty || codebooks.isEmpty,
-      "cells sizes the codebook this build TRAINS; with codebooks " +
-        "pinned their row count is the cell count — pass one, not both")
-    require(adoptCountingState.isEmpty || countingIngestFilter,
-      "adoptCountingState adopts a streamed chain's folded state AS " +
-        "the counting ingest filter — pass countingIngestFilter = true")
     val staged = new java.io.File(s"$dir.tmp-${System.nanoTime()}")
-    val (cents, books) = codebooks.getOrElse {
-      val kc = cells.getOrElse(VectorOps.adaptiveCells(embeddings.count()))
-      val cs = VectorOps.trainedCentroids(embeddings, kc)
-      (cs, VectorOps.pqResidualCodebooks(embeddings, cs))
-    }
+    val cents = VectorOps.trainedCentroids(embeddings,
+      VectorOps.adaptiveCells(embeddings.count()))
+    val books = VectorOps.pqResidualCodebooks(embeddings, cents)
     writeBooks(staged.toPath.resolve("codebook.txt"), cents)
     writeBooks(staged.toPath.resolve("pqbooks.txt"), books.flatten)
-    // chunk-vector PROVENANCE marker: records whether cemb/cindex hold
-    // caller-supplied (external-model) vectors or the engine parity
-    // derivation, so [[rebuild]]/[[retrain]] can refuse a refresh that
-    // would silently mix the two generations (the fail-loudly layout
-    // convention; a missing marker on a pre-v5 snapshot reads as
-    // derived, which is the only thing such a snapshot can hold)
-    java.nio.file.Files.writeString(
-      staged.toPath.resolve(CembSourceFile),
-      if (chunkEmb.isDefined) CembExternal else CembDerived)
-    // cell-count provenance: an explicit count is an operator's
-    // deliberate tuning decision (their own x94 sweep) that
-    // maintain()'s drift check must not nag against. Pinned CODEBOOKS
-    // deliberately do NOT pin: they are a code-comparability choice,
-    // and outgrowing them is exactly the drift the check exists to
-    // surface ([[retrain]]'s scaladoc).
-    if (cells.isDefined) {
-      java.nio.file.Files.writeString(
-        staged.toPath.resolve(CellsPinnedFile), "pinned")
-      ()
-    }
     VectorOps.ivfPqIndex(embeddings, cents, books, residual = true)
       .write.partitionBy("cell").mode(SaveMode.Overwrite)
       .parquet(s"$staged/index")
-    embeddings.select(col("vec_id"), col("embedding"), pb("vec_id").as("pb"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/emb")
-    val (tf, dl) = TextOps.bm25Stats(docs, checkpointDir)
-    tf.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/tf")
-    dl.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/dl")
-    // chunk-level frames (v3 ctf/cdl + v4 cindex): the RAG serve's
-    // indexes. The corpus is chunked exactly ONCE — the same
-    // materialized chunk frame feeds the lexical chunk stats and the
-    // chunk-vector encode. ctf/cdl bucket by doc_id (a doc's chunk
-    // rows are per-doc local, so they ride the same dh-diff delta path
-    // as tf/dl in [[rebuild]]); cindex is the composite-key residual
-    // IVFADC frame written partitionBy(cell), so the chunk-dense serve
-    // partition-prunes exactly like the doc-level index.
-    val chunks = graft.operators.Dedup.materialize(
-      TextOps.chunkDocs(docs), checkpointDir)
-    val (ctf, cdl) = TextOps.chunkBm25StatsFrom(chunks, checkpointDir)
-    ctf.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/ctf")
-    cdl.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/cdl")
-    // chunk vectors: `chunkEmb` is THE external-model ingestion seam
-    // made durable — a deployment that embeds chunks with a real model
-    // hands its `(doc_id, chunk_id, embedding)` frame here (chunk_ids
-    // must agree with the engine chunking that built ctf/cdl above);
-    // absent, the engine derivation applies. The FULL-PRECISION column
-    // persists as v5's `cemb` (doc-id-bucketed like its lexical
-    // twins), so the refine serve reranks against stored floats —
-    // bounded lookups at serve, and the only copy of real-model chunk
-    // vectors the snapshot ever needs. Materialized: it feeds both the
-    // cemb write and the cindex encode.
-    val cEmb = graft.operators.Dedup.materialize(
-      chunkEmb.getOrElse(
-        VectorOps.chunkEmbeddingsFrom(chunks, embeddings)), checkpointDir)
-    cEmb.select(col("doc_id"), col("chunk_id"), col("embedding"))
-      .withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/cemb")
-    VectorOps.chunkIvfPqIndex(cEmb, cents, books)
-      .write.partitionBy("cell").mode(SaveMode.Overwrite)
-      .parquet(s"$staged/cindex")
-    // BPE-METERED chunk frames (v6) — the snapshot's model-context-
-    // true chunking: the tokenizer is trained here (or pinned via
-    // `bpeRules` — the codebook convention applied to merge rules) and
-    // FIXED for the snapshot's life in `bperules.txt`; windows meter
-    // in learned subword units; the subword postings (bctf/bcdl) and
-    // the window-keyed chunk-vector index + full-precision twin
-    // (bcindex/bcemb) all derive from ONE materialized slice pass.
-    // BPE chunk vectors are always the ENGINE derivation: an
-    // external-model deployment's model-true windows arrive through
-    // the `chunkEmb` seam above (its chunk_ids ARE its model's
-    // chunking); these frames serve derivation-based deployments.
-    val rules = bpeRules.getOrElse(
-      TextOps.bpeMerges(docs).orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq)
-    writeRules(staged.toPath.resolve(BpeRulesFile), rules)
-    val bSlices = graft.operators.Dedup.materialize(
-      TextOps.bpeChunkSlices(docs, rules), checkpointDir)
-    val (bctf, bcdl) = TextOps.bpeChunkBm25StatsFrom(bSlices, checkpointDir)
-    bctf.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/bctf")
-    bcdl.withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/bcdl")
-    val bEmb = graft.operators.Dedup.materialize(
-      VectorOps.chunkEmbeddingsFrom(bSlices.select("doc_id", "chunk_id"),
-        embeddings), checkpointDir)
-    bEmb.select(col("doc_id"), col("chunk_id"), col("embedding"))
-      .withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/bcemb")
-    VectorOps.chunkIvfPqIndex(bEmb, cents, books)
-      .write.partitionBy("cell").mode(SaveMode.Overwrite)
-      .parquet(s"$staged/bcindex")
-    dhOf(docs).withColumn("pb", pb("doc_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/dh")
-    vhOf(embeddings).withColumn("pb", pb("vec_id"))
-      .write.partitionBy("pb").mode(SaveMode.Overwrite).parquet(s"$staged/vh")
-    // the ingest filter, persisted with the publish: one bounded
-    // aggregate over the just-written dh (thin read-back) at BUILD
-    // time, so handle load is O(frame) instead of a per-session
-    // corpus-∝ derivation. Flavor per `countingIngestFilter`: bit
-    // (default — [[rebuild]] regenerates it per publish, keeping the
-    // cannot-un-set-bits structure delete-correct) or counting
-    // (rebuild maintains it by O(delta) decrements — the delete-heavy
-    // deployment's choice); the marker makes the flavor durable for
-    // crash-recovery regeneration and the derive fallback.
-    adoptCountingState match {
-      case Some(adopted) =>
-        adoptIngestBloom(adopted,
-          spark.read.schema(DhSchema).parquet(s"$staged/dh")
-            .select(col("dh").as("content_key")),
-          s"$staged/bloomdh")
-      case None =>
-        writeIngestBloom(
-          spark.read.schema(DhSchema).parquet(s"$staged/dh")
-            .select(col("dh").as("content_key")),
-          s"$staged/bloomdh", countingIngestFilter)
-    }
-    java.nio.file.Files.write(
-      staged.toPath.resolve(IngestFilterFile),
-      (if (countingIngestFilter) "counting" else "bit").getBytes("UTF-8"))
+    embeddings.select("vec_id", "embedding")
+      .write.mode(SaveMode.Overwrite).parquet(s"$staged/emb")
+    val (tf, dl) = TextOps.bm25Stats(docs)
+    tf.write.mode(SaveMode.Overwrite).parquet(s"$staged/tf")
+    dl.write.mode(SaveMode.Overwrite).parquet(s"$staged/dl")
     publish(staged, dir)
     load(spark, dir)
-  }
-
-  /** Scheduled-maintenance retrain of a LIVE snapshot — the blue/green
-    * migration [[rebuild]] deliberately never performs. [[rebuild]]
-    * holds codebooks fixed (the right refresh default: codes stay
-    * comparable across deltas, no multi-pass training per publish), so
-    * over months of corpus drift the coarse cells and residual books
-    * describe a distribution that no longer exists and measured recall
-    * decays ([[graft.operators.VectorOps.annRecall]] is the meter).
-    * This is the correction: train FRESH coarse + residual books on
-    * the corpus as it is now, fully re-encode, and swap.
-    *
-    * Mechanics are [[build]]'s — everything stages into a sibling tmp
-    * dir while the old snapshot keeps serving, then the rename-aside
-    * [[publish]] commits the whole new generation atomically (a reader
-    * sees the old snapshot or the new one, never a mix of codes from
-    * two codebook generations — the one invariant a retrain must never
-    * break, since codes are meaningless under the wrong books). The
-    * published snapshot carries fresh dh/vh fingerprints, so the NEXT
-    * [[rebuild]] is incremental against the retrained generation.
-    *
-    * Cost shape at scale: the full train + re-encode + rewrite —
-    * deliberately, that is what a codebook migration IS. Run it on the
-    * maintenance cadence recall measurements dictate, with [[rebuild]]
-    * serving every refresh in between.
-    *
-    * Requires a live snapshot at `dir`: retrain is a migration, not a
-    * first publish — use [[build]] to create a snapshot. */
-  def retrain(docs: DataFrame, embeddings: DataFrame, dir: String,
-      checkpointDir: Option[String] = None,
-      chunkEmb: Option[DataFrame] = None,
-      cells: Option[Int] = None,
-      countingIngestFilter: Option[Boolean] = None): Retrieval = {
-    require(
-      new java.io.File(dir, "codebook.txt").exists() || {
-        recoverAside(dir) // a crashed prior swap still counts as live
-        new java.io.File(dir, "codebook.txt").exists()
-      },
-      s"$dir is not a live retrieval snapshot; retrain migrates an " +
-        "existing publish — use build() for the first one")
-    // a retrain rewrites every chunk row, so provenance can legally
-    // SWITCH to external here — but an external snapshot retrained
-    // without fresh external vectors would silently replace real-model
-    // output with the parity derivation, the one-way hazard to refuse.
-    // A markerless snapshot holding cemb/ is the same hazard in
-    // disguise (pre-provenance v5 external snapshots exist), so an
-    // indeterminate marker refuses too — unless the caller supplies
-    // chunkEmb, which makes the outcome explicit either way
-    if (chunkEmb.isEmpty) requireCembKnownOrAbsent(dir, "retrain")
-    require(!cembSourceOf(dir).contains(CembExternal) || chunkEmb.isDefined,
-      s"$dir was built with caller-supplied (external-model) chunk " +
-        "embeddings; retrain(chunkEmb = ...) is required — omitting it " +
-        "would silently replace the real-model chunk vectors with the " +
-        "engine parity derivation")
-    // cells re-derive from the corpus AS IT IS NOW by default (the
-    // [[build]] adaptive sizing) — a retrain after corpus growth IS
-    // the cell migration maintain()'s drift check recommends. The
-    // ingest-filter flavor INHERITS from the live snapshot unless the
-    // caller overrides — a retrain must not silently flip a
-    // delete-heavy deployment's counting filter back to bit.
-    build(docs, embeddings, dir, checkpointDir, chunkEmb = chunkEmb,
-      cells = cells,
-      countingIngestFilter = countingIngestFilter
-        .getOrElse(ingestFilterFlavorOf(dir) == "counting"))
-  }
-
-  /** Incremental snapshot refresh — the fixed-codebook insight applied
-    * to batch publish: reuse the PRIOR snapshot's coarse + residual
-    * codebooks (no retraining — the multi-pass cost a full [[build]]
-    * pays every publish), re-encode ONLY the docs whose content/vector
-    * actually changed, and rewrite only the index cells and merge
-    * buckets the delta touches (per-partition staged swap, the
-    * [[graft.sync.InPlaceMerge]] convention). `docs`/`embeddings` are
-    * the full NEW corpus; ids absent from them are deletes.
-    *
-    * Cost shape at scale: delta detection is two thin-column
-    * diff joins (stored md5 fingerprints against new ones; stored
-    * vectors against new ids/values), tokenization and PQ encoding run
-    * over the CHANGED rows only, and write volume ∝ touched partitions
-    * — against a full build's retrain (many corpus passes) + full
-    * re-encode + full rewrite.
-    *
-    * Crash contract: per-partition swaps commit independently (each
-    * partition directory is always one complete generation), so a crash
-    * mid-rebuild can leave a mixed-generation snapshot — rerun the same
-    * rebuild to converge (it is idempotent: already-merged partitions
-    * diff empty). A deployment that needs all-or-nothing publish uses
-    * [[build]] with `codebooks` pinned instead, at full-rewrite cost.
-    * `afterDenseMerge` is the crash-injection seam the convergence spec
-    * throws from (between the dense and lexical sides — the worst
-    * mixed-generation point). */
-  def rebuild(docs: DataFrame, embeddings: DataFrame, dir: String,
-      checkpointDir: Option[String] = None,
-      afterDenseMerge: () => Unit = () => (),
-      chunkEmb: Option[DataFrame] = None): Retrieval = {
-    val spark = docs.sparkSession
-    val prior = load(spark, dir)
-    sweepMergeDebris(dir) // single-writer context: reclaim crashed-merge debris
-    // BIT flavor: retire the persisted ingest filter BEFORE the doc
-    // merges run — the dh merge would otherwise leave a bloomdh that
-    // disagrees with dh, which serves false negatives, the guarantee's
-    // one mortal sin. The retire happens after the lexical diff below,
-    // and ONLY when that diff is nonempty (`bloomdh` depends on dh
-    // alone — the dense merges never touch it, and an empty-delta
-    // rebuild leaves dh byte-identical, so the live frame stays
-    // consistent and the steady-state idempotent rerun keeps it
-    // instead of paying a corpus-scale regeneration per call —
-    // optimization guide §1.2 "don't compute things you throw away").
-    // With the frame gone, every reader falls back to the dh
-    // derivation — subject to the rebuild's own mid-merge read
-    // contract, like every other frame read racing this single-writer
-    // maintenance — until [[regenerateIngestBloom]] republishes at the
-    // end; a crash anywhere between leaves the fallback, never a stale
-    // filter. COUNTING flavor: the live frame must survive until the
-    // O(delta) update stages from it (the lexical section below — dh
-    // itself is untouched until the fingerprints-LAST merge, so the
-    // frame agrees with dh the whole way); it retires there,
-    // immediately after staging.
-    val countingFilter = ingestFilterFlavorOf(dir) == "counting"
-    require(new java.io.File(s"$dir/dh").isDirectory &&
-        new java.io.File(s"$dir/vh").isDirectory,
-      s"$dir predates incremental rebuild (no dh/vh fingerprint " +
-        "frames); publish once with build() to upgrade the layout")
-    // rebuild merges the chunk frames, so unlike load() it MUST hold
-    // the full v4 layout before any merge runs
-    val missingChunk = missingChunkFrames(dir)
-    require(missingChunk.isEmpty,
-      s"$dir predates the v$LayoutVersion chunk-index layout (missing " +
-        s"${missingChunk.mkString(", ")}); publish once with build() to " +
-        "upgrade the layout")
-    requireCembSourceMatch(dir, "rebuild", chunkEmb)
-    // the snapshot's tokenizer is FIXED for its life (the codebook
-    // convention): every refresh re-chunks its delta under the SAME
-    // rules, or window boundaries would silently move corpus-wide
-    val rules = readRules(dir)
-
-    // ---- lexical delta FIRST: docs whose content fingerprint moved.
-    // Computed before any merge because the bit-flavor retire decision
-    // feeds on it — an empty lexical delta keeps the live filter frame
-    // (see the entry comment); a nonempty one retires it here, before
-    // the dense merges, preserving the invariant that whenever
-    // `bloomdh` exists it agrees with dh.
-    val newDh = dhOf(docs)
-    val oldDh = spark.read.schema(DhSchema).parquet(s"$dir/dh")
-      .select(col("doc_id").as("o_id"), col("dh").as("o_dh"))
-    val cmpD = newDh.join(oldDh, col("doc_id") === col("o_id"), "full_outer")
-    // materialized for the same four-consumer reason as touchedVec
-    // below; changed ∪ deleted spelled as ONE filter + coalesce over
-    // the diff join, not a union of two branch selects — a union plans
-    // the corpus-wide fingerprint join (and the corpus hash scan
-    // feeding it) once PER BRANCH (optimization guide §2.4; rows
-    // identical: branch 1 was "id present and new-or-moved", branch 2
-    // "id absent", disjoint filters over the same join)
-    def buildTouchedDoc(): (DataFrame, Seq[Int]) = {
-      val td = graft.operators.Dedup.materialize(
-        cmpD.where(col("doc_id").isNull || col("o_id").isNull ||
-            col("dh") =!= col("o_dh"))
-          .select(coalesce(col("doc_id"), col("o_id")).as("doc_id")),
-        checkpointDir)
-      (td, affectedPbsOf(td, "doc_id"))
-    }
-
-    // ---- dense delta: ids whose vector is new or changed / deleted,
-    // detected on the thin stored fingerprints — the float column is
-    // never scanned for the diff
-    val newE = embeddings.select(col("vec_id"), col("embedding"))
-    val newVh = vhOf(embeddings)
-    val oldVh = spark.read.schema(VhSchema).parquet(s"$dir/vh")
-      .select(col("vec_id").as("o_id"), col("vh").as("o_vh"))
-    val cmpE = newVh.join(oldVh, col("vec_id") === col("o_id"), "full_outer")
-    // changed ∪ deleted spelled as ONE filter + coalesce over the diff
-    // join, not a union of two branch selects: a union plans the
-    // corpus-wide fingerprint join (and the corpus hash scan feeding
-    // it) once PER BRANCH — the single-pass form halves the diff cost
-    // (optimization guide §2.4; rows identical: branch 1 was
-    // "vec_id present and new-or-moved", branch 2 "vec_id absent",
-    // disjoint filters over the same join)
-    // materialized ([[graft.operators.Dedup.materialize]]): the diff
-    // join feeds FIVE downstream actions (bucket collect, cell collect,
-    // index write, emb + vh merges) — left lazy, each would re-run the
-    // corpus-wide fingerprint diff
-    def buildTouchedVec(): (DataFrame, Seq[Int]) = {
-      val tv = graft.operators.Dedup.materialize(
-        cmpE.where(col("vec_id").isNull || col("o_id").isNull ||
-            col("vh") =!= col("o_vh"))
-          .select(coalesce(col("vec_id"), col("o_id")).as("vec_id")),
-        checkpointDir)
-      (tv, affectedPbsOf(tv, "vec_id"))
-    }
-    // the two corpus fingerprint diffs are independent PURE
-    // computations (each: one hash scan + full-outer diff join +
-    // checkpoint + a bounded bucket collect) and dominate the
-    // steady-state empty-delta rerun — overlap them (guide §2.6).
-    // Every side effect keeps its exact prior order: the bit-flavor
-    // retire below still runs after BOTH diffs and before any merge,
-    // and the dense merge block follows it unchanged, so the crash
-    // windows RetrievalServeSpec pins are byte-for-byte the same.
-    val built = graft.operators.Par.concurrently(
-      Seq(buildTouchedDoc _, buildTouchedVec _))
-    val (touchedDoc, touchedDocPb) = built(0)
-    val (touchedVec, touchedVecPb) = built(1)
-    // BIT flavor: dh will change — retire the live filter frame before
-    // any merge runs (an empty lexical delta keeps it)
-    if (!countingFilter && touchedDocPb.nonEmpty) retireIngestBloom(dir)
-    val changedEmb = newE.join(touchedVec, Seq("vec_id"), "left_semi")
-
-    // ONE bounded job answered "which buckets, and was there a delta at
-    // all" (inside the overlapped diff): an empty result short-circuits
-    // the whole dense side (the steady-state no-op refresh costs
-    // exactly the two fingerprint diffs plus the serve — the production
-    // idempotent-rerun path)
-    if (touchedVecPb.nonEmpty) {
-      // index cells the delta touches: the OLD cells of every touched
-      // id (an updated vector may have moved cells) plus the NEW
-      // assignments. The delta encode is materialized: it feeds both
-      // the cell collect and the index write, and would otherwise run
-      // the PQ folds twice.
-      val oldIdx = spark.read.schema(IndexSchema).parquet(s"$dir/index")
-      val newIdx = graft.operators.Dedup.materialize(
-        VectorOps.ivfPqIndex(changedEmb, prior.cents, prior.books,
-          residual = true), checkpointDir)
-      val affectedCells = oldIdx
-        .join(touchedVec, Seq("vec_id"), "left_semi").select("cell")
-        .unionByName(newIdx.select("cell"))
-        .distinct().collect().map(_.getLong(0)).toSeq // bounded: ≤ cells
-      if (affectedCells.nonEmpty) {
-        val mergedIdx = oldIdx.where(col("cell").isin(affectedCells: _*))
-          .join(touchedVec, Seq("vec_id"), "left_anti")
-          .unionByName(newIdx)
-        replacePartitions(s"$dir/index", "cell", mergedIdx,
-          affectedCells.map(_.toString))
-      }
-      mergeBucketed(spark, s"$dir/emb", "vec_id", touchedVec,
-        changedEmb, touchedVecPb, EmbSchema)
-      // vh does NOT merge here: the vector fingerprint certifies the
-      // chunk index too (a re-embedded doc's chunk vectors re-encode
-      // from the vh diff), so it merges only after cindex — a crash
-      // anywhere in between leaves the fingerprint stale and the rerun
-      // re-detects the full delta (the merge-before-fingerprint rule).
-    }
-    afterDenseMerge()
-
-    // ---- counting ingest filter: stage the O(delta) update NOW, from
-    // the pre-merge stable state (live frame + stored dh) — removed
-    // keys are the touched docs' OLD fingerprints, added keys their
-    // NEW ones; counts(old) − removed + added ≡ counts(merged dh) by
-    // the counting algebra. Then retire the live frame (readers take
-    // the dh-derivation fallback, at counting flavor via the marker);
-    // the staged result installs only AFTER the dh merge lands. None
-    // (missing/bit frame, geometry drift) falls back to full counting
-    // regeneration at the end.
-    val stagedCountingFilter: Option[StagedCountingUpdate] =
-      if (!countingFilter) None
-      else {
-        val removed = oldDh
-          .join(touchedDoc, oldDh("o_id") === touchedDoc("doc_id"),
-            "left_semi")
-          .select(col("o_dh").as("content_key"))
-        val added = newDh.join(touchedDoc, Seq("doc_id"), "left_semi")
-          .select(col("dh").as("content_key"))
-        stageCountingIngestUpdate(spark, dir, removed, added,
-          newDh.count(), checkpointDir)
-      }
-    // retire the live frame now that staging (which read from it) is
-    // done: KEPT aside when a delta splice will ride its untouched
-    // partitions back in, deleted otherwise — either way readers
-    // derive from dh (at counting flavor via the marker) until the
-    // post-merge install/regeneration
-    val pendingCounting: Option[java.io.File] =
-      if (!countingFilter) None
-      else if (stagedCountingFilter.exists(_.touched.isDefined))
-        Some(retireIngestBloomPending(dir))
-      else { retireIngestBloom(dir); None }
-    if (touchedDocPb.nonEmpty) {
-      val changedDocs = docs.join(touchedDoc, Seq("doc_id"), "left_semi")
-      val (tfNew, dlNew) = TextOps.bm25Stats(changedDocs, checkpointDir)
-      mergeBucketed(spark, s"$dir/tf", "doc_id", touchedDoc, tfNew,
-        touchedDocPb, TfSchema)
-      mergeBucketed(spark, s"$dir/dl", "doc_id", touchedDoc, dlNew,
-        touchedDocPb, DlSchema)
-      // chunk frames: per-doc local like tf/dl, so the SAME dh-diffed
-      // delta re-chunks only the changed docs and touches the same
-      // doc-id buckets
-      val (ctfNew, cdlNew) =
-        TextOps.chunkBm25Stats(changedDocs, checkpointDir = checkpointDir)
-      mergeBucketed(spark, s"$dir/ctf", "doc_id", touchedDoc, ctfNew,
-        touchedDocPb, CtfSchema)
-      mergeBucketed(spark, s"$dir/cdl", "doc_id", touchedDoc, cdlNew,
-        touchedDocPb, CdlSchema)
-      // BPE subword postings: per-doc local like ctf/cdl, re-encoded
-      // under the snapshot's FIXED rules over the same dh-diffed delta
-      val (bctfNew, bcdlNew) = TextOps.bpeChunkBm25StatsFrom(
-        graft.operators.Dedup.materialize(
-          TextOps.bpeChunkSlices(changedDocs, rules), checkpointDir),
-        checkpointDir)
-      mergeBucketed(spark, s"$dir/bctf", "doc_id", touchedDoc, bctfNew,
-        touchedDocPb, CtfSchema)
-      mergeBucketed(spark, s"$dir/bcdl", "doc_id", touchedDoc, bcdlNew,
-        touchedDocPb, CdlSchema)
-      // dh merges after cindex, with vh — same certify-last rule: the
-      // doc fingerprint also certifies the chunk index (a text edit
-      // moves chunk boundaries), so it must not commit before cindex.
-    }
-
-    // ---- chunk-vector delta: a doc's chunk vectors change when its
-    // TEXT changes (chunk boundaries and the parity derivation shift)
-    // OR its VECTOR changes (every chunk vector derives from it) — the
-    // union of the two fingerprint deltas already in hand; no third
-    // corpus diff runs. Deletes drop all of a doc's chunk rows via the
-    // same composite-key anti-join. Merge is cell-partitioned like the
-    // doc index: old cells of the touched docs' chunk rows plus the
-    // fresh assignments, swapped per partition.
-    if (touchedVecPb.nonEmpty || touchedDocPb.nonEmpty) {
-      val touchedChunkDoc = graft.operators.Dedup.materialize(
-        touchedVec.toDF("doc_id").unionByName(touchedDoc).distinct(),
-        checkpointDir)
-      val docIdOfVec = expr(s"vec_id DIV ${VectorOps.ChunkStride}")
-      val changedChunkDocs =
-        docs.join(touchedChunkDoc, Seq("doc_id"), "left_semi")
-      val changedChunkEmb = embeddings
-        .join(touchedChunkDoc.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi")
-      // the chunk-vector delta: `chunkEmb` (the full NEW chunk frame,
-      // [[build]]'s external-model seam) restricted to the touched
-      // docs, or the engine derivation over them — materialized
-      // because it feeds the cemb merge AND the cindex encode
-      val cembDelta = graft.operators.Dedup.materialize(
-        chunkEmb
-          .map(_.join(touchedChunkDoc, Seq("doc_id"), "left_semi")
-            .select("doc_id", "chunk_id", "embedding"))
-          .getOrElse(VectorOps.chunkEmbeddingsFrom(
-            TextOps.chunkDocs(changedChunkDocs), changedChunkEmb)),
-        checkpointDir)
-      val touchedChunkPb = affectedPbsOf(touchedChunkDoc, "doc_id")
-      mergeBucketed(spark, s"$dir/cemb", "doc_id", touchedChunkDoc,
-        cembDelta, touchedChunkPb, CembSchema)
-      // materialized: feeds the cell collect AND the cindex write, and
-      // would otherwise run the chunk encode twice
-      val newCIdx = graft.operators.Dedup.materialize(
-        VectorOps.chunkIvfPqIndex(cembDelta, prior.cents, prior.books),
-        checkpointDir)
-      val oldCIdx = spark.read.schema(IndexSchema).parquet(s"$dir/cindex")
-      val affectedCCells = oldCIdx
-        .join(touchedChunkDoc, docIdOfVec === touchedChunkDoc("doc_id"),
-          "left_semi")
-        .select("cell")
-        .unionByName(newCIdx.select("cell"))
-        .distinct().collect().map(_.getLong(0)).toSeq // bounded: ≤ cells
-      if (affectedCCells.nonEmpty) {
-        val mergedCIdx = oldCIdx.where(col("cell").isin(affectedCCells: _*))
-          .join(touchedChunkDoc, docIdOfVec === touchedChunkDoc("doc_id"),
-            "left_anti")
-          .unionByName(newCIdx)
-        replacePartitions(s"$dir/cindex", "cell", mergedCIdx,
-          affectedCCells.map(_.toString))
-      }
-      // the BPE-window chunk-vector twins (v6): same delta (text moves
-      // window boundaries, a re-embed moves every window vector), same
-      // merge shapes — bucketed floats, cell-swapped codes — under the
-      // snapshot's FIXED rules and books. Always the engine
-      // derivation ([[build]]'s v6 note).
-      val bcembDelta = graft.operators.Dedup.materialize(
-        VectorOps.chunkEmbeddingsFrom(
-          TextOps.bpeChunkIds(changedChunkDocs, rules), changedChunkEmb),
-        checkpointDir)
-      mergeBucketed(spark, s"$dir/bcemb", "doc_id", touchedChunkDoc,
-        bcembDelta, touchedChunkPb, CembSchema)
-      val newBCIdx = graft.operators.Dedup.materialize(
-        VectorOps.chunkIvfPqIndex(bcembDelta, prior.cents, prior.books),
-        checkpointDir)
-      val oldBCIdx = spark.read.schema(IndexSchema).parquet(s"$dir/bcindex")
-      val affectedBCells = oldBCIdx
-        .join(touchedChunkDoc, docIdOfVec === touchedChunkDoc("doc_id"),
-          "left_semi")
-        .select("cell")
-        .unionByName(newBCIdx.select("cell"))
-        .distinct().collect().map(_.getLong(0)).toSeq // bounded: ≤ cells
-      if (affectedBCells.nonEmpty) {
-        val mergedBCIdx = oldBCIdx.where(col("cell").isin(affectedBCells: _*))
-          .join(touchedChunkDoc, docIdOfVec === touchedChunkDoc("doc_id"),
-            "left_anti")
-          .unionByName(newBCIdx)
-        replacePartitions(s"$dir/bcindex", "cell", mergedBCIdx,
-          affectedBCells.map(_.toString))
-      }
-    }
-
-    // ---- fingerprints LAST: vh/dh certify every data frame above
-    // (including cindex, which depends on BOTH); committing them only
-    // after all data merges makes any crash re-detectable — a rerun
-    // sees the stale fingerprints, recomputes the same delta, and the
-    // per-partition merges are idempotent.
-    if (touchedVecPb.nonEmpty)
-      mergeBucketed(spark, s"$dir/vh", "vec_id", touchedVec,
-        newVh.join(touchedVec, Seq("vec_id"), "left_semi"), touchedVecPb,
-        VhSchema)
-    if (touchedDocPb.nonEmpty)
-      mergeBucketed(spark, s"$dir/dh", "doc_id", touchedDoc,
-        newDh.join(touchedDoc, Seq("doc_id"), "left_semi"), touchedDocPb,
-        DhSchema)
-
-    // the persisted ingest filter recommits on every dh-CHANGING
-    // rebuild. BIT flavor: full regeneration from the merged dh — the
-    // merge above is where deletes land, and bits cannot be un-set, so
-    // regeneration (never an OR-merge) is what keeps
-    // [[Retrieval!.screenIngest]] delete-correct. On an EMPTY lexical
-    // delta the live frame was never retired and still agrees with the
-    // byte-identical dh, so the steady-state idempotent rerun skips
-    // the corpus-scale regeneration outright — UNLESS no live
-    // bit-flavor frame exists, which is exactly the prior-crash
-    // (retired, dh merged, swap never landed) and
-    // pre-persistence-snapshot cases the unconditional regeneration
-    // used to heal; those still regenerate here, at the same cost as
-    // before, paid only on those events. COUNTING flavor: install the
-    // O(delta)-updated frame
-    // staged before the merges (a small delete delta never
-    // re-aggregates the corpus) — spliced per touched `(shard, cb)`
-    // partition over the retired-live frame when the layout allows
-    // (untouched partitions ride back by rename, byte-stable: IO ∝
-    // delta, not frame), whole-swapped on a legacy-layout upgrade or
-    // a rectangle too wide to win; when staging declined entirely
-    // (crash recovery, geometry drift, flavor upgrade) regenerate at
-    // counting flavor instead — same cost class as the bit path's
-    // every-rebuild regeneration, paid only on those events.
-    stagedCountingFilter match {
-      case Some(StagedCountingUpdate(stage, Some((ts, tc)))) =>
-        installCountingDelta(dir, stage, pendingCounting.get, ts, tc)
-      case Some(StagedCountingUpdate(stage, None)) =>
-        installIngestBloom(dir, stage)
-      case None =>
-        if (countingFilter || touchedDocPb.nonEmpty ||
-            !liveBitFrameExists(dir))
-          regenerateIngestBloom(spark, dir, countingFilter)
-    }
-
-    load(spark, dir)
-  }
-
-  /** The distinct merge buckets a touched-id frame maps to — bounded
-    * driver metadata (≤ [[MergeBuckets]] ints) and doubling as the
-    * delta-emptiness signal, computed ONCE per rebuild side. */
-  private def affectedPbsOf(touched: DataFrame, idCol: String): Seq[Int] =
-    touched.select(pb(idCol).as("pb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
-  /** Merge fresh rows for touched ids into a `pb`-bucketed frame:
-    * `affected` buckets derive directly from the touched ids (mod
-    * arithmetic, no lookup), the old frame is read partition-pruned to
-    * them, touched ids are anti-joined out, fresh rows unioned in, and
-    * only those bucket directories swap. */
-  private def mergeBucketed(spark: SparkSession, frameDir: String,
-      idCol: String, touched: DataFrame, fresh: DataFrame,
-      affected: Seq[Int], schema: String): Unit = {
-    if (affected.isEmpty) return
-    val old = spark.read.schema(schema).parquet(frameDir)
-      .where(col("pb").isin(affected: _*))
-      .drop("pb")
-    val merged = old.join(touched, Seq(idCol), "left_anti")
-      .unionByName(fresh)
-      .withColumn("pb", pb(idCol))
-    replacePartitions(frameDir, "pb", merged, affected.map(_.toString))
-  }
-
-  /** Position-range bucket count for the PARTITIONED counting frame
-    * layout: the counting `bloomdh` writes `partitionBy(shard, cb)`
-    * with `cb = pos mod CountingBuckets`, so an O(delta) rebuild can
-    * splice ONLY the `(shard, cb)` partitions its delta touches and
-    * leave every other partition's files byte-stable — write volume ∝
-    * touched partitions, the [[replacePartitions]] cost shape applied
-    * to the filter frame (a small delete batch used to restage the
-    * WHOLE frame: delta-proportional compute, frame-proportional IO).
-    * 64 buckets per shard keeps partitions near block size at the
-    * sharded scale (a 10^10-key corpus ≈ 94 shards · 64 buckets ≈
-    * 200 MB each) while a khash·|delta|-position trickle delete
-    * touches only its own buckets. The bucket derivation is pure
-    * layout — pos mod a constant — so geometry, screens and the
-    * oracle never see it. */
-  private[graft] val CountingBuckets = 64
-
-  /** `cb` partition column of a counting frame's `pos`. */
-  private def cbOf: Column = pmod(col("pos"), lit(CountingBuckets.toLong))
-
-  /** Write the ingest filter over `keys` to `outDir` — bit flavor
-    * `(shard, word, bits)` or counting flavor `(shard, pos, cnt)`
-    * written `partitionBy(shard, cb)` (the [[CountingBuckets]]
-    * delta-IO layout): geometry from
-    * [[graft.operators.Dedup.adaptiveBloomGeometry]] on the key
-    * count, recorded (with the flavor) in an underscore-prefixed
-    * sidecar INSIDE the frame dir (parquet readers skip underscore
-    * files) so frame and geometry commit together under any rename of
-    * the dir. */
-  private def writeIngestBloom(keys: DataFrame, outDir: String,
-      counting: Boolean = false): Unit = {
-    val (shards, mbits) =
-      graft.operators.Dedup.adaptiveBloomGeometry(keys.count())
-    if (counting)
-      graft.operators.Dedup.shardedCountingBloomBits(keys, shards, mbits)
-        .withColumn("cb", cbOf)
-        .write.partitionBy("shard", "cb").mode(SaveMode.Overwrite)
-        .parquet(outDir)
-    else
-      graft.operators.Dedup.shardedBloomBits(keys, shards, mbits)
-        .write.mode(SaveMode.Overwrite).parquet(outDir)
-    writeBloomGeom(outDir, shards, mbits, counting)
-  }
-
-  /** ADOPT a streamed crawl's folded counting state as the staged
-    * snapshot's ingest filter — the publish-from-chain unification: a
-    * live [[graft.streaming.StreamingCountingBloom]] crawl (run with
-    * `exactKeys = true`, the snapshot's `md5(text)` fingerprint
-    * recipe) already holds EXACTLY the filter its accepted corpus
-    * needs, so publishing that corpus re-aggregating the keys it just
-    * folded is wasted corpus-scale work. Validated, never trusted:
-    *
-    *  - geometry must be the corpus's own
-    *    [[graft.operators.Dedup.adaptiveBloomGeometry]] point (flat —
-    *    a corpus past the flat range refuses toward a from-corpus
-    *    build) and the chain's khash the serve default, or the
-    *    persisted frame and the dh-derivation fallback would stop
-    *    being verdict-identical — the load path's one invariant;
-    *  - Σcnt must equal khash · (non-null corpus keys): every key the
-    *    corpus holds folded exactly once ([[graft.operators.Dedup
-    *    .countingBloomStats]]' exactness identity run as an
-    *    adopt-time audit — one bounded aggregate, and the reason a
-    *    state that drifted from its corpus refuses instead of
-    *    silently serving wrong multiplicities).
-    *
-    * The corpus fed here must be the chain's LIVE set (accepted
-    * inserts minus applied deletes — unique texts by the accept
-    * policy, so the multiset the filter describes IS the key set);
-    * the Σcnt identity catches any disagreement. */
-  private def adoptIngestBloom(adopted: Retrieval.AdoptedCountingState,
-      keys: DataFrame, outDir: String): Unit = {
-    val n = keys.count()
-    val (shards, mbits) = graft.operators.Dedup.adaptiveBloomGeometry(n)
-    require(shards == 1,
-      s"ingest-filter adoption serves the flat chain state; a corpus " +
-        s"needing $shards shards builds its filter from the corpus " +
-        "(or shards the chain first)")
-    // a SHARDED chain's state carries a shard column — relabeling it
-    // shard=0 would union all shards' position spaces into duplicate
-    // (0, pos) rows, and the Σcnt audit cannot catch it (the sum is
-    // shard-invariant); the frame shape is the only tell, so refuse
-    // on it
-    require(!adopted.counts.columns.contains("shard"),
-      "adopted state carries a shard column (a sharded chain's " +
-        "fold) — adoption serves the FLAT chain state; rebuildInto " +
-        "a flat generation first")
-    require(adopted.khash == graft.operators.Dedup.BloomHashes,
-      s"adopted chain khash ${adopted.khash} != the serve default " +
-        s"${graft.operators.Dedup.BloomHashes} — screens would probe " +
-        "the wrong position count")
-    require(adopted.mbits == mbits,
-      s"adopted chain geometry mbits=${adopted.mbits} != the corpus's " +
-        s"adaptive $mbits — rebuildInto the chain at the adaptive " +
-        "geometry first, or the persisted filter and the dh fallback " +
-        "would answer differently")
-    val keyed = n - keys.where(col("content_key").isNull).count()
-    val row = adopted.counts
-      .agg(sum("cnt").as("tot"),
-        sum(when(col("cnt") <= 0, 1L).otherwise(0L)).as("bad"))
-      .collect()(0)
-    val tot = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val bad = if (row.isNullAt(1)) 0L else row.getLong(1)
-    require(bad == 0L,
-      s"adopted state carries $bad non-positive count row(s) — not a " +
-        "folded live state")
-    require(tot == adopted.khash.toLong * keyed,
-      s"adopted state sums to $tot counts but the corpus's " +
-        s"$keyed keys need ${adopted.khash.toLong * keyed} " +
-        "(Σcnt = khash·live) — the chain and the published corpus " +
-        "disagree; publish the chain's live set, or build from the " +
-        "corpus")
-    graft.operators.Dedup
-      .adoptedCountingFrame(adopted.counts, mbits, adopted.khash)
-      .withColumn("cb", cbOf)
-      .write.partitionBy("shard", "cb").mode(SaveMode.Overwrite)
-      .parquet(outDir)
-    writeBloomGeom(outDir, 1, mbits, counting = true)
-  }
-
-  private def writeBloomGeom(outDir: String, shards: Int, mbits: Int,
-      counting: Boolean): Unit = {
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, "_bloomgeom"),
-      ((if (counting) "counting " else "") + s"$shards $mbits")
-        .getBytes("UTF-8"))
-    ()
-  }
-
-  /** Retire the persisted ingest filter of a LIVE snapshot — called by
-    * [[Retrieval.rebuild]] before any dh-changing merge lands, so that
-    * whenever a `bloomdh` frame exists it agrees with `dh`. Readers during the
-    * gap take the derive-from-dh fallback, which carries the in-place
-    * rebuild's OWN read contract: rebuild is single-writer
-    * maintenance, and a reader racing it sees dh through the same
-    * per-partition swap windows as every other frame read mid-rebuild
-    * (mixed-generation rows, or a listing error in a swap's
-    * rename gap) — no worse than the pre-persistence design, which
-    * derived from dh on every load. A deployment that must never
-    * expose those windows publishes blue/green via [[Retrieval.build]]
-    * instead. Atomic move aside, then reclaim — a handle that already
-    * EVALUATED its lazy filter holds a localCheckpoint, so the reclaim
-    * cannot fail its reads (a handle that has not yet evaluated it
-    * simply derives). */
-  /** Whether a live, bit-flavored `bloomdh` frame with a readable
-    * geometry sidecar is present — [[rebuild]]'s empty-delta skip
-    * guard: present ⟹ the frame agrees with the unchanged dh (frames
-    * only ever commit consistent with dh, and any dh change retires
-    * first), absent/unreadable/counting ⟹ regenerate (the prior-crash
-    * and layout-upgrade healing paths). */
-  private def liveBitFrameExists(dir: String): Boolean = try {
-    val geom = java.nio.file.Paths.get(dir, "bloomdh", "_bloomgeom")
-    java.nio.file.Files.isRegularFile(geom) && {
-      val s = new String(java.nio.file.Files.readAllBytes(geom), "UTF-8")
-      !s.trim.startsWith("counting")
-    }
-  } catch { case scala.util.control.NonFatal(_) => false }
-
-  private def retireIngestBloom(dir: String): Unit = {
-    val live = java.nio.file.Paths.get(dir, "bloomdh")
-    if (java.nio.file.Files.isDirectory(live)) {
-      val aside = new java.io.File(dir,
-        s".bloomdh-retired-${System.nanoTime()}")
-      java.nio.file.Files.move(live, aside.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      rm(aside)
-    }
-  }
-
-  /** Regenerate the persisted ingest filter of a LIVE snapshot from
-    * its current dh frame: stage under a dot-name (pid+nanos — the
-    * rebuildInto stage convention), then swap by two atomic moves (old
-    * aside, new in) and reclaim the aside. A reader landing between
-    * the moves finds no `bloomdh` and falls back to deriving from dh —
-    * verdict-identical by the shared geometry recipe — so the swap
-    * needs no lock; one racing the swap itself is caught by the
-    * bracketed sidecar read on the load path and falls back too. */
-  private def regenerateIngestBloom(spark: SparkSession,
-      dir: String, counting: Boolean = false): Unit = {
-    val stage = new java.io.File(dir,
-      s".bloomdh-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    writeIngestBloom(
-      spark.read.schema(DhSchema).parquet(s"$dir/dh")
-        .select(col("dh").as("content_key")),
-      stage.toString, counting)
-    installIngestBloom(dir, stage)
-  }
-
-  /** A staged counting-filter update: the stage dir plus the
-    * `(shards, cbs)` partition rectangle it covers — None for a
-    * full-frame restage (legacy-layout upgrade, or a delta too wide
-    * for the splice to win), installed by the whole-dir swap. */
-  private[graft] final case class StagedCountingUpdate(
-      stage: java.io.File, touched: Option[(Seq[Long], Seq[Long])])
-
-  /** [[retireIngestBloom]]'s KEEPING twin for the counting delta
-    * path: move the live frame aside under a dot-name and return it —
-    * its untouched partitions ride back wholesale at install (pure
-    * renames, zero IO). Readers during the gap take the
-    * derive-from-dh fallback exactly as with the deleting retire; a
-    * crash strands the pending dir as `.bloomdh-` debris that
-    * [[sweepMergeDebris]] reclaims on the next rebuild (whose staging
-    * then finds no live frame, declines, and regenerates — the
-    * documented crash recovery). */
-  private def retireIngestBloomPending(dir: String): java.io.File = {
-    val live = java.nio.file.Paths.get(dir, "bloomdh")
-    val pending = new java.io.File(dir,
-      s".bloomdh-pending-${ProcessHandle.current().pid()}-" +
-        s"${System.nanoTime()}")
-    java.nio.file.Files.move(live, pending.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    pending
-  }
-
-  /** Install a DELTA-staged counting update: splice the stage's
-    * `(shard, cb)` partition dirs over the pending (retired-live)
-    * frame's — delete-then-move per pair, a staged pair with no rows
-    * deletes the live one (merged to empty) — refresh the sidecar,
-    * then commit the whole pending dir back as `bloomdh` by ONE
-    * atomic move. Every mutation happens on dot-named dirs no reader
-    * lists; untouched partitions are never rewritten (same files,
-    * same bytes — the byte-stability the splice exists for). A crash
-    * anywhere leaves no live frame (readers derive from dh) and two
-    * `.bloomdh-` debris dirs for the next rebuild's sweep — never a
-    * half-spliced frame served. */
-  private def installCountingDelta(dir: String, stage: java.io.File,
-      pending: java.io.File, touchedShards: Seq[Long],
-      touchedCbs: Seq[Long]): Unit = {
-    for (s <- touchedShards; c <- touchedCbs) {
-      val rel = s"shard=$s/cb=$c"
-      val tgt = new java.io.File(pending, rel)
-      rm(tgt)
-      val src = new java.io.File(stage, rel)
-      if (src.isDirectory) {
-        java.nio.file.Files.createDirectories(tgt.getParentFile.toPath)
-        java.nio.file.Files.move(src.toPath, tgt.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-    java.nio.file.Files.move(stage.toPath.resolve("_bloomgeom"),
-      pending.toPath.resolve("_bloomgeom"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    java.nio.file.Files.move(pending.toPath,
-      java.nio.file.Paths.get(dir, "bloomdh"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    rm(stage)
-  }
-
-  /** Swap a fully-staged ingest-filter dir into place: old aside, new
-    * in, reclaim — the two-atomic-moves tail shared by regeneration
-    * and the counting O(delta) update. A reader landing between the
-    * moves finds no `bloomdh` and falls back to deriving from dh at
-    * the marker's flavor; one racing the swap itself is caught by the
-    * bracketed sidecar read on the load path. */
-  private def installIngestBloom(dir: String, stage: java.io.File): Unit = {
-    val live = java.nio.file.Paths.get(dir, "bloomdh")
-    val aside = new java.io.File(dir, s".bloomdh-aside-${System.nanoTime()}")
-    if (java.nio.file.Files.isDirectory(live))
-      java.nio.file.Files.move(live, aside.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    java.nio.file.Files.move(stage.toPath, live,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    rm(aside)
-  }
-
-  /** Stage the COUNTING ingest filter's O(delta) update for a rebuild:
-    * read the LIVE counting frame, apply the fingerprint diff's
-    * removed/added keys as per-position decrements/increments
-    * ([[graft.operators.Dedup.shardedCountingBloomRemove]]/`Add` — the
-    * negative-count refusal fires loudly on a corrupted frame; delete
-    * `bloomdh` and rerun to fall back to full regeneration), and write
-    * the result to a dot-named stage dir for install AFTER the dh
-    * merge lands. The frame and the stored dh are both
-    * pre-merge stable at staging time, so the algebra gives EXACTLY
-    * the filter of the post-merge corpus: counts(old) − removed +
-    * added = counts(new dh), per (shard, pos) — spec-pinned against a
-    * from-scratch build. The ONLY inputs are the live frame and the
-    * delta key frames (the job-count contract: a small delete delta
-    * never re-runs the corpus-wide counting aggregate — no dh scan,
-    * no khash-way corpus explode). Cost shape: the
-    * decrement/increment AGGREGATES are delta-∝, and since the
-    * [[CountingBuckets]] layout so is the IO — the read prunes to the
-    * touched `(shard, cb)` rectangle and the stage carries only those
-    * partitions, spliced over the retired frame's by
-    * [[installCountingDelta]] (untouched partitions ride back
-    * byte-stable; the steady-state EMPTY delta stages zero rows and
-    * the whole install is three renames). A legacy unpartitioned
-    * frame — or a delta rectangle past half the partitions, where a
-    * splice stops winning — restages the full frame under the
-    * partitioned layout (`touched = None`, whole-dir swap), which is
-    * also the in-place layout upgrade; `newKeyCount`
-    * (one thin count over the new fingerprint column, the same class
-    * of job as the diff that produced the deltas) guards geometry
-    * drift — a corpus grown or shrunk past its pinned
-    * [[graft.operators.Dedup.adaptiveBloomGeometry]] point returns
-    * None and the caller regenerates at fresh geometry instead
-    * (keeping the sized-for FP rate honest). The drift rule is exact
-    * equality with the fresh derivation — deliberately, so the
-    * resulting geometry ALWAYS equals adaptive(newCount) and the x105
-    * oracle can derive it from the surviving count alone; a corpus
-    * hovering at a power-of-two boundary may regenerate on alternate
-    * rebuilds, which at worst costs what the bit flavor pays on EVERY
-    * rebuild. None also when the live frame or its sidecar is missing
-    * or bit-flavored (crash recovery / flavor upgrade). */
-  private[graft] def stageCountingIngestUpdate(spark: SparkSession,
-      dir: String, removedKeys: DataFrame, addedKeys: DataFrame,
-      newKeyCount: Long,
-      checkpointDir: Option[String] = None)
-      : Option[StagedCountingUpdate] = try {
-    val geomPath = java.nio.file.Paths.get(dir, "bloomdh", "_bloomgeom")
-    if (!java.nio.file.Files.isRegularFile(geomPath)) None
-    else {
-      val sidecar = new String(
-        java.nio.file.Files.readAllBytes(geomPath), "UTF-8").trim
-      val parts = sidecar.split(" ")
-      if (parts(0) != "counting") None
-      else {
-        val (shards, mbits) = (parts(1).toInt, parts(2).toInt)
-        if (graft.operators.Dedup.adaptiveBloomGeometry(
-            math.max(newKeyCount, 1L)) != ((shards, mbits))) None
-        else {
-          // the delta REGION: distinct (shard, cb) of every removed
-          // and added key's positions — one delta-scale aggregate,
-          // collected bounded (≤ min(khash·|delta|, shards·buckets)
-          // pairs; a bulk delta past the cap reads as "touches
-          // everything" and takes the full-restage path, which is
-          // what it would rewrite anyway)
-          val deltaPairs = graft.operators.Dedup
-            .shardedCountingBloomBits(
-              removedKeys.unionByName(addedKeys), shards, mbits)
-            .select(col("shard"), cbOf.as("cb")).distinct()
-            .limit(shards * CountingBuckets + 1).collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          val partitioned = Option(
-            new java.io.File(s"$dir/bloomdh").listFiles())
-            .exists(_.exists(_.getName.startsWith("shard=")))
-          val touchedShards = deltaPairs.map(_._1).distinct.toSeq.sorted
-          val touchedCbs = deltaPairs.map(_._2).distinct.toSeq.sorted
-          // the splice-vs-restage cap meters the RECTANGLE the prune
-          // and install actually operate on (shards × cbs — a
-          // superset of the exact pairs), not the pair count: a
-          // many-shard delta whose pairs cross-multiply to most of
-          // the frame would read, restage and rename-splice near all
-          // partitions while "pairs ≤ half" still claimed a delta —
-          // worse than the whole-dir swap it was meant to beat
-          val delta = partitioned &&
-            touchedShards.size.toLong * touchedCbs.size <=
-              (shards.toLong * CountingBuckets) / 2
-          // no explicit schema: the geometry-pin column metadata in
-          // the footer must survive into Remove/Add's validation.
-          // Delta path: read PRUNED to the touched region's
-          // (shard × cb) rectangle — partition pruning keeps the scan
-          // to the files the splice will replace; every delta
-          // position's pair is inside the rectangle, so the counting
-          // algebra over the pruned frame equals the full frame's
-          // restricted to it. Legacy unpartitioned frames (or a
-          // region cap overflow) take the full restage, which also
-          // UPGRADES the layout in place.
-          val raw = spark.read.parquet(s"$dir/bloomdh")
-          // empty delta (the steady-state idempotent rerun): the
-          // rectangle is empty, nothing reads, nothing stages, and
-          // the install is pure renames
-          val region =
-            if (touchedShards.isEmpty) lit(false)
-            else col("shard").isin(touchedShards: _*) &&
-              col("cb").isin(touchedCbs: _*)
-          val frame = (if (delta) raw.where(region) else raw)
-            .select(col("shard").cast("long").as("shard"), col("pos"),
-              col("cnt"))
-          val updated = graft.operators.Dedup.shardedCountingBloomAdd(
-            graft.operators.Dedup.shardedCountingBloomRemove(frame,
-              removedKeys, shards, mbits, checkpointDir = checkpointDir),
-            addedKeys, shards, mbits)
-          val stage = new java.io.File(dir,
-            s".bloomdh-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-          updated.withColumn("cb", cbOf)
-            .write.partitionBy("shard", "cb").mode(SaveMode.Overwrite)
-            .parquet(stage.toString)
-          writeBloomGeom(stage.toString, shards, mbits, counting = true)
-          Some(StagedCountingUpdate(stage,
-            if (delta) Some((touchedShards, touchedCbs)) else None))
-        }
-      }
-    }
-  } catch {
-    // the Remove refusal and the geometry-pin refusal
-    // (IllegalArgumentException) are NOT caught — a corrupted frame
-    // must fail loudly, never silently regenerate over the evidence
-    case e: IllegalArgumentException => throw e
-    // an unreadable frame/sidecar (crashed prior swap) is a recovery
-    // case, not an error: the caller regenerates from the merged dh
-    case scala.util.control.NonFatal(_) => None
-  }
-
-  /** The merge-swapped frames of a snapshot and their partition
-    * columns — the sweep list for [[healMergeAsides]] /
-    * [[sweepMergeDebris]], and the compaction list for
-    * [[Retrieval.compact]]. */
-  private val MergeFrames: Seq[(String, String)] =
-    Seq("index" -> "cell", "cindex" -> "cell", "bcindex" -> "cell",
-      "emb" -> "pb", "vh" -> "pb",
-      "tf" -> "pb", "dl" -> "pb", "dh" -> "pb", "ctf" -> "pb",
-      "cdl" -> "pb", "cemb" -> "pb", "bctf" -> "pb", "bcdl" -> "pb",
-      "bcemb" -> "pb")
-
-  /** Explicit read schema per merge frame — [[Retrieval.compact]]'s
-    * rewrite reads each frame with its written schema (the same
-    * no-inference rule as the serve accessors). */
-  private val frameSchemas: Map[String, String] = Map(
-    "index" -> IndexSchema, "cindex" -> IndexSchema,
-    "bcindex" -> IndexSchema,
-    "emb" -> EmbSchema, "vh" -> VhSchema, "tf" -> TfSchema,
-    "dl" -> DlSchema, "dh" -> DhSchema, "ctf" -> CtfSchema,
-    "cdl" -> CdlSchema, "cemb" -> CembSchema, "bctf" -> CtfSchema,
-    "bcdl" -> CdlSchema, "bcemb" -> CembSchema)
-
-  /** Parsed `.aside-<v>-<nonce>` entries of a frame dir. Unparseable
-    * names (debris from an interrupted mkdir or a manual copy) are
-    * SKIPPED, never thrown on — a recovery sweep that crashes `load`
-    * over a stray directory would make a healthy snapshot
-    * unserveable. */
-  private def asideEntries(
-      d: java.io.File): Seq[(java.io.File, String, Long)] =
-    Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith(".aside-"))
-      .flatMap { f =>
-        val rest = f.getName.stripPrefix(".aside-")
-        val i = rest.lastIndexOf('-')
-        if (i <= 0) None
-        else scala.util.Try(rest.substring(i + 1).toLong).toOption
-          .map(n => (f, rest.substring(0, i), n))
-      }
-
-  /** READ-side heal, the per-partition analog of [[recoverAside]]: a
-    * crash inside [[replacePartitions]]'s two-rename window leaves
-    * `partCol=<v>` missing with the OLD content complete under
-    * `.aside-<v>-<nonce>` (dot-prefixed, so readers never see it).
-    * Without healing, that partition's untouched rows would be silently
-    * lost — and because data frames merge BEFORE their fingerprint
-    * frames, the stale fingerprints would keep claiming the lost rows
-    * exist, so no rerun would re-detect them. [[load]] restores a
-    * stranded aside (newest nonce wins) and FAILS LOUDLY if the rename
-    * loses (silent row loss is the one unacceptable outcome). It
-    * deletes NOTHING: destructive cleanup belongs to the single-writer
-    * rebuild path ([[sweepMergeDebris]]) — a read-side delete could
-    * race an in-flight rebuild's staging dirs. */
-  private def healMergeAsides(dir: String): Unit =
-    MergeFrames.foreach { case (frame, partCol) =>
-      val d = new java.io.File(s"$dir/$frame")
-      def stranded = asideEntries(d).groupBy(_._2).filter { case (v, _) =>
-        !new java.io.File(d, s"$partCol=$v").exists()
-      }
-      // retry with a FRESH listing per attempt: a concurrent rebuild's
-      // swap can invalidate an entry mid-heal (its microsecond-wide
-      // missing-live window looks exactly like a crash) — the retry
-      // either sees the writer's install land or restores a genuinely
-      // stranded aside; only a persistently missing partition fails
-      var attempts = 0
-      while (stranded.nonEmpty && attempts < 3) {
-        attempts += 1
-        stranded.foreach { case (v, group) =>
-          group.maxBy(_._3)._1
-            .renameTo(new java.io.File(d, s"$partCol=$v")); ()
-        }
-      }
-      val unhealed = stranded.keys
-      require(unhealed.isEmpty,
-        s"stranded partitions in $dir/$frame could not be restored: " +
-          s"${unhealed.map(v => s"$partCol=$v").mkString(", ")}; " +
-          "refusing to serve with silently missing rows")
-    }
-
-  /** WRITE-side sweep, run from [[rebuild]]'s entry (the documented
-    * single-writer context): heal first, then reclaim superseded
-    * asides (their live partition exists) and orphaned `.merge-`
-    * staging directories left by crashed merges. */
-  private def sweepMergeDebris(dir: String): Unit = {
-    healMergeAsides(dir)
-    val rootFiles = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    MergeFrames.foreach { case (frame, _) =>
-      rootFiles.filter(f => f.isDirectory &&
-        f.getName.startsWith(s"$frame.merge-")).foreach(rm)
-      asideEntries(new java.io.File(s"$dir/$frame")).foreach(e => rm(e._1))
-    }
-    // ingest-filter stage/aside debris from a crashed
-    // [[regenerateIngestBloom]] — single-writer context, so any
-    // dot-bloomdh dir here is a dead stager's, never a live one
-    rootFiles.filter(f => f.isDirectory &&
-      f.getName.startsWith(".bloomdh-")).foreach(rm)
-    // serve-point tmp files from a crashed [[acceptServePoints]] (the
-    // atomic move never ran — the live sidecar, if any, is intact)
-    rootFiles.filter(f => f.isFile &&
-      f.getName.startsWith(".servepoints-")).foreach(rm)
-  }
-
-  /** Swap exactly the `partCol=<v>` directories of a partitioned frame
-    * for their staged replacements — each partition is always one
-    * complete generation on disk (rename-aside per partition, the
-    * [[publish]] discipline applied dir-by-dir; a crash in the swap
-    * window is healed by [[healMergeAsides]] at the next load, and the
-    * debris reclaimed by [[sweepMergeDebris]] at the next rebuild). A
-    * staged partition that merged to empty deletes the live one (every
-    * row gone). */
-  private def replacePartitions(frameDir: String, partCol: String,
-      merged: DataFrame, affected: Seq[String]): Unit = {
-    val staged = new java.io.File(s"$frameDir.merge-${System.nanoTime()}")
-    merged.repartition(col(partCol))
-      .write.partitionBy(partCol).mode(SaveMode.Overwrite)
-      .parquet(staged.toString)
-    affected.foreach { v =>
-      val name = s"$partCol=$v"
-      val live = new java.io.File(s"$frameDir/$name")
-      val next = new java.io.File(staged, name)
-      // a concurrent reader's load() can heal the aside back between
-      // the two renames (it sees the microsecond-wide missing-live
-      // window as a crashed merge); the forward rename then fails, so
-      // retry the whole swap — and fail LOUDLY if it keeps losing,
-      // because returning silently would let the fingerprint merges
-      // record rows that were never installed
-      var installed = false
-      var attempts = 0
-      while (!installed && attempts < 3) {
-        attempts += 1
-        // dot-prefixed aside: invisible to parquet readers while it lives
-        val aside =
-          new java.io.File(s"$frameDir/.aside-$v-${System.nanoTime()}")
-        val hadOld = live.exists() && live.renameTo(aside)
-        installed =
-          if (next.exists()) next.renameTo(live)
-          // merged to empty: the partition being GONE is the install —
-          // checked, not assumed, so a failed aside rename or a
-          // concurrent heal resurrecting it retries and then fails
-          // loudly instead of leaving ghost rows the fingerprint
-          // merges would record as deleted
-          else !live.exists()
-        if (installed && hadOld) rm(aside)
-      }
-      require(installed,
-        s"could not install $frameDir/$name after $attempts attempts")
-    }
-    rm(staged)
   }
 
   private def rm(f: java.io.File): Unit = {
@@ -2705,11 +279,6 @@ object Retrieval {
       recoverAside(dir)
     require(java.nio.file.Files.exists(root.resolve("codebook.txt")),
       s"$dir is not a published retrieval snapshot")
-    // NO layout guard here: a pre-v4 snapshot must keep serving its
-    // doc-level queries; the chunk accessors and rebuild() carry the
-    // guard with the upgrade message (availability over strictness
-    // during a layout migration).
-    healMergeAsides(dir) // heal a crashed in-place rebuild before any read
     val cents = readBooks(root.resolve("codebook.txt"))
     val books = readBooks(root.resolve("pqbooks.txt"))
       .grouped(VectorOps.PqSubCentroids).toList

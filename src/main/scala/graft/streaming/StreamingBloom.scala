@@ -144,8 +144,7 @@ class StreamingBloom(artifactDir: String, outDir: String,
     else Some(spark.read.parquet(outDir).drop("gbatch"))
   }
 
-  /** The half-full rule's EXECUTOR — [[graft.serve.Retrieval.retrain]]'s
-    * role on the bloom axis: fold every ACCEPTED key recorded in the
+  /** The half-full rule's EXECUTOR: fold every ACCEPTED key recorded in the
     * verdicts into a fresh artifact at the new geometry and return its
     * handle. The filter itself holds no keys (bits are one-way), but
     * the verdict frames do — `(content_key, accepted)` per doc — so a
@@ -249,7 +248,7 @@ class StreamingBloom(artifactDir: String, outDir: String,
     * and no verdict ever errors), so past fill 0.5 the report
     * recommends re-screening into a fresh, larger (or sharded)
     * artifact — the only fix a structure that cannot un-set bits
-    * admits, the [[graft.serve.Retrieval]] cell-drift convention.
+    * admits.
     * None before any batch wrote. */
   def stats(spark: SparkSession)
       : Option[(Dedup.BloomStats, Boolean)] =
@@ -272,10 +271,10 @@ object StreamingBloom {
     * which REJECT genuinely-new keys and so shape the very history
     * gen-2 inherits — and the increment's final verdicts all
     * hash-check exactly. mbits derives from the batch-0 count in SQL
-    * ([[graft.operators.Dedup.adaptiveBloomBitsSql]] — the x99
-    * convention), so one oracle string is exact at every fixture
-    * scale. `b0Pred`/`b1Pred` select gen-1's two batches from
-    * `documents`; `incSql` selects the increment's `(doc_id, text)`. */
+    * ([[graft.operators.Dedup.adaptiveBloomBitsSql]]), so one oracle
+    * string is exact at every fixture scale. `b0Pred`/`b1Pred` select
+    * gen-1's two batches from `documents`; `incSql` selects the
+    * increment's `(doc_id, text)`. */
   def generationalScreenSql(b0Pred: String, b1Pred: String,
       incSql: String, khash: Int = Dedup.BloomHashes): String = {
     def pos(mb: String) =

@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.Trigger
   * double-counts). Deleted content's positions fold back to zero, so
   * a later re-presentation screens `maybe_seen = false` and is
   * RE-ACCEPTED — the rolling-retention / right-to-be-forgotten
-  * semantics the batch counting family (x103–x105) provides, now
+  * semantics the batch counting family (x103/x104) provides, now
   * online.
   *
   * Each micro-batch carries mixed operations `(doc_id, text, op)`
@@ -83,11 +83,10 @@ class StreamingCountingBloom(artifactDir: String, outDir: String,
   require(shards >= 1, s"shards must be >= 1: $shards")
 
   // `exactKeys` switches the content key from the dedup recipe
-  // (md5 of NORMALIZED text) to the snapshot fingerprint (md5 of the
-  // text EXACT, [[graft.serve.Retrieval]]'s dh) — the keying a crawl
-  // runs at when its folded state will be ADOPTED as a published
-  // snapshot's ingest filter (the two recipes answer different
-  // questions; an adopted filter must answer the snapshot's).
+  // (md5 of NORMALIZED text) to the content fingerprint (md5 of the
+  // text EXACT) — the keying for a filter that must answer "is this
+  // exact content indexed" rather than "is this a near-duplicate" (the
+  // two recipes answer different questions).
   // `shards > 1` is the SCALE path past the flat frame's ~10^8-key
   // ceiling — the batch family's `(shard, pos)` keying
   // ([[graft.operators.Dedup.shardedCountingBloomBits]]) applied to
@@ -414,7 +413,7 @@ object StreamingCountingBloom {
     * the counting frame of the live key SET, so each state is one
     * GROUP BY over the live keys — no delta algebra needed in SQL.
     * Geometry derives from the batch-0 insert count
-    * ([[graft.operators.Dedup.adaptiveBloomBitsSql]], the x99/x102
+    * ([[graft.operators.Dedup.adaptiveBloomBitsSql]], the x102
     * convention). `b0Pred` selects batch 0's inserts from `documents`,
     * `b1InsPred` batch 1's, `delPred` the batch-0 docs deleted in
     * batch 1 (by original doc_id), `invalidPred` the never-inserted

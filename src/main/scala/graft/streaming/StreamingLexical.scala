@@ -116,9 +116,8 @@ class StreamingLexical(artifactDir: String) {
       TextOps.bm25TopKFrom(tf, dl, queries, k)
     }
 
-  /** Chunk-ranked, doc-deduped serve from the same artifact — the
-    * streaming twin of [[graft.serve.Retrieval.chunkLexicalTopK]],
-    * through the one batch scoring path
+  /** Chunk-ranked, doc-deduped serve from the same artifact, through
+    * the one batch scoring path
     * ([[TextOps.bm25ChunkTopKFrom]]), so N indexed batches serve
     * exactly like the batch chunk build over their concatenation. */
   def chunkTopK(spark: SparkSession, queries: Seq[(Long, Seq[String])],

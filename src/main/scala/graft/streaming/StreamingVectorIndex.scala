@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * The codebooks are deliberately a FIXED constructor argument, not
   * per-batch state: in production PQ books are trained once on an
   * initial corpus sample and kept stable so codes stay comparable
-  * across the whole stream (retraining mid-stream would silently change
+  * across the whole stream (training new books mid-stream would silently change
   * what every previous code means). Embeddings and codes are both
   * per-doc-local, so slice isolation ≡ full-corpus values — the same
   * append-only insight as the lexical tf/dl frames.
@@ -97,8 +97,7 @@ class StreamingVectorIndex(artifactDir: String,
         "with chunked = false, or re-index the corpus under a chunked " +
         "handle.")
   }
-  // Pinned-constants guard (the [[StreamingBpeChunkIndex]] convention,
-  // retrofitted): codes are meaningless under the wrong books and
+  // Pinned-constants guard ([[SlicedArtifact.pinConstants]]): codes are meaningless under the wrong books and
   // cells under the wrong coarse codebook, so a reopen under different
   // constants refuses instead of silently mixing generations across
   // slices. Write-if-absent — a pre-guard artifact pins to its first

@@ -114,48 +114,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"RRF fuse is not a keyed full-outer join:\n$fusedPlan")
   }
 
-  test("chunk serve: token prune pushes into the stored ctf scan; fusion joins stay keyed") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunkplan")
-      .toString + "/snap"
-    val docs = Tables.documents(spark, psf).where(col("doc_id") < 200)
-      .select("doc_id", "text")
-    val emb = Tables.embeddings(spark, psf).where(col("vec_id") < 200)
-      .select("vec_id", "embedding")
-    val h = graft.serve.Retrieval.build(docs, emb, dir)
-    val qs = Seq(0L -> Seq("spark", "join"), 1L -> Seq("vector", "table"))
-    // the chunk-lexical serve fetches POSTING LISTS: the literal token
-    // IN-filter must reach the stored ctf parquet scan, so the scan
-    // surfaces only queried rows — at corpus scale this is the
-    // difference between a key lookup and a full index read
-    val lex = formatted(h.chunkLexicalTopK(qs, 5))
-    assert(lex.contains("PushedFilters"), lex)
-    assert(lex.contains("In(token"), s"token prune not pushed into ctf:\n$lex")
-    // the full chunk serve: attribution rides the keyed full-outer
-    // fusion join — no cartesian, and no second pass over the lexical
-    // subtree. The pruned ctf posting read legitimately appears TWICE
-    // (df derivation + scoring, the bm25TopKFrom shape); an
-    // attribution join-back would double that to four.
-    val fused = h.searchChunks(qs, 5)
-      .queryExecution.executedPlan.toString
-    assert(!fused.contains("CartesianProduct"), s"cartesian:\n$fused")
-    assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin).*FullOuter".r
-      .findFirstIn(fused).nonEmpty,
-      s"chunk fuse is not a keyed full-outer join:\n$fused")
-    val ctfScans = "/ctf".r.findAllIn(fused).size
-    assert(ctfScans <= 2,
-      s"lexical subtree computed more than once ($ctfScans ctf scans):\n$fused")
-    // the chunk-DENSE half serves from the stored cindex with the
-    // probed-cell PARTITION prune — at corpus scale the scan cost must
-    // be ∝ nprobe/cells of the chunk corpus; the brute per-chunk scan
-    // is x83's labeled baseline, never the serve plan
-    assert(fused.contains("cindex"),
-      s"chunk serve does not read the stored chunk index:\n$fused")
-    assert("cell#\\d+L? IN ".r.findFirstIn(fused).nonEmpty ||
-      fused.contains("cell IN ("),
-      s"probed-cell filter must prune the cindex read:\n$fused")
-  }
-
   test("BPE chunk serve (x90's shape): token prune reaches the stored postings, probed cells prune the bpe chunk index") {
     import graft.operators.{HybridOps, TextOps}
     import org.apache.spark.sql.functions.col

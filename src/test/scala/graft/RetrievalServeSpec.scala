@@ -20,6 +20,14 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
   private def rows(df: DataFrame) =
     df.orderBy("query_id", "rn").collect().map(_.toSeq).toSeq
 
+  /** One full-fixture snapshot shared by the tests that only inspect
+    * it (the others mutate their own). */
+  private lazy val snap: (String, Retrieval) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap")
+      .toString + "/snap"
+    (dir, Retrieval.build(docs, emb, dir))
+  }
+
   test("snapshot build + load + search equal the in-memory composed halves") {
     val dir = java.nio.file.Files.createTempDirectory("graft-serve")
       .toString + "/snap"
@@ -66,11 +74,11 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
     assert(rows(loaded.search(queries, 5, HybridOps.DenseOnly)) ===
       rows(denseRef))
 
-    // raw-text entry: searchText tokenizes with the ENGINE's rule —
-    // identical to handing in the pre-tokenized terms, and identical to
-    // what Spark's own tokenizer would produce for the same strings
+    // driver-side query tokenization uses the ENGINE's rule: identical
+    // to what Spark's own tokenizer produces for the same raw strings
+    // (case folding, repeated whitespace)
     val rawQueries = Seq(0L -> "Spark  JOIN", 1L -> "vector table")
-    val tokenized = graft.operators.HybridOps.tokenizeQueries(rawQueries)
+    val tokenized = HybridOps.tokenizeQueries(rawQueries)
     val sess = spark
     import sess.implicits._
     val engineTok = rawQueries.toDF("id", "text")
@@ -78,24 +86,6 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     assert(tokenized.forall { case (id, ts) => engineTok(id) === ts },
       "driver-side tokenization diverges from the engine tokenizer")
-    assert(rows(loaded.searchText(rawQueries, 5)) ===
-      rows(loaded.search(tokenized, 5)))
-
-    // filtered serve from the snapshot: all results allowed, and the
-    // lexical half equals the operator-level filtered path
-    val allowed = graft.sources.Tables.documents(spark, sf)
-      .where(col("lang") === "en").select("doc_id")
-    val allowedIds = allowed.collect().map(_.getLong(0)).toSet
-    val fil = loaded.searchFiltered(queries, allowed, 5)
-    val filRows = fil.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(filRows.nonEmpty)
-    assert(filRows.forall { case (_, id) => allowedIds.contains(id) },
-      s"disallowed doc served by the filtered snapshot: $filRows")
-    assert(rows(loaded.searchFiltered(queries, allowed, 5,
-      HybridOps.LexicalOnly)) ===
-      rows(TextOps.bm25TopKFrom(
-        spark.read.parquet(s"$dir/tf"), spark.read.parquet(s"$dir/dl"),
-        queries, 5, Some(allowed))))
 
     // rebuild REPLACES the snapshot atomically; the new handle and a
     // fresh load both serve the new corpus
@@ -107,670 +97,83 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
     assert(rows(reloaded.lexicalTopK(queries, 5)) === lexSmall)
   }
 
-  test("screenIngest: snapshot content always flagged, fresh content passes, deletes leave the filter") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bloomserve")
-      .toString
-    val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 400)
-    val emb0 = emb.where(col("vec_id") < 400)
-    val built = Retrieval.build(docs0, emb0, live)
-    // the guarantee: every indexed doc re-presented VERBATIM is
-    // maybe_seen — the filter admits no false negatives, ever
-    val re = built.screenIngest(docs0).collect()
-    assert(re.nonEmpty && re.forall(_.getBoolean(2)),
-      "snapshot content not flagged by its own ingest filter")
-    // definitely-new content passes at the sized-for rate (adaptive
-    // bits ≈ 10/key → analytic FP ≈ 0.1% here; 5% is the broken-mix
-    // alarm threshold, not the expectation)
-    val fresh = docs.where(col("doc_id") < 64)
-      .select(col("doc_id"),
-        concat(col("text"), lit(" never indexed "), col("doc_id")).as("text"))
-    val fr = built.screenIngest(fresh).collect()
-    val fp = fr.count(_.getBoolean(2)).toDouble / fr.length
-    assert(fp <= 0.05, f"fresh-content FP rate $fp%.3f")
-    // deletes: the filter derives from the REBUILT dh frame, so a
-    // dropped doc's content screens as never-seen on the new handle —
-    // the property a persisted OR-merged bloom could not have. Pick a
-    // doc whose text is UNIQUE in the corpus (the fixture plants exact
-    // dups; a shared text would legitimately stay flagged).
-    val uniq = docs0.groupBy(md5(col("text")).as("k"))
-      .agg(count(lit(1)).as("c"), min("doc_id").as("doc_id"))
-      .where(col("c") === 1).orderBy("doc_id")
-      .select("doc_id").limit(1).collect()(0).getLong(0)
-    val rebuilt = Retrieval.rebuild(
-      docs0.where(col("doc_id") =!= uniq), emb0, live)
-    val gone = rebuilt.screenIngest(docs0.where(col("doc_id") === uniq))
-      .collect()
-    assert(gone.length == 1 && !gone(0).getBoolean(2),
-      "deleted content still flagged — filter not re-derived from dh")
-    // and surviving content stays flagged on the new handle
-    val kept = rebuilt.screenIngest(
-      docs0.where(col("doc_id") =!= uniq).limit(50)).collect()
-    assert(kept.nonEmpty && kept.forall(_.getBoolean(2)),
-      "surviving content lost from the rebuilt filter")
+  test("snapshot layout: build publishes exactly the frames search reads") {
+    val (dir, _) = snap
+    def entries(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+    // data entries only: Spark's `_SUCCESS` and `.crc` side files are
+    // the writer's bookkeeping, not frames
+    def data(d: java.io.File) = entries(d).filterNot(f =>
+      f.getName.startsWith("_") || f.getName.startsWith("."))
+    val root = new java.io.File(dir)
+    assert(entries(root).map(_.getName).toSet ===
+      Set("codebook.txt", "pqbooks.txt", "index", "emb", "tf", "dl"))
+    // the IVFADC frame is cell-partitioned (the probe prunes on it) ...
+    val cells = data(new java.io.File(root, "index"))
+    assert(cells.nonEmpty && cells.forall(f =>
+      f.isDirectory && f.getName.matches("cell=-?\\d+")),
+      s"index/ is not cell-partitioned: ${cells.map(_.getName)}")
+    // ... and the id-keyed frames are flat parquet files
+    for (frame <- Seq("emb", "tf", "dl")) {
+      val fs = data(new java.io.File(root, frame))
+      assert(fs.nonEmpty && fs.forall(f =>
+        f.isFile && f.getName.endsWith(".parquet")),
+        s"$frame/ is partitioned or empty: ${fs.map(_.getName)}")
+    }
   }
 
-  test("screenIngest: filter persisted per publish — handle load reads no dh; fallback and rebuild upgrade agree") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bloomdh")
-      .toString
+  test("publish crash in the swap window leaves a loadable snapshot") {
+    val root = java.nio.file.Files.createTempDirectory("graft-swap").toString
     val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 300)
-    val emb0 = emb.where(col("vec_id") < 300)
-    val built = Retrieval.build(docs0, emb0, live)
-    assert(new java.io.File(s"$live/bloomdh/_bloomgeom").isFile,
-      "build did not persist the ingest filter")
-    val probe = docs0.limit(30)
-    def verdicts(h: Retrieval) = h.screenIngest(probe).collect()
-      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    val persisted = verdicts(built)
-    // the persisted path reads NO dh: with the fingerprint frame moved
-    // aside the handle still screens — handle load is O(frame), the
-    // per-session corpus-∝ derivation is gone
-    val dhDir = new java.io.File(s"$live/dh")
-    val dhAside = new java.io.File(root, "dh_aside")
-    assert(dhDir.renameTo(dhAside))
-    try assert(verdicts(Retrieval.load(spark, live)) === persisted,
-      "persisted-filter verdicts diverge (or dh was read)")
-    finally assert(dhAside.renameTo(dhDir))
-    // pre-persistence snapshots: with bloomdh gone the handle falls
-    // back to deriving from dh — verdict-identical (shared geometry)
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete(); ()
+    val queries = Seq(0L -> Seq("spark", "join"))
+    Retrieval.build(docs, emb, live)
+    val before = rows(Retrieval.load(spark, live).lexicalTopK(queries, 5))
+    assert(before.nonEmpty)
+
+    // a second, fully-staged snapshot (different corpus, so a wrongly
+    // committed one would serve visibly different results)
+    val smaller = docs.where(col("doc_id") < 250)
+    Retrieval.build(smaller, emb, s"$root/staged")
+    val lexSmall = rows(TextOps.bm25TopK(smaller, queries, 5))
+    assert(lexSmall !== before, "staged corpus change invisible; vacuous")
+
+    // kill the publish exactly between live→aside and staged→live: the
+    // live dir is momentarily gone, but the OLD snapshot is complete
+    // under its aside name — nothing is ever half-deleted
+    object Crash extends Exception
+    intercept[Crash.type] {
+      Retrieval.publish(new java.io.File(s"$root/staged"), live,
+        betweenRenames = () => throw Crash)
     }
-    rmr(new java.io.File(s"$live/bloomdh"))
-    assert(verdicts(Retrieval.load(spark, live)) === persisted,
-      "derive-from-dh fallback diverges from the persisted filter")
-    // and a rebuild upgrades the old snapshot in place — with no live
-    // frame, the empty-delta rebuild regenerates (the heal path), so
-    // the persisted frame is back even though this delta is empty
-    Retrieval.rebuild(docs0, emb0, live)
-    assert(new java.io.File(s"$live/bloomdh/_bloomgeom").isFile,
-      "rebuild did not regenerate the persisted ingest filter")
-    assert(verdicts(Retrieval.load(spark, live)) === persisted)
-    // STEADY STATE: an empty-delta rebuild with a live, agreeing frame
-    // keeps it byte-stable — no retire, no corpus-scale regeneration
-    // (the idempotent-rerun cost contract; the frame still agrees with
-    // the byte-identical dh). A mid-rebuild reader therefore always
-    // sees either this valid frame or (on a dh-changing rebuild, below)
-    // no frame at all — never a stale one.
-    def frameFiles() = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-            .toSeq.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$live/bloomdh"))
-        .map(f => (f.getPath, f.length(), f.lastModified())).sortBy(_._1)
-    }
-    val before = frameFiles()
-    var liveDuring = false
-    Retrieval.rebuild(docs0, emb0, live, afterDenseMerge = () =>
-      liveDuring = new java.io.File(s"$live/bloomdh").exists())
-    assert(liveDuring,
-      "empty-delta rebuild retired a filter that still agrees with dh")
-    assert(frameFiles() === before,
-      "empty-delta rebuild rewrote the bit filter frame")
-    assert(verdicts(Retrieval.load(spark, live)) === persisted)
-    // a crash mid-rebuild on an EMPTY delta leaves the still-valid
-    // frame serving (dh never changed, so it never stopped agreeing)
-    intercept[RuntimeException] {
-      Retrieval.rebuild(docs0, emb0, live,
-        afterDenseMerge = () => throw new RuntimeException("boom"))
-    }
-    assert(frameFiles() === before,
-      "crashed empty-delta rebuild disturbed a valid filter")
-    assert(verdicts(Retrieval.load(spark, live)) === persisted)
-    // a dh-CHANGING rebuild retires the frame BEFORE any merge
-    // (whenever bloomdh exists it agrees with dh — a mid-merge reader
-    // takes the fallback, never a stale frame): probe from the
-    // crash-injection seam, then crash there — the fallback serves and
-    // the rerun converges and republishes
-    val docs1 = docs0.where(col("doc_id") =!= 7L)
-    val emb1 = emb0.where(col("vec_id") =!= 7L)
-    var retiredDuring = false
-    intercept[RuntimeException] {
-      Retrieval.rebuild(docs1, emb1, live, afterDenseMerge = () => {
-        retiredDuring = !new java.io.File(s"$live/bloomdh").exists()
-        throw new RuntimeException("boom")
-      })
-    }
-    assert(retiredDuring,
-      "bloomdh live mid-rebuild — a stale-filter window exists")
-    assert(!new java.io.File(s"$live/bloomdh").exists(),
-      "crashed dh-changing rebuild left a filter it can no longer vouch for")
-    val converged = Retrieval.rebuild(docs1, emb1, live)
-    assert(new java.io.File(s"$live/bloomdh/_bloomgeom").isFile,
-      "dh-changing rebuild did not regenerate the persisted filter")
-    // and the regenerated filter serves the REBUILT corpus's verdicts
-    val reProbe = verdicts(converged)
-    assert(reProbe === verdicts(Retrieval.load(spark, live)))
+    assert(!new java.io.File(live, "codebook.txt").exists(),
+      "crash injected after the aside rename; live must be vacant")
+
+    // load() recovers the stranded aside and serves the OLD corpus
+    assert(rows(Retrieval.load(spark, live).lexicalTopK(queries, 5))
+      === before, "post-crash load must serve the pre-publish snapshot")
+    assert(new java.io.File(live, "codebook.txt").exists())
+
+    // the staged snapshot survived the crash; retrying the publish
+    // completes the swap and sweeps every aside
+    Retrieval.publish(new java.io.File(s"$root/staged"), live)
+    assert(rows(Retrieval.load(spark, live).lexicalTopK(queries, 5))
+      === lexSmall)
+    assert(!new java.io.File(root).listFiles()
+      .exists(_.getName.startsWith("snap.old-")), "aside not swept")
   }
 
-  test("screenIngest: counting-backed snapshot — persisted-filter contract holds, rebuild maintains deletes O(delta)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cntdh")
-      .toString
-    val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 300)
-    val emb0 = emb.where(col("vec_id") < 300)
-    val built = Retrieval.build(docs0, emb0, live,
-      countingIngestFilter = true)
-    def sidecar() = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(live, "bloomdh", "_bloomgeom")), "UTF-8").trim
-    assert(sidecar().startsWith("counting "),
-      "counting build did not persist a counting-flavored filter")
-    assert(Retrieval.ingestFilterFlavorOf(live) == "counting")
-    val probe = docs0.limit(30)
-    def verdicts(h: Retrieval) = h.screenIngest(probe).collect()
-      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    val persisted = verdicts(built)
-    assert(persisted.nonEmpty && persisted.values.forall(identity),
-      "indexed content must flag on its own counting filter")
-    // the persisted-filter contract, re-run at counting flavor: the
-    // loaded handle reads NO dh
-    val dhDir = new java.io.File(s"$live/dh")
-    val dhAside = new java.io.File(root, "dh_aside")
-    assert(dhDir.renameTo(dhAside))
-    try assert(verdicts(Retrieval.load(spark, live)) === persisted,
-      "counting persisted-filter verdicts diverge (or dh was read)")
-    finally assert(dhAside.renameTo(dhDir))
-    // the derive-from-dh fallback rebuilds the COUNTING flavor (the
-    // marker survives the frame's loss) — verdict-identical
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete(); ()
-    }
-    rmr(new java.io.File(s"$live/bloomdh"))
-    assert(verdicts(Retrieval.load(spark, live)) === persisted,
-      "counting derive fallback diverges from the persisted filter")
-    // empty-delta rebuild with the frame missing: staging declines and
-    // the counting REGENERATION heals the persisted frame in place
-    Retrieval.rebuild(docs0, emb0, live)
-    assert(sidecar().startsWith("counting "),
-      "rebuild regenerated the wrong flavor")
-    assert(verdicts(Retrieval.load(spark, live)) === persisted)
-    // delete rebuild: a unique-text doc drops and the filter follows
-    // by O(delta) decrements — its content screens never-seen, the
-    // verdict the one-way bit filter can only reach by regeneration
-    val uniq = docs0.groupBy(md5(col("text")).as("k"))
-      .agg(count(lit(1)).as("c"), min("doc_id").as("doc_id"))
-      .where(col("c") === 1).orderBy("doc_id")
-      .select("doc_id").limit(1).collect()(0).getLong(0)
-    val rebuilt = Retrieval.rebuild(
-      docs0.where(col("doc_id") =!= uniq), emb0, live)
-    val gone = rebuilt.screenIngest(docs0.where(col("doc_id") === uniq))
-      .collect()
-    assert(gone.length == 1 && !gone(0).getBoolean(2),
-      "deleted content still flagged — decrements did not land")
-    val kept = rebuilt.screenIngest(
-      docs0.where(col("doc_id") =!= uniq).limit(50)).collect()
-    assert(kept.nonEmpty && kept.forall(_.getBoolean(2)),
-      "surviving content lost a position — over-decremented")
-    // the maintained frame IS the from-scratch counting filter of the
-    // surviving corpus, row for row (the snapshot-level algebra pin)
-    val parts = sidecar().split(" ")
-    val (s9, m9) = (parts(1).toInt, parts(2).toInt)
-    def tuples(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val stored = spark.read.parquet(s"$live/bloomdh")
-      .select(col("shard").cast("long").as("shard"), col("pos"),
-        col("cnt"))
-    val fresh = graft.operators.Dedup.shardedCountingBloomBits(
-      spark.read.schema(graft.serve.Retrieval.DhSchema)
-        .parquet(s"$live/dh").select(col("dh").as("content_key")),
-      s9, m9)
-    assert(tuples(stored) === tuples(fresh),
-      "O(delta)-maintained frame diverges from the from-scratch filter")
-    // retrain INHERITS the counting flavor (no silent flip back to bit)
-    Retrieval.retrain(docs0.where(col("doc_id") =!= uniq), emb0, live)
-    assert(Retrieval.ingestFilterFlavorOf(live) == "counting",
-      "retrain silently flipped the ingest-filter flavor")
-  }
+  test("adaptive cell count: build sizes cells ≈ √n and persists them") {
+    // the derivation and its clamps (mirrored bit-for-bit by
+    // adaptiveCellsSql — round of √integer can't land on .5)
+    assert(VectorOps.adaptiveCells(500) === 22)
+    assert(VectorOps.adaptiveCells(2000) === 45) // the sf0.1 build's pick
+    assert(VectorOps.adaptiveCells(4) === 16) // clamp floor
+    assert(VectorOps.adaptiveCells(10_000_000_000L) === 65536) // ceiling
 
-  test("counting ingest update: stages from the live frame + delta keys alone — the corpus is never re-read") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cntupd")
-      .toString
-    val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 200)
-    val emb0 = emb.where(col("vec_id") < 200)
-    Retrieval.build(docs0, emb0, live, countingIngestFilter = true)
-    val dh0 = spark.read.schema(graft.serve.Retrieval.DhSchema)
-      .parquet(s"$live/dh").select("doc_id", "dh")
-    val delIds = dh0.orderBy("doc_id").limit(3)
-      .collect().map(_.getLong(0)).toSeq
-    // frozen BEFORE dh goes aside (multiset: exactly these occurrences)
-    val removed = dh0.where(col("doc_id").isin(delIds: _*))
-      .select(col("dh").as("content_key")).localCheckpoint(true)
-    val added = Seq("fresh doc a", "fresh doc b").toDF("text")
-      .select(md5(col("text")).as("content_key")).localCheckpoint(true)
-    val n = dh0.count() - 3 + 2
-    // the job-count contract, made structural: with the ENTIRE dh
-    // frame unreadable, the staging must still succeed — its only
-    // inputs are the live counting frame and the delta key frames, so
-    // a small delete delta cannot re-aggregate the corpus (there is
-    // nothing to aggregate FROM); a bounded job count rules out
-    // corpus-proportional work creeping in via the frame side
-    val dhDir = new java.io.File(s"$live/dh")
-    val aside = new java.io.File(root, "dh_aside")
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    assert(dhDir.renameTo(aside))
-    spark.sparkContext.addSparkListener(l)
-    val staged =
-      try graft.serve.Retrieval.stageCountingIngestUpdate(spark, live,
-        removed, added, n)
-      finally {
-        spark.sparkContext.removeSparkListener(l)
-        assert(aside.renameTo(dhDir))
-      }
-    val upd = staged.getOrElse(
-      fail("geometry-stable O(delta) update declined"))
-    val stage = upd.stage
-    assert(jobs <= 12,
-      s"delta update ran $jobs jobs — corpus-proportional work crept in")
-    // a build-written (partitioned-layout) frame with a small delta
-    // must take the SPLICE path: the stage carries only the delta's
-    // (shard, cb) rectangle, not the frame
-    val (ts, tc) = upd.touched.getOrElse(
-      fail("small delta on the partitioned layout must stage a splice"))
-    // the staged region equals the from-scratch filter of the post-
-    // delta key multiset RESTRICTED to that region, at the pinned
-    // geometry (the install splices it over the untouched rest)
-    val sc = new String(java.nio.file.Files.readAllBytes(
-      stage.toPath.resolve("_bloomgeom")), "UTF-8").trim.split(" ")
-    assert(sc(0) == "counting")
-    def tuples(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val survivors = dh0.where(!col("doc_id").isin(delIds: _*))
-      .select(col("dh").as("content_key"))
-      .unionByName(added)
-    val freshRegion = graft.operators.Dedup.shardedCountingBloomBits(
-        survivors, sc(1).toInt, sc(2).toInt)
-      .where(col("shard").isin(ts: _*) &&
-        pmod(col("pos"), lit(64L)).isin(tc: _*))
-    assert(tuples(spark.read.parquet(stage.toString)
-        .select(col("shard").cast("long").as("shard"), col("pos"),
-          col("cnt"))) === tuples(freshRegion),
-      "staged O(delta) region diverges from the from-scratch filter")
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete(); ()
-    }
-    rmr(stage)
-    // geometry drift declines: a new key count far past the pinned
-    // power-of-two returns None, telling the caller to regenerate at
-    // fresh geometry instead of over-filling the pinned one
-    assert(graft.serve.Retrieval.stageCountingIngestUpdate(spark, live,
-      removed, added, n * 1000).isEmpty,
-      "an outgrown geometry must decline the O(delta) update")
-  }
-
-  test("counting delta rebuild: untouched (shard,cb) partitions stay byte-stable; empty delta rewrites nothing") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cntio")
-      .toString
-    val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 300)
-    val emb0 = emb.where(col("vec_id") < 300)
-    Retrieval.build(docs0, emb0, live, countingIngestFilter = true)
-    // relative path → (length, mtime) of every data file in the frame
-    def fileMap(): Map[String, (Long, Long)] = {
-      val base = java.nio.file.Paths.get(live, "bloomdh")
-      val out = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      def walk(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(walk))
-        else if (f.getName.startsWith("part-"))
-          out(base.relativize(f.toPath).toString) =
-            (f.length(), f.lastModified())
-      }
-      walk(base.toFile)
-      out.toMap
-    }
-    val before = fileMap()
-    assert(before.nonEmpty && before.keySet.forall(_.startsWith("shard=")),
-      "counting build must write the partitioned (shard, cb) layout")
-    // ---- empty delta: the idempotent steady-state rerun must rewrite
-    // NO partition at all (install is pure renames)
-    Retrieval.rebuild(docs0, emb0, live)
-    assert(fileMap() === before,
-      "an empty delta rewrote counting-frame partitions")
-    // ---- single-doc delete: only the delta's (shard, cb) rectangle
-    // may change; every other partition's files are byte-stable
-    val uniq = docs0.groupBy(md5(col("text")).as("k"))
-      .agg(count(lit(1)).as("c"), min("doc_id").as("doc_id"))
-      .where(col("c") === 1).orderBy("doc_id")
-      .select("doc_id").limit(1).collect()(0).getLong(0)
-    val sc = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(live, "bloomdh", "_bloomgeom")), "UTF-8")
-      .trim.split(" ")
-    val (s9, m9) = (sc(1).toInt, sc(2).toInt)
-    // the expected rectangle, derived from the deleted doc's key alone
-    val delKey = docs0.where(col("doc_id") === uniq)
-      .select(md5(graft.operators.TextOps.normText(col("text")))
-        .as("content_key"))
-    val pairs = graft.operators.Dedup
-      .shardedCountingBloomBits(delKey, s9, m9)
-      .select(col("shard"), pmod(col("pos"), lit(64L)).as("cb"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rectDirs = (for (s <- pairs.map(_._1); c <- pairs.map(_._2))
-      yield s"shard=$s/cb=$c").toSet
-    Retrieval.rebuild(docs0.where(col("doc_id") =!= uniq), emb0, live)
-    val after = fileMap()
-    val (touchedB, stableB) = before.partition { case (p, _) =>
-      rectDirs.exists(d => p.startsWith(d + "/")) }
-    assert(touchedB.nonEmpty, "the delete's rectangle must be nonempty")
-    assert(stableB.forall { case (p, v) => after.get(p).contains(v) },
-      "a partition outside the delta's rectangle was rewritten")
-    assert(touchedB.forall { case (p, v) => !after.get(p).contains(v) },
-      "the delta's own partitions were not replaced")
-    // and the spliced frame still IS the from-scratch filter of the
-    // survivors — splice correctness, not just stability
-    def tuples(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(tuples(spark.read.parquet(s"$live/bloomdh")
-        .select(col("shard").cast("long").as("shard"), col("pos"),
-          col("cnt"))) ===
-      tuples(graft.operators.Dedup.shardedCountingBloomBits(
-        spark.read.schema(graft.serve.Retrieval.DhSchema)
-          .parquet(s"$live/dh").select(col("dh").as("content_key")),
-        s9, m9)),
-      "spliced frame diverges from the from-scratch filter")
-  }
-
-  test("publish-from-chain: an exact-key crawl's folded counting state adopts ≡ build-from-corpus; drift refuses") {
-    import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft-adopt")
-      .toString
-    // ≤ 90 docs keeps adaptiveBloomGeometry stably at (1, 1024) for
-    // any live-count outcome of the crawl, so the chain's fixed
-    // geometry IS the corpus's adaptive point
-    val docs0 = docs.where(col("doc_id") < 90)
-    val mb = 1024
-    val chain = new graft.streaming.StreamingCountingBloom(
-      s"$root/art", s"$root/chain-out", mbits = mb, exactKeys = true)
-    def ins(df: DataFrame) = df.withColumn("op", lit("insert"))
-    def del(df: DataFrame) = df.withColumn("op", lit("delete"))
-    chain.screenBatch(ins(docs0.where(col("doc_id") % 3 =!= 2)), 0)
-    // batch 1: the rest arrives; two batch-0 unique-text docs retire
-    val b0 = docs0.where(col("doc_id") % 3 =!= 2)
-    val uniq = b0.groupBy(md5(col("text")).as("k"))
-      .agg(count(lit(1)).as("c"), min("doc_id").as("doc_id"))
-      .where(col("c") === 1).orderBy("doc_id")
-      .select("doc_id").limit(2).collect().map(_.getLong(0)).toSeq
-    chain.screenBatch(
-      ins(docs0.where(col("doc_id") % 3 === 2))
-        .unionByName(del(b0.where(col("doc_id").isin(uniq: _*)))), 1)
-    // the published corpus IS the crawl's live set: accepted inserts
-    // whose key was not later deleted
-    val v = chain.verdicts(spark).get
-    val liveIds = v.where(col("op") === "insert" && col("applied"))
-      .join(v.where(col("op") === "delete" && col("applied"))
-        .select("content_key"), Seq("content_key"), "left_anti")
-      .select("doc_id")
-    val corpusDocs = docs0.join(liveIds, Seq("doc_id")).localCheckpoint(true)
-    val embC = emb.join(liveIds.select(col("doc_id").as("vec_id")),
-      Seq("vec_id")).localCheckpoint(true)
-    assert(Dedup.adaptiveBloomGeometry(corpusDocs.count()) === ((1, mb)))
-    val state = chain.countingState(spark).get.localCheckpoint(true)
-    // codebooks pinned from a full-fixture base: the crawl's live set
-    // may drop low vec_ids the PQ seed wants, and training is not what
-    // this spec exercises
-    val base = Retrieval.build(docs0,
-      emb.where(col("vec_id") < 90), s"$root/base")
-    val books = Some((base.cents, base.books))
-    val adoptedH = Retrieval.build(corpusDocs, embC, s"$root/adopted",
-      codebooks = books, countingIngestFilter = true,
-      adoptCountingState =
-        Some(Retrieval.AdoptedCountingState(state, mb)))
-    val builtH = Retrieval.build(corpusDocs, embC, s"$root/built",
-      codebooks = books, countingIngestFilter = true)
-    // the adopted filter IS the from-corpus filter, row for row — the
-    // crawl's state becomes the published index's filter with no
-    // corpus re-aggregation
-    def tuples(dir: String) = spark.read.parquet(s"$dir/bloomdh")
-      .select(col("shard").cast("long").as("shard"), col("pos"),
-        col("cnt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(tuples(s"$root/adopted") === tuples(s"$root/built"),
-      "adopted chain state diverges from the from-corpus filter")
-    // and serves verdict-identically (re-presented + salted probe)
-    val probe = docs0.select("doc_id", "text").unionByName(
-      docs0.select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" fresh "),
-          col("doc_id").cast("string")).as("text")))
-    def verd(h: Retrieval) = h.screenIngest(probe).collect()
-      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    assert(verd(adoptedH) === verd(builtH))
-    // wrong chain geometry refuses (the dh fallback would answer
-    // differently); a corpus that drifted from the chain's live set
-    // refuses on the Σcnt = khash·live identity
-    assertThrows[IllegalArgumentException](
-      Retrieval.build(corpusDocs, embC, s"$root/badgeom",
-        codebooks = books, countingIngestFilter = true,
-        adoptCountingState =
-          Some(Retrieval.AdoptedCountingState(state, mb * 2))))
-    val firstLive = liveIds.orderBy("doc_id").limit(1)
-      .collect()(0).getLong(0)
-    assertThrows[IllegalArgumentException](
-      Retrieval.build(corpusDocs.where(col("doc_id") =!= firstLive),
-        embC, s"$root/drift", codebooks = books,
-        countingIngestFilter = true,
-        adoptCountingState =
-          Some(Retrieval.AdoptedCountingState(state, mb))))
-    // a SHARDED chain's state refuses: relabeling its (shard, pos)
-    // rows as shard=0 would union all shards' position spaces —
-    // duplicate rows the Σcnt audit cannot see (the sum is
-    // shard-invariant)
-    val shardedState = state.select(
-      (col("pos") % 4).as("shard"), col("pos"), col("cnt"))
-    val eSh = intercept[IllegalArgumentException](
-      Retrieval.build(corpusDocs, embC, s"$root/shdrift",
-        codebooks = books, countingIngestFilter = true,
-        adoptCountingState =
-          Some(Retrieval.AdoptedCountingState(shardedState, mb))))
-    assert(eSh.getMessage.contains("shard column"))
-  }
-
-  test("incremental rebuild: same serve as a fixed-codebook full build, delta-only writes") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rebuild").toString
-    val live = s"$root/snap"
-    // initial corpus: ids < 420
-    val docs0 = docs.where(col("doc_id") < 420)
-    val emb0 = emb.where(col("vec_id") < 420)
-    val prior = Retrieval.build(docs0, emb0, live)
-
-    // the refreshed corpus — a SMALL delta (so some of the 16 cells are
-    // provably untouched): ids < 4 re-crawled (new text) AND
-    // re-embedded, [4,8) text-ONLY edits, [8,12) vector-ONLY
-    // re-embeds (the two one-sided deltas pin that the chunk index
-    // merges on the UNION of the fingerprint diffs — a text edit moves
-    // chunk vectors without touching vh, a re-embed moves them without
-    // touching dh), [416,420) dropped, [420,424) added
-    def refresh(d: org.apache.spark.sql.DataFrame, id: String) =
-      d.where(col(id) < 424 && !(col(id) >= 416 && col(id) < 420))
-    val docs1 = refresh(docs, "doc_id")
-      .withColumn("text", when(col("doc_id") < 4,
-        concat(col("text"), lit(" refreshed crawl")))
-        .when(col("doc_id") >= 4 && col("doc_id") < 8,
-          concat(col("text"), lit(" text only edit")))
-        .otherwise(col("text")))
-    val emb1 = refresh(emb, "vec_id")
-      .withColumn("embedding", when(col("vec_id") < 4 ||
-          (col("vec_id") >= 8 && col("vec_id") < 12),
-        reverse(col("embedding"))).otherwise(col("embedding")))
-
-    def cellDirsOf(frame: String) = new java.io.File(s"$live/$frame")
-      .listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).toSeq
-    def cellDirs = cellDirsOf("index")
-    val mtimeBefore = cellDirs.map(d => d.getName -> d.lastModified()).toMap
-    val cMtimeBefore = cellDirsOf("cindex")
-      .map(d => d.getName -> d.lastModified()).toMap
-    def pbDirs(frame: String) = new java.io.File(s"$live/$frame").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pb=")).toSeq
-    val pbBefore = Seq("emb", "vh", "tf", "dl", "dh", "ctf", "cdl", "cemb")
-      .map(f => f -> pbDirs(f).map(d => d.getName -> d.lastModified()).toMap)
-      .toMap
-
-    val rebuilt = Retrieval.rebuild(docs1, emb1, live)
-    // codebooks untouched: rebuild NEVER retrains
-    assert(rebuilt.cents === prior.cents && rebuilt.books === prior.books,
-      "rebuild retrained the codebooks")
-
-    // serve ≡ a from-scratch build pinned to the SAME codebooks
-    val want = Retrieval.build(docs1, emb1, s"$root/full",
-      codebooks = Some((prior.cents, prior.books)))
-    val queries = Seq(0L -> Seq("spark", "join"), 1L -> Seq("vector", "table"))
-    for (p <- Seq[HybridOps.Fusion](HybridOps.Rrf, HybridOps.LexicalOnly,
-        HybridOps.DenseOnly)) {
-      assert(rows(rebuilt.search(queries, 5, p)) ===
-        rows(want.search(queries, 5, p)),
-        s"incremental rebuild diverges from the full fixed-codebook build under $p")
-      // the chunk-level serve rides the same merged frames
-      assert(rows(rebuilt.searchChunks(queries, 5, p)) ===
-        rows(want.searchChunks(queries, 5, p)),
-        s"rebuilt chunk serve diverges from the full build under $p")
-    }
-    // refine serve over the REBUILT snapshot: the merged cemb frame
-    // (text-only AND vector-only deltas both move chunk vectors)
-    // reranks identically to the full build's
-    assert(rows(rebuilt.searchChunks(queries, 5, HybridOps.Rrf, 2,
-        Some(8))) ===
-      rows(want.searchChunks(queries, 5, HybridOps.Rrf, 2, Some(8))),
-      "rebuilt refine chunk serve diverges from the full build")
-
-    // delta-only writes: cells holding only untouched vectors must not
-    // have been rewritten. Touched = old cells of changed/deleted ids
-    // plus new cells of changed/added ids, both under the PRIOR books.
-    def cellsOf(e: org.apache.spark.sql.DataFrame) = graft.operators.VectorOps
-      .ivfPqIndex(e, prior.cents, prior.books, residual = true)
-      .select("cell").distinct().collect().map("cell=" + _.getLong(0)).toSet
-    def vecTouched(id: org.apache.spark.sql.Column) =
-      id < 4 || (id >= 8 && id < 12)
-    val touchedCells =
-      cellsOf(emb0.where(vecTouched(col("vec_id")) || col("vec_id") >= 416)) ++
-      cellsOf(emb1.where(vecTouched(col("vec_id")) || col("vec_id") >= 420))
-    val untouched = mtimeBefore.keySet -- touchedCells
-    assert(untouched.nonEmpty,
-      "every cell touched; the delta-only assertion is vacuous")
-    for (d <- cellDirs if untouched.contains(d.getName))
-      assert(d.lastModified() == mtimeBefore(d.getName),
-        s"${d.getName} was rewritten by a delta that never touched it")
-
-    // chunk-index cells: touched docs are the UNION of the text and
-    // vector deltas (ids < 12, [416,424)); chunk cells outside their
-    // old+new assignments must not move
-    def cCellsOf(d: org.apache.spark.sql.DataFrame,
-        e: org.apache.spark.sql.DataFrame) = graft.operators.VectorOps
-      .chunkIvfPqIndex(graft.operators.VectorOps.chunkEmbeddings(d, e),
-        prior.cents, prior.books)
-      .select("cell").distinct().collect().map("cell=" + _.getLong(0)).toSet
-    val touchedCCells =
-      cCellsOf(docs0.where(col("doc_id") < 12 || col("doc_id") >= 416),
-        emb0.where(col("vec_id") < 12 || col("vec_id") >= 416)) ++
-      cCellsOf(docs1.where(col("doc_id") < 12 || col("doc_id") >= 420),
-        emb1.where(col("vec_id") < 12 || col("vec_id") >= 420))
-    val cUntouched = cMtimeBefore.keySet -- touchedCCells
-    assert(cUntouched.nonEmpty,
-      "every chunk cell touched; the cindex delta assertion is vacuous")
-    for (d <- cellDirsOf("cindex") if cUntouched.contains(d.getName))
-      assert(d.lastModified() == cMtimeBefore(d.getName),
-        s"cindex/${d.getName} was rewritten by a delta that never touched it")
-
-    // same for the id-bucketed frames: buckets holding no touched id
-    // (touched = ids < 12, [416,424) → pb = id mod 32) must not move
-    val touchedPb = (0L until 12L).map(_ % 32) ++ (416L until 424L).map(_ % 32)
-    for (f <- Seq("emb", "vh", "tf", "dl", "dh", "ctf", "cdl", "cemb");
-        d <- pbDirs(f)
-        if !touchedPb.map(p => s"pb=$p").contains(d.getName)) {
-      assert(pbBefore(f).contains(d.getName), s"$f/${d.getName} appeared")
-      assert(d.lastModified() == pbBefore(f)(d.getName),
-        s"$f/${d.getName} was rewritten by a delta that never touched it")
-    }
-
-    // idempotence: re-running the same rebuild is a no-op serve-wise
-    val again = Retrieval.rebuild(docs1, emb1, live)
-    assert(rows(again.search(queries, 5)) === rows(want.search(queries, 5)))
-  }
-
-  test("codebook retrain migrates a live snapshot: fresh books, recall recovers, next rebuild incremental") {
-    val root = java.nio.file.Files.createTempDirectory("graft-retrain").toString
-    val live = s"$root/snap"
-    val docs0 = docs.where(col("doc_id") < 420)
-    val emb0 = emb.where(col("vec_id") < 420)
-    val prior = Retrieval.build(docs0, emb0, live)
-
-    // drift the distribution out from under the books: EVERY vector
-    // reversed (a layout the old coarse cells and residual books never
-    // saw), plus additions — the months-of-drift scenario compressed
-    val docs1 = docs.where(col("doc_id") < 450)
-    val emb1 = emb.where(col("vec_id") < 450)
-      .withColumn("embedding", reverse(col("embedding")))
-
-    // the steady-state path holds books fixed — consistent, but now
-    // mis-trained relative to the corpus it indexes
-    val stale = Retrieval.rebuild(docs1, emb1, live)
-    assert(stale.cents === prior.cents && stale.books === prior.books)
-
-    val qids = Seq(0L, 1L, 2L)
-    def recallOf(h: Retrieval): Long = {
-      val exact = VectorOps.cosineTopK(emb1, qids, 5)
-        .select("query_id", "vec_id")
-      h.denseTopK(qids, 5).select("query_id", "vec_id")
-        .join(exact, Seq("query_id", "vec_id"), "left_semi").count()
-    }
-    val staleHits = recallOf(stale)
-
-    // the migration: fresh books on the current corpus, full re-encode,
-    // atomic swap over the live dir
-    val retrained = Retrieval.retrain(docs1, emb1, live)
-    assert(retrained.cents !== prior.cents,
-      "retrain kept the stale coarse codebook")
-
-    // retrained live dir ≡ a snapshot freshly trained on this corpus
-    val fresh = Retrieval.build(docs1, emb1, s"$root/fresh")
-    assert(retrained.cents === fresh.cents && retrained.books === fresh.books)
-    val queries = Seq(0L -> Seq("spark", "join"), 1L -> Seq("vector", "table"))
-    for (p <- Seq[HybridOps.Fusion](HybridOps.Rrf, HybridOps.LexicalOnly,
-        HybridOps.DenseOnly))
-      assert(rows(retrained.search(queries, 5, p)) ===
-        rows(fresh.search(queries, 5, p)),
-        s"retrained live dir diverges from a fresh-trained snapshot under $p")
-
-    // recall recovered: books trained on the drifted corpus find the
-    // true neighbors the stale books lost
-    val retrainedHits = recallOf(retrained)
-    assert(retrainedHits > staleHits,
-      s"retrain did not improve recall: stale=$staleHits retrained=$retrainedHits")
-
-    // the retrained publish carries fresh dh/vh: the NEXT rebuild is
-    // incremental again (untouched buckets not rewritten, serve exact)
-    def pbDirs(frame: String) = new java.io.File(s"$live/$frame").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pb=")).toSeq
-    val pbBefore = Seq("emb", "vh", "tf", "dl", "dh", "ctf", "cdl", "cemb")
-      .map(f => f -> pbDirs(f).map(d => d.getName -> d.lastModified()).toMap)
-      .toMap
-    val docs2 = docs1.withColumn("text", when(col("doc_id") < 2,
-      concat(col("text"), lit(" post-retrain crawl"))).otherwise(col("text")))
-    val emb2 = emb1.withColumn("embedding", when(col("vec_id") < 2,
-      reverse(col("embedding"))).otherwise(col("embedding")))
-    val after = Retrieval.rebuild(docs2, emb2, live)
-    assert(after.cents === retrained.cents && after.books === retrained.books,
-      "post-retrain rebuild retrained again")
-    val touchedPb = (0L until 2L).map(p => s"pb=$p").toSet
-    for (f <- Seq("emb", "vh", "tf", "dl", "dh", "ctf", "cdl", "cemb");
-        d <- pbDirs(f) if !touchedPb.contains(d.getName))
-      assert(d.lastModified() == pbBefore(f)(d.getName),
-        s"$f/${d.getName} rewritten by a post-retrain delta that never touched it")
-    val wantAfter = Retrieval.build(docs2, emb2, s"$root/after",
-      codebooks = Some((retrained.cents, retrained.books)))
-    assert(rows(after.search(queries, 5)) === rows(wantAfter.search(queries, 5)))
-
-    // retrain is a migration: refuses a dir that was never published
-    val ex = intercept[IllegalArgumentException] {
-      Retrieval.retrain(docs1, emb1, s"$root/never-built")
-    }
-    assert(ex.getMessage.contains("not a live retrieval snapshot"))
+    // a build over the 500-vector fixture trains √500 ≈ 22 cells and
+    // the count round-trips through the persisted codebook
+    val (dir, h) = snap
+    assert(h.cents.size === 22)
+    assert(Retrieval.load(spark, dir).cents.size === 22)
   }
 }

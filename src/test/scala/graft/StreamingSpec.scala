@@ -635,106 +635,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       s"wrong failure: ${ex.getMessage}")
   }
 
-  test("streaming BPE chunk index: streamed v6 slices serve equal to the batch snapshot rebuild over the same delta") {
-    import graft.operators.{HybridOps, TextOps, VectorOps}
-    import graft.serve.Retrieval
-    val fn = org.apache.spark.sql.functions
-    val docsAll = Tables.documents(spark, sf).select("doc_id", "text")
-    val embAll = Tables.embeddings(spark, sf).select("vec_id", "embedding")
-    val joined = docsAll
-      .join(embAll, col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("text"), col("embedding"))
-
-    // batch snapshot over corpus v1 — ITS trained rules/cents/books are
-    // the fixed constants the stream must run under (the codebook
-    // convention at all three codebooks)
-    val v1 = joined.where(col("doc_id") < 200)
-    val snapDir = tmp("sbpe-snap").toString + "/snap"
-    val snap = Retrieval.build(
-      v1.select("doc_id", "text"),
-      v1.select(col("doc_id").as("vec_id"), col("embedding")), snapDir)
-    val rules = snap.bpeRules
-    assert(rules.nonEmpty, "fixture learned no merge rules; test vacuous")
-
-    // the shrink case must be NON-vacuous: some re-crawled doc had
-    // more than one BPE window before the re-crawl
-    assert(TextOps.bpeChunkSlices(
-        docsAll.where(col("doc_id") < 30), rules)
-      .where(col("chunk_id") > 0).count() > 0,
-      "no multi-window doc among ids < 30; the shrink case is vacuous")
-
-    // stream the same corpus + delta: v1, then new docs 200-400 plus a
-    // shrinking/flipping re-crawl of ids < 30, then tombstones 100-150
-    val artDir = tmp("sbpe-art").toString
-    val sb = new graft.streaming.StreamingBpeChunkIndex(
-      artDir, rules, snap.cents, snap.books)
-    val recrawl = joined.where(col("doc_id") < 30)
-      .withColumn("text", lit("tiny recrawl"))
-      .withColumn("embedding", fn.transform(col("embedding"), x => -x))
-    sb.indexBatch(v1.withColumn("is_deleted", lit(false)), 0)
-    sb.indexBatch(joined.where(col("doc_id") >= 200 && col("doc_id") < 400)
-      .unionByName(recrawl).withColumn("is_deleted", lit(false)), 1)
-    sb.indexBatch(joined.where(col("doc_id") >= 100 && col("doc_id") < 150)
-      .withColumn("is_deleted", lit(true)), 2)
-
-    // batch reference: rebuild() of the SAME snapshot over the same
-    // delta (incremental merge under the stored rules + books)
-    val live = recrawl
-      .unionByName(joined.where(col("doc_id") >= 30 && col("doc_id") < 100))
-      .unionByName(joined.where(col("doc_id") >= 150 && col("doc_id") < 400))
-    val reb = Retrieval.rebuild(live.select("doc_id", "text"),
-      live.select(col("doc_id").as("vec_id"), col("embedding")), snapDir)
-
-    val queries = Seq(0L -> Seq("spark", "join"), 60L -> Seq("vector", "table"))
-    def rows(df: DataFrame) =
-      df.orderBy("query_id", "rn").collect().map(_.toSeq).toSeq
-    // every serve shape the snapshot offers at the BPE meter
-    for ((policy, refine) <- Seq(
-        (HybridOps.LexicalOnly, None), (HybridOps.DenseOnly, None),
-        (HybridOps.Rrf, None), (HybridOps.Rrf, Some(8)))) {
-      val got = rows(sb.searchBpeChunks(spark, queries, 5, policy,
-        nprobe = 2, refine = refine).get)
-      val want = rows(reb.searchBpeChunks(queries, 5, policy,
-        nprobe = 2, refine = refine))
-      assert(want.nonEmpty, s"batch reference empty for $policy; vacuous")
-      assert(got === want,
-        s"streamed BPE serve diverges from the snapshot rebuild: $policy refine=$refine")
-    }
-
-    // tombstoned and shrunk docs are really gone from the frame surface
-    val (bctfA, _, bcidxA, _) = sb.artifact(spark).get
-    assert(bctfA.where(col("doc_id") >= 100 && col("doc_id") < 150)
-      .count() == 0, "tombstoned doc's subword postings served")
-    assert(bcidxA
-      .where(expr(s"vec_id DIV ${VectorOps.ChunkStride}") < 30 &&
-        pmod(col("vec_id"), lit(VectorOps.ChunkStride)) > 0)
-      .count() == 0, "stale tail window of a shrunk doc survived")
-
-    // replay safety and compaction both preserve the serve
-    val want2 = rows(reb.searchBpeChunks(queries, 5, refine = Some(8)))
-    sb.indexBatch(joined.where(col("doc_id") >= 200 && col("doc_id") < 400)
-      .unionByName(recrawl).withColumn("is_deleted", lit(false)), 1)
-    assert(rows(sb.searchBpeChunks(spark, queries, 5,
-      refine = Some(8)).get) === want2,
-      "streamed BPE serve diverged after batch replay")
-    sb.compact(spark)
-    assert(rows(sb.searchBpeChunks(spark, queries, 5,
-      refine = Some(8)).get) === want2,
-      "compaction changed the streamed BPE serve")
-
-    // the pinned-constants guard: reopening under the SAME constants
-    // is fine; different rules (or codebooks) refuse at construction —
-    // generation mixing across slices must never be silent
-    new graft.streaming.StreamingBpeChunkIndex(
-      artDir, rules, snap.cents, snap.books) // same: fine
-    val ex = intercept[IllegalArgumentException] {
-      new graft.streaming.StreamingBpeChunkIndex(
-        artDir, rules.take(rules.size - 1), snap.cents, snap.books)
-    }
-    assert(ex.getMessage.contains("different BPE"),
-      s"wrong failure: ${ex.getMessage}")
-  }
-
   test("compaction grace: a reader resolved before the swap still reads; a later sweep reclaims") {
     import graft.operators.TextOps
     val docsAll = Tables.documents(spark, sf).select("doc_id", "text")
@@ -917,70 +817,5 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(exC.getMessage.contains("different coarse codebook"),
       s"wrong failure: ${exC.getMessage}")
     new graft.streaming.StreamingVectorIndex(root, books) // ADC-only: fine
-  }
-
-  test("pinned-constants guard hardening: section aliases refuse, corruption is named, first pin is atomic and race-safe") {
-    val cents1 = Seq(Seq(1.0))
-    val books1 = Seq(Seq(Seq(2.0)))
-    def bpe(root: String, rules: Seq[(String, String)],
-        cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]]) =
-      new graft.streaming.StreamingBpeChunkIndex(root, rules, cents, books)
-
-    // crafted section-boundary alias: the same flat double stream with
-    // one value moved across the cents/books boundary — the unlabeled,
-    // unshaped digest would have accepted this reopen silently
-    val rootA = tmp("pin-alias").toString
-    bpe(rootA, Nil, Seq(Seq(1.0, 2.0)), Seq(Seq(Seq(3.0))))
-    val exA = intercept[IllegalArgumentException] {
-      bpe(rootA, Nil, Seq(Seq(1.0)), Seq(Seq(Seq(2.0, 3.0))))
-    }
-    assert(exA.getMessage.contains("different BPE"),
-      s"wrong failure: ${exA.getMessage}")
-
-    // a rule string containing the former NUL part separator must not
-    // alias a differently-split pair (length-prefixed parts)
-    val rootB = tmp("pin-rulesep").toString
-    bpe(rootB, Seq(("a b", "c")), cents1, books1)
-    val exB = intercept[IllegalArgumentException] {
-      bpe(rootB, Seq(("a", "b c")), cents1, books1)
-    }
-    assert(exB.getMessage.contains("different BPE"),
-      s"wrong failure: ${exB.getMessage}")
-
-    // a truncated stored digest (crashed pre-guard writer, manual edit)
-    // reports CORRUPTION with its own message — not the misleading
-    // "written under different constants"
-    val rootC = tmp("pin-corrupt").toString
-    bpe(rootC, Nil, cents1, books1)
-    Files.writeString(
-      java.nio.file.Paths.get(rootC, "CONSTANTS"), "deadbeef")
-    val exC = intercept[IllegalArgumentException] {
-      bpe(rootC, Nil, cents1, books1)
-    }
-    assert(exC.getMessage.contains("corrupt"),
-      s"wrong failure: ${exC.getMessage}")
-
-    // two concurrent FIRST opens under different constants: the link
-    // commit is first-wins-atomic, so exactly one handle proceeds and
-    // the loser refuses — never both (that would mix generations), and
-    // the stored pin is always a complete digest
-    (1 to 8).foreach { i =>
-      val d = tmp(s"pin-race-$i").toString
-      val barrier = new java.util.concurrent.CyclicBarrier(2)
-      val errs = new java.util.concurrent.atomic.AtomicInteger
-      val ts = Seq(Seq(Seq(1.0)), Seq(Seq(2.0))).map { c =>
-        new Thread(() => {
-          barrier.await()
-          try { bpe(d, Nil, c, books1); () }
-          catch { case _: IllegalArgumentException =>
-            errs.incrementAndGet(); () }
-        })
-      }
-      ts.foreach(_.start()); ts.foreach(_.join())
-      assert(errs.get() == 1,
-        s"race trial $i: ${errs.get()} handles refused (want exactly 1)")
-      assert(Files.readString(java.nio.file.Paths.get(d, "CONSTANTS"))
-        .trim.matches("[0-9a-f]{64}"), s"race trial $i: partial pin")
-    }
   }
 }
