@@ -178,10 +178,15 @@ object IndexerOps {
     mergeLatest(current, latest)
   }
 
-  /** Collapse a CDC batch to the latest action per id (max updated_at). */
-  private def latestPerId(batch: DataFrame): DataFrame =
-    batch.groupBy(Id).agg(
-        max_by(struct(col(Idx), col(Document), col(IsDeleted)), col(UpdatedAt)).as("s"))
+  /** Collapse a CDC batch to the latest action per id, under the total
+    * order `(updated_at, is_deleted, document, idx)`: ties resolve the
+    * same way under any row order or partitioning. An update and a delete
+    * sharing one commit timestamp (one Postgres transaction's `now()`)
+    * leave the id deleted; two updates at one instant keep the greater
+    * document. Rows with a NULL `updated_at` never win. */
+  def latestPerId(batch: DataFrame): DataFrame =
+    batch.groupBy(Id).agg(max(when(col(UpdatedAt).isNotNull,
+        struct(col(UpdatedAt), col(IsDeleted), col(Document), col(Idx)))).as("s"))
       .select(col("s.idx"), col(Id), col("s.document"), col("s.is_deleted"))
 
   private def mergeLatest(current: DataFrame, latest: DataFrame): DataFrame =

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.IndexerOps
 import graft.sources.Tables
 import graft.sources.Tables._
-import graft.sync.{IndexStore, WatermarkStore}
+import graft.sync.{InPlaceMerge, IndexStore, WatermarkStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 /** @param bucketed when Some(n): micro-batches merge IN PLACE into
   *   id-hash-bucketed physical indexes (delta-proportional cost — see
-  *   [[graft.sync.InPlaceMerge]]); indexes must be bootstrapped via
+  *   [[InPlaceMerge]]); indexes must be bootstrapped via
   *   `SyncPipeline.fullSyncBucketed`. When None (default): each batch
   *   publishes blue/green (atomic, whole-index rewrite).
   * @param validity when set: per-record error tolerance, the same K1
@@ -121,13 +121,19 @@ class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
         scala.collection.concurrent.TrieMap.empty): Unit = {
     batch.persist()
     try {
-      // one job yields both the present-index set and each index's max
-      // processed event time (+1 µs: the inclusive `>=` rescan skips the
-      // boundary row). The fixed-width format makes string max == time max.
+      // one job yields the present-index set, each index's max processed
+      // event time (+1 µs: the inclusive `>=` rescan skips the boundary
+      // row; the fixed-width format makes string max == time max) and, in
+      // bucketed mode, the buckets each index's in-scope rows touch
+      val aliases = store.aliases()
+      val touched = bucketed.fold(typedLit(Seq.empty[Long]))(
+        InPlaceMerge.affectedBuckets(store, aliases,
+          col(UpdatedAt) >= element_at(typedLit(wms), col(Idx)).cast("timestamp"), _))
       val stats = batch.groupBy(Idx)
         .agg(date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
-          "yyyy-MM-dd HH:mm:ss.SSSSSS").as("hwm"))
+          "yyyy-MM-dd HH:mm:ss.SSSSSS").as("hwm"), touched.as("buckets"))
         .collect()
+      val affected = stats.map(r => r.getString(0) -> r.getSeq[Long](2)).toMap
       stats.foreach { r =>
         if (!r.isNullAt(1)) {
           val idx = r.getString(0)
@@ -159,10 +165,10 @@ class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
         }
         bucketed match {
           case Some(n) =>
-            val physical = store.aliases().getOrElse(idx,
+            val physical = aliases.getOrElse(idx,
               sys.error(s"bucketed streaming needs a bootstrapped index for $idx"))
             // unobserved: Observation metrics never fire inside foreachBatch
-            graft.sync.InPlaceMerge.applyUnobserved(store, physical, b, n)
+            InPlaceMerge.applyUnobserved(store, physical, b, n, affected(idx))
           case None =>
             val cur = store.read(idx).getOrElse(
               IndexerOps.emptyEnvelope(batch.sparkSession))

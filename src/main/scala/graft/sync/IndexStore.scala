@@ -156,8 +156,8 @@ class IndexStore(val spark: SparkSession, val root: String,
 
   /** Deterministic id-hash bucket column for the bucketed layout. */
   def bucketExpr(idCol: String, buckets: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    pmod(xxhash64(col(idCol)), lit(buckets.toLong))
+    import org.apache.spark.sql.functions.{col, lit}
+    IndexStore.bucketOf(col(idCol), lit(buckets.toLong))
   }
 
   /** Write a physical index partitioned by id-hash bucket. The bucketed
@@ -505,4 +505,13 @@ object IndexStore {
     * enough to protect another process's in-flight publish, short
     * enough that a crashed run's stage reclaims on the next boot. */
   val DefaultStaleStageGraceMs: Long = 60L * 60L * 1000L
+
+  /** The id-hash bucket of `id` under `buckets` buckets. `buckets` is a
+    * column, so one aggregate can place rows of indexes that were
+    * written with different bucket counts. */
+  def bucketOf(id: org.apache.spark.sql.Column,
+      buckets: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{pmod, xxhash64}
+    pmod(xxhash64(id), buckets)
+  }
 }

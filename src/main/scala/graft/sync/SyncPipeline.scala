@@ -73,12 +73,63 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
   def planOrder(env: DataFrame, indexes: Seq[String]): Seq[(String, Long, Option[String])] =
     env.where(col(Idx).isin(indexes: _*))
       .groupBy(Idx)
-      .agg(count(col(Id)).as("doc_count"),
-        date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
-          "yyyy-MM-dd HH:mm:ss.SSSSSS").as("hwm"))
+      .agg(count(col(Id)).as("doc_count"), hwmOf.as("hwm"))
       .orderBy(asc("doc_count"), asc(Idx))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSeq
+
+  /** An index's high-water mark: max `updated_at` + 1 µs (the inclusive
+    * `>=` rescan then skips the boundary row), fixed-width so string
+    * order is time order. */
+  private def hwmOf: org.apache.spark.sql.Column =
+    date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
+      "yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  /** One index's share of a CDC round plan: its row count (for
+    * smallest-first order), its high-water mark, the watermark it syncs
+    * from, the number of its rows in `[wm, hwm)`, and the id-hash buckets
+    * those rows touch (bucketed rounds only). */
+  private case class IndexPlan(index: String, docs: Long, hwm: Option[String],
+      wm: String, changed: Long, buckets: Seq[Long])
+
+  /** Plans a CDC round in ONE grouped aggregate over the source,
+    * collected to the driver: per index, its row count, high-water mark,
+    * changed-row count and (with `buckets` set) affected buckets. The
+    * per-index watermarks and bucket counts are driver-side lookups (the
+    * watermark files, the alias manifest, the bucket metadata) passed in
+    * as map literals, and the smallest-first order is a driver-side sort
+    * by `(count, idx)` — so planning costs one aggregate however many
+    * indexes the source holds. Indexes absent from the source are not
+    * planned. */
+  private def planRound(env: DataFrame, requested: Option[Seq[String]],
+      buckets: Option[Int]): Seq[IndexPlan] = {
+    // an index with no watermark of its own syncs from the global one
+    val wms = watermarks.indexes().map(i => i -> watermarks.loadOrEpoch(i)).toMap
+    val changed = col(UpdatedAt) >= coalesce(element_at(typedLit(wms), col(Idx)),
+      lit(watermarks.loadOrEpoch())).cast("timestamp")
+    val touched = buckets.fold(typedLit(Seq.empty[Long]))(
+      InPlaceMerge.affectedBuckets(store, store.aliases(), changed, _))
+    env.where(requested.fold(col(Idx).isNotNull)(xs => col(Idx).isin(xs.map(_.toLowerCase): _*)))
+      .groupBy(Idx)
+      .agg(count(col(Id)), hwmOf, count_if(changed), touched)
+      .collect()
+      .map(r => IndexPlan(r.getString(0), r.getLong(1), Option(r.getString(2)),
+        watermarks.loadOrEpoch(r.getString(0)), r.getLong(3),
+        r.getSeq[Long](4).sorted))
+      .toSeq.sortBy(p => (p.docs, p.index))
+  }
+
+  /** The rows a planned index merges: its changes in `[wm, hwm)`. The
+    * upper bound keeps the merge to the rows the plan counted (and whose
+    * buckets it collected): a row landing after the plan waits for the
+    * next round, whose watermark is this round's `hwm`. */
+  private def roundBatch(env: DataFrame, p: IndexPlan): DataFrame = {
+    val scan = IndexerOps.incrementalScan(env, Seq(p.index), p.wm)
+    p.hwm.fold(scan)(h => scan.where(col(UpdatedAt) < lit(h).cast("timestamp")))
+  }
+
+  private def skipped(idx: String): IndexSyncReport =
+    IndexSyncReport(idx, store.aliases().getOrElse(idx, ""), "skipped", 0L, 0L)
 
   /** T10/T6 — every store write runs under the retry policy; on adaptive
     * mode, repeated failure shrinks the write chunk (maxRecordsPerFile)
@@ -298,7 +349,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
           IndexSyncReport(idx, staged, "full",
             upserts = store.count(idx), deletes = 0L, rejects = rejects)
         }
-        val reports = runSmallestFirstLargestParallel(order.map(_._1), publish)
+        val reports = runSmallestFirstLargestParallel(order.map(_._1))(publish)
         store.dropStage(stage) // promotes moved every slice out; drop husk
         reports
       } catch {
@@ -313,7 +364,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
           throw e
       }
     store.cleanupOrphans() // K4, scheduled on the full-sync branch (:652-656)
-    saveWatermarks(order)
+    saveWatermarks(order.map(o => o._1 -> o._3))
     done
   }
 
@@ -321,8 +372,8 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     * running concurrently in Spark's fair-scheduler pool — concurrent
     * jobs in one session are the Spark analog of the reference's
     * tag-based parallelism for its two biggest indexes. */
-  private def runSmallestFirstLargestParallel(
-      orderAsc: Seq[String], job: String => IndexSyncReport): Seq[IndexSyncReport] = {
+  private def runSmallestFirstLargestParallel[A](orderAsc: Seq[A])(
+      job: A => IndexSyncReport): Seq[IndexSyncReport] = {
     val n = orderAsc.length
     val cut = math.max(0, n - math.max(0, parallelLargest))
     val (serial, parallel) = orderAsc.splitAt(cut)
@@ -354,20 +405,21 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
   }
 
   /** Incremental CDC sync (T1/T3; reference flows/main_flow.py:316-333,
-    * 366-395,675-707): per index — drift check (T11) may force a full
-    * reindex; zero-change skip (P11); otherwise merge the batch into the
-    * live state and publish blue/green (atomic even for increments —
-    * stronger than the reference's in-place bulk, same observable
-    * result). Watermarks advance per index, only for indexes actually
-    * synced. */
+    * 366-395,675-707), planned by the same one-aggregate round plan as
+    * [[incrementalSyncInPlace]]: per index — drift check (T11) may force
+    * a full reindex; zero-change skip (P11) from the plan's changed
+    * count; otherwise merge the `[wm, hwm)` batch into the live state and
+    * publish blue/green (atomic even for increments — stronger than the
+    * reference's in-place bulk, same observable result). The drift check
+    * runs for unchanged indexes too: an out-of-band rewrite that moves no
+    * watermark is exactly what it exists to catch. Watermarks advance
+    * per index, to each planned index's own hwm. */
   def incrementalSync(env: DataFrame, indexes: Option[Seq[String]] = None,
       timestamp: String): Seq[IndexSyncReport] = {
-    val selected = selectIndexes(env, indexes)
-    val order = planOrder(env, selected)
-    def sync(idx: String): IndexSyncReport = {
-      val wm = watermarks.loadOrEpoch(idx)
-      val batch = IndexerOps.incrementalScan(env, Seq(idx), wm)
-      val changed = !batch.isEmpty // A3/P11 gate (one cheap limit-1 job)
+    val plan = planRound(env, indexes, buckets = None)
+    def sync(p: IndexPlan): IndexSyncReport = {
+      val idx = p.index
+      val batch = roundBatch(env, p)
       val staged = s"${idx}_$timestamp"
       // T8 rollback: a staged build that fails must take its promoted
       // quarantine with it — the alias never binds, so nothing else
@@ -384,8 +436,8 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
           store.swapAlias(idx, staged)
           IndexSyncReport(idx, staged, "full", store.count(idx), 0L, rejects)
         } catch { case NonFatal(e) => rollback(e) }
-      } else if (!changed) {
-        IndexSyncReport(idx, store.aliases().getOrElse(idx, ""), "skipped", 0L, 0L)
+      } else if (p.changed == 0) {
+        skipped(idx)
       } else {
         try {
           val (merged, obs) = applyBatch(store.read(idx), batch)
@@ -398,8 +450,8 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
         } catch { case NonFatal(e) => rollback(e) }
       }
     }
-    val reports = runSmallestFirstLargestParallel(order.map(_._1), sync)
-    saveWatermarks(order)
+    val reports = runSmallestFirstLargestParallel(plan)(sync)
+    saveWatermarks(plan.map(p => p.index -> p.hwm))
     reports
   }
 
@@ -432,32 +484,35 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     * batch (atomic, but a full copy for a 0.1% delta); this variant
     * mirrors the reference's actual in-place bulk upsert
     * (flows/main_flow.py:366-422) at partition granularity: physical
-    * indexes are partitioned by id-hash bucket, the batch's ids select
-    * the affected buckets (partition pruning on the read), and ONLY
-    * those bucket partitions are rewritten (dynamic partition
-    * overwrite). Incremental cost ∝ |delta| × (index/buckets), not
-    * |index|. Requires a bucketed bootstrap via [[fullSyncBucketed]]. */
+    * indexes are partitioned by id-hash bucket and ONLY the buckets the
+    * batch touches are rewritten (partition-pruned read, per-bucket
+    * swap). Incremental cost ∝ |delta| × (index/buckets), not |index|.
+    * Requires a bucketed bootstrap via [[fullSyncBucketed]].
+    *
+    * A round is planned by ONE grouped aggregate over the source
+    * (per index: row count for smallest-first order, high-water mark,
+    * changed-row count since the index's watermark, affected buckets), so
+    * its fixed Spark cost does not grow with the number of indexes. An
+    * index with no changes reports `skipped` with no further Spark work;
+    * a changed index merges exactly its `[wm, hwm)` rows — the rows the
+    * plan counted — into the planned buckets through [[InPlaceMerge]]. */
   def incrementalSyncInPlace(env: DataFrame, indexes: Option[Seq[String]] = None,
       buckets: Int = 64): Seq[IndexSyncReport] = {
-    val selected = selectIndexes(env, indexes)
-    val order = planOrder(env, selected)
-    def sync(idx: String): IndexSyncReport = {
-      val wm = watermarks.loadOrEpoch(idx)
-      val batch = IndexerOps.incrementalScan(env, Seq(idx), wm)
-      if (batch.isEmpty)
-        return IndexSyncReport(idx, store.aliases().getOrElse(idx, ""), "skipped", 0L, 0L)
-      val physical = store.aliases().getOrElse(idx,
-        sys.error(s"in-place sync needs a bootstrapped bucketed index for $idx"))
+    val plan = planRound(env, indexes, Some(buckets))
+    def sync(p: IndexPlan): IndexSyncReport = {
+      if (p.changed == 0) return skipped(p.index)
+      val physical = store.aliases().getOrElse(p.index,
+        sys.error(s"in-place sync needs a bootstrapped bucketed index for ${p.index}"))
       // per-record tolerance applies to the in-place path too: poison
       // rows quarantine instead of merging into the live index
-      val (good, rejects) = quarantineSplit(batch, physical)
+      val (good, rejects) = quarantineSplit(roundBatch(env, p), physical)
       if (rejects > 0 && good.isEmpty)
-        return IndexSyncReport(idx, physical, "incremental", 0L, 0L, rejects)
-      val (ups, dels) = InPlaceMerge(store, physical, good, buckets)
-      IndexSyncReport(idx, physical, "incremental", ups, dels, rejects)
+        return IndexSyncReport(p.index, physical, "incremental", 0L, 0L, rejects)
+      val (ups, dels) = InPlaceMerge(store, physical, good, buckets, p.buckets)
+      IndexSyncReport(p.index, physical, "incremental", ups, dels, rejects)
     }
-    val reports = runSmallestFirstLargestParallel(order.map(_._1), sync)
-    saveWatermarks(order)
+    val reports = runSmallestFirstLargestParallel(plan)(sync)
+    saveWatermarks(plan.map(p => p.index -> p.hwm))
     reports
   }
 
@@ -483,8 +538,8 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
           throw e
       }
     }
-    val reports = runSmallestFirstLargestParallel(order.map(_._1), publish)
-    saveWatermarks(order)
+    val reports = runSmallestFirstLargestParallel(order.map(_._1))(publish)
+    saveWatermarks(order.map(o => o._1 -> o._3))
     reports
   }
 
@@ -582,8 +637,6 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     * (max updated_at + 1 µs, computed in the planning aggregate — the
     * deterministic analog of the reference's run-timestamp watermark).
     * Untouched indexes keep their old watermark: no silent skips. */
-  private def saveWatermarks(order: Seq[(String, Long, Option[String])]): Unit =
-    order.foreach { case (idx, _, hwm) =>
-      hwm.foreach(watermarks.save(idx, _))
-    }
+  private def saveWatermarks(hwms: Seq[(String, Option[String])]): Unit =
+    hwms.foreach { case (idx, hwm) => hwm.foreach(watermarks.save(idx, _)) }
 }

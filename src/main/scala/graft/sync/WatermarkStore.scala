@@ -1,6 +1,8 @@
 package graft.sync
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** T2 — persisted CDC watermark (reference save_last_run_config /
   * `last_modified`, flows/main_flow.py:603,611). One timestamp string per
@@ -40,6 +42,14 @@ class WatermarkStore(dir: String) {
 
   def save(index: String, watermark: String): Unit =
     writeAtomic(indexPath(index), watermark)
+
+  /** Every index that has a watermark of its own. */
+  def indexes(): Seq[String] =
+    Using.resource(Files.list(Paths.get(dir))) { s =>
+      s.iterator().asScala.map(_.getFileName.toString)
+        .collect { case f if f.startsWith("_wm_") && !f.endsWith(".tmp") => f.stripPrefix("_wm_") }
+        .toSeq.sorted
+    }
 
   private def readFile(p: Path): Option[String] =
     if (Files.exists(p)) Some(Files.readString(p).trim).filter(_.nonEmpty)

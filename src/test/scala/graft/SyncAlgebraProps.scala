@@ -102,7 +102,10 @@ object SyncAlgebraProps extends Properties("SyncAlgebra") {
         store.writePhysicalBucketed("idx_p", df(rows).limit(0)
           .select(Idx, Id, Document, IsDeleted), Id, buckets)
         Seq(first, second).filter(_.nonEmpty).foreach { slice =>
-          InPlaceMerge(store, "idx_p", df(slice), buckets)
+          val affected = df(slice).agg(InPlaceMerge.affectedBuckets(store,
+              Map("alpha" -> "idx_p", "beta" -> "idx_p"), lit(true), buckets))
+            .head().getSeq[Long](0)
+          InPlaceMerge(store, "idx_p", df(slice), buckets, affected)
         }
         // an index whose every bucket was tombstoned away has a dir but no
         // data files (hasData's documented case) — raw readPhysical can't
@@ -113,6 +116,84 @@ object SyncAlgebraProps extends Properties("SyncAlgebra") {
         val want = state(IndexerOps.cdcMerge(empty, df(rows)))
         got == want
       }
+    }
+
+  /** Envelope rows over few ids and three instants: equal `updated_at`
+    * within one id is the common case, update/delete ties included. */
+  private val genTiedRows: Gen[List[(String, String, String, Boolean, Timestamp)]] =
+    for {
+      n <- Gen.choose(1, 30)
+      rows <- Gen.listOfN(n, for {
+        idx <- Gen.oneOf("alpha", "beta")
+        id <- Gen.choose(0, 5).map(_.toString)
+        doc <- Gen.choose(0, 9).map(k => s"""{"k": $k}""")
+        del <- Gen.prob(0.3)
+        t <- Gen.choose(0, 2)
+      } yield (idx, id, doc, del, new Timestamp(1700000000000L + t * 1000L)))
+    } yield rows
+
+  property("latest-per-id under equal timestamps: order-free, and a tied delete wins") =
+    Prop.forAll(genTiedRows, Gen.choose(0, 9)) { (rows, k) =>
+      val reordered = IndexerOps.cdcMerge(empty, df(rows.reverse).repartition(3))
+      // an update and a delete of one id in one transaction share now()
+      val now = new Timestamp(1700000009000L)
+      val pair = List(("alpha", "tied", s"""{"k": 1$k}""", false, now),
+        ("alpha", "tied", s"""{"k": 0}""", true, now))
+      state(IndexerOps.cdcMerge(empty, df(rows))) == state(reordered) &&
+        Seq(pair, pair.reverse).forall { p =>
+          !state(IndexerOps.cdcMerge(empty, df(rows ++ p))).exists(_._2 == "tied")
+        }
+    }
+
+  /** A CDC history over 2-3 indexes: a bootstrap table (one live row per
+    * id, every index present) and later changes with strictly increasing
+    * `updated_at` over colliding ids, tombstones included. Ids carry their
+    * index, so a one-shot merge over all rows is the per-index truth. */
+  private val genHistory = for {
+    nIdx <- Gen.choose(2, 3)
+    names = List("alpha", "beta", "gamma").take(nIdx)
+    bootIds <- Gen.listOfN(nIdx, Gen.choose(1, 4))
+    changes <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, for {
+      idx <- Gen.oneOf(names)
+      id <- Gen.choose(0, 6)
+      doc <- Gen.choose(0, 99).map(k => s"""{"k": $k}""")
+      del <- Gen.prob(0.25)
+    } yield (idx, s"$idx-$id", doc, del)))
+  } yield {
+    val boot = names.zip(bootIds).flatMap { case (idx, m) =>
+      (0 until m).map(i => (idx, s"$idx-$i", s"""{"k": -$i}""", false)) }
+    def stamp(xs: List[(String, String, String, Boolean)], from: Int) =
+      xs.zipWithIndex.map { case ((idx, id, doc, del), i) =>
+        (idx, id, doc, del, new Timestamp(1700000000000L + (from + i) * 1000L)) }
+    (names, stamp(boot, 0), stamp(changes, boot.length))
+  }
+
+  property("in-place sync over any time-ordered split of rounds equals the one-shot merge") =
+    Prop.forAll(genHistory, Gen.listOf(Gen.choose(0, 30)), Gen.oneOf(2, 4, 8)) {
+      case ((names, boot, changes), cutsRaw, buckets) =>
+        import graft.sync.{IndexStore, SyncPipeline, WatermarkStore}
+        val root = java.nio.file.Files.createTempDirectory("prop-rounds").toString
+        val store = new IndexStore(spark, root)
+        val pipe = new SyncPipeline(store, new WatermarkStore(root))
+        pipe.fullSyncBucketed(df(boot), None, "t0", buckets)
+        val cuts = (cutsRaw.take(3).map(_ % (changes.length + 1)) :+ changes.length)
+          .distinct.sorted
+        val roundsOk = cuts.zip(0 +: cuts).forall { case (cut, prev) =>
+          val batch = changes.slice(prev, cut)
+          val reports = pipe.incrementalSyncInPlace(df(boot ++ changes.take(cut)),
+            None, buckets)
+          val want = names.map { idx =>
+            val latest = batch.filter(_._1 == idx).groupBy(_._2).values
+              .map(_.maxBy(_._5.getTime))
+            val dels = latest.count(_._4).toLong
+            idx -> (if (latest.isEmpty) ("skipped", 0L, 0L)
+              else ("incremental", latest.size - dels, dels))
+          }.toMap
+          reports.map(r => r.index -> (r.mode, r.upserts, r.deletes)).toMap == want
+        }
+        val got = names.flatMap(idx => store.read(idx).toSeq
+          .flatMap(d => state(d.select(Idx, Id, Document)))).toSet
+        roundsOk && got == state(IndexerOps.cdcMerge(empty, df(boot ++ changes)))
     }
 
   property("tolerant full sync conserves rows: live ⊎ quarantine == scan, for any poison set") =

@@ -854,6 +854,55 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(store.stats("nope").isEmpty)
   }
 
+  test("an in-place round's Spark job count does not grow with the number of indexes") {
+    import spark.implicits._
+    def at(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
+    /** Jobs of one in-place round over a bucketed store of `n` indexes
+      * of which only `ix0` changed; the source is read before counting. */
+    def roundJobs(n: Int): Int = {
+      val (_, _, pipe, _) = freshPipeline()
+      val src = Files.createTempDirectory("graft-jobs").resolve("source").toString
+      (for (i <- 0 until n; d <- 0 until 20)
+        yield (s"ix$i", s"$i-$d", s"""{"k": $d}""", false, at(d)))
+        .toDF(Idx, Id, Document, IsDeleted, UpdatedAt).write.parquet(src)
+      pipe.fullSyncBucketed(spark.read.parquet(src), None, "t0", buckets = 4)
+      (0 until 10).map(d => ("ix0", s"0-$d", s"""{"k": ${100 + d}}""", d % 5 == 0, at(100 + d)))
+        .toDF(Idx, Id, Document, IsDeleted, UpdatedAt).write.mode("append").parquet(src)
+      val source = spark.read.parquet(src)
+      // count between two marker jobs: listener events arrive in order,
+      // so seeing the closing marker means every round job was seen
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val phase = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties).map(_.getProperty("spark.job.description")) match {
+            case Some("graft-count-open") => phase.compareAndSet(0, 1)
+            case Some("graft-count-close") => phase.compareAndSet(1, 2)
+            case _ => if (phase.get == 1) jobs.incrementAndGet()
+          }
+      }
+      def marker(name: String): Unit = {
+        spark.sparkContext.setJobDescription(name)
+        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val reports =
+        try {
+          marker("graft-count-open")
+          val r = pipe.incrementalSyncInPlace(source, None, buckets = 4)
+          marker("graft-count-close")
+          eventually(phase.get == 2)
+          r
+        } finally spark.sparkContext.removeSparkListener(listener)
+      assert(reports.map(r => r.index -> r.mode).toMap ===
+        (0 until n).map(i => s"ix$i" -> (if (i == 0) "incremental" else "skipped")).toMap)
+      jobs.get
+    }
+    val (two, six) = (roundJobs(2), roundJobs(6))
+    assert(two <= 8 && six <= 8, s"jobs per round: $two at 2 indexes, $six at 6")
+    assert(two === six, "the round's job count grows with the number of indexes")
+  }
+
   test("in-place merge read prunes to affected bucket partitions") {
     val (store, _, pipe, _) = freshPipeline()
     pipe.fullSyncBucketed(env, Some(Seq("view")), timestamp = "t1", buckets = 16)
