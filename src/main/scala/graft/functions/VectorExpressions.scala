@@ -318,6 +318,126 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Double]]])
   override def prettyName: String = "graft_pq_encode"
 }
 
+/** Residual-PQ decode over constant codebooks — the fused native form
+  * of `zip_with(centroid(cell), reconOf(codes), _ + _)`
+  * (`VectorOps.reconOf`): x̂(j) = cents(cell)(j) + books(m)(codes(m))(i)
+  * for the j-th element, the i-th of subspace m's slice. One pass per
+  * row over primitive `double[]` codebooks inside whole-stage codegen,
+  * instead of a plan carrying cells × Dim centroid literals plus
+  * m × ksub × subDim book literals and two intermediate arrays per row.
+  * Numeric contract, IDENTICAL to the composed form: the same single
+  * double addition per element, in element order, so results are
+  * bit-identical (and the DuckDB oracle's `c.cv[i] + r.rv[i]` too).
+  *
+  * Shape: the books' sub-vectors concatenate to the centroid length
+  * (checked at construction — codebooks trained from one embedding
+  * width always do). Null codes, a null cell, a null code element, a
+  * cell or code outside its codebook, or fewer codes than subspaces →
+  * null (the composed form's out-of-range lookups are null or an
+  * error, never a vector). */
+case class PqDecode(left: Expression, right: Expression,
+    cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]])
+    extends BinaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes =
+    Seq(ArrayType(org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.LongType)
+  // containsNull matches the replaced zip_with's inferred type exactly
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+
+  private val dim = cents.headOption.map(_.size).getOrElse(0)
+  require(cents.forall(_.size == dim) &&
+    books.map(b => b.headOption.map(_.size).getOrElse(0)).sum == dim &&
+    books.forall(b => b.forall(_.size == b.head.size)),
+    "pqDecode: the books' sub-vectors must concatenate to the centroid length")
+
+  @transient private lazy val centsArr: Array[Array[Double]] =
+    cents.map(_.toArray).toArray
+  @transient private lazy val booksArr: Array[Array[Array[Double]]] =
+    books.map(_.map(_.toArray).toArray).toArray
+
+  override def nullSafeEval(c: Any, cl: Any): Any = {
+    val codes = c.asInstanceOf[ArrayData]
+    val cell = cl.asInstanceOf[Long]
+    val m = booksArr.length
+    if (cell < 0 || cell >= centsArr.length || codes.numElements() < m) null
+    else {
+      val cv = centsArr(cell.toInt)
+      val out = new Array[Double](dim)
+      var off = 0
+      var mi = 0
+      var ok = true
+      while (ok && mi < m) {
+        val book = booksArr(mi)
+        if (codes.isNullAt(mi)) ok = false
+        else {
+          val code = codes.getLong(mi)
+          if (code < 0 || code >= book.length) ok = false
+          else {
+            val sub = book(code.toInt)
+            var i = 0
+            while (i < sub.length) { out(off + i) = cv(off + i) + sub(i); i += 1 }
+            off += sub.length
+          }
+        }
+        mi += 1
+      }
+      if (ok) org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(out)
+      else null
+    }
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (codes, cell) => {
+      val cRef = ctx.addReferenceObj("cents", centsArr, "double[][]")
+      val bRef = ctx.addReferenceObj("books", booksArr, "double[][][]")
+      val m = ctx.freshName("m")
+      val cv = ctx.freshName("cv")
+      val out = ctx.freshName("out")
+      val off = ctx.freshName("off")
+      val mi = ctx.freshName("mi")
+      val book = ctx.freshName("book")
+      val code = ctx.freshName("code")
+      val sub = ctx.freshName("sub")
+      val i = ctx.freshName("i")
+      s"""
+         |int $m = $bRef.length;
+         |if ($cell < 0L || $cell >= $cRef.length || $codes.numElements() < $m) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double[] $cv = $cRef[(int) $cell];
+         |  double[] $out = new double[$dim];
+         |  int $off = 0;
+         |  for (int $mi = 0; $mi < $m && !${ev.isNull}; $mi++) {
+         |    double[][] $book = $bRef[$mi];
+         |    long $code = $codes.isNullAt($mi) ? -1L : $codes.getLong($mi);
+         |    if ($code < 0L || $code >= $book.length) {
+         |      ${ev.isNull} = true;
+         |    } else {
+         |      double[] $sub = $book[(int) $code];
+         |      for (int $i = 0; $i < $sub.length; $i++) {
+         |        $out[$off + $i] = $cv[$off + $i] + $sub[$i];
+         |      }
+         |      $off += $sub.length;
+         |    }
+         |  }
+         |  if (!${ev.isNull}) {
+         |    ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |      .fromPrimitiveArray($out);
+         |  }
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "graft_pq_decode"
+}
+
 /** Column-API and SQL-name surface of the native expressions. */
 object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
@@ -331,6 +451,11 @@ object VectorFunctions {
 
   def pqEncode(v: Column, books: Seq[Seq[Seq[Double]]]): Column =
     Bridge.column(PqEncode(Bridge.expression(v), books))
+
+  def pqDecode(codes: Column, cell: Column, cents: Seq[Seq[Double]],
+      books: Seq[Seq[Seq[Double]]]): Column =
+    Bridge.column(PqDecode(Bridge.expression(codes), Bridge.expression(cell),
+      cents, books))
 
   /** Extract a literal-int argument from SQL-text function calls (the
     * kernel shape parameters are plan-time constants, never row data). */

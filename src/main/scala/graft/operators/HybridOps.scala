@@ -406,7 +406,7 @@ object HybridOps {
       VectorOps.chunkIvfPqTopKFromIndex(
         chunkIndex.where(col("cell").isin(probe.cells: _*)), embeddings,
         queries.map(_._1), k, nprobe, cents, books,
-        probes = Some(probe.frame))
+        probe = Some(probe))
     }
     policy match {
       case LexicalOnly => lex

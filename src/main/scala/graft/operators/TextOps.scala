@@ -687,8 +687,9 @@ object TextOps {
     * with the Lucene non-negative idf `ln((N−df+0.5)/(df+0.5)+1)`.
     *
     * Scale shape: tf / dl / df are map-side-combined hash aggregates
-    * (one row per (doc, term) / doc / term on the wire); query terms
-    * and the 1-row corpus stats broadcast; scoring is map-only; the
+    * (one row per (doc, term) / doc / term on the wire); the query
+    * terms, their df and the corpus N/avgdl enter the plan as
+    * literals; scoring is map-only; the
     * final top-k windows per query over docs that matched ≥ 1 query
     * term. Determinism is the x38 device applied to scoring: each
     * (doc, term) partial score lands on a 10⁻⁹ decimal grid BEFORE the
@@ -728,12 +729,22 @@ object TextOps {
     (tf, dl)
   }
 
-  /** BM25 scoring + per-query top-k from prebuilt index frames — the
-    * single scoring path both [[bm25TopK]] (batch) and the streaming
-    * artifact serve through, so batch/stream equivalence is structural,
-    * not coincidental. Corpus-level df/N/avgdl are derived HERE from
-    * the per-doc frames: they are the corpus-dependent part, cheap
-    * (one hash agg + a 1-row broadcast) and always current. */
+  /** The corpus-level BM25 constants: N (scoring units in `dl`) and
+    * avgdl (their mean length). */
+  final case class Bm25Corpus(n: Long, avgdl: Double)
+
+  /** [[Bm25Corpus]] of a `dl` frame — one aggregate collected to the
+    * driver. avgdl is `(double) Σdl / N`, the same IEEE division the
+    * in-plan form computed, so scores are unchanged bit for bit. A
+    * caller over an immutable snapshot computes it once
+    * ([[graft.serve.Retrieval]] per `load`); callers over live frames
+    * compute it per call (the [[bm25TopKFrom]] default). */
+  def bm25CorpusOf(dl: DataFrame): Bm25Corpus = {
+    val r = dl.agg(count(lit(1)), sum(col("dl"))).head()
+    val n = r.getLong(0)
+    Bm25Corpus(n, if (r.isNullAt(1)) Double.NaN else r.getLong(1).toDouble / n)
+  }
+
   /** The ONE BM25 scoring chain every lexical serve ranks through —
     * doc-level ([[bm25TopKFrom]], key = doc_id) and chunk-level
     * ([[bm25ChunkTopKFrom]], key = (doc_id, chunk_id)) are the same
@@ -746,7 +757,11 @@ object TextOps {
     * (PushedFilters) and the tf⋈dl join moves only the queried
     * posting lists, never the corpus. df counted on the pruned frame
     * is exact (restricting rows to a token cannot change that token's
-    * df). Each (query, key, term) partial lands on the 10⁻⁹ decimal
+    * df); it is ONE collect of |terms| rows, and df, the term → query
+    * fan-out and N/avgdl (`corpus`, computed from `dl` when absent)
+    * all enter the scoring plan as literals, not broadcast relations —
+    * each broadcast would cost the call a Spark job of its own. Each
+    * (query, key, term) partial lands on the 10⁻⁹ decimal
     * grid BEFORE the per-(query, key) sum (associative — partial-agg
     * order can't move it); the summed score rounds to 6 dp before any
     * caller ranks. Returns `(query_id, keyCols…, score)`.
@@ -758,24 +773,27 @@ object TextOps {
     * silently change every idf.) */
   private def bm25AggScores(tf: DataFrame, dl: DataFrame,
       keyCols: Seq[String], queries: Seq[(Long, Seq[String])],
-      allowed: Option[DataFrame]): DataFrame = {
-    val spark = tf.sparkSession
-    import spark.implicits._
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val qterms = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
-      .toDF("query_id", "token")
+      allowed: Option[DataFrame], corpus: Option[Bm25Corpus]): DataFrame = {
+    val c = corpus.getOrElse(bm25CorpusOf(dl))
     val tfq = tf.where(col("token")
       .isInCollection(queries.flatMap(_._2).distinct))
-    val dfreq = tfq.groupBy("token").agg(count(lit(1)).as("df"))
-    val scored = tfq.join(dl, keyCols).join(broadcast(dfreq), "token")
-      .join(broadcast(qterms), "token")
-      .crossJoin(broadcast(stats))
+    val dfreq: Map[String, Long] = tfq.groupBy("token")
+      .agg(count(lit(1))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // term → the queries holding it, once per occurrence (a repeated
+    // query term counts twice, as the (query, term) rows did)
+    val fanout: Map[String, Seq[Long]] = queries
+      .flatMap { case (q, ts) => ts.map(t => (t, q)) }
+      .groupBy(_._1).map { case (t, qs) => t -> qs.map(_._2) }
+    val df = element_at(typedLit(dfreq), col("token"))
+    val scored = tfq.join(dl, keyCols)
+      .select(col("*"),
+        explode(element_at(typedLit(fanout), col("token"))).as("query_id"))
       .select((col("query_id") +: keyCols.map(col)) :+
-        round(log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+        round(log((lit(c.n) - df + 0.5) / (df + 0.5) + 1.0)
           * (col("tf") * lit(Bm25K1 + 1))
           / (col("tf") + lit(Bm25K1) *
-            (lit(1.0) - lit(Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))), 9)
+            (lit(1.0) - lit(Bm25B) + lit(Bm25B) * col("dl") / lit(c.avgdl))), 9)
           .cast("decimal(18,9)").as("s"): _*)
     val agg = scored.groupBy("query_id", keyCols: _*)
       .agg(round(sum(col("s")).cast("double"), 6).as("score"))
@@ -785,10 +803,18 @@ object TextOps {
         .select((("query_id" +: keyCols) :+ "score").map(col): _*))
   }
 
+  /** BM25 scoring + per-query top-k from prebuilt index frames — the
+    * single scoring path both [[bm25TopK]] (batch) and the streaming
+    * and snapshot artifacts serve through, so batch/stream/snapshot
+    * equivalence is structural, not coincidental. `corpus` passes
+    * N/avgdl a caller already holds; absent, they derive here from
+    * `dl` (always current over a live frame). */
   def bm25TopKFrom(tf: DataFrame, dl: DataFrame,
       queries: Seq[(Long, Seq[String])], k: Int,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val restricted = bm25AggScores(tf, dl, Seq("doc_id"), queries, allowed)
+      allowed: Option[DataFrame] = None,
+      corpus: Option[Bm25Corpus] = None): DataFrame = {
+    val restricted = bm25AggScores(tf, dl, Seq("doc_id"), queries, allowed,
+      corpus)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("score"), asc("doc_id"))
     restricted.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
@@ -1550,7 +1576,7 @@ object TextOps {
     * the attribution a RAG caller feeds to generation.
     *
     * Scale shape: [[bm25TopKFrom]]'s exactly — literal IN-prune pushed
-    * into the ctf scan, broadcast query terms / df / 1-row stats,
+    * into the ctf scan, query terms / df / N / avgdl as literals,
     * decimal-grid partials before the per-(query, doc, chunk) sum,
     * round-before-rank. The extra best-chunk step is a window over
     * (query, doc) — it ranks only chunks that matched ≥ 1 query term,
@@ -1562,7 +1588,7 @@ object TextOps {
     // containing the term, N = chunk count, avgdl = mean chunk
     // length); `allowed` drops all of a filtered doc's chunks together
     val restricted = bm25AggScores(ctf, cdl, Seq("doc_id", "chunk_id"),
-      queries, allowed)
+      queries, allowed, None)
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id", "doc_id").orderBy(desc("score"), asc("chunk_id"))
     val best = restricted.withColumn("rc", row_number().over(wBest))

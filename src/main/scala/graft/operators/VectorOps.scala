@@ -273,32 +273,26 @@ object VectorOps {
     * (`query_id, doc_id, chunk_id, cosine, rn`), so the exact brute
     * scan and this indexed serve are recall-comparable row for row.
     *
-    * Scale shape: ONE corpus-frame join (the broadcast probe attach);
+    * Scale shape: NO corpus-frame join (the probes attach as literals);
     * candidate count ∝ nprobe/cells of the CHUNK corpus, bandwidth m
     * ids per chunk; the MaxSim window runs over probed survivors only,
     * never the corpus. Queries are DOC-level vectors (`embeddings`),
     * the [[multiVectorTopK]] convention. */
   /** The probe-pruned residual-ADC scoring shared by
     * [[chunkIvfPqTopKFromIndex]] and [[chunkIvfPqRefineTopK]]'s stage
-    * 1: broadcast probe attach, composite-key decomposition, ADC
+    * 1: literal probe attach, composite-key decomposition, ADC
     * cosine — `(query_id, doc_id, chunk_id, cosine)`, self-matches and
     * NaNs screened. */
-  private def chunkAdcScored(index: DataFrame, embeddings: DataFrame,
-      queryIds: Seq[Long], nprobe: Int, cents: Seq[Seq[Double]],
-      books: Seq[Seq[Seq[Double]]],
-      probes: Option[DataFrame]): DataFrame = {
-    val probeDf = probes.getOrElse(
-      probeFrame(embeddings, queryIds, cents, nprobe))
-    val cv = element_at(centArrayLit(cents), col("cell").cast("int") + 1)
-      .getField("cv")
-    val rv = zip_with(cv, reconOf(col("codes"), books), (x, y) => x + y)
-    index.join(broadcast(probeDf), Seq("cell"))
+  private def chunkAdcScored(index: DataFrame, probe: ProbePlan,
+      cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]]): DataFrame =
+    index.select(col("vec_id"), col("codes"), col("cell"),
+        probe.queriesOf(col("cell")).as("query_id"))
       .select(col("query_id"),
         expr(s"vec_id DIV $ChunkStride").as("doc_id"),
         pmod(col("vec_id"), lit(ChunkStride)).as("chunk_id"),
-        round(cosine(col("qv"), rv), 6).as("cosine"))
+        round(cosine(probe.vectorOf(col("query_id")),
+          pqDecode(col("codes"), col("cell"), cents, books)), 6).as("cosine"))
       .where(col("doc_id") =!= col("query_id") && !isnan(col("cosine")))
-  }
 
   /** Best chunk per (query, doc), then docs ranked by that best-chunk
     * cosine — the MaxSim + rank tail shared by every chunk-dense
@@ -315,10 +309,10 @@ object VectorOps {
   def chunkIvfPqTopKFromIndex(index: DataFrame, embeddings: DataFrame,
       queryIds: Seq[Long], k: Int, nprobe: Int, cents: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]],
-      probes: Option[DataFrame] = None): DataFrame =
-    maxSimRanked(
-      chunkAdcScored(index, embeddings, queryIds, nprobe, cents, books,
-        probes), k)
+      probe: Option[ProbePlan] = None): DataFrame =
+    maxSimRanked(chunkAdcScored(index,
+      probe.getOrElse(probePlanOf(embeddings, queryIds, cents, nprobe)),
+      cents, books), k)
 
   /** Two-stage CHUNK refine — [[ivfPqRefineTopK]]'s production shape
     * (Jégou PAMI'11 §V re-ranking) at chunk level: stage 1 pulls an
@@ -340,23 +334,19 @@ object VectorOps {
   def chunkIvfPqRefineTopK(index: DataFrame, chunkEmb: DataFrame,
       embeddings: DataFrame, queryIds: Seq[Long], k: Int, r: Int,
       nprobe: Int, cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
-      probes: Option[DataFrame] = None): DataFrame = {
+      probe: Option[ProbePlan] = None): DataFrame = {
     require(r >= k, s"shortlist r=$r must be >= k=$k")
-    val scored = chunkAdcScored(index, embeddings, queryIds, nprobe,
-      cents, books, probes)
+    val p = probe.getOrElse(probePlanOf(embeddings, queryIds, cents, nprobe))
+    val scored = chunkAdcScored(index, p, cents, books)
     val wS = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), asc("doc_id"), asc("chunk_id"))
     val short = scored.withColumn("rs", row_number().over(wS))
       .where(col("rs") <= r).select("query_id", "doc_id", "chunk_id")
     val ce = chunkEmb.select(col("doc_id"), col("chunk_id"),
       asDoubles(col("embedding")).as("v"))
-    val q = embeddings.where(col("vec_id").isin(queryIds.distinct: _*))
-      .select(col("vec_id").as("query_id"),
-        asDoubles(col("embedding")).as("qv"))
     val exact = ce.join(broadcast(short), Seq("doc_id", "chunk_id"))
-      .join(broadcast(q), "query_id")
       .select(col("query_id"), col("doc_id"), col("chunk_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cosine"))
+        round(cosine(p.vectorOf(col("query_id")), col("v")), 6).as("cosine"))
       .where(!isnan(col("cosine")))
     maxSimRanked(exact, k)
   }
@@ -1403,6 +1393,14 @@ object VectorOps {
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
   }
 
+  /** Residual reconstruction x̂ = centroid(cell) + r̂(codes) — the
+    * native [[graft.functions.PqDecode]] kernel over primitive
+    * codebooks, bit-identical to `zip_with(centroid(cell),
+    * reconOf(codes), _ + _)` without the literal payload. */
+  private[graft] def pqDecode(codes: Column, cell: Column,
+      cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]]): Column =
+    graft.functions.VectorFunctions.pqDecode(codes, cell, cents, books)
+
   /** Reconstruction x̂ = concat of the chosen sub-centroids — a pure
     * expression over the codes column and the literal books. */
   private[graft] def reconOf(codes: Column, books: Seq[Seq[Seq[Double]]]): Column =
@@ -1590,19 +1588,22 @@ object VectorOps {
       ivfCellsWith(embeddings, cents).select("vec_id", "cell"))
     val recon = indexFrame(pqCodesWide(embeddings, bks)
       .select(col("vec_id"), reconOf(col("codes"), bks).as("rv")))
-    val probes = probeFrame(embeddings, queryIds, cents, nprobe)
-    // join order is the scale contract: broadcast the probe frame onto
-    // `cells` FIRST — a map-only broadcast-hash join that prunes the
-    // corpus to the ~nprobe/cells surviving fraction — and only then
-    // join the code-reconstruction frame. The reverse order (recon
-    // first) shuffles BOTH corpus-sized index frames in full per query
-    // batch before any probe filters, which Catalyst will not reorder
-    // without CBO.
-    val scored = cells.join(broadcast(probes), Seq("cell"))
+    val probe = probePlanOf(embeddings, queryIds, cents, nprobe)
+    // order is the scale contract: attach the probes to `cells` FIRST —
+    // a map-only literal lookup that prunes the corpus to the
+    // ~nprobe/cells surviving fraction — and only then join the
+    // code-reconstruction frame. The reverse order (recon first)
+    // shuffles BOTH corpus-sized index frames in full per query batch
+    // before any probe filters, which Catalyst will not reorder without
+    // CBO.
+    val scored = cells
+      .select(col("vec_id"), col("cell"),
+        probe.queriesOf(col("cell")).as("query_id"))
       .join(recon, "vec_id")
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cell"),
-        round(cosine(col("qv"), col("rv")), 6).as("cosine"))
+        round(cosine(probe.vectorOf(col("query_id")), col("rv")), 6)
+          .as("cosine"))
       .where(!isnan(col("cosine")))
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
@@ -1646,19 +1647,6 @@ object VectorOps {
       ranked.zipWithIndex.map { case ((cell, _), i) => (qid, qv, cell, i + 1) }
     }
 
-  /** The probe rows as a broadcastable frame. RDD-backed (one
-    * partition), NOT a LocalRelation, on purpose: on the composed
-    * cells⋈probes⋈recon plan, Spark 4.1's `ConvertToLocalRelation`
-    * eagerly binds a join-constraint-inferred filter that still
-    * references the corpus side's assignment fold against the probe
-    * relation's three columns and dies with
-    * INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (deterministic, cold-session).
-    * An RDD-backed relation is outside that rule's reach; the frame is
-    * |queries|·nprobe rows either way and still broadcasts. */
-  private def probeFrame(embeddings: DataFrame,
-      queryIds: Seq[Long], cents: Seq[Seq[Double]], nprobe: Int): DataFrame =
-    probePlanOf(embeddings, queryIds, cents, nprobe).frame
-
   /** The persistable IVF+PQ index frame `(vec_id, codes, cell)` — ONE
     * artifact carrying both halves of the index (the inverted-file cell
     * list and the PQ codes), built in one map-only corpus pass (two
@@ -1687,62 +1675,71 @@ object VectorOps {
       col("cell"))
   }
 
-  /** One driver-side probe computation serving BOTH artifact-serve
-    * needs: `cells` is the distinct probed-cell list (the
-    * partition-pruning filter for the index read) and `frame` is the
-    * broadcastable `(query_id, qv, cell)` probe frame the ADC join
-    * attaches. Before this seam existed every artifact serve collected
-    * the query vectors and ranked the probe cosines TWICE — once in
-    * [[probedCellsOf]] for the filter, once inside the serve for the
-    * frame — two redundant driver jobs per query batch on the hot path
-    * (x60/x62/x63/x67, the snapshot handle, the streaming IVF serve). */
-  final case class ProbePlan(cells: Seq[Long], frame: DataFrame)
+  /** One driver-side probe computation serving every artifact-serve
+    * need: `cells` is the distinct probed-cell list (the
+    * partition-pruning filter for the index read), and the
+    * `(query_id, qv, cell)` probe rows attach to the scoring plan as
+    * LITERALS — [[queriesOf]] for the probe join, [[vectorOf]] for the
+    * query vectors the ADC and the exact rerank score against. The
+    * driver already holds both (|queries|·nprobe rows, |queries|·Dim
+    * doubles), so a serve needs no broadcast relation and no Spark job
+    * to attach them, and no second scan of the float column for the
+    * query vectors. Filter and probes derive from the same rows, so
+    * they can never disagree. */
+  final case class ProbePlan(cells: Seq[Long],
+      rows: Seq[(Long, Seq[Double], Long)]) {
+
+    /** The queries probing `cell`, exploded — one output row per
+      * (input row, probing query), none for an unprobed cell: the
+      * probe equi-join as a literal map lookup. */
+    def queriesOf(cell: Column): Column = {
+      val byCell: Map[Long, Seq[Long]] =
+        rows.groupBy(_._3).map { case (c, rs) => c -> rs.map(_._1) }
+      explode(element_at(typedLit(byCell), cell))
+    }
+
+    /** The query vector of `queryId` (null for an id with no vector). */
+    def vectorOf(queryId: Column): Column = {
+      val qvecs: Map[Long, Seq[Double]] = rows.map(r => r._1 -> r._2).toMap
+      element_at(typedLit(qvecs), queryId)
+    }
+  }
 
   /** Build the [[ProbePlan]]: ONE query-vector collect (bounded:
-    * |queries| rows), one driver ranking, both outputs derived from the
-    * same probe rows so filter and frame can never disagree. The frame
-    * is RDD-backed (one partition), NOT a LocalRelation, on purpose —
-    * see [[probeFrame]]'s `ConvertToLocalRelation` note; this is THE
-    * single implementation both it and [[probedCellsOf]] delegate to. */
+    * |queries| rows) and one driver ranking — THE single
+    * implementation [[probedCellsOf]] and every serve delegate to. */
   def probePlanOf(embeddings: DataFrame, queryIds: Seq[Long],
       cents: Seq[Seq[Double]], nprobe: Int): ProbePlan = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val e = embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v"))
     val qvecs = e.where(col("vec_id").isin(queryIds: _*))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap
     val rows = probeRows(qvecs, queryIds, cents, nprobe)
-    val frame = spark.createDataset(spark.sparkContext.parallelize(rows, 1))
-      .toDF("query_id", "qv", "cell")
-    ProbePlan(rows.map(_._3).distinct, frame)
+    ProbePlan(rows.map(_._3).distinct, rows)
   }
 
   /** Serve top-k from a stored `(vec_id, codes, cell)` index frame —
     * the production query path: the caller reads the cell-partitioned
     * artifact with a `cell IN (probed)` filter (partition-pruned scan),
-    * this joins the broadcast probe frame and scores ADC on the
-    * survivors only. Exactly ONE corpus-frame join in the plan (the
-    * broadcast probe attach); reconstruction is literal-lookup map work
-    * computed AFTER pruning, so decode cost is ∝ the probed fraction
-    * too. Build the pruning filter first with [[probePlanOf]] and hand
-    * its `frame` in via `probes` — otherwise the probe collect/ranking
-    * runs a second time here. */
+    * this attaches the probes as plan literals
+    * ([[ProbePlan.queriesOf]]) and scores ADC on the survivors only. NO
+    * join in the plan; reconstruction ([[pqDecode]] for residual codes)
+    * is map work computed AFTER pruning, so decode cost is ∝ the probed
+    * fraction too. Build the pruning filter first with [[probePlanOf]]
+    * and hand the plan in via `probe` — otherwise the query-vector
+    * collect and probe ranking run a second time here. */
   def ivfPqTopKFromIndex(index: DataFrame, embeddings: DataFrame,
       queryIds: Seq[Long], k: Int, nprobe: Int, cents: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]], residual: Boolean = false,
-      probes: Option[DataFrame] = None): DataFrame = {
-    val probeDf = probes.getOrElse(
-      probeFrame(embeddings, queryIds, cents, nprobe))
-    val recon0 = reconOf(col("codes"), books)
-    val rv = if (residual) {
-      val cv = element_at(centArrayLit(cents), col("cell").cast("int") + 1)
-        .getField("cv")
-      zip_with(cv, recon0, (x, y) => x + y)
-    } else recon0
-    val scored = index.join(broadcast(probeDf), Seq("cell"))
+      probe: Option[ProbePlan] = None): DataFrame = {
+    val p = probe.getOrElse(probePlanOf(embeddings, queryIds, cents, nprobe))
+    val rv = if (residual) pqDecode(col("codes"), col("cell"), cents, books)
+      else reconOf(col("codes"), books)
+    val scored = index
+      .select(col("vec_id"), col("codes"), col("cell"),
+        p.queriesOf(col("cell")).as("query_id"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cell"),
-        round(cosine(col("qv"), rv), 6).as("cosine"))
+        round(cosine(p.vectorOf(col("query_id")), rv), 6).as("cosine"))
       .where(!isnan(col("cosine")))
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
@@ -1782,7 +1779,7 @@ object VectorOps {
     * COUNT, residual codes cut candidate BANDWIDTH with less
     * reconstruction error than raw-vector codes (x̂ = centroid + r̂
     * starts from the right neighborhood). Same probe-pruned join order
-    * as [[ivfPqTopK]]: broadcast probes ⋈ index first, recon after. */
+    * as [[ivfPqTopK]]: probes attach to the index first, recon after. */
   def ivfPqResidualTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       nprobe: Int, centroids: Option[Seq[Seq[Double]]] = None,
       books: Option[Seq[Seq[Seq[Double]]]] = None,
@@ -1871,17 +1868,15 @@ object VectorOps {
       queryIds: Seq[Long], k: Int, r: Int, nprobe: Int,
       cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
       residual: Boolean = false,
-      probes: Option[DataFrame] = None): DataFrame = {
+      probe: Option[ProbePlan] = None): DataFrame = {
     require(r >= k, s"shortlist r=$r must be >= k=$k")
+    val p = probe.getOrElse(probePlanOf(embeddings, queryIds, cents, nprobe))
     val short = ivfPqTopKFromIndex(index, embeddings, queryIds, r, nprobe,
-      cents, books, residual, probes).select("query_id", "vec_id")
+      cents, books, residual, Some(p)).select("query_id", "vec_id")
     val e = embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v"))
-    val q = e.where(col("vec_id").isin(queryIds.distinct: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val scored = e.join(broadcast(short), "vec_id")
-      .join(broadcast(q), "query_id")
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cosine"))
+        round(cosine(p.vectorOf(col("query_id")), col("v")), 6).as("cosine"))
       .where(!isnan(col("cosine")))
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
@@ -2467,12 +2462,12 @@ object VectorOps {
         val probe = probePlanOf(embeddings, queryIds, cs, nprobe = 2)
         val pruned = idx.where(col("cell").isin(probe.cells: _*))
         val chunkApprox = chunkIvfPqTopKFromIndex(pruned, embeddings,
-          queryIds, k, nprobe = 2, cs, rb, probes = Some(probe.frame))
+          queryIds, k, nprobe = 2, cs, rb, probe = Some(probe))
           .select(lit(ChunkRecallMethod).as("method"), col("query_id"),
             col("doc_id").as("vec_id"))
         val chunkRefine = chunkIvfPqRefineTopK(pruned, cEmb, embeddings,
           queryIds, k, r = BinaryShortlist, nprobe = 2, cs, rb,
-          probes = Some(probe.frame))
+          probe = Some(probe))
           .select(lit(ChunkRefineRecallMethod).as("method"),
             col("query_id"), col("doc_id").as("vec_id"))
         val chunkExact = multiVectorTopK(cEmb, embeddings, queryIds, k)
@@ -2676,23 +2671,24 @@ object VectorOps {
     // a skipped family contributes zero jobs and zero rows.
     require(families.nonEmpty && families.forall(CurveFamilies.contains),
       s"families must be a non-empty subset of $CurveFamilies: $families")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val maxNp = nprobes.max
 
-    // ONE ranked probe frame at the widest setting (rank = prn)
+    // ONE ranked probe set at the widest setting (rank = prn); probes
+    // and query vectors attach as plan literals (the [[ProbePlan]]
+    // device): per cell, the (query_id, prn) pairs probing it
     val e = embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v"))
     val qvecs = e.where(col("vec_id").isin(queryIds.distinct: _*))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap
     val pRows = probeRowsRanked(qvecs, queryIds, cents, maxNp)
-    val probe = spark.createDataset(spark.sparkContext.parallelize(pRows, 1))
-      .toDF("query_id", "qv", "cell", "prn")
     val probedCells = pRows.map(_._3).distinct
-    val q = e.where(col("vec_id").isin(queryIds.distinct: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv2"))
-    val cv = element_at(centArrayLit(cents), col("cell").cast("int") + 1)
-      .getField("cv")
-    val rv = zip_with(cv, reconOf(col("codes"), books), (x, y) => x + y)
+    val ranked: Map[Long, Seq[(Long, Int)]] = pRows.groupBy(_._3)
+      .map { case (c, rs) => c -> rs.map(r => (r._1, r._4)) }
+    def probed(index: DataFrame): DataFrame =
+      index.where(col("cell").isin(probedCells: _*))
+        .select(col("*"), explode(element_at(typedLit(ranked), col("cell"))).as("p"))
+        .select(col("*"), col("p._1").as("query_id"), col("p._2").as("prn"))
+    val qv = element_at(typedLit(qvecs), col("query_id"))
+    val rv = pqDecode(col("codes"), col("cell"), cents, books)
 
     val wantDoc = families.contains("doc")
     val wantChunk = families.contains("chunk")
@@ -2704,35 +2700,33 @@ object VectorOps {
     // of waiting out a driver round-trip
     // doc family: ADC + attached exact cosine per probed candidate
     def buildDoc(): DataFrame = {
-      val dAdc = docIndex.where(col("cell").isin(probedCells: _*))
-        .join(broadcast(probe), Seq("cell"))
+      val dAdc = probed(docIndex)
         .where(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), col("prn"),
-          round(cosine(col("qv"), rv), 6).as("adc"))
+          round(cosine(qv, rv), 6).as("adc"))
         .where(!isnan(col("adc")))
       Dedup.materialize(
-        dAdc.join(e, "vec_id").join(broadcast(q), "query_id")
+        dAdc.join(e, "vec_id")
           .select(col("query_id"), col("vec_id"), col("prn"), col("adc"),
-            round(cosine(col("qv2"), col("v")), 6).as("exact")),
+            round(cosine(qv, col("v")), 6).as("exact")),
         checkpointDir)
     }
     // chunk family: the composite-key index's ADC + exact per candidate
     def buildChunk(): (DataFrame, DataFrame) = {
       val cEmb = chunkEmb
-      val cAdc = chunkIndex.where(col("cell").isin(probedCells: _*))
-        .join(broadcast(probe), Seq("cell"))
+      val cAdc = probed(chunkIndex)
         .select(col("query_id"),
           expr(s"vec_id DIV $ChunkStride").as("doc_id"),
           pmod(col("vec_id"), lit(ChunkStride)).as("chunk_id"), col("prn"),
-          round(cosine(col("qv"), rv), 6).as("adc"))
+          round(cosine(qv, rv), 6).as("adc"))
         .where(col("doc_id") =!= col("query_id") && !isnan(col("adc")))
       val ce = cEmb.select(col("doc_id"), col("chunk_id"),
         asDoubles(col("embedding")).as("v"))
       val cBoth = Dedup.materialize(
-        cAdc.join(ce, Seq("doc_id", "chunk_id")).join(broadcast(q), "query_id")
+        cAdc.join(ce, Seq("doc_id", "chunk_id"))
           .select(col("query_id"), col("doc_id"), col("chunk_id"),
             col("prn"), col("adc"),
-            round(cosine(col("qv2"), col("v")), 6).as("exact")),
+            round(cosine(qv, col("v")), 6).as("exact")),
         checkpointDir)
       val cEx = chunkExact.getOrElse(
         multiVectorTopK(cEmb, embeddings, queryIds, k)
@@ -2843,6 +2837,8 @@ object VectorOps {
       .groupBy("method", "fam", "nprobe", "r")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
     val exN = exTag.groupBy("fam").agg(count(lit(1)).as("exact_n"))
+    val spark = embeddings.sparkSession
+    import spark.implicits._
     val grid = spark.createDataset(
         spark.sparkContext.parallelize(combos, 1))
       .toDF("method", "fam", "nprobe", "r")

@@ -1011,7 +1011,7 @@ object PipelinePack extends QueryPack {
       val index = s.read.schema(IvfPqIndexSchema).parquet(path)
         .where(col("cell").isin(probe.cells: _*))
       VectorOps.chunkIvfPqTopKFromIndex(index, emb, QueryVecs, 5,
-        nprobe = 2, cents, books, probes = Some(probe.frame))
+        nprobe = 2, cents, books, probe = Some(probe))
         .orderBy("query_id", "rn")
     }),
     // two-stage CHUNK refine — x63's production re-ranking shape at
@@ -1030,7 +1030,7 @@ object PipelinePack extends QueryPack {
         Tables.documents(s, dir).select("doc_id", "text"),
         emb.select("vec_id", "embedding"))
       VectorOps.chunkIvfPqRefineTopK(index, chunkEmb, emb, QueryVecs, 5,
-        r = 20, nprobe = 2, cents, books, probes = Some(probe.frame))
+        r = 20, nprobe = 2, cents, books, probe = Some(probe))
         .orderBy("query_id", "rn")
     }),
     "x10_cosine_topk" -> ((s, dir) =>
@@ -1467,7 +1467,7 @@ object PipelinePack extends QueryPack {
     // survivors. Served from the CELL-PARTITIONED index artifact: the
     // probed-cell filter partition-prunes the scan to nprobe/cells of
     // the directories (proven by scan metrics in HybridRetrievalSpec),
-    // and the one corpus join is the broadcast probe attach
+    // and the probes attach as plan literals, with no corpus join
     "x60_ivfpq_topk" -> ((s, dir) => {
       val cents = codebookFor(s, dir)
       val books = pqBooksFor(s, dir)
@@ -1477,7 +1477,7 @@ object PipelinePack extends QueryPack {
       val index = s.read.schema(IvfPqIndexSchema).parquet(path)
         .where(col("cell").isin(probe.cells: _*))
       VectorOps.ivfPqTopKFromIndex(index, emb, QueryVecs, 5, nprobe = 2,
-        cents, books, probes = Some(probe.frame))
+        cents, books, probe = Some(probe))
         .orderBy("query_id", "rn")
     }),
     // IVFADC: residual encoding (codes quantize v − centroid(cell),
@@ -1493,7 +1493,7 @@ object PipelinePack extends QueryPack {
       val index = s.read.schema(IvfPqIndexSchema).parquet(path)
         .where(col("cell").isin(probe.cells: _*))
       VectorOps.ivfPqTopKFromIndex(index, emb, QueryVecs, 5, nprobe = 2,
-        cents, books, residual = true, probes = Some(probe.frame))
+        cents, books, residual = true, probe = Some(probe))
         .orderBy("query_id", "rn")
     }),
     // two-stage refine: ADC shortlist of r=20 from the residual index,
@@ -1510,7 +1510,7 @@ object PipelinePack extends QueryPack {
         .where(col("cell").isin(probe.cells: _*))
       VectorOps.ivfPqRefineTopK(index, emb, QueryVecs, 5, r = 20,
         nprobe = 2, cents, books, residual = true,
-        probes = Some(probe.frame))
+        probe = Some(probe))
         .orderBy("query_id", "rn")
     }),
     // binary quantization: sign bits pack 64 dims into ONE 8-byte long,

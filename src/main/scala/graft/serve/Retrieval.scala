@@ -41,7 +41,18 @@ import org.apache.spark.sql.functions._
   * pruned index read, [[HybridOps.fuse]] — so every scale shape and
   * determinism contract documented on those operators holds unchanged
   * here, and a snapshot serve is equivalence-testable against the
-  * in-memory builds. */
+  * in-memory builds.
+  *
+  * A search's cost is fixed per Spark job, not per byte (8 queries
+  * read ~0.3 MB), so a search runs exactly 5 jobs: the query terms' df
+  * collect, the query-vector collect the probe ranking needs, the `dl`
+  * and refine-shortlist broadcasts, and the fused result. Everything
+  * else the driver already holds enters the plans as literals — the
+  * probe rows and query vectors ([[VectorOps.ProbePlan]]), df, and
+  * BM25's N/avgdl, which this handle computes once per `load`
+  * ([[corpus]]: a published snapshot never changes) — and the
+  * residual decode runs in the native [[graft.functions.PqDecode]]
+  * kernel over primitive codebooks. */
 final class Retrieval private[serve] (spark: SparkSession, dir: String,
     val cents: Seq[Seq[Double]], val books: Seq[Seq[Seq[Double]]]) {
 
@@ -64,10 +75,18 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
   private lazy val index = serve.read
     .schema(Retrieval.IndexSchema).parquet(s"$dir/index")
 
-  /** Dense top-k from the stored index: driver probe ranking → the
-    * probed-cell filter prunes the partitioned index read → residual
-    * ADC on survivors → exact rerank of the refine shortlist against
-    * the float column (bounded lookups, not a scan). The knobs are the
+  /** BM25's corpus constants (N, avgdl) of this snapshot, computed once
+    * per handle: a published snapshot never changes (a rebuild
+    * publishes a new directory that a fresh `load` reads), so every
+    * search reuses them instead of aggregating `dl` again. */
+  private[graft] val corpus: TextOps.Bm25Corpus = TextOps.bm25CorpusOf(dl)
+
+  /** Dense top-k from the stored index: one query-vector collect and
+    * the driver probe ranking → the probed-cell filter prunes the
+    * partitioned index read → residual ADC on survivors (probes and
+    * query vectors attach as plan literals) → exact rerank of the
+    * refine shortlist against the float column (bounded lookups, not a
+    * scan). The knobs are the
     * x91-curve-justified pair ([[VectorOps.RefineShortlist]]'s scaladoc
     * has the measured numbers): nprobe=2 because probe widening buys
     * little recall per doubling of scan cost, r=40 because the refine
@@ -77,13 +96,14 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
     VectorOps.ivfPqRefineTopK(
       index.where(col("cell").isin(probe.cells: _*)),
       emb, queryIds, k, VectorOps.RefineShortlist, Retrieval.Nprobe,
-      cents, books, residual = true, probes = Some(probe.frame))
+      cents, books, residual = true, probe = Some(probe))
   }
 
-  /** Lexical top-k from the stored tf/dl frames — df/N/avgdl derive at
-    * serve through the same path the batch build uses. */
+  /** Lexical top-k from the stored tf/dl frames through the same
+    * scoring chain the batch build uses; the query terms' df is one
+    * collect per call, N/avgdl are the handle's [[corpus]]. */
   def lexicalTopK(queries: Seq[(Long, Seq[String])], k: Int): DataFrame =
-    TextOps.bm25TopKFrom(tf, dl, queries, k)
+    TextOps.bm25TopKFrom(tf, dl, queries, k, corpus = Some(corpus))
 
   /** THE entry: both halves from the stored artifacts, fused under the
     * policy (each query id doubles as its query vector's vec_id — the
@@ -126,15 +146,14 @@ object Retrieval {
     * SQLConf. A serve query's working set is bounded (≤ |queries| ·
     * refine rows past the pruned scans), so the batch session's wide
     * exchanges are pure scheduling overhead here: AQE materializes
-    * every exchange as its own stage-job (measured 21 jobs ≈ 1.9 s for
-    * one hybrid search at sf0.1, wall time dominated by fixed per-job
-    * cost), and 32-task shuffles move a few hundred rows. AQE off + a
-    * narrow shuffle halves the serve latency (measured 0.93 s same
-    * query, same plan results — conf changes execution staging only,
-    * never values). Keyed by context identity (SparkContext does not
-    * override equals), so a restarted context gets a fresh session
-    * instead of a handle executing on a stopped one; UDFs register
-    * once per created session, not once per handle. */
+    * every exchange as its own stage-job, each paying the fixed
+    * per-job cost that dominates a search's wall time, and 32-task
+    * shuffles move a few hundred rows. AQE off + a narrow shuffle keeps
+    * every exchange inside the job that consumes it (conf changes
+    * execution staging only, never values). Keyed by context identity
+    * (SparkContext does not override equals), so a restarted context
+    * gets a fresh session instead of a handle executing on a stopped
+    * one; UDFs register once per created session, not once per handle. */
   private val serveSessions = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext, SparkSession]()
   private def serveSessionFor(spark: SparkSession): SparkSession = {

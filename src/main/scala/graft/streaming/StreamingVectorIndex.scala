@@ -186,8 +186,8 @@ class StreamingVectorIndex(artifactDir: String,
     * cell)` artifact (requires `cents`) — the SAME
     * [[VectorOps.ivfPqTopKFromIndex]] path a batch snapshot serves, so
     * stream ≡ batch is structural: probe ranking on the driver, the
-    * probed-cell filter pruning the candidate frame before the one
-    * broadcast join, residual reconstruction on survivors only. */
+    * probed-cell filter pruning the candidate frame before the literal
+    * probe attach, residual reconstruction on survivors only. */
   def ivfTopK(spark: SparkSession, queryIds: Seq[Long], k: Int,
       nprobe: Int): Option[DataFrame] =
     cents.flatMap { cs =>
@@ -197,7 +197,7 @@ class StreamingVectorIndex(artifactDir: String,
         VectorOps.ivfPqTopKFromIndex(
           m("ivf").where(col("cell").isin(probe.cells: _*)),
           emb, queryIds, k, nprobe, cs, books, residual = true,
-          probes = Some(probe.frame))
+          probe = Some(probe))
       }
     }
 
@@ -207,7 +207,7 @@ class StreamingVectorIndex(artifactDir: String,
     * `cindex` serves (x85), so streamed chunk-dense ≡ batch is
     * structural: resolution re-exposes the composite id the serve
     * decomposes, the probed-cell filter prunes the candidate frame
-    * before the one broadcast join. */
+    * before the literal probe attach. */
   def chunkIvfTopK(spark: SparkSession, queryIds: Seq[Long], k: Int,
       nprobe: Int): Option[DataFrame] =
     // ONE resolution for both frames: separate resolved() calls would
@@ -222,7 +222,7 @@ class StreamingVectorIndex(artifactDir: String,
       val probe = VectorOps.probePlanOf(emb, queryIds, cs, nprobe)
       VectorOps.chunkIvfPqTopKFromIndex(
         cidx.where(col("cell").isin(probe.cells: _*)),
-        emb, queryIds, k, nprobe, cs, books, probes = Some(probe.frame))
+        emb, queryIds, k, nprobe, cs, books, probe = Some(probe))
     }
 
   /** Re-expose the composite id a resolved `civf` slice stores beside

@@ -178,30 +178,27 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"PQ encode must be one map-only scan at any corpus size:\n$plan")
   }
 
-  test("ivf+pq serve: the broadcast probe join prunes cells BELOW the corpus code join") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+  test("ivf+pq serve: the literal probe attach prunes cells BELOW the corpus code join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
     val emb = Tables.embeddings(spark, psf)
     val df = VectorOps.ivfPqTopK(emb, Seq(0L, 1L), 5, 2)
     val opt = df.queryExecution.optimizedPlan
     def keys(j: Join): Set[String] =
       j.condition.toSeq.flatMap(_.references.map(_.name)).toSet
     val joins = opt.collect { case j: Join => j }
-    // the serve plan has exactly two joins: probes⋈cells (prune), then
-    // ⋈recon (score). The cell join must execute FIRST — i.e. sit
-    // INSIDE the vec_id join's subtree — so the corpus-sized code frame
-    // only ever joins the ~nprobe/cells surviving fraction. The reverse
-    // order shuffles both corpus index frames in full per query batch.
-    val vecJoin = joins.find(j => keys(j).contains("vec_id"))
-    assert(vecJoin.nonEmpty, s"no vec_id join in plan:\n$opt")
-    val cellBelow = vecJoin.get.children.exists(_.collect {
-      case j: Join if keys(j).contains("cell") => j
+    // the serve plan has exactly one join, ⋈recon (score); the probes
+    // attach as a literal-map explode (a Generate), not a join. The
+    // attach must execute FIRST — i.e. sit INSIDE the vec_id join's
+    // subtree — so the corpus-sized code frame only ever joins the
+    // ~nprobe/cells surviving fraction. The reverse order shuffles both
+    // corpus index frames in full per query batch.
+    assert(joins.size == 1 && keys(joins.head).contains("vec_id"),
+      s"expected one join, on vec_id:\n$opt")
+    val probeBelow = joins.head.children.exists(_.collect {
+      case g: Generate => g
     }.nonEmpty)
-    assert(cellBelow,
-      s"probe (cell) join is not below the corpus code join — corpus-wide join before pruning:\n$opt")
-    // and no corpus-sized join may sit above an unfiltered cells frame:
-    // the cell join itself must join the broadcast probe frame directly
-    val cellJoins = joins.filter(j => keys(j).contains("cell"))
-    assert(cellJoins.size == 1, s"expected one cell join:\n$opt")
+    assert(probeBelow,
+      s"probe attach is not below the corpus code join — corpus-wide join before pruning:\n$opt")
   }
 
   test("column pruning: a two-column projection reads only those columns") {

@@ -162,6 +162,65 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
       .exists(_.getName.startsWith("snap.old-")), "aside not swept")
   }
 
+  test("a snapshot republished from another corpus scores with the new N and avgdl") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stale")
+      .toString + "/snap"
+    val queries = Seq(0L -> Seq("spark", "join"), 1L -> Seq("vector", "table"))
+    val first = Retrieval.build(docs, emb, dir)
+    // every other doc: N and avgdl move while many matching docs stay
+    val other = docs.where(col("doc_id") % 2 === 0)
+    Retrieval.build(other, emb, dir)
+    val fresh = Retrieval.load(spark, dir)
+    assert(fresh.corpus.n === other.count())
+    assert(fresh.corpus !== first.corpus, "corpus constants unchanged; vacuous")
+    val want = rows(TextOps.bm25TopK(other, queries, 5))
+    assert(want.nonEmpty, "lexical reference empty; test is vacuous")
+    assert(rows(fresh.lexicalTopK(queries, 5)) === want)
+    // the constants matter: the new postings under the old N/avgdl
+    // score differently, so a handle that kept them would be caught
+    val (tf, dl) = TextOps.bm25Stats(other)
+    assert(rows(TextOps.bm25TopKFrom(tf, dl, queries, 5,
+      corpus = Some(first.corpus))) !== want,
+      "stale constants score identically; vacuous")
+  }
+
+  test("one 8-query search over a built snapshot runs at most 5 Spark jobs") {
+    val (_, h) = snap
+    val terms = Seq("spark", "join", "vector", "table", "data")
+    val queries = (0L until 8L).map(q => q -> terms.drop((q % 3).toInt))
+    assert(rows(h.search(queries, 10)).nonEmpty, "search is empty; vacuous")
+    // count between two marker jobs: listener events arrive in order,
+    // so seeing the closing marker means every search job was seen
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val phase = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.map(_.getProperty("spark.job.description")) match {
+          case Some("graft-count-open") => phase.compareAndSet(0, 1)
+          case Some("graft-count-close") => phase.compareAndSet(1, 2)
+          case _ => if (phase.get == 1)
+            sites.add(js.stageInfos.map(_.name).mkString("+"))
+        }
+      }
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("graft-count-open")
+      h.search(queries, 10).collect()
+      marker("graft-count-close")
+      val t0 = System.currentTimeMillis()
+      while (phase.get != 2 && System.currentTimeMillis() - t0 < 10000) Thread.sleep(25)
+      assert(phase.get === 2, "closing marker job never seen")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = sites.toArray.toSeq
+    assert(jobs.size <= 5, s"${jobs.size} jobs per search: ${jobs.mkString("; ")}")
+  }
+
   test("adaptive cell count: build sizes cells ≈ √n and persists them") {
     // the derivation and its clamps (mirrored bit-for-bit by
     // adaptiveCellsSql — round of √integer can't land on .5)

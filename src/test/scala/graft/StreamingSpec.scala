@@ -575,7 +575,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       cents, books)
     val want = rows(VectorOps.chunkIvfPqTopKFromIndex(
       batchIdx.where(col("cell").isin(probe.cells: _*)), liveEmb,
-      queryIds, 5, 2, cents, books, Some(probe.frame)))
+      queryIds, 5, 2, cents, books, Some(probe)))
     assert(want.nonEmpty, "batch chunk-index reference empty; vacuous")
     assert(got === want,
       "streamed chunk-dense serve diverges from the batch cindex build")

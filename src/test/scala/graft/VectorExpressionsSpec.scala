@@ -76,6 +76,55 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSpec {
     f.foreach(r => assert(r.getDouble(0) > 0.0))
   }
 
+  test("pqDecode is bit-identical to the composed residual decode, codegen and interpreted; null in, null out") {
+    import graft.operators.VectorOps
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val rnd = new scala.util.Random(11)
+    val (cells, m, ksub, sub) = (5, 4, 6, 3)
+    val cents = Seq.fill(cells)(Seq.fill(m * sub)(rnd.nextGaussian()))
+    val books = Seq.fill(m)(Seq.fill(ksub)(Seq.fill(sub)(rnd.nextGaussian())))
+    val schema = StructType.fromDDL("vec_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
+    // RDD-backed, so the projection runs in the executors' generated
+    // code instead of being folded on the driver over a LocalRelation
+    def frame(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val df = frame((0 until 300).map(i => Row(i.toLong,
+      Seq.fill(m)(rnd.nextInt(ksub).toLong), rnd.nextInt(cells).toLong)))
+    val cv = element_at(array(cents.map(c => array(c.map(lit): _*)): _*),
+      col("cell").cast("int") + 1)
+    val composed = zip_with(cv, VectorOps.reconOf(col("codes"), books),
+      (x, y) => x + y)
+    val kernel = VectorFunctions.pqDecode(col("codes"), col("cell"), cents, books)
+    // corrupt input: null codes, null cell, a null code, a code and a
+    // cell outside their codebooks, too few codes
+    val bad = frame(Seq(Row(0L, null, 0L), Row(1L, Seq(0L, 0L, 0L, 0L), null),
+      Row(2L, Seq(0L, null, 0L, 0L), 0L), Row(3L, Seq(0L, ksub.toLong, 0L, 0L), 0L),
+      Row(4L, Seq(0L, 0L, 0L, 0L), cells.toLong), Row(5L, Seq(0L, 0L, 0L), 0L)))
+    def bits(r: Row, i: Int) =
+      r.getSeq[Double](i).map(java.lang.Double.doubleToRawLongBits)
+    def run() = (
+      df.select(col("vec_id"), kernel.as("k"), composed.as("c"))
+        .orderBy("vec_id").collect().toSeq,
+      bad.select(kernel.as("k")).collect().toSeq)
+    val (gen, genBad) = run()
+    assert(gen.size === 300)
+    gen.foreach(r => assert(bits(r, 1) === bits(r, 2), s"vec ${r.getLong(0)}"))
+    assert(genBad.size === 6 && genBad.forall(_.isNullAt(0)))
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      val (interp, interpBad) = run()
+      assert(interp.map(bits(_, 1)) === gen.map(bits(_, 1)))
+      assert(interpBad.size === 6 && interpBad.forall(_.isNullAt(0)))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("trained IVF codebook: deterministic, objective strictly improves, recall not degraded") {
     import graft.operators.VectorOps
     val e = Tables.embeddings(spark, sf)
