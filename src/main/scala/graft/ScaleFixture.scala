@@ -29,19 +29,30 @@ object ScaleFixture {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
-    require(factor >= 1 && factor <= 1000, s"bad factor $factor")
+    // copy c disguises its text with rot(c); rot(26) is the identity, so
+    // a 27th copy would repeat copy 0 verbatim
+    require(factor >= 1 && factor <= 26, s"factor $factor outside 1..26")
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val lower = "abcdefghijklmnopqrstuvwxyz"
-    def rot(k: Int) = lower.drop(k % 26) + lower.take(k % 26)
+    def rot(k: Int) = lower.drop(k) + lower.take(k)
+    // copy c offsets its ids by c·IdStride: source ids at or past the
+    // stride would collide with the next copy's
+    val IdStride = 10000000L
+    def belowStride(df: org.apache.spark.sql.DataFrame, id: String) = {
+      val top = df.agg(max(col(id))).head()
+      require(top.isNullAt(0) || top.getAs[Number](0).longValue < IdStride,
+        s"max $id ${top.get(0)} is not below the copy stride $IdStride")
+      df
+    }
 
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = belowStride(spark.read.parquet(s"$srcDir/documents.parquet"), "doc_id")
     (0 until factor).map { c =>
       docs.select(
-        (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
+        (col("doc_id") + lit(c * IdStride)).as("doc_id"),
         (if (c == 0) col("text")
          else translate(col("text"), lower, rot(c))).as("text"),
         col("lang"), col("source"), col("n_chars"))
@@ -49,9 +60,9 @@ object ScaleFixture {
       .repartition(32)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
 
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val emb = belowStride(spark.read.parquet(s"$srcDir/embeddings.parquet"), "vec_id")
     (0 until factor).map { c =>
-      emb.select((col("vec_id") + lit(c * 10000000L)).as("vec_id"),
+      emb.select((col("vec_id") + lit(c * IdStride)).as("vec_id"),
         col("embedding"), col("label"))
     }.reduce(_ unionByName _)
       .repartition(32)

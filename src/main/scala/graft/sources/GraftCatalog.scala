@@ -23,7 +23,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Each `loadTable` re-reads the manifest and returns Spark's native
-  * parquet [[ParquetTable]] over the alias's CURRENT physical dir, so:
+  * parquet [[ParquetTable]] over the alias's CURRENT physical dir, with
+  * the store's memoized schema ([[graft.sync.IndexStore.schemaOf]]) so
+  * a query pays no inference job after the index's first read, and:
   *  - filter/column pushdown work exactly as for any parquet scan (the
   *    scan builder IS the built-in one — nothing reimplemented);
   *  - an alias swap atomically repoints the next query (the K5 commit
@@ -75,13 +77,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val physical = aliases().filter(_ => inScope(ident.namespace)).getOrElse(ident.name,
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Array(catalogName) ++ ident.namespace ++ Array(ident.name)))
-    val path = java.nio.file.Paths.get(root).resolve(physical).toString
+    val path = java.nio.file.Paths.get(root).resolve(physical)
+    val spark = SparkSession.active
     val parquet = ParquetTable(
       s"$catalogName.${ident.name}",
-      SparkSession.active,
+      spark,
       CaseInsensitiveStringMap.empty(),
-      Seq(path),
-      userSpecifiedSchema = None,
+      Seq(path.toString),
+      userSpecifiedSchema = Some(graft.sync.IndexStore.schemaOf(spark, path)),
       fallbackFileFormat = classOf[ParquetFileFormat])
     new GraftCatalog.AliasTable(parquet, ident.name, root, validity)
   }

@@ -159,8 +159,7 @@ class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
             val valid = coalesce(v, lit(false))
             val bad = scoped.where(!valid)
             if (!bad.isEmpty)
-              bad.write.mode("overwrite").parquet(
-                s"${store.root}/${store.RejectPrefix}$idx/gbatch=$stagingSuffix")
+              store.writePhysical(s"${store.RejectPrefix}$idx/gbatch=$stagingSuffix", bad)
             scoped.where(valid)
         }
         bucketed match {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Local-parquet analog of the reference's Elasticsearch cluster: one
   * physical index = one parquet directory under `root`; the alias map =
@@ -18,6 +19,18 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * VIEW": the data move is O(rows) but the commit is O(1), and a failed
   * run leaves only unreferenced staging dirs that `cleanupOrphans`
   * reclaims (K4).
+  *
+  * Read cost: a read lists the index directory (`hasData`, then Spark's
+  * file index) and runs the query's own job. Spark's schema inference,
+  * a job of its own, runs only on the first read of a physical index;
+  * later reads pass the schema memoized by [[IndexStore.schemaOf]]. The
+  * memo is sound because a physical index's columns never change after
+  * its first write: names are unique per write (`{alias}_{ts}`,
+  * `{alias}_ins_{nanos}`), and in-place merges ([[replaceBuckets]]) and
+  * compaction write the same columns. Every method that writes,
+  * promotes into or deletes a directory drops the memo entries on that
+  * path, below it and above it, so a rewritten directory is inferred
+  * afresh.
   */
 class IndexStore(val spark: SparkSession, val root: String,
     staleStageGraceMs: Long = IndexStore.DefaultStaleStageGraceMs) {
@@ -28,7 +41,7 @@ class IndexStore(val spark: SparkSession, val root: String,
   // writes would be invisible to predicate pushdown and row-group
   // skipping, so incremental watermark scans (S2) would read whole
   // indexes. INT64 micros matches the envelope's semantics exactly and
-  // restores both. (Spec: "time-sorted layout … skips row groups".)
+  // restores both.
   //
   // SESSION-WIDE SIDE EFFECT, deliberately: this is a SQL conf, not a
   // per-write option (ParquetOptions exposes no outputTimestampType),
@@ -77,11 +90,14 @@ class IndexStore(val spark: SparkSession, val root: String,
   /** Read the live data behind an alias (None if unbound or physically
     * empty). */
   def read(alias: String): Option[DataFrame] =
-    aliases().get(alias).filter(indexExists).filter(hasData)
-      .map(p => spark.read.parquet(rootPath.resolve(p).toString))
+    aliases().get(alias).filter(indexExists).filter(hasData).map(readPhysical)
 
-  def readPhysical(name: String): DataFrame =
-    spark.read.parquet(rootPath.resolve(name).toString)
+  /** A physical index read with its memoized schema: no inference job
+    * after the directory's first read. */
+  def readPhysical(name: String): DataFrame = {
+    val dir = rootPath.resolve(name)
+    spark.read.schema(IndexStore.schemaOf(spark, dir)).parquet(dir.toString)
+  }
 
   /** Doc count of the live index behind an alias (ES `es.count`). A
     * Spark count job — cheap for parquet (satisfied from row-group
@@ -126,30 +142,10 @@ class IndexStore(val spark: SparkSession, val root: String,
     * 500-action bulk batches, flows/main_flow.py:414): it caps the unit
     * of work a retry re-does and what a reader must buffer. */
   def writePhysical(name: String, df: DataFrame,
-      maxRecordsPerFile: Option[Int] = None): Unit = {
+      maxRecordsPerFile: Option[Int] = None): Unit = rewriting(name) {
     val w = df.write.mode(SaveMode.Overwrite)
     maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
     w.parquet(rootPath.resolve(name).toString)
-  }
-
-  /** K2 variant — write a physical index RANGE-SORTED on a column
-    * (global range partitioning + in-file sort). Parquet keeps min/max
-    * statistics per row group, so a pushed range predicate on the sort
-    * column (the CDC watermark scan S2, time-window reads) skips whole
-    * row groups without touching their pages — on a 100 TB index the
-    * incremental scan's cost becomes ∝ |rows after the watermark|, not
-    * |index|. `blockSize` bounds the row-group granularity (the skip
-    * unit); the layout is orthogonal to the id-hash-bucketed one, which
-    * optimizes point merges instead of range scans. Row-group skipping
-    * is spec-asserted via scan output-row metrics. */
-  def writePhysicalSorted(name: String, df: DataFrame, sortCol: String,
-      files: Int = 8, blockSize: Long = 128L * 1024 * 1024): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.repartitionByRange(files, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", blockSize)
-      .parquet(rootPath.resolve(name).toString)
   }
 
   // --- bucketed layout (in-place incremental merges) ----------------------
@@ -168,7 +164,7 @@ class IndexStore(val spark: SparkSession, val root: String,
     * after a [[graft.sync.SyncPipeline.rescaleBuckets]] can never use a
     * stale count. */
   def writePhysicalBucketed(name: String, df: DataFrame, idCol: String,
-      buckets: Int): Unit = {
+      buckets: Int): Unit = rewriting(name) {
     df.withColumn(BucketKey, bucketExpr(idCol, buckets))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketKey)
@@ -334,7 +330,7 @@ class IndexStore(val spark: SparkSession, val root: String,
     * partition level under each index — still one scan. */
   def writePartitionedStage(stageName: String, df: DataFrame,
       partCol: String, maxRecordsPerFile: Option[Int] = None,
-      splitCol: Option[String] = None): Unit = {
+      splitCol: Option[String] = None): Unit = rewriting(stageName) {
     import org.apache.spark.sql.functions.{col, concat, lit}
     // the tag prefix keeps every partition value non-numeric, so reading
     // the stage back can never mangle a numeric-looking index name
@@ -360,10 +356,9 @@ class IndexStore(val spark: SparkSession, val root: String,
   def promoteSlice(stageName: String, dirName: String, physical: String): Boolean = {
     val slice = rootPath.resolve(stageName).resolve(dirName)
     if (!Files.isDirectory(slice)) false
-    else {
-      val target = rootPath.resolve(physical)
+    else rewriting(physical) {
       deletePhysical(physical)
-      Files.move(slice, target, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(slice, rootPath.resolve(physical), StandardCopyOption.ATOMIC_MOVE)
       true
     }
   }
@@ -374,7 +369,7 @@ class IndexStore(val spark: SparkSession, val root: String,
     * the valid/reject fork of the error-tolerant sink. One scan writes
     * both sides. */
   def writeSplitStage(stageName: String, df: DataFrame, splitCol: String,
-      maxRecordsPerFile: Option[Int] = None): Unit = {
+      maxRecordsPerFile: Option[Int] = None): Unit = rewriting(stageName) {
     val w = df.write.mode(SaveMode.Overwrite).partitionBy(splitCol)
     maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
     w.parquet(rootPath.resolve(stageName).toString)
@@ -469,7 +464,7 @@ class IndexStore(val spark: SparkSession, val root: String,
 
   /** K3 — rollback hook: delete a staged physical index after a failed
     * build (reference delete_indexes on_failure, flows/main_flow.py:195-214). */
-  def deletePhysical(name: String): Unit = {
+  def deletePhysical(name: String): Unit = rewriting(name) {
     val dir = rootPath.resolve(name)
     if (Files.exists(dir)) {
       Using.resource(Files.walk(dir)) { s =>
@@ -478,6 +473,11 @@ class IndexStore(val spark: SparkSession, val root: String,
       }
     }
   }
+
+  /** Runs a write, promote or delete of `name`, then drops the schema
+    * memo on that path, even if the body failed part-way. */
+  private def rewriting[A](name: String)(body: => A): A =
+    try body finally IndexStore.forget(rootPath.resolve(name))
 
   /** K4 — orphan cleanup: drop every physical index not bound by any
     * alias (reference cleanup_indexes, flows/main_flow.py:488-520 keeps
@@ -501,6 +501,49 @@ class IndexStore(val spark: SparkSession, val root: String,
 }
 
 object IndexStore {
+  private val schemas = scala.collection.mutable.HashMap.empty[String, StructType]
+  /** An inference in flight; a [[forget]] of an overlapping path while it
+    * runs marks it stale, and a stale result is returned but not kept. */
+  private final class Inference(val key: String) { var stale = false }
+  private val inflight = scala.collection.mutable.Set.empty[Inference]
+
+  private def keyOf(dir: Path): String = dir.toAbsolutePath.normalize.toString
+
+  /** `a` is `b`, or lies below or above it. */
+  private def overlaps(a: String, b: String): Boolean = {
+    val sep = java.io.File.separator
+    a == b || a.startsWith(b + sep) || b.startsWith(a + sep)
+  }
+
+  /** The schema of the parquet directory `dir`, inferred by Spark on the
+    * first call and memoized by absolute path after it. Sound only for
+    * directories whose columns never change once written, which holds
+    * for the store's physical indexes (see [[IndexStore]]); the store
+    * [[forget]]s every path it rewrites. */
+  def schemaOf(spark: SparkSession, dir: Path): StructType = {
+    val key = keyOf(dir)
+    synchronized(schemas.get(key)).getOrElse {
+      val inference = new Inference(key)
+      synchronized(inflight += inference)
+      try {
+        val inferred = spark.read.parquet(key).schema
+        synchronized { if (!inference.stale) schemas(key) = inferred }
+        inferred
+      } finally synchronized(inflight -= inference)
+    }
+  }
+
+  /** Drops the memoized schemas of `dir`, of every directory below it
+    * and of every directory above it (a directory's inferred schema
+    * covers the files of its subdirectories). */
+  private[sync] def forget(dir: Path): Unit = {
+    val key = keyOf(dir)
+    synchronized {
+      schemas.filterInPlace((k, _) => !overlaps(k, key))
+      inflight.filter(i => overlaps(i.key, key)).foreach(_.stale = true)
+    }
+  }
+
   /** Stage dirs younger than this survive bootstrap cleanup — long
     * enough to protect another process's in-flight publish, short
     * enough that a crashed run's stage reclaims on the next boot. */
