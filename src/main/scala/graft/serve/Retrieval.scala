@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.operators.{HybridOps, TextOps, VectorOps}
+import graft.sync.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -220,14 +221,13 @@ object Retrieval {
     val books = VectorOps.pqResidualCodebooks(embeddings, cents)
     writeBooks(staged.toPath.resolve("codebook.txt"), cents)
     writeBooks(staged.toPath.resolve("pqbooks.txt"), books.flatten)
-    VectorOps.ivfPqIndex(embeddings, cents, books, residual = true)
-      .write.partitionBy("cell").mode(SaveMode.Overwrite)
-      .parquet(s"$staged/index")
-    embeddings.select("vec_id", "embedding")
-      .write.mode(SaveMode.Overwrite).parquet(s"$staged/emb")
+    NioLocalFileSystem.parquet(VectorOps.ivfPqIndex(embeddings, cents, books, residual = true)
+      .write.partitionBy("cell").mode(SaveMode.Overwrite), s"$staged/index")
+    NioLocalFileSystem.parquet(embeddings.select("vec_id", "embedding")
+      .write.mode(SaveMode.Overwrite), s"$staged/emb")
     val (tf, dl) = TextOps.bm25Stats(docs)
-    tf.write.mode(SaveMode.Overwrite).parquet(s"$staged/tf")
-    dl.write.mode(SaveMode.Overwrite).parquet(s"$staged/dl")
+    NioLocalFileSystem.parquet(tf.write.mode(SaveMode.Overwrite), s"$staged/tf")
+    NioLocalFileSystem.parquet(dl.write.mode(SaveMode.Overwrite), s"$staged/dl")
     publish(staged, dir)
     load(spark, dir)
   }

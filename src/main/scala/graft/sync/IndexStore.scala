@@ -30,7 +30,9 @@ import org.apache.spark.sql.types.StructType
   * compaction write the same columns. Every method that writes,
   * promotes into or deletes a directory drops the memo entries on that
   * path, below it and above it, so a rewritten directory is inferred
-  * afresh.
+  * afresh. A slice promoted out of a stage this store wrote is memoized
+  * at the promote from the stage's written columns, with no inference
+  * job.
   */
 class IndexStore(val spark: SparkSession, val root: String,
     staleStageGraceMs: Long = IndexStore.DefaultStaleStageGraceMs) {
@@ -145,7 +147,7 @@ class IndexStore(val spark: SparkSession, val root: String,
       maxRecordsPerFile: Option[Int] = None): Unit = rewriting(name) {
     val w = df.write.mode(SaveMode.Overwrite)
     maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
-    w.parquet(rootPath.resolve(name).toString)
+    NioLocalFileSystem.parquet(w, rootPath.resolve(name).toString)
   }
 
   // --- bucketed layout (in-place incremental merges) ----------------------
@@ -165,12 +167,14 @@ class IndexStore(val spark: SparkSession, val root: String,
     * stale count. */
   def writePhysicalBucketed(name: String, df: DataFrame, idCol: String,
       buckets: Int): Unit = rewriting(name) {
-    df.withColumn(BucketKey, bucketExpr(idCol, buckets))
+    NioLocalFileSystem.parquet(df.withColumn(BucketKey, bucketExpr(idCol, buckets))
       .write.mode(SaveMode.Overwrite)
-      .partitionBy(BucketKey)
-      .parquet(rootPath.resolve(name).toString)
-    Files.writeString(rootPath.resolve(name).resolve(BucketMetaFile), buckets.toString)
+      .partitionBy(BucketKey), rootPath.resolve(name).toString)
+    writeBucketCount(name, buckets)
   }
+
+  private def writeBucketCount(name: String, buckets: Int): Unit =
+    Files.writeString(rootPath.resolve(name).resolve(BucketMetaFile), buckets.toString)
 
   /** The bucket count a bucketed physical index was written with (None
     * for pre-metadata or non-bucketed indexes). */
@@ -196,9 +200,8 @@ class IndexStore(val spark: SparkSession, val root: String,
   def replaceBuckets(name: String, df: DataFrame, affected: Seq[Long]): Unit = {
     val tag = System.nanoTime()
     val stage = s"_merge_${name.replace('/', '_')}_$tag"
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(BucketKey)
-      .parquet(rootPath.resolve(stage).toString)
+    NioLocalFileSystem.parquet(df.write.mode(SaveMode.Overwrite).partitionBy(BucketKey),
+      rootPath.resolve(stage).toString)
     try {
       affected.foreach { b =>
         val src = rootPath.resolve(stage).resolve(s"$BucketKey=$b")
@@ -299,24 +302,6 @@ class IndexStore(val spark: SparkSession, val root: String,
     stale.sorted
   }
 
-  /** Per-index poison-row counts of a validity-split stage, in ONE job
-    * reading only partition columns (directory structure — no data
-    * pages). Keys are the original index names ([[PartTag]] stripped —
-    * the tag guarantees inference kept them strings). Empty when the
-    * stage is missing, empty, or not split. */
-  def stageRejectCounts(stageName: String, splitCol: String): Map[String, Long] = {
-    import org.apache.spark.sql.functions.col
-    if (!indexExists(stageName) || !hasData(stageName)) Map.empty
-    else {
-      val df = readPhysical(stageName)
-      if (!df.columns.contains(splitCol) || !df.columns.contains(PartKey)) Map.empty
-      else df.where(!col(splitCol)).groupBy(col(PartKey)).count()
-        .collect()
-        .map(r => String.valueOf(r.get(0)).stripPrefix(PartTag) -> r.getLong(1))
-        .toMap
-    }
-  }
-
   private val PartTag = "i_"
 
   val BucketKey = "_id_bucket"
@@ -325,40 +310,68 @@ class IndexStore(val spark: SparkSession, val root: String,
     * index's slice, hash-partitioned into per-index directories
     * (`partitionBy` on a duplicated key column, so data files keep the
     * full envelope). This replaces N per-index scans of the source —
-    * the difference between 1× and N× I/O at 100 TB. An optional
-    * `splitCol` (e.g. the tolerant sink's validity flag) adds a second
-    * partition level under each index — still one scan. */
-  def writePartitionedStage(stageName: String, df: DataFrame,
-      partCol: String, maxRecordsPerFile: Option[Int] = None,
-      splitCol: Option[String] = None): Unit = rewriting(stageName) {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    // the tag prefix keeps every partition value non-numeric, so reading
-    // the stage back can never mangle a numeric-looking index name
-    // through partition-type inference ("0123" → 123)
-    val w = df.withColumn(PartKey, concat(lit(PartTag), col(partCol)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(PartKey +: splitCol.toSeq: _*)
-    maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
-    w.parquet(rootPath.resolve(stageName).toString)
-  }
+    * the difference between 1× and N× I/O at 100 TB. `subParts` (e.g.
+    * the tolerant sink's validity flag, the id-hash bucket) add
+    * partition levels under each index — still one scan.
+    *
+    * Rows are sorted by the partition columns and then `sortCol` within
+    * each task: that is the order the partitioned writer needs, so it
+    * adds no sort of its own, and each file keeps `sortCol` order (tight
+    * min/max stats for id-keyed reads). With `clustered`, the frame is
+    * first repartitioned by every partition column, so each leaf
+    * partition is written by one task: one file per leaf, unless
+    * `maxRecordsPerFile` splits it. */
+  def writePartitionedStage(stageName: String, df: DataFrame, partCol: String,
+      subParts: Seq[String], sortCol: String, clustered: Boolean,
+      maxRecordsPerFile: Option[Int]): Unit =
+    rewriting(stageName) {
+      import org.apache.spark.sql.functions.{col, concat, lit}
+      val parts = PartKey +: subParts
+      // the tag prefix keeps every partition value non-numeric, so reading
+      // a slice back can never mangle a numeric-looking index name
+      // through partition-type inference ("0123" → 123)
+      val tagged = df.withColumn(PartKey, concat(lit(PartTag), col(partCol)))
+      val spread = if (clustered) tagged.repartition(parts.map(col): _*) else tagged
+      val w = spread.sortWithinPartitions((parts :+ sortCol).map(col): _*)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(parts: _*)
+      maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
+      NioLocalFileSystem.parquet(w, rootPath.resolve(stageName).toString)
+      staged(stageName, tagged, parts)
+    }
+
+  /** The data schema (partition columns excluded) of each stage written
+    * and not yet dropped: every data file of the stage has it, so a slice
+    * promoted out of it gets its schema memoized without an inference
+    * job. */
+  private val stageSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  // parquet files carry the all-nullable form of the written columns
+  private def staged(stageName: String, df: DataFrame, parts: Seq[String]): Unit =
+    stageSchemas.put(stageName, org.apache.spark.sql.graft.Bridge.asNullable(
+      StructType(df.schema.filterNot(f => parts.contains(f.name)))))
 
   /** Directory name of one index's slice inside a partitioned stage. */
   def partSliceDir(partValue: String): String = s"$PartKey=$PartTag$partValue"
 
-  /** Promote one index's slice out of a partitioned stage into its own
-    * physical index (directory rename — O(1), no data move). Returns
-    * false if the stage holds no slice for the value (zero-row index). */
-  def promoteStaged(stageName: String, partValue: String, physical: String): Boolean =
-    promoteSlice(stageName, partSliceDir(partValue), physical)
-
-  /** Move one named partition dir out of a stage (O(1) rename); false if
-    * the stage holds no such dir. */
-  def promoteSlice(stageName: String, dirName: String, physical: String): Boolean = {
+  /** Move one partition dir (`dirName`, relative to the stage) out of a
+    * stage to `physical` (O(1) rename, no data move), creating the
+    * target's parent dirs; false if the stage holds no such dir. With
+    * `buckets` set, the promoted dir is a bucketed index and gets its
+    * bucket-count metadata (see [[writePhysicalBucketed]]). */
+  def promoteSlice(stageName: String, dirName: String, physical: String,
+      buckets: Option[Int] = None): Boolean = {
     val slice = rootPath.resolve(stageName).resolve(dirName)
+    val target = rootPath.resolve(physical)
     if (!Files.isDirectory(slice)) false
-    else rewriting(physical) {
-      deletePhysical(physical)
-      Files.move(slice, rootPath.resolve(physical), StandardCopyOption.ATOMIC_MOVE)
+    else {
+      rewriting(physical) {
+        deletePhysical(physical)
+        Files.createDirectories(target.getParent)
+        Files.move(slice, target, StandardCopyOption.ATOMIC_MOVE)
+        buckets.foreach(writeBucketCount(physical, _))
+      }
+      Option(stageSchemas.get(stageName)).foreach(IndexStore.seed(spark, target, _))
       true
     }
   }
@@ -372,7 +385,8 @@ class IndexStore(val spark: SparkSession, val root: String,
       maxRecordsPerFile: Option[Int] = None): Unit = rewriting(stageName) {
     val w = df.write.mode(SaveMode.Overwrite).partitionBy(splitCol)
     maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
-    w.parquet(rootPath.resolve(stageName).toString)
+    NioLocalFileSystem.parquet(w, rootPath.resolve(stageName).toString)
+    staged(stageName, df, Seq(splitCol))
   }
 
   /** Quarantined rows of a physical index's last tolerant write (None if
@@ -408,7 +422,10 @@ class IndexStore(val spark: SparkSession, val root: String,
   val RejectPrefix = "_rejects_"
 
   /** Remove a partitioned stage dir (after all promotes, or on failure). */
-  def dropStage(stageName: String): Unit = deletePhysical(stageName)
+  def dropStage(stageName: String): Unit = {
+    stageSchemas.remove(stageName)
+    deletePhysical(stageName)
+  }
 
   /** Operational statistics for one live index (the ANALYZE surface an
     * operator consults before re-bucketing or compacting): row count,
@@ -520,13 +537,22 @@ object IndexStore {
     * directories whose columns never change once written, which holds
     * for the store's physical indexes (see [[IndexStore]]); the store
     * [[forget]]s every path it rewrites. */
-  def schemaOf(spark: SparkSession, dir: Path): StructType = {
+  def schemaOf(spark: SparkSession, dir: Path): StructType =
+    memo(dir)(spark.read.parquet(_).schema)
+
+  /** Memoizes the schema of `dir`, whose data files all have the data
+    * schema `data`: Spark then infers only the partition columns, from
+    * directory names — a listing, no job. */
+  private[sync] def seed(spark: SparkSession, dir: Path, data: StructType): Unit =
+    memo(dir)(spark.read.schema(data).parquet(_).schema)
+
+  private def memo(dir: Path)(infer: String => StructType): StructType = {
     val key = keyOf(dir)
     synchronized(schemas.get(key)).getOrElse {
       val inference = new Inference(key)
       synchronized(inflight += inference)
       try {
-        val inferred = spark.read.parquet(key).schema
+        val inferred = infer(key)
         synchronized { if (!inference.stale) schemas(key) = inferred }
         inferred
       } finally synchronized(inflight -= inference)

@@ -31,9 +31,11 @@ case class IndexSyncReport(
   * count reconciliation.
   *
   * Scale design:
-  *  - the FULL sync stages every index in ONE pass over the source
+  *  - the FULL sync, flat or bucketed, is planned by one grouped
+  *    aggregate and stages every index in ONE write over the source
   *    (`partitionBy` staging + O(1) directory promotes) — never N scans
-  *    of a 100 TB table;
+  *    of a 100 TB table — with its per-index counts observed on that
+  *    write;
   *  - the incremental merge is an id-keyed anti-join ∪ union — shuffle
   *    on `id` only for the one index being merged, broadcastable when
   *    the batch is small — with upsert/delete tallies taken via
@@ -59,17 +61,12 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     parallelLargest: Int = 2,
     validity: Option[org.apache.spark.sql.Column] = None) {
 
-  /** Index list selection (reference get_indexes_list /
-    * lowercased user list, flows/main_flow.py:633-640). */
-  def selectIndexes(env: DataFrame, requested: Option[Seq[String]]): Seq[String] =
-    requested match {
-      case Some(xs) => xs.map(_.toLowerCase)
-      case None => IndexerOps.indexList(env).collect().map(_.getString(0)).toSeq.sorted
-    }
-
   /** Smallest-first execution order + per-index high-water mark, in ONE
     * aggregate job (A1∘O1; reference flows/main_flow.py:658-673): one
-    * row per index comes back to the driver. */
+    * row per index comes back to the driver. The syncs themselves plan
+    * through the round aggregate ([[planRound]]); this stand-alone form
+    * is kept for the benchmark's traced run, which times it as the
+    * planning cost of a source scan. */
   def planOrder(env: DataFrame, indexes: Seq[String]): Seq[(String, Long, Option[String])] =
     env.where(col(Idx).isin(indexes: _*))
       .groupBy(Idx)
@@ -92,7 +89,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
   private case class IndexPlan(index: String, docs: Long, hwm: Option[String],
       wm: String, changed: Long, buckets: Seq[Long])
 
-  /** Plans a CDC round in ONE grouped aggregate over the source,
+  /** Plans a sync round in ONE grouped aggregate over the source,
     * collected to the driver: per index, its row count, high-water mark,
     * changed-row count and (with `buckets` set) affected buckets. The
     * per-index watermarks and bucket counts are driver-side lookups (the
@@ -100,7 +97,8 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     * as map literals, and the smallest-first order is a driver-side sort
     * by `(count, idx)` — so planning costs one aggregate however many
     * indexes the source holds. Indexes absent from the source are not
-    * planned. */
+    * planned. A full sync reads only the index list, counts, order and
+    * high-water marks. */
   private def planRound(env: DataFrame, requested: Option[Seq[String]],
       buckets: Option[Int]): Seq[IndexPlan] = {
     // an index with no watermark of its own syncs from the global one
@@ -289,83 +287,118 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
         val bad = df.where(!valid)
         val n = bad.count()
         if (n > 0) {
-          val slice = s"${store.RejectPrefix}$name/gbatch=sync_${System.nanoTime()}"
+          val slice = quarantineBatch(name)
           retry.retry(() => store.writePhysical(slice, bad, None))
         }
         (df.where(valid), n)
     }
 
-  /** Full blue/green sync (T4; reference main_flow full_sync branch):
-    * ONE partitioned scan stages every index, then each index is
-    * promoted (O(1) rename), swapped, and counted — the largest
-    * `parallelLargest` of them concurrently (T9; reference tags the two
-    * largest for parallel runs, flows/main_flow.py:721). A failure rolls
-    * back the stage and any unswapped promotes (T8) and rethrows. */
+  /** A fresh batch dir under `name`'s quarantine: the bucketed layout's
+    * quarantine accumulates one such dir per sync that rejected rows. */
+  private def quarantineBatch(name: String): String =
+    s"${store.RejectPrefix}$name/gbatch=sync_${System.nanoTime()}"
+
+  /** Full blue/green sync (T4; reference main_flow full_sync branch),
+    * flat or, with `buckets` set, in the id-hash-bucket layout the
+    * in-place incremental path merges into. One grouped aggregate plans
+    * it (the index list, the smallest-first order and each index's
+    * high-water mark, [[planRound]]); ONE scan of the source then stages
+    * every index in one write, partitioned by index (and by validity and
+    * bucket, when set); each index's slice is promoted (O(1) rename) and
+    * its alias swapped, smallest first (renames, so `parallelLargest`
+    * has nothing to overlap here). A bucketed stage is first
+    * repartitioned by (index, bucket), so each bucket of each index is
+    * one file, the layout merges and compaction keep. Per-index live
+    * and reject counts are observed on the stage write — no count job
+    * per index. A requested index the source lacks publishes empty. A
+    * failure rolls back the stage and any unswapped promotes (T8) and
+    * rethrows. */
   def fullSync(env: DataFrame, indexes: Option[Seq[String]] = None,
-      timestamp: String): Seq[IndexSyncReport] = {
-    val selected = selectIndexes(env, indexes)
-    if (selected.isEmpty) return Seq.empty // empty → early exit (:648-650)
-    val order = planOrder(env, selected)
+      timestamp: String, buckets: Option[Int] = None): Seq[IndexSyncReport] = {
+    val plan = planRound(env, indexes, buckets = None)
+    val planned = plan.map(_.index)
+    val absent = indexes.toSeq.flatten.map(_.toLowerCase).distinct.filterNot(planned.contains)
+    val order = absent.sorted ++ planned
+    if (order.isEmpty) return Seq.empty // empty → early exit (:648-650)
     val stage = s"_stage_$timestamp"
+    def physical(idx: String) = s"${idx}_$timestamp"
     val done =
       try {
-        // sortWithinPartitions: id-ordered rows per file → parquet min/max
-        // stats prune id-keyed merge reads; in-task sort, no extra job.
-        // With a validity predicate, the same single scan also splits
-        // each index's slice into valid/poison sub-dirs (tolerant K1).
-        val scan = IndexerOps.fullSyncScan(env, selected).sortWithinPartitions(Idx, Id)
-        validity match {
-          case Some(_) =>
-            retry.retry(() => store.writePartitionedStage(
-              stage, scan.withColumn(ValidKey, validCol), Idx, writeChunk, Some(ValidKey)))
-          case None =>
-            retry.retry(() => store.writePartitionedStage(stage, scan, Idx, writeChunk))
-        }
-        // per-index reject tallies in ONE partition-column-only job over
-        // the staged split (never a per-index count; empty when no
-        // validity predicate is set)
-        val rejectCounts =
-          if (validity.isDefined) store.stageRejectCounts(stage, ValidKey) else Map.empty[String, Long]
-
-        def publish(idx: String): IndexSyncReport = {
-          val staged = s"${idx}_$timestamp"
-          val promoted = validity match {
-            case Some(_) =>
-              val got = store.promoteSlice(
-                stage, s"${store.partSliceDir(idx)}/$ValidKey=true", staged)
-              store.promoteSlice(stage, s"${store.partSliceDir(idx)}/$ValidKey=false",
+        val counts = if (planned.isEmpty) Map.empty[String, (Long, Long)]
+          else stageAll(stage, env, planned, buckets)
+        val reports = order.map { idx =>
+          val slice = store.partSliceDir(idx)
+          val staged = physical(idx)
+          val validSlice = if (validity.isDefined) s"$slice/$ValidKey=true" else slice
+          if (!store.promoteSlice(stage, validSlice, staged, buckets)) {
+            // no valid row for this index: publish it empty
+            val empty = IndexerOps.fullSyncScan(env, Seq(idx)).limit(0)
+            retry.retry(() => buckets match {
+              case Some(n) => store.writePhysicalBucketed(staged, empty, Id, n)
+              case None => store.writePhysical(staged, empty)
+            })
+          }
+          // the quarantine keeps each layout's shape: a flat index's rows
+          // at its root, a bucketed index's in a batch dir (its poison rows
+          // staged under a null bucket)
+          if (validity.isDefined)
+            buckets match {
+              case Some(_) => store.promoteSlice(stage,
+                s"$slice/$ValidKey=false/${store.BucketKey}=$NullPartition", quarantineBatch(staged))
+              case None => store.promoteSlice(stage, s"$slice/$ValidKey=false",
                 s"${store.RejectPrefix}$staged")
-              got
-            case None => store.promoteStaged(stage, idx, staged)
-          }
-          var rejects = rejectCounts.getOrElse(idx, 0L)
-          if (!promoted) {
-            // zero valid rows for this index: stage holds no slice — write
-            // an empty (schema-bearing) physical index instead (under the
-            // same retry policy as every other store write).
-            rejects = writeStaged(staged, IndexerOps.fullSyncScan(env, Seq(idx)))
-          }
+            }
           store.swapAlias(idx, staged)
-          IndexSyncReport(idx, staged, "full",
-            upserts = store.count(idx), deletes = 0L, rejects = rejects)
+          val (live, rejects) = counts.getOrElse(idx, (0L, 0L))
+          IndexSyncReport(idx, staged, "full", live, 0L, rejects)
         }
-        val reports = runSmallestFirstLargestParallel(order.map(_._1))(publish)
         store.dropStage(stage) // promotes moved every slice out; drop husk
         reports
       } catch {
         case NonFatal(e) =>
           store.dropStage(stage)
-          selected.foreach { idx =>
-            if (store.aliases().get(idx).forall(_ != s"${idx}_$timestamp")) {
-              store.deletePhysical(s"${idx}_$timestamp") // T8 rollback
-              store.deletePhysical(s"${store.RejectPrefix}${idx}_$timestamp")
+          order.foreach { idx =>
+            if (store.aliases().get(idx).forall(_ != physical(idx))) {
+              store.deletePhysical(physical(idx)) // T8 rollback
+              store.deletePhysical(s"${store.RejectPrefix}${physical(idx)}")
             }
           }
           throw e
       }
     store.cleanupOrphans() // K4, scheduled on the full-sync branch (:652-656)
-    saveWatermarks(order.map(o => o._1 -> o._3))
+    saveWatermarks(plan.map(p => p.index -> p.hwm))
     done
+  }
+
+  /** Directory name Spark gives a null partition value. */
+  private val NullPartition = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
+  /** Stages `indexes` of `env` in ONE write (under the retry policy) and
+    * returns each index's (valid, rejected) row counts, observed on that
+    * write; an index whose metrics AQE pruned away counts 0. */
+  private def stageAll(stage: String, env: DataFrame, indexes: Seq[String],
+      buckets: Option[Int]): Map[String, (Long, Long)] = {
+    val valid = if (validity.isDefined) validCol else lit(true)
+    val metrics = indexes.zipWithIndex.flatMap { case (idx, i) =>
+      val mine = col(Idx) === idx
+      Seq(count_if(mine && valid).as(s"live_$i"), count_if(mine && !valid).as(s"rejects_$i"))
+    }
+    retry.retry { () =>
+      val obs = new Observation(s"graft_full_${System.nanoTime()}")
+      val scan = IndexerOps.fullSyncScan(env, indexes).observe(obs, metrics.head, metrics.tail: _*)
+      val split = validity.fold(scan)(_ => scan.withColumn(ValidKey, valid))
+      // poison rows get a null bucket: one quarantine dir per index
+      val placed = buckets.fold(split) { n =>
+        val bucket = store.bucketExpr(Id, n)
+        split.withColumn(store.BucketKey, validity.fold(bucket)(_ => when(col(ValidKey), bucket)))
+      }
+      store.writePartitionedStage(stage, placed, Idx,
+        subParts = validity.map(_ => ValidKey).toSeq ++ buckets.map(_ => store.BucketKey),
+        sortCol = Id, clustered = buckets.isDefined, maxRecordsPerFile = writeChunk)
+      val m = obs.get
+      def got(k: String) = m.get(k).fold(0L)(_.asInstanceOf[Long])
+      indexes.zipWithIndex.map { case (idx, i) => idx -> (got(s"live_$i"), got(s"rejects_$i")) }.toMap
+    }
   }
 
   /** Smallest first, with the tail (largest) `parallelLargest` indexes
@@ -516,32 +549,11 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     reports
   }
 
-  /** Bucketed bootstrap for the in-place incremental path: per-index
-    * full scan written in the id-hash-bucket layout. */
+  /** Bucketed bootstrap for the in-place incremental path: the full
+    * sync in the id-hash-bucket layout. */
   def fullSyncBucketed(env: DataFrame, indexes: Option[Seq[String]] = None,
-      timestamp: String, buckets: Int = 64): Seq[IndexSyncReport] = {
-    val selected = selectIndexes(env, indexes)
-    if (selected.isEmpty) return Seq.empty
-    val order = planOrder(env, selected)
-    def publish(idx: String): IndexSyncReport = {
-      val staged = s"${idx}_$timestamp"
-      try {
-        val (good, rejects) =
-          quarantineSplit(IndexerOps.fullSyncScan(env, Seq(idx)), staged)
-        store.writePhysicalBucketed(staged, good, Id, buckets)
-        store.swapAlias(idx, staged)
-        IndexSyncReport(idx, staged, "full", store.count(idx), 0L, rejects)
-      } catch {
-        case NonFatal(e) =>
-          store.deletePhysical(staged) // T8
-          store.deletePhysical(s"${store.RejectPrefix}$staged")
-          throw e
-      }
-    }
-    val reports = runSmallestFirstLargestParallel(order.map(_._1))(publish)
-    saveWatermarks(order.map(o => o._1 -> o._3))
-    reports
-  }
+      timestamp: String, buckets: Int = 64): Seq[IndexSyncReport] =
+    fullSync(env, indexes, timestamp, Some(buckets))
 
   /** Re-bucket a bucketed index to a new bucket count — the growth path
     * of the in-place layout: bucket count is fixed at bootstrap, so at

@@ -500,10 +500,9 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(sizeSensitive.count("view") > 0)
   }
 
-  test("full sync stages all indexes in ONE write job (single source pass)") {
-    val (store, _, pipe, _) = freshPipeline()
-    // track jobs that wrote records: single-pass staging = exactly one
-    // write job with records (empty-index fallbacks write 0 records)
+  /** The Spark jobs that wrote records during `body`, with their record
+    * counts, once `expect` records in all have been seen. */
+  private def recordWritingJobs(expect: Long)(body: => Unit): Map[Int, Long] = {
     val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     val jobsWithOutput = scala.collection.concurrent.TrieMap.empty[Int, Long]
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -516,12 +515,20 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
         }
       }
     }
-    val expectStaged = env.where(!col(IsDeleted) && col(Idx).isNotNull).count()
     spark.sparkContext.addSparkListener(listener)
     try {
-      pipe.fullSync(env, None, timestamp = "t1")
-      eventually(jobsWithOutput.values.sum == expectStaged)
+      body
+      eventually(jobsWithOutput.values.sum == expect)
     } finally spark.sparkContext.removeSparkListener(listener)
+    jobsWithOutput.toMap
+  }
+
+  test("full sync stages all indexes in ONE write job (single source pass)") {
+    val (store, _, pipe, _) = freshPipeline()
+    // single-pass staging = exactly one write job with records
+    // (empty-index fallbacks write 0 records)
+    val expectStaged = env.where(!col(IsDeleted) && col(Idx).isNotNull).count()
+    val jobsWithOutput = recordWritingJobs(expectStaged)(pipe.fullSync(env, None, timestamp = "t1"))
     assert(jobsWithOutput.size == 1,
       s"expected ONE record-writing job (single-pass staging), got $jobsWithOutput")
     assert(pipe.reconcile(env, Seq("click", "view", "purchase", "signup")).isEmpty)
@@ -529,15 +536,82 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(store.physicalIndexes().forall(_.endsWith("_t1")))
   }
 
+  test("bucketed full sync: ONE write job, one file per index and bucket, observed counts") {
+    val (store, _, pipe, _) = freshPipeline()
+    val live = env.where(!col(IsDeleted) && col(Idx).isNotNull)
+    var reports = Seq.empty[graft.sync.IndexSyncReport]
+    val jobsWithOutput = recordWritingJobs(live.count()) {
+      reports = pipe.fullSyncBucketed(env, None, timestamp = "t1", buckets = 4)
+    }
+    assert(jobsWithOutput.size == 1,
+      s"expected ONE record-writing job (single-pass staging), got $jobsWithOutput")
+    assert(reports.map(_.index).toSet === Set("click", "view", "purchase", "signup", "error"))
+    for (r <- reports) {
+      assert(r.upserts === store.count(r.index), s"report of ${r.index}: $r")
+      assert(store.bucketCountOf(r.physical) === Some(4))
+      // every bucket a live row hashes to holds exactly one data file
+      val want = live.where(col(Idx) === r.index).select(store.bucketExpr(Id, 4))
+        .distinct().collect().map(_.getLong(0)).toSet
+      val got = want.map { b =>
+        val dir = java.nio.file.Paths.get(store.root, r.physical, s"${store.BucketKey}=$b")
+        b -> Files.list(dir).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      }.toMap
+      assert(got.values.forall(_ == 1), s"files per bucket of ${r.index}: $got")
+      val dirs = Files.list(java.nio.file.Paths.get(store.root, r.physical)).iterator().asScala
+        .count(_.getFileName.toString.startsWith(store.BucketKey + "="))
+      assert(dirs === want.size)
+    }
+    assert(pipe.reconcile(env, reports.map(_.index)).isEmpty)
+    assert(store.physicalIndexes().forall(_.endsWith("_t1")))
+  }
+
+  test("a bucketed full sync's Spark job count does not grow with the number of indexes") {
+    import spark.implicits._
+    def at(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
+    def syncJobs(n: Int): Int = {
+      val (store, _, pipe, _) = freshPipeline()
+      // an in-memory source: its non-nullable columns reach the writer
+      val source = (for (i <- 0 until n; d <- 0 until 20)
+        yield (s"ix$i", s"$i-$d", s"""{"k": $d}""", d == 7, at(d)))
+        .toDF(Idx, Id, Document, IsDeleted, UpdatedAt)
+      val (reports, jobs) = countingJobs(pipe.fullSyncBucketed(source, None, "t0", buckets = 4))
+      assert(reports.map(r => r.index -> r.upserts).toMap === (0 until n).map(i => s"ix$i" -> 19L).toMap)
+      assert(reports.forall(r => store.count(r.index) == 19L))
+      // the schema memoized at the promote is the one inference gives
+      assert(store.read("ix0").get.schema ===
+        spark.read.parquet(java.nio.file.Paths.get(store.root, "ix0_t0").toString).schema)
+      jobs
+    }
+    val (two, six) = (syncJobs(2), syncJobs(6))
+    assert(two <= 5 && six <= 5, s"jobs per bootstrap: $two at 2 indexes, $six at 6")
+    assert(two === six, "the bootstrap's job count grows with the number of indexes")
+  }
+
+  test("a requested index absent from the source publishes empty, flat and bucketed") {
+    for (buckets <- Seq(None, Some(4))) {
+      val (store, _, pipe, _) = freshPipeline()
+      val reports = pipe.fullSync(env, Some(Seq("click", "Nowhere")), timestamp = "t1", buckets)
+      assert(reports.map(_.index) === Seq("nowhere", "click"), s"smallest first ($buckets)")
+      val absent = reports.head
+      assert(absent.mode === "full" && absent.upserts === 0L && absent.rejects === 0L)
+      assert(store.aliases().get("nowhere") === Some("nowhere_t1"))
+      assert(store.count("nowhere") === 0L)
+      assert(store.bucketCountOf("nowhere_t1") === buckets)
+      assert(reports(1).upserts === store.count("click") && store.count("click") > 0)
+    }
+  }
+
   test("parallel publish of the largest indexes gives the same final state") {
+    // an incremental sync publishes index by index (a full sync's publish
+    // is renames only, with nothing to run in parallel)
     val (storeA, _, _, _) = freshPipeline()
     val pipeSeq = new SyncPipeline(storeA, new WatermarkStore(storeA.root),
       parallelLargest = 0)
-    pipeSeq.fullSync(env, None, timestamp = "t1")
+    pipeSeq.incrementalSync(env, None, timestamp = "t1")
     val (storeB, _, _, _) = freshPipeline()
     val pipePar = new SyncPipeline(storeB, new WatermarkStore(storeB.root),
       parallelLargest = 2)
-    pipePar.fullSync(env, None, timestamp = "t1")
+    pipePar.incrementalSync(env, None, timestamp = "t1")
     for (idx <- Seq("click", "view", "purchase", "signup", "error")) {
       assert(storeA.count(idx) == storeB.count(idx), s"count differs for $idx")
       assert(storeA.aliases().get(idx) == storeB.aliases().get(idx))
