@@ -839,8 +839,10 @@ object VectorOps {
   /** Fixed Lloyd iteration count for the trained codebook. Fixed — not
     * convergence-tested — so the oracle can unroll the same number of
     * rounds and the training cost is known up front: `KMeansIters`
-    * map-only corpus scans, each reducing to ≤ cells×Dim aggregate rows.
-    * The codebook is index metadata, trained once per corpus snapshot
+    * rounds over one collected training set on the driver, or, above
+    * the driver bound ([[DriverTrainPerCell]]), `KMeansIters` map-only
+    * corpus scans, each reducing to ≤ cells×Dim aggregate rows. The
+    * codebook is index metadata, trained once per corpus snapshot
     * and reused by every search. */
   val KMeansIters = 3
 
@@ -887,18 +889,31 @@ object VectorOps {
 
   /** Deterministic Lloyd's k-means codebook. Init is seeded (the first
     * `k` vectors by id — the former stand-in codebook is exactly
-    * iteration 0), then `iters` assignment+mean rounds as a DRIVER loop:
-    * each round is one map-only assignment scan whose per-(cell, dim)
-    * grid-sums partial-aggregate map-side to ≤ k×Dim rows — what reaches
-    * the driver is index METADATA (k×Dim longs), never data, the same
-    * class of bounded collect as the store's bucket lists. Empty cells
+    * iteration 0), then `iters` assignment+mean rounds. Empty cells
     * keep their previous centroid. Every arithmetic step (grid floor,
-    * integer sum, double divide) is exactly mirrored in
-    * [[kmeansCtes]], so the trained codebook is bit-identical to the
-    * oracle's. */
+    * integer sum, double divide) is exactly mirrored in [[kmeansCtes]],
+    * so the trained codebook is bit-identical to the oracle's.
+    *
+    * Up to `k × `[[DriverTrainPerCell]] vectors the rounds run on the
+    * DRIVER over one bounded collect ([[trainSetOf]], 1–2 Spark jobs);
+    * above it, as the distributed loop [[kmeansLoop]] (one job per
+    * round). Both yield the same bits: the grid sums are exact
+    * integers, so their order cannot matter. */
   def trainedCentroids(embeddings: DataFrame, k: Int = NumCentroids,
       iters: Int = KMeansIters): Seq[Seq[Double]] = {
-    val e = embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v"))
+    val e = vectorsOf(embeddings)
+    trainSetOf(e, k.toLong * DriverTrainPerCell)
+      .fold(kmeansLoop(e, k, iters))(centroidsOn(_, k, iters))
+  }
+
+  /** [[trainedCentroids]]' distributed loop over a `(vec_id, v)` frame:
+    * the seed collect, then per round one map-only assignment scan whose
+    * per-(cell, dim) grid-sums partial-aggregate map-side to ≤ k×Dim
+    * rows — what reaches the driver is index METADATA (k×Dim longs),
+    * never data. The large-corpus path, and the reference the
+    * driver-training parity spec compares against. */
+  private[graft] def kmeansLoop(e: DataFrame, k: Int,
+      iters: Int): Seq[Seq[Double]] = {
     var cents: Seq[Seq[Double]] = e.where(col("vec_id") < k)
       .orderBy("vec_id").collect().toSeq
       .map(_.getSeq[Double](1).toSeq)
@@ -928,6 +943,148 @@ object VectorOps {
     cents
   }
 
+  /** Training points per centroid up to which a codebook trains on the
+    * driver from one collect — FAISS's training-sample rule (it trains
+    * on at most 256 points per centroid). A derived bound, not an
+    * option: `k` cells train on the driver up to `k × 256` vectors
+    * (residual books share the coarse codebook's bound, raw PQ books use
+    * their sub-centroid count). With [[adaptiveCells]] (k ≈ √n) that
+    * covers every corpus of n ≤ 65,536, about 32 MB of doubles. */
+  val DriverTrainPerCell = 256
+
+  /** A training corpus held on the driver: `(vec_id, v)` with every `v`
+    * Dim-wide, or null for a null embedding (skipped by every round, as
+    * `posexplode(null)` skips it in the distributed loops). */
+  private[graft] final case class TrainSet(ids: Array[Long],
+      vs: Array[Array[Double]])
+
+  /** `e(vec_id, v)` collected as a [[TrainSet]] when it has at most
+    * `bound` rows, each null or Dim-wide without null elements — the
+    * shape whose distributed training is order-independent; None
+    * otherwise (train distributed). Without the row count `n` the
+    * collect is a `limit(bound + 1)` probe, so the driver never holds
+    * more than `bound + 1` rows; with it, one plain collect. */
+  private[graft] def trainSetOf(e: DataFrame, bound: Long,
+      n: Option[Long] = None): Option[TrainSet] =
+    if (n.exists(_ > bound)) None
+    else {
+      val rows = n.fold(e.limit(math.min(bound + 1, Int.MaxValue).toInt))(_ => e).collect()
+      val vs = rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Any](1))
+      if (rows.length > bound ||
+          vs.exists(v => v != null && (v.size != Dim || v.contains(null)))) None
+      else Some(TrainSet(rows.map(_.getLong(0)),
+        vs.map(v => if (v == null) null else v.map(_.asInstanceOf[Double]).toArray)))
+    }
+
+  /** Kernel input placeholder: the driver rounds call the kernels'
+    * `nullSafeEval` directly, so the child is never evaluated. */
+  private val DriverVec =
+    org.apache.spark.sql.catalyst.expressions.Literal.create(null,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+
+  private def arrayData(v: Array[Double]) =
+    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v)
+
+  /** `floor(x·2²⁰ + 0.5)` as Spark's `floor` computes it (double → long
+    * by Java's conversion) — the per-component [[KMeansGrid]] value. */
+  private def gridOf(x: Double): Long = math.floor(x * KMeansGrid + 0.5).toLong
+
+  /** The seed centroids: the vectors with `vec_id < k`, by id. */
+  private def seedOf(ts: TrainSet, k: Int): Array[Array[Double]] = {
+    val seed = ts.ids.indices.filter(ts.ids(_) < k).sortBy(ts.ids(_)).map(ts.vs)
+    require(!seed.contains(null),
+      s"training seed vec_ids 0..${k - 1} include a null embedding")
+    seed.toArray
+  }
+
+  /** One Lloyd round on the driver over `books` (m books of d-wide
+    * centroids; the coarse codebook is m = 1, d = Dim): `assign` maps a
+    * vector to its m codes, each code's subvector grid-sums into exact
+    * `Long`s, and a centroid becomes `(sum → double) / n / grid` — the
+    * distributed loops' arithmetic step for step. A book entry no
+    * vector chose keeps its previous value; an out-of-range code (the
+    * kernels' −1) counts nowhere, as no cell id matches it there. */
+  private def lloydRound(books: Array[Array[Array[Double]]], d: Int,
+      vs: Array[Array[Double]],
+      assign: Array[Double] => Array[Long]): Array[Array[Array[Double]]] = {
+    val sums = books.map(b => Array.ofDim[Long](b.length, d))
+    val ns = books.map(b => new Array[Long](b.length))
+    for (v <- vs if v != null) {
+      val codes = assign(v)
+      for (mi <- books.indices) {
+        val c = codes(mi)
+        if (c >= 0 && c < books(mi).length) {
+          val ci = c.toInt
+          ns(mi)(ci) += 1
+          for (dd <- 0 until d) sums(mi)(ci)(dd) += gridOf(v(mi * d + dd))
+        }
+      }
+    }
+    books.indices.map { mi =>
+      books(mi).indices.map { ci =>
+        val n = ns(mi)(ci)
+        if (n == 0) books(mi)(ci)
+        else Array.tabulate(d)(dd =>
+          sums(mi)(ci)(dd).toDouble / n.toDouble / KMeansGrid.toDouble)
+      }.toArray
+    }.toArray
+  }
+
+  /** [[trainedCentroids]] on the driver: the [[kmeansLoop]] rounds over a
+    * [[TrainSet]], assigning through [[graft.functions.CellArgmax]]'s own
+    * arithmetic — bit-identical to the loop. */
+  private[graft] def centroidsOn(ts: TrainSet, k: Int,
+      iters: Int): Seq[Seq[Double]] = {
+    var cents = seedOf(ts, k)
+    for (_ <- 1 to iters) {
+      val cell = graft.functions.CellArgmax(DriverVec, cents.map(_.toSeq).toSeq)
+      cents = lloydRound(Array(cents), Dim, ts.vs, v =>
+        Array(cell.nullSafeEval(arrayData(v)).asInstanceOf[Long])).head
+    }
+    cents.map(_.toSeq).toSeq
+  }
+
+  /** [[pqTrainBooksOn]] on the driver, encoding through
+    * [[graft.functions.PqEncode]]'s own arithmetic — bit-identical to
+    * the loop over the same rows. */
+  private[graft] def booksOn(ts: TrainSet, m: Int, ksub: Int,
+      iters: Int): Seq[Seq[Seq[Double]]] = {
+    require(Dim % m == 0, s"Dim=$Dim not divisible by $m subspaces")
+    val d = Dim / m
+    val seed = seedOf(ts, ksub)
+    require(seed.length == ksub,
+      s"PQ seed needs vec_ids 0..${ksub - 1} present; got ${seed.length}")
+    var books = Array.tabulate(m)(mi => seed.map(_.slice(mi * d, (mi + 1) * d)))
+    for (_ <- 1 to iters) {
+      val enc = graft.functions.PqEncode(DriverVec,
+        books.map(_.map(_.toSeq).toSeq).toSeq)
+      books = lloydRound(books, d, ts.vs, v =>
+        enc.nullSafeEval(arrayData(v)).asInstanceOf[
+          org.apache.spark.sql.catalyst.util.ArrayData].toLongArray())
+    }
+    books.map(_.map(_.toSeq).toSeq).toSeq
+  }
+
+  /** Residuals `v − cents(cell)` per element, the cell by
+    * [[graft.functions.CellArgmax]] — what [[residualsFrame]] computes
+    * with `zip_with`, so the same doubles. */
+  private[graft] def residualsOn(ts: TrainSet,
+      cents: Seq[Seq[Double]]): TrainSet = {
+    val cell = graft.functions.CellArgmax(DriverVec, cents)
+    val cs = cents.map(_.toArray).toArray
+    ts.copy(vs = ts.vs.map { v =>
+      if (v == null) null
+      else {
+        val c = cs(cell.nullSafeEval(arrayData(v)).asInstanceOf[Long].toInt)
+        Array.tabulate(v.length)(i => v(i) - c(i))
+      }
+    })
+  }
+
+  /** The float column as `(vec_id, v)` doubles. */
+  private def vectorsOf(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v"))
+
   /** IVF cell assignment under a given codebook: a map-only scan (the
     * fold over the literal codebook), no window, no join, no shuffle. */
   def ivfCellsWith(embeddings: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
@@ -935,8 +1092,9 @@ object VectorOps {
       .select(col("vec_id"), col("v"), cellOf(col("v"), cents).as("cell"))
 
   /** [[ivfCellsWith]] under the trained codebook. NOTE: constructing
-    * this frame RUNS the training loop (KMeansIters jobs) — the same
-    * eager-build exception as x18/x26. */
+    * this frame RUNS the training ([[trainedCentroids]]: one bounded
+    * collect up to the driver bound, else KMeansIters + 1 jobs) — the
+    * same eager-build exception as x18/x26. */
   def ivfCells(embeddings: DataFrame): DataFrame =
     ivfCellsWith(embeddings, trainedCentroids(embeddings))
 
@@ -1297,27 +1455,32 @@ object VectorOps {
   private def l2sqSql(a: String, b: String, d: Int): String =
     s"list_reduce(list_transform(range(1, ${d + 1}), i -> (($a)[i] - ($b)[i]) * (($a)[i] - ($b)[i])), (x, y) -> x + y)"
 
-  /** Deterministic per-subspace Lloyd's — [[trainedCentroids]]' driver
-    * loop generalized to PQ: ONE assignment scan per iteration covers
-    * every subspace (each row emits `m` (sub, cell, subvector) structs),
-    * grid-sums partial-aggregate map-side to ≤ subCentroids×Dim rows of
-    * index metadata, and every arithmetic step (grid floor, exact BIGINT
+  /** Deterministic per-subspace Lloyd's — [[trainedCentroids]]
+    * generalized to PQ: every arithmetic step (grid floor, exact BIGINT
     * sum, (sum→double)/n/grid) mirrors [[pqKmeansCtes]] so the books are
     * bit-identical to the oracle's. Seeded init: subvectors of the first
-    * `ksub` vectors by id. Returns books(sub)(centId) = sub-centroid. */
+    * `ksub` vectors by id. Up to `ksub × `[[DriverTrainPerCell]] vectors
+    * the rounds run on the driver over one bounded collect
+    * ([[booksOn]]); above it, as the distributed [[pqTrainBooksOn]].
+    * Returns books(sub)(centId) = sub-centroid. */
   def pqTrainedCodebooks(embeddings: DataFrame, m: Int = PqSubspaces,
-      ksub: Int = PqSubCentroids, iters: Int = PqIters): Seq[Seq[Seq[Double]]] =
-    pqTrainBooksOn(
-      embeddings.select(col("vec_id"), asDoubles(col("embedding")).as("v")),
-      m, ksub, iters)
+      ksub: Int = PqSubCentroids, iters: Int = PqIters): Seq[Seq[Seq[Double]]] = {
+    val e = vectorsOf(embeddings)
+    trainSetOf(e, ksub.toLong * DriverTrainPerCell)
+      .fold(pqTrainBooksOn(e, m, ksub, iters))(booksOn(_, m, ksub, iters))
+  }
 
-  /** The training loop itself, over any `(vec_id, v)` frame — shared by
-    * raw-vector books ([[pqTrainedCodebooks]]) and residual books
-    * ([[pqResidualCodebooks]]); the arithmetic contract (grid floor,
-    * exact BIGINT sum, (sum→double)/n/grid, seeded init) is identical
-    * either way, so both stay bit-identical to [[pqKmeansCtes]] run over
-    * the matching source CTE. */
-  private def pqTrainBooksOn(e: DataFrame, m: Int, ksub: Int,
+  /** The distributed PQ training loop, over any `(vec_id, v)` frame —
+    * shared by raw-vector books ([[pqTrainedCodebooks]]) and residual
+    * books ([[pqResidualCodebooks]]) above the driver bound, and the
+    * reference of the driver-training parity spec. ONE assignment scan
+    * per iteration covers every subspace, and the grid-sums
+    * partial-aggregate map-side to ≤ subCentroids×Dim rows of index
+    * metadata. The arithmetic contract (grid floor, exact BIGINT sum,
+    * (sum→double)/n/grid, seeded init) is identical either way, so both
+    * stay bit-identical to [[pqKmeansCtes]] run over the matching source
+    * CTE. */
+  private[graft] def pqTrainBooksOn(e: DataFrame, m: Int, ksub: Int,
       iters: Int): Seq[Seq[Seq[Double]]] = {
     require(Dim % m == 0, s"Dim=$Dim not divisible by $m subspaces")
     val d = Dim / m
@@ -1761,18 +1924,45 @@ object VectorOps {
     * smaller volume and ADC recall rises). One SHARED book set across
     * cells (the classic IVFADC layout; per-cell books multiply codebook
     * storage ×cells for marginal gain). Training arithmetic is
-    * [[pqTrainedCodebooks]]' loop verbatim over the residual frame —
-    * bit-identical to [[pqKmeansCtes]] over the residual CTE. */
+    * [[pqTrainedCodebooks]]' verbatim over the residuals — bit-identical
+    * to [[pqKmeansCtes]] over the residual CTE. Up to `cells × `[[DriverTrainPerCell]]
+    * vectors (the coarse codebook's bound) it trains on the driver from
+    * one bounded collect, residuals included ([[residualsOn]]). */
   def pqResidualCodebooks(embeddings: DataFrame, cents: Seq[Seq[Double]],
       m: Int = PqSubspaces, ksub: Int = PqSubCentroids,
-      iters: Int = PqIters): Seq[Seq[Seq[Double]]] = {
+      iters: Int = PqIters): Seq[Seq[Seq[Double]]] =
+    trainSetOf(vectorsOf(embeddings), cents.size.toLong * DriverTrainPerCell)
+      .fold(pqTrainBooksOn(residualsFrame(embeddings, cents), m, ksub, iters))(
+        ts => booksOn(residualsOn(ts, cents), m, ksub, iters))
+
+  /** The residual frame `(vec_id, v − centroid(cell))` the distributed
+    * residual training runs over (null for a null embedding). */
+  private[graft] def residualsFrame(embeddings: DataFrame,
+      cents: Seq[Seq[Double]]): DataFrame = {
     val cv = element_at(centArrayLit(cents), col("cell").cast("int") + 1)
       .getField("cv")
-    val res = embeddings
-      .select(col("vec_id"), asDoubles(col("embedding")).as("v"))
+    vectorsOf(embeddings)
       .select(col("vec_id"), col("v"), cellOf(col("v"), cents).as("cell"))
       .select(col("vec_id"), zip_with(col("v"), cv, (x, y) => x - y).as("v"))
-    pqTrainBooksOn(res, m, ksub, iters)
+  }
+
+  /** A snapshot's coarse codebook of `k` cells and its residual-PQ books
+    * over a corpus of `n` vectors (the caller's count): ONE collect
+    * trains both on the driver up to `k × `[[DriverTrainPerCell]]
+    * vectors; above it, the distributed loops. Equal to
+    * [[trainedCentroids]] then [[pqResidualCodebooks]], bit for bit. */
+  def ivfPqCodebooks(embeddings: DataFrame, k: Int,
+      n: Long): (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
+    val e = vectorsOf(embeddings)
+    trainSetOf(e, k.toLong * DriverTrainPerCell, Some(n)) match {
+      case Some(ts) =>
+        val cents = centroidsOn(ts, k, KMeansIters)
+        (cents, booksOn(residualsOn(ts, cents), PqSubspaces, PqSubCentroids, PqIters))
+      case None =>
+        val cents = kmeansLoop(e, k, KMeansIters)
+        (cents, pqTrainBooksOn(residualsFrame(embeddings, cents),
+          PqSubspaces, PqSubCentroids, PqIters))
+    }
   }
 
   /** Residual-encoded IVF+PQ top-k (IVFADC): probes prune candidate

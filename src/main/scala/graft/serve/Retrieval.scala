@@ -2,7 +2,7 @@ package graft.serve
 
 import graft.operators.{HybridOps, TextOps, VectorOps}
 import graft.sync.NioLocalFileSystem
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One-handle hybrid retrieval over a corpus snapshot — the serve
@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *  - `codebook.txt` / `pqbooks.txt` — the coarse IVF codebook and the
   *    residual PQ books, doubles as raw IEEE-754 bits (bit-identical
   *    round trip, the registry-artifact convention);
+  *  - `corpus.txt` — BM25's N and Σdl as exact integers, observed on
+  *    the `dl` write, so a `load` runs no Spark job;
   *  - `index/` — the residual IVFADC frame `(vec_id, codes, cell)`
   *    written `partitionBy(cell)`, so a probed serve read
   *    PARTITION-PRUNES to ~nprobe/cells of the files;
@@ -50,12 +52,13 @@ import org.apache.spark.sql.functions._
   * and refine-shortlist broadcasts, and the fused result. Everything
   * else the driver already holds enters the plans as literals — the
   * probe rows and query vectors ([[VectorOps.ProbePlan]]), df, and
-  * BM25's N/avgdl, which this handle computes once per `load`
-  * ([[corpus]]: a published snapshot never changes) — and the
+  * BM25's N/avgdl, which `load` reads from `corpus.txt` ([[corpus]]: a
+  * published snapshot never changes) — and the
   * residual decode runs in the native [[graft.functions.PqDecode]]
   * kernel over primitive codebooks. */
 final class Retrieval private[serve] (spark: SparkSession, dir: String,
-    val cents: Seq[Seq[Double]], val books: Seq[Seq[Seq[Double]]]) {
+    val cents: Seq[Seq[Double]], val books: Seq[Seq[Seq[Double]]],
+    private[graft] val corpus: TextOps.Bm25Corpus) {
 
   /** Serve-tuned session, shared per SparkContext (see [[Retrieval
     * .serveSessionFor]] for the tuning rationale). Index BUILD work
@@ -75,12 +78,6 @@ final class Retrieval private[serve] (spark: SparkSession, dir: String,
     .schema(Retrieval.DlSchema).parquet(s"$dir/dl")
   private lazy val index = serve.read
     .schema(Retrieval.IndexSchema).parquet(s"$dir/index")
-
-  /** BM25's corpus constants (N, avgdl) of this snapshot, computed once
-    * per handle: a published snapshot never changes (a rebuild
-    * publishes a new directory that a fresh `load` reads), so every
-    * search reuses them instead of aggregating `dl` again. */
-  private[graft] val corpus: TextOps.Bm25Corpus = TextOps.bm25CorpusOf(dl)
 
   /** Dense top-k from the stored index: one query-vector collect and
     * the driver probe ranking → the probed-cell filter prunes the
@@ -185,7 +182,7 @@ object Retrieval {
     * anything that keys cached snapshots by fixture identity, so a
     * layout change invalidates stale caches. Bump it whenever the set
     * or shape of the published frames changes. */
-  val LayoutVersion = 7
+  val LayoutVersion = 8
 
   private def writeBooks(path: java.nio.file.Path,
       rows: Seq[Seq[Double]]): Unit = {
@@ -201,11 +198,25 @@ object Retrieval {
       .map(_.split(",").toSeq
         .map(b => java.lang.Double.longBitsToDouble(b.toLong)))
 
+  /** BM25's corpus constants from `corpus.txt`'s exact `N,Σdl` — avgdl
+    * by the same division as [[TextOps.bm25CorpusOf]], NaN for an empty
+    * corpus as there (its Σdl is null). */
+  private def readCorpus(path: java.nio.file.Path): TextOps.Bm25Corpus = {
+    val Array(n, sumDl) = java.nio.file.Files.readString(path).trim.split(",").map(_.toLong)
+    TextOps.Bm25Corpus(n, if (n == 0) Double.NaN else sumDl.toDouble / n)
+  }
+
   /** Train, encode, and publish the snapshot, then return the loaded
-    * handle. Training cost is the documented once-per-snapshot work
-    * ([[VectorOps.trainedCentroids]] + [[VectorOps
-    * .pqResidualCodebooks]]); encoding and the lexical aggregates are
-    * single corpus passes. Atomic: stage + rename-aside swap.
+    * handle. Training is the once-per-snapshot work
+    * ([[VectorOps.ivfPqCodebooks]]): the corpus count is observed on the
+    * `emb` write, then ONE collect trains both codebooks on the driver
+    * up to cells × 256 vectors ([[VectorOps.DriverTrainPerCell]],
+    * FAISS's training-sample rule — every corpus of n ≤ 65,536 under
+    * adaptive cells); a larger corpus trains with the distributed loops,
+    * one job per round. Encoding and the lexical aggregates are single
+    * corpus passes, and N/Σdl are observed on the `dl` write, so under
+    * the bound a build and its load run 8–9 Spark jobs. Atomic: stage +
+    * rename-aside swap.
     *
     * The coarse codebook is sized from the CORPUS COUNT
     * ([[VectorOps.adaptiveCells]] — cells ≈ √n, the shape the x94
@@ -216,20 +227,34 @@ object Retrieval {
   def build(docs: DataFrame, embeddings: DataFrame, dir: String): Retrieval = {
     val spark = docs.sparkSession
     val staged = new java.io.File(s"$dir.tmp-${System.nanoTime()}")
-    val cents = VectorOps.trainedCentroids(embeddings,
-      VectorOps.adaptiveCells(embeddings.count()))
-    val books = VectorOps.pqResidualCodebooks(embeddings, cents)
+    // the corpus count adaptiveCells needs, observed on the emb write
+    val Seq(n) = writeObserved(embeddings.select("vec_id", "embedding"),
+      s"$staged/emb", "n" -> count(lit(1)))
+    val (cents, books) = VectorOps.ivfPqCodebooks(embeddings, VectorOps.adaptiveCells(n), n)
     writeBooks(staged.toPath.resolve("codebook.txt"), cents)
     writeBooks(staged.toPath.resolve("pqbooks.txt"), books.flatten)
     NioLocalFileSystem.parquet(VectorOps.ivfPqIndex(embeddings, cents, books, residual = true)
       .write.partitionBy("cell").mode(SaveMode.Overwrite), s"$staged/index")
-    NioLocalFileSystem.parquet(embeddings.select("vec_id", "embedding")
-      .write.mode(SaveMode.Overwrite), s"$staged/emb")
     val (tf, dl) = TextOps.bm25Stats(docs)
     NioLocalFileSystem.parquet(tf.write.mode(SaveMode.Overwrite), s"$staged/tf")
-    NioLocalFileSystem.parquet(dl.write.mode(SaveMode.Overwrite), s"$staged/dl")
+    val Seq(docsN, sumDl) = writeObserved(dl, s"$staged/dl",
+      "n" -> count(lit(1)), "sum_dl" -> sum(col("dl")))
+    java.nio.file.Files.writeString(staged.toPath.resolve("corpus.txt"), s"$docsN,$sumDl")
     publish(staged, dir)
     load(spark, dir)
+  }
+
+  /** Writes `df` as parquet at `path` and returns the named `metrics`,
+    * observed on that write (no job of their own); a metric an empty
+    * frame pruned away, or a null sum, reads 0. */
+  private def writeObserved(df: DataFrame, path: String,
+      metrics: (String, Column)*): Seq[Long] = {
+    val obs = new Observation(s"graft_snapshot_${System.nanoTime()}")
+    val named = metrics.map { case (k, c) => c.as(k) }
+    NioLocalFileSystem.parquet(df.observe(obs, named.head, named.tail: _*)
+      .write.mode(SaveMode.Overwrite), path)
+    val got = obs.get
+    metrics.map { case (k, _) => got.get(k).fold(0L)(_.asInstanceOf[Long]) }
   }
 
   private def rm(f: java.io.File): Unit = {
@@ -290,8 +315,9 @@ object Retrieval {
       .lastOption.foreach { a => a.renameTo(new java.io.File(dir)); () }
 
   /** Load a published snapshot's handle (codebooks round-trip through
-    * raw bits, so a loaded handle serves bit-identically to the one
-    * `build` returned). */
+    * raw bits and N/Σdl as exact integers, so a loaded handle serves
+    * bit-identically to the one `build` returned). Runs no Spark job:
+    * every frame is read lazily under its explicit schema. */
   def load(spark: SparkSession, dir: String): Retrieval = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(root.resolve("codebook.txt")))
@@ -302,6 +328,8 @@ object Retrieval {
     val books = readBooks(root.resolve("pqbooks.txt"))
       .grouped(VectorOps.PqSubCentroids).toList
       .map(_.toSeq)
-    new Retrieval(spark, dir, cents, books)
+    require(java.nio.file.Files.exists(root.resolve("corpus.txt")),
+      s"$dir predates snapshot layout $LayoutVersion (no corpus.txt); rebuild it")
+    new Retrieval(spark, dir, cents, books, readCorpus(root.resolve("corpus.txt")))
   }
 }

@@ -20,6 +20,39 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
   private def rows(df: DataFrame) =
     df.orderBy("query_id", "rn").collect().map(_.toSeq).toSeq
 
+  /** The Spark jobs `body` runs (their stage names), counted between two
+    * marker jobs: listener events arrive in order, so seeing the closing
+    * marker means every job of `body` was seen. */
+  private def jobsOf(body: => Any): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val phase = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.map(_.getProperty("spark.job.description")) match {
+          case Some("graft-count-open") => phase.compareAndSet(0, 1)
+          case Some("graft-count-close") => phase.compareAndSet(1, 2)
+          case _ => if (phase.get == 1)
+            sites.add(js.stageInfos.map(_.name).mkString("+"))
+        }
+      }
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("graft-count-open")
+      body
+      marker("graft-count-close")
+      val t0 = System.currentTimeMillis()
+      while (phase.get != 2 && System.currentTimeMillis() - t0 < 10000) Thread.sleep(25)
+      assert(phase.get === 2, "closing marker job never seen")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    sites.toArray.toSeq.map(_.toString)
+  }
+
   /** One full-fixture snapshot shared by the tests that only inspect
     * it (the others mutate their own). */
   private lazy val snap: (String, Retrieval) = {
@@ -107,7 +140,7 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
       f.getName.startsWith("_") || f.getName.startsWith("."))
     val root = new java.io.File(dir)
     assert(entries(root).map(_.getName).toSet ===
-      Set("codebook.txt", "pqbooks.txt", "index", "emb", "tf", "dl"))
+      Set("codebook.txt", "pqbooks.txt", "corpus.txt", "index", "emb", "tf", "dl"))
     // the IVFADC frame is cell-partitioned (the probe prunes on it) ...
     val cells = data(new java.io.File(root, "index"))
     assert(cells.nonEmpty && cells.forall(f =>
@@ -189,36 +222,47 @@ class RetrievalServeSpec extends AnyFunSuite with SparkSpec {
     val terms = Seq("spark", "join", "vector", "table", "data")
     val queries = (0L until 8L).map(q => q -> terms.drop((q % 3).toInt))
     assert(rows(h.search(queries, 10)).nonEmpty, "search is empty; vacuous")
-    // count between two marker jobs: listener events arrive in order,
-    // so seeing the closing marker means every search job was seen
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val phase = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        props.map(_.getProperty("spark.job.description")) match {
-          case Some("graft-count-open") => phase.compareAndSet(0, 1)
-          case Some("graft-count-close") => phase.compareAndSet(1, 2)
-          case _ => if (phase.get == 1)
-            sites.add(js.stageInfos.map(_.name).mkString("+"))
-        }
-      }
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("graft-count-open")
-      h.search(queries, 10).collect()
-      marker("graft-count-close")
-      val t0 = System.currentTimeMillis()
-      while (phase.get != 2 && System.currentTimeMillis() - t0 < 10000) Thread.sleep(25)
-      assert(phase.get === 2, "closing marker job never seen")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val jobs = sites.toArray.toSeq
+    val jobs = jobsOf(h.search(queries, 10).collect())
     assert(jobs.size <= 5, s"${jobs.size} jobs per search: ${jobs.mkString("; ")}")
+  }
+
+  test("a build with its load runs at most 10 Spark jobs, the load none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs")
+      .toString + "/snap"
+    // ONE training collect and the four frame writes (tf's
+    // localCheckpoint and the shuffles' stages a few more): no corpus
+    // count, no per-round training jobs, no corpus-constants job at load
+    docs.schema; emb.schema // the fixture reads' own inference jobs
+    val built = jobsOf(Retrieval.build(docs, emb, dir))
+    info(s"${built.size} jobs per build: ${built.mkString("; ")}")
+    assert(built.size <= 10, s"${built.size} jobs per build: ${built.mkString("; ")}")
+    val loaded = jobsOf(Retrieval.load(spark, dir))
+    assert(loaded.isEmpty, s"${loaded.size} jobs per load: ${loaded.mkString("; ")}")
+  }
+
+  test("corpus.txt holds N and Σdl: the handle's constants equal bm25CorpusOf(dl) bit for bit") {
+    val (dir, h) = snap
+    val want = TextOps.bm25CorpusOf(spark.read.parquet(s"$dir/dl"))
+    val (tf, dl) = TextOps.bm25Stats(docs)
+    assert(TextOps.bm25CorpusOf(dl) === want)
+    for (c <- Seq(h.corpus, Retrieval.load(spark, dir).corpus)) {
+      assert(c.n === want.n)
+      assert(java.lang.Double.doubleToRawLongBits(c.avgdl) ===
+        java.lang.Double.doubleToRawLongBits(want.avgdl))
+    }
+    val Array(n, sumDl) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "corpus.txt")).split(",").map(_.toLong)
+    assert(n === 500L && sumDl === dl.agg(sum("dl")).head().getLong(0))
+    assert(tf.count() > n, "one posting per doc; vacuous")
+
+    // an empty corpus: N = 0 and avgdl NaN, as bm25CorpusOf reads them
+    val emptyDir = java.nio.file.Files.createTempDirectory("graft-empty")
+      .toString + "/snap"
+    val empty = Retrieval.build(docs.limit(0), emb, emptyDir).corpus
+    val wantEmpty = TextOps.bm25CorpusOf(spark.read.parquet(s"$emptyDir/dl"))
+    assert(empty.n === 0L && wantEmpty.n === 0L)
+    assert(java.lang.Double.doubleToRawLongBits(empty.avgdl) ===
+      java.lang.Double.doubleToRawLongBits(wantEmpty.avgdl))
   }
 
   test("adaptive cell count: build sizes cells ≈ √n and persists them") {
