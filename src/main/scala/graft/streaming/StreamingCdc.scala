@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.IndexerOps
 import graft.sources.Tables
 import graft.sources.Tables._
-import graft.sync.{InPlaceMerge, IndexStore, WatermarkStore}
+import graft.sync.{InPlaceMerge, IndexStore, SyncPipeline, WatermarkStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -11,8 +10,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Structured Streaming form of the reference's continuous incremental
   * sync (T1/T2 streaming; reference flows/main_flow.py:316-333,366-395):
   * `readStream` over the envelope source, event-time watermark on
-  * `updated_at`, `foreachBatch` → id-keyed CDC merge into the
-  * [[IndexStore]], `Trigger.AvailableNow` for catch-up runs.
+  * `updated_at`, `foreachBatch` → per index, the same in-place step as
+  * the batch round ([[SyncPipeline.syncIndex]]: quarantine, then an
+  * id-keyed CDC merge into the touched id-hash buckets of the
+  * [[IndexStore]]), `Trigger.AvailableNow` for catch-up runs.
   *
   * The streaming pieces replace the reference's hand-rolled machinery
   * 1:1: the checkpoint location persists source offsets (T2/T7 — the
@@ -21,32 +22,35 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * reconnect bookkeeping, and `maxFilesPerTrigger` bounds a micro-batch
   * (T5, the reference's `db_batch_size`).
   *
-  * Scale notes: each micro-batch runs the same declarative merge plan as
-  * the batch path (shuffle on `id` only, broadcastable when the batch is
-  * small); state never accumulates in the stream itself — the store IS
-  * the state, so executor memory is flat regardless of run length.
-  */
-/** @param bucketed when Some(n): micro-batches merge IN PLACE into
-  *   id-hash-bucketed physical indexes (delta-proportional cost — see
-  *   [[InPlaceMerge]]); indexes must be bootstrapped via
-  *   `SyncPipeline.fullSyncBucketed`. When None (default): each batch
-  *   publishes blue/green (atomic, whole-index rewrite).
+  * Scale notes: each micro-batch runs the batch round's merge plan
+  * (delta-proportional: only touched buckets are rewritten — see
+  * [[InPlaceMerge]]); state never accumulates in the stream itself —
+  * the store IS the state, so executor memory is flat regardless of run
+  * length. A bound index merges at the bucket count in its metadata; an
+  * unbound one gets a fresh bucketed physical with
+  * [[SyncPipeline.DefaultBuckets]] buckets from its first micro-batch.
+  * The drift gate (T11) belongs to the batch round's plan; a stream's
+  * watermark save drops the index's drift probe, and the next round
+  * picks a new one.
+  *
   * @param validity when set: per-record error tolerance, the same K1
-  *   semantics as the batch pipeline — each micro-batch's poison rows
-  *   (predicate false OR NULL) land in the alias's quarantine dir
-  *   (`_rejects_<alias>`, read via `store.rejected(alias)`) instead of
-  *   merging, and never fail the batch. Scope: rows with a NULL event
-  *   time are outside the CDC domain entirely — the watermark predicate
-  *   `updated_at >= W` excludes them exactly as the reference's
-  *   incremental SQL does (flows/main_flow.py:317-333) — so they
-  *   surface only in FULL syncs, where the validity predicate can
-  *   quarantine them. Quarantine slices are per checkpoint lineage: a
+  *   semantics as the batch round — each micro-batch's poison rows
+  *   (predicate false OR NULL) land in the bound physical's quarantine
+  *   (`_rejects_<physical>/gbatch=<timestamp>_b<batchId>`, read via
+  *   `store.rejected(physical)`) instead of merging, and never fail the
+  *   batch; a replayed batch rewrites its own dir. Scope: rows with a
+  *   NULL event time are outside the CDC domain entirely — the watermark
+  *   predicate `updated_at >= W` excludes them exactly as the
+  *   reference's incremental SQL does (flows/main_flow.py:317-333) — so
+  *   they surface only in FULL syncs, where the validity predicate can
+  *   quarantine them. Quarantine dirs are per checkpoint lineage: a
   *   rerun under a NEW timestamp reprocesses the source from offset
   *   zero (merges stay idempotent by id) and re-quarantines its own
-  *   poison slices alongside the previous lineage's. */
+  *   poison rows alongside the previous lineage's. */
 class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
-    bucketed: Option[Int] = None,
     validity: Option[org.apache.spark.sql.Column] = None) {
+
+  private val pipeline = new SyncPipeline(store, watermarks, validity = validity)
 
   /** The envelope relation as a stream (file source standing in for a
     * CDC feed; schema pinned from a batch probe of the same source). */
@@ -62,17 +66,17 @@ class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
   }
 
   /** Run the streaming CDC sync to completion of available data
-    * (`Trigger.AvailableNow`): every micro-batch merges into the store
-    * per index via the same [[IndexerOps.cdcMerge]] as the batch path,
-    * publishing blue/green per batch. Returns the number of micro-
-    * batches processed. */
+    * (`Trigger.AvailableNow`): every micro-batch merges in place into
+    * the store per index through [[SyncPipeline.syncIndex]], the batch
+    * round's step. Returns the number of micro-batches processed. */
   def syncAvailable(spark: SparkSession, sourceDir: String,
       indexes: Seq[String], timestamp: String,
       maxFilesPerTrigger: Int = 1, lateness: String = "1 hour"): Long = {
     // watermarks are PER INDEX (a single global mark would let a partial
     // sync silently skip other indexes' changes — ADVICE r1); the stream
     // pre-filters at the MINIMUM selected watermark (safe for all), and
-    // each index applies its own exact mark per micro-batch.
+    // each index applies its own exact mark per micro-batch. The marks
+    // stay fixed for the run.
     val wms = indexes.map(i => i -> watermarks.loadOrEpoch(i)).toMap
     val wmMin = wms.values.min
     val env = envelopeStream(spark, sourceDir, maxFilesPerTrigger)
@@ -112,69 +116,33 @@ class StreamingCdc(store: IndexStore, watermarks: WatermarkStore,
     * simulate files landing while the stream is mid-run). */
   protected def onBatchProcessed(batchId: Long): Unit = ()
 
-  /** One micro-batch: per index present in the batch, latest-per-id CDC
-    * merge over current state, staged + atomically published (same
-    * semantics as SyncPipeline's incremental branch). */
+  /** One micro-batch: one job yields the present-index set, each index's
+    * max processed event time and the buckets each index's in-scope rows
+    * touch; then each present index runs the shared in-place step, its
+    * rejects under the batch's own dir `batchTag`. The merge is
+    * unobserved: `Observation` metrics never fire inside `foreachBatch`. */
   private[streaming] def applyMicroBatch(batch: DataFrame, indexes: Seq[String],
-      wms: Map[String, String], stagingSuffix: String,
+      wms: Map[String, String], batchTag: String,
       hwms: scala.collection.concurrent.TrieMap[String, String] =
         scala.collection.concurrent.TrieMap.empty): Unit = {
     batch.persist()
     try {
-      // one job yields the present-index set, each index's max processed
-      // event time (+1 µs: the inclusive `>=` rescan skips the boundary
-      // row; the fixed-width format makes string max == time max) and, in
-      // bucketed mode, the buckets each index's in-scope rows touch
-      val aliases = store.aliases()
-      val touched = bucketed.fold(typedLit(Seq.empty[Long]))(
-        InPlaceMerge.affectedBuckets(store, aliases,
-          col(UpdatedAt) >= element_at(typedLit(wms), col(Idx)).cast("timestamp"), _))
+      val inScope = col(UpdatedAt) >= element_at(typedLit(wms), col(Idx)).cast("timestamp")
       val stats = batch.groupBy(Idx)
-        .agg(date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
-          "yyyy-MM-dd HH:mm:ss.SSSSSS").as("hwm"), touched.as("buckets"))
+        .agg(SyncPipeline.hwmOf, InPlaceMerge.affectedBuckets(store, store.aliases(), inScope,
+          SyncPipeline.DefaultBuckets))
         .collect()
-      val affected = stats.map(r => r.getString(0) -> r.getSeq[Long](2)).toMap
       stats.foreach { r =>
-        if (!r.isNullAt(1)) {
-          val idx = r.getString(0)
-          val hwm = r.getString(1)
-          hwms.updateWith(idx) {
-            case Some(prev) if prev >= hwm => Some(prev)
-            case _ => Some(hwm)
-          }
+        if (!r.isNullAt(1)) hwms.updateWith(r.getString(0)) {
+          case Some(prev) if prev >= r.getString(1) => Some(prev)
+          case _ => Some(r.getString(1))
         }
       }
-      val present = stats.map(_.getString(0)).toSet
-      indexes.filter(present).foreach { idx =>
-        val scoped = batch.where(col(Idx) === idx &&
-          col(UpdatedAt) >= lit(wms(idx)).cast("timestamp"))
-        // per-record tolerance (K1): poison rows land in the alias's
-        // quarantine and never fail or enter the merge. One subdir per
-        // micro-batch (partition-style, so reads see all batches) with
-        // overwrite semantics — a REPLAYED batch after failure rewrites
-        // its own slice instead of appending duplicates.
-        val b = validity match {
-          case None => scoped
-          case Some(v) =>
-            val valid = coalesce(v, lit(false))
-            val bad = scoped.where(!valid)
-            if (!bad.isEmpty)
-              store.writePhysical(s"${store.RejectPrefix}$idx/gbatch=$stagingSuffix", bad)
-            scoped.where(valid)
-        }
-        bucketed match {
-          case Some(n) =>
-            val physical = aliases.getOrElse(idx,
-              sys.error(s"bucketed streaming needs a bootstrapped index for $idx"))
-            // unobserved: Observation metrics never fire inside foreachBatch
-            InPlaceMerge.applyUnobserved(store, physical, b, n, affected(idx))
-          case None =>
-            val cur = store.read(idx).getOrElse(
-              IndexerOps.emptyEnvelope(batch.sparkSession))
-            val staged = s"${idx}_$stagingSuffix"
-            store.writePhysical(staged, IndexerOps.cdcMerge(cur, b))
-            store.swapAlias(idx, staged)
-        }
+      val affected = stats.map(r => r.getString(0) -> r.getSeq[Long](2)).toMap
+      // an index with no in-scope row has no bucket to touch
+      indexes.filter(affected.get(_).exists(_.nonEmpty)).foreach { idx =>
+        pipeline.syncIndex(idx, batch.where(col(Idx) === idx && inScope), affected(idx),
+          batchTag, SyncPipeline.DefaultBuckets, observed = false)
       }
     } finally batch.unpersist()
   }

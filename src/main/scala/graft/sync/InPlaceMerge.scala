@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, elemen
 /** Shared delta-proportional merge step: apply a CDC batch to a BUCKETED
   * physical index, rewriting only the id-hash bucket partitions the
   * batch touches (see IndexStore.replaceBuckets for the swap protocol).
-  * Used by both the batch pipeline (SyncPipeline.incrementalSyncInPlace)
-  * and the streaming path (StreamingCdc in bucketed mode).
+  * Run by [[SyncPipeline.syncIndex]], the one incremental step of both
+  * the batch round (SyncPipeline.incrementalSyncInPlace) and the stream
+  * (graft.streaming.StreamingCdc).
   *
   * The merge does not find its buckets itself: each caller plans them
   * with [[affectedBuckets]] inside an aggregate it already runs (the

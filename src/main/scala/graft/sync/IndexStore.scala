@@ -376,28 +376,15 @@ class IndexStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Split a frame into one partition dir per value of `splitCol` (the
-    * column itself is dropped from the data files — unlike
-    * [[writePartitionedStage]], which deliberately keeps the envelope) —
-    * the valid/reject fork of the error-tolerant sink. One scan writes
-    * both sides. */
-  def writeSplitStage(stageName: String, df: DataFrame, splitCol: String,
-      maxRecordsPerFile: Option[Int] = None): Unit = rewriting(stageName) {
-    val w = df.write.mode(SaveMode.Overwrite).partitionBy(splitCol)
-    maxRecordsPerFile.foreach(n => w.option("maxRecordsPerFile", n.toLong))
-    NioLocalFileSystem.parquet(w, rootPath.resolve(stageName).toString)
-    staged(stageName, df, Seq(splitCol))
-  }
-
-  /** Quarantined rows of a physical index's last tolerant write (None if
-    * it had none). Quarantine dirs are underscore-prefixed — invisible
-    * to [[physicalIndexes]]/[[cleanupOrphans]] — and persist until
-    * explicitly dropped ([[dropRejected]]): they exist to be inspected.
-    * A successful later sync does NOT reclaim an earlier sync's
-    * quarantine (blue/green quarantines are keyed by the timestamped
-    * physical name, so they never collide); rollback of a FAILED sync
-    * does delete that sync's own quarantine, since its rows were never
-    * reported. */
+  /** Quarantined rows of a physical index (None if it has none): every
+    * row a tolerant write into it rejected — its full publish, insert,
+    * and each incremental round's or micro-batch's `gbatch=` dir.
+    * Quarantine dirs are keyed by physical name and underscore-prefixed —
+    * invisible to [[physicalIndexes]]/[[cleanupOrphans]] — and persist
+    * until explicitly dropped ([[dropRejected]]): they exist to be
+    * inspected. A later publish does NOT reclaim an earlier one's
+    * quarantine; rollback of a FAILED full sync does delete that sync's
+    * own quarantine, since its rows were never reported. */
   def rejected(physical: String): Option[DataFrame] = {
     val name = s"$RejectPrefix$physical"
     if (indexExists(name) && hasData(name)) Some(readPhysical(name)) else None

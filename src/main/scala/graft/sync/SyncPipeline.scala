@@ -11,24 +11,28 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.control.NonFatal
 
 /** Per-index sync outcome (the reference's log surface, as data).
-  * `rejects` counts rows quarantined by the error-tolerant sink (the
-  * reference's per-item failure tally under `raise_on_error=False`,
+  * `mode` is "full" (a full reindex, or a drift rebuild), "incremental"
+  * (an in-place merge), "skipped" (no changes), "insert" or
+  * "insert_overwrite" ([[SyncPipeline.insertInto]]). `rejects` counts
+  * rows quarantined by the error-tolerant sink (the reference's
+  * per-item failure tally under `raise_on_error=False`,
   * flows/main_flow.py:413-426); 0 when no validity predicate is set. */
 case class IndexSyncReport(
     index: String,
     physical: String,
-    mode: String, // "full" | "incremental" | "skipped"
+    mode: String,
     upserts: Long,
     deletes: Long,
     rejects: Long = 0L)
 
 /** The reference flow's control plane re-expressed over an [[IndexStore]]
   * (SURVEY.md §3.1, T1-T11; reference flows/main_flow.py:602-762):
-  * full blue/green reindex and incremental CDC sync with tombstone
-  * deletes, smallest-first scheduling with the largest indexes published
-  * concurrently (T9), schema-drift-triggered reindex, zero-work skip,
-  * rollback of failed staging builds, orphan cleanup, and post-sync
-  * count reconciliation.
+  * full blue/green reindex, flat or id-hash bucketed, and one incremental
+  * CDC sync path that merges in place into the bucketed layout, with
+  * tombstone deletes, smallest-first scheduling with the largest indexes
+  * merged concurrently (T9), schema-drift-triggered reindex (T11),
+  * zero-work skip, rollback of failed staging builds, orphan cleanup,
+  * and post-sync count reconciliation.
   *
   * Scale design:
   *  - the FULL sync, flat or bucketed, is planned by one grouped
@@ -36,16 +40,18 @@ case class IndexSyncReport(
   *    (`partitionBy` staging + O(1) directory promotes) — never N scans
   *    of a 100 TB table — with its per-index counts observed on that
   *    write;
-  *  - the incremental merge is an id-keyed anti-join ∪ union — shuffle
-  *    on `id` only for the one index being merged, broadcastable when
-  *    the batch is small — with upsert/delete tallies taken via
+  *  - the incremental round ([[incrementalSyncInPlace]]) is planned by
+  *    the same aggregate, which also carries each index's drift probe,
+  *    and merges each changed index through [[syncIndex]] — the step
+  *    the stream's micro-batches run too — rewriting only the id-hash
+  *    buckets its batch touches, with upsert/delete tallies taken via
   *    `observe()` ON the merge job itself (zero extra actions, A7);
   *  - watermarks are tracked PER INDEX, so a partial sync of some
   *    indexes can never silently skip changes in the others;
-  *  - writes run under an injectable [[RetryPolicy]] (T10) with
-  *    adaptive chunk degradation (T6) mapped to `maxRecordsPerFile`.
-  *    The default policy fails fast (no sleeps); production callers
-  *    inject the reference's 10-retry/backoff policy;
+  *  - writes run under an injectable [[RetryPolicy]] (T10), with
+  *    adaptive chunk degradation (T6) mapped to `maxRecordsPerFile` for
+  *    the flat writes. The default policy fails fast (no sleeps);
+  *    production callers inject the reference's 10-retry/backoff policy;
   *  - `validity` (when set) makes every write per-record error-tolerant
   *    (K1's real semantics): poison rows — predicate false OR NULL —
   *    quarantine under `_rejects_*` instead of failing the write.
@@ -57,9 +63,9 @@ case class IndexSyncReport(
 class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     retry: RetryPolicy = RetryPolicy(maxRetries = 0, sleep = _ => ()),
     writeChunk: Option[Int] = None,
-    driftJsonPath: String = "$.k",
     parallelLargest: Int = 2,
     validity: Option[org.apache.spark.sql.Column] = None) {
+  import SyncPipeline._
 
   /** Smallest-first execution order + per-index high-water mark, in ONE
     * aggregate job (A1∘O1; reference flows/main_flow.py:658-673): one
@@ -75,45 +81,66 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
       .collect()
       .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSeq
 
-  /** An index's high-water mark: max `updated_at` + 1 µs (the inclusive
-    * `>=` rescan then skips the boundary row), fixed-width so string
-    * order is time order. */
-  private def hwmOf: org.apache.spark.sql.Column =
-    date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
-      "yyyy-MM-dd HH:mm:ss.SSSSSS")
-
-  /** One index's share of a CDC round plan: its row count (for
-    * smallest-first order), its high-water mark, the watermark it syncs
-    * from, the number of its rows in `[wm, hwm)`, and the id-hash buckets
-    * those rows touch (bucketed rounds only). */
+  /** One index's share of a round plan: its row count (for smallest-first
+    * order), its high-water mark, the watermark it syncs from, the number
+    * of its rows in `[wm, hwm)`, the id-hash buckets those rows touch
+    * (incremental rounds only), whether its drift probe shows drift, and
+    * the probe to save with its new watermark. */
   private case class IndexPlan(index: String, docs: Long, hwm: Option[String],
-      wm: String, changed: Long, buckets: Seq[Long])
+      wm: String, changed: Long, buckets: Seq[Long], drifted: Boolean, probe: Option[Probe])
 
   /** Plans a sync round in ONE grouped aggregate over the source,
     * collected to the driver: per index, its row count, high-water mark,
-    * changed-row count and (with `buckets` set) affected buckets. The
-    * per-index watermarks and bucket counts are driver-side lookups (the
-    * watermark files, the alias manifest, the bucket metadata) passed in
-    * as map literals, and the smallest-first order is a driver-side sort
-    * by `(count, idx)` — so planning costs one aggregate however many
-    * indexes the source holds. Indexes absent from the source are not
-    * planned. A full sync reads only the index list, counts, order and
-    * high-water marks. */
+    * changed-row count and (for an incremental round, `buckets` set)
+    * affected buckets. The per-index watermarks, probe ids and bucket
+    * counts are driver-side lookups (the watermark files, the alias
+    * manifest, the bucket metadata) passed in as map literals, and the
+    * smallest-first order is a driver-side sort by `(count, idx)` — so
+    * planning costs one aggregate however many indexes the source holds.
+    * Indexes absent from the source are not planned.
+    *
+    * T11 rides on the same aggregate, with no store read: the watermark
+    * file holds a probe, one published doc's id and drift value, and the
+    * aggregate returns that id's latest source row and whether it has a
+    * row in `[wm, hwm)`. The index has drifted when that latest row is
+    * live, not pending, and its drift value is non-null and differs from
+    * the recorded one — an out-of-band change the watermark never saw.
+    * The next probe keeps the id with its latest value while it lives;
+    * otherwise it is the latest live row this plan publishes (any row,
+    * for a full sync; a changed row, for an incremental round), so a
+    * probe's value is always one the store holds. Drift values are
+    * parsed on the driver from the few documents returned. */
   private def planRound(env: DataFrame, requested: Option[Seq[String]],
       buckets: Option[Int]): Seq[IndexPlan] = {
     // an index with no watermark of its own syncs from the global one
-    val wms = watermarks.indexes().map(i => i -> watermarks.loadOrEpoch(i)).toMap
+    val own = watermarks.indexes()
+    val wms = own.map(i => i -> watermarks.loadOrEpoch(i)).toMap
+    val probes = own.flatMap(i => watermarks.probe(i).map(i -> _)).toMap
     val changed = col(UpdatedAt) >= coalesce(element_at(typedLit(wms), col(Idx)),
       lit(watermarks.loadOrEpoch())).cast("timestamp")
     val touched = buckets.fold(typedLit(Seq.empty[Long]))(
       InPlaceMerge.affectedBuckets(store, store.aliases(), changed, _))
+    val isProbe = col(Id) === element_at(typedLit(probes.map { case (i, p) => i -> p.id }), col(Idx))
+    val dated = col(UpdatedAt).isNotNull
+    val live = dated && !col(IsDeleted) && col(Id).isNotNull && validity.fold(lit(true))(_ => validCol)
+    val published = if (buckets.isDefined) live && changed else live
     env.where(requested.fold(col(Idx).isNotNull)(xs => col(Idx).isin(xs.map(_.toLowerCase): _*)))
       .groupBy(Idx)
-      .agg(count(col(Id)), hwmOf, count_if(changed), touched)
+      .agg(count(col(Id)), hwmOf, count_if(changed), touched,
+        max(when(isProbe && dated, struct(col(UpdatedAt), col(IsDeleted), col(Document)))),
+        count_if(isProbe && changed),
+        max(when(published, struct(col(UpdatedAt), col(Document), col(Id)))))
       .collect()
-      .map(r => IndexPlan(r.getString(0), r.getLong(1), Option(r.getString(2)),
-        watermarks.loadOrEpoch(r.getString(0)), r.getLong(3),
-        r.getSeq[Long](4).sorted))
+      .map { r =>
+        val idx = r.getString(0)
+        val latest = Option(r.getStruct(5)).filterNot(_.getBoolean(1)).flatMap(p => driftValue(p.getString(2)))
+        val recorded = probes.get(idx)
+        val drifted = r.getLong(6) == 0 && recorded.exists(p => latest.exists(_ != p.value))
+        val next = recorded.flatMap(p => latest.map(Probe(p.id, _))).orElse(
+          Option(r.getStruct(7)).flatMap(c => driftValue(c.getString(1)).map(Probe(c.getString(2), _))))
+        IndexPlan(idx, r.getLong(1), Option(r.getString(2)), watermarks.loadOrEpoch(idx),
+          r.getLong(3), r.getSeq[Long](4).sorted, drifted, next)
+      }
       .toSeq.sortBy(p => (p.docs, p.index))
   }
 
@@ -129,24 +156,10 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
   private def skipped(idx: String): IndexSyncReport =
     IndexSyncReport(idx, store.aliases().getOrElse(idx, ""), "skipped", 0L, 0L)
 
-  /** T10/T6 — every store write runs under the retry policy; on adaptive
+  /** The flat physical write (chunked + retried, T10/T6): on adaptive
     * mode, repeated failure shrinks the write chunk (maxRecordsPerFile)
-    * along the reference's 500→…→1 schedule. With a `validity` predicate
-    * configured, the write is per-record error-tolerant (K1's real
-    * semantics — the reference's `streaming_bulk(raise_on_error=False)`
-    * + per-item tally, flows/main_flow.py:413-426): poison rows are
-    * split off to a quarantine dir in the SAME single scan, the good
-    * rows land, and a poison row never fails the write — so it never
-    * burns a retry cycle. Returns the number of quarantined rows. */
-  private def writeStaged(name: String, df: DataFrame): Long =
-    validity match {
-      case Some(_) => writeStagedTolerant(name, df)
-      case None => writeRaw(name, df); 0L
-    }
-
-  /** The validity-free physical write (chunked + retried) — for frames
-    * whose rows are already validated (e.g. [[insertInto]]'s old ∪
-    * screened-new union). */
+    * along the reference's 500→…→1 schedule. For frames whose rows are
+    * already validated ([[insertInto]]'s old ∪ screened-new union). */
   private def writeRaw(name: String, df: DataFrame): Unit =
     writeChunk match {
       case Some(start) =>
@@ -165,47 +178,10 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
   private def validCol: org.apache.spark.sql.Column =
     coalesce(validity.get, lit(false))
 
-  /** One scan splits `df` on the validity predicate into the staged
-    * index (valid side) and `_rejects_<name>` (poison side), with the
-    * reject tally observed ON the split write — zero extra jobs (A7's
-    * metric discipline). Slice promotion is an O(1) rename. */
-  private def writeStagedTolerant(name: String, df: DataFrame): Long = {
-    val stage = s"_stage_tol_${System.nanoTime()}"
-    val valid = validCol
-    try {
-      var rejects = 0L
-      def attempt(chunk: Option[Int]): Unit = {
-        val obs = new Observation(s"graft_valid_${System.nanoTime()}")
-        val tagged = df
-          .observe(obs, coalesce(sum(when(valid, 0L).otherwise(1L)), lit(0L)).as("rejects"))
-          .withColumn(ValidKey, valid)
-        store.writeSplitStage(stage, tagged, ValidKey, chunk)
-        // AQE empty-relation propagation can prune the observed subtree
-        // when `df` collapses to empty at runtime (e.g. a merge whose
-        // every upstream stage is empty) — no rows means no rejects.
-        rejects = obs.get.get("rejects").map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
-      writeChunk match {
-        case Some(start) =>
-          retry.withAdaptiveChunks(start, reconnectMs = 0L) { c =>
-            retry.retry(() => attempt(Some(c)))
-          }
-        case None => retry.retry(() => attempt(None))
-      }
-      if (!store.promoteSlice(stage, s"$ValidKey=true", name))
-        // every row was poison (or the batch was empty): the index still
-        // needs a schema-bearing physical dir
-        retry.retry(() => store.writePhysical(name, df.where(valid), None))
-      if (rejects > 0)
-        store.promoteSlice(stage, s"$ValidKey=false", s"${store.RejectPrefix}$name")
-      rejects
-    } finally store.dropStage(stage)
-  }
-
   /** The SQL INSERT surface (the [[graft.sources.GraftCatalog]] write
     * path): append `df` to the live index behind `alias` — or replace
-    * it, for INSERT OVERWRITE — through the SAME tolerant staged write
-    * and atomic alias swap every pipeline publish uses. Blue/green, not
+    * it, for INSERT OVERWRITE — through a staged write and the atomic
+    * alias swap every full publish uses. Blue/green, not
     * in-place: old ∪ new lands in a FRESH physical and the alias swap is
     * the commit, so readers see the old or the new index, never a
     * partial append, and a failed insert leaves the live index
@@ -216,8 +192,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     * rows are never re-screened: validation happened at their own
     * publish, and re-screening against a possibly-changed predicate
     * would re-quarantine them on every append and corrupt the tally.
-    * The batch size is observed on the split's single pass over the
-    * new batch (or on the write itself when no validity is configured).
+    * The batch size is observed on the write of the new batch.
     *
     * Cost note: an append rewrites the index (O(index + batch)) — the
     * price of atomically-published SQL inserts over an immutable store.
@@ -248,7 +223,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     // every append and corrupt the tally (upserts = n − rejects could
     // undercount or go negative). The split's one count action runs over
     // the new batch alone; the old rows ride along unvalidated.
-    val (goodNew, rejects) = quarantineSplit(noBucket(observed), physical)
+    val (goodNew, rejects) = quarantineSplit(noBucket(observed), quarantineBatch(physical))
     val combined =
       if (overwrite) goodNew
       else store.read(alias).map(c => noBucket(c).unionByName(goodNew))
@@ -270,54 +245,56 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
       upserts = n - rejects, deletes = 0L, rejects = rejects)
   }
 
-  /** Validity split for the bucketed (in-place) paths, which write
-    * through their own bucketed layout rather than [[writeStagedTolerant]]:
-    * quarantine the poison side under `_rejects_<name>`, return the good
-    * side + reject count. Each call writes its OWN partition-style
-    * subdir (overwrite-idempotent under retry, tag fixed per call), so
-    * successive syncs against the same physical name ACCUMULATE
-    * quarantined rows instead of destroying earlier ones — they exist to
-    * be inspected. The extra count action runs only with a validity
-    * predicate configured, over the (small) pruned batch. */
-  private def quarantineSplit(df: DataFrame, name: String): (DataFrame, Long) =
+  /** Validity split for the paths that write their own layout: writes
+    * the poison side to the quarantine slice `slice` (overwrite, so a
+    * retried or replayed batch rewrites its own slice) and returns the
+    * good side + reject count. The extra count action runs only with a
+    * validity predicate configured, over the (small) batch. */
+  private def quarantineSplit(df: DataFrame, slice: String): (DataFrame, Long) =
     validity match {
       case None => (df, 0L)
       case Some(_) =>
         val valid = validCol
         val bad = df.where(!valid)
         val n = bad.count()
-        if (n > 0) {
-          val slice = quarantineBatch(name)
-          retry.retry(() => store.writePhysical(slice, bad, None))
-        }
+        if (n > 0) retry.retry(() => store.writePhysical(slice, bad, None))
         (df.where(valid), n)
     }
 
-  /** A fresh batch dir under `name`'s quarantine: the bucketed layout's
-    * quarantine accumulates one such dir per sync that rejected rows. */
-  private def quarantineBatch(name: String): String =
-    s"${store.RejectPrefix}$name/gbatch=sync_${System.nanoTime()}"
+  /** Batch dir `batch` of `physical`'s quarantine. One quarantine holds
+    * a dir per write that rejected rows (a full sync, each round, each
+    * micro-batch), so they accumulate until inspected. */
+  private def quarantineBatch(physical: String, batch: String = s"sync_${System.nanoTime()}"): String =
+    s"${store.RejectPrefix}$physical/gbatch=$batch"
 
   /** Full blue/green sync (T4; reference main_flow full_sync branch),
     * flat or, with `buckets` set, in the id-hash-bucket layout the
     * in-place incremental path merges into. One grouped aggregate plans
     * it (the index list, the smallest-first order and each index's
-    * high-water mark, [[planRound]]); ONE scan of the source then stages
-    * every index in one write, partitioned by index (and by validity and
-    * bucket, when set); each index's slice is promoted (O(1) rename) and
-    * its alias swapped, smallest first (renames, so `parallelLargest`
-    * has nothing to overlap here). A bucketed stage is first
-    * repartitioned by (index, bucket), so each bucket of each index is
-    * one file, the layout merges and compaction keep. Per-index live
-    * and reject counts are observed on the stage write — no count job
-    * per index. A requested index the source lacks publishes empty. A
-    * failure rolls back the stage and any unswapped promotes (T8) and
-    * rethrows. */
+    * high-water mark and drift probe, [[planRound]]); [[publishFull]]
+    * then publishes it. A requested index the source lacks publishes
+    * empty. */
   def fullSync(env: DataFrame, indexes: Option[Seq[String]] = None,
       timestamp: String, buckets: Option[Int] = None): Seq[IndexSyncReport] = {
     val plan = planRound(env, indexes, buckets = None)
+    val absent = indexes.toSeq.flatten.map(_.toLowerCase).distinct.filterNot(plan.map(_.index).contains)
+    publishFull(env, plan, absent, timestamp, buckets)
+  }
+
+  /** Publishes the planned indexes and the `absent` ones (empty) in full:
+    * ONE scan of the source stages every index in one write,
+    * partitioned by index (and by validity and bucket, when set); each
+    * index's slice is promoted (O(1) rename) and its alias swapped,
+    * smallest first (renames, so `parallelLargest` has nothing to
+    * overlap here). A bucketed stage is first repartitioned by (index,
+    * bucket), so each bucket of each index is one file, the layout
+    * merges and compaction keep. Per-index live and reject counts are
+    * observed on the stage write — no count job per index. A failure
+    * rolls back the stage and any unswapped promotes (T8) and rethrows.
+    * Saves each planned index's watermark and probe. */
+  private def publishFull(env: DataFrame, plan: Seq[IndexPlan], absent: Seq[String],
+      timestamp: String, buckets: Option[Int]): Seq[IndexSyncReport] = {
     val planned = plan.map(_.index)
-    val absent = indexes.toSeq.flatten.map(_.toLowerCase).distinct.filterNot(planned.contains)
     val order = absent.sorted ++ planned
     if (order.isEmpty) return Seq.empty // empty → early exit (:648-650)
     val stage = s"_stage_$timestamp"
@@ -366,7 +343,7 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
           throw e
       }
     store.cleanupOrphans() // K4, scheduled on the full-sync branch (:652-656)
-    saveWatermarks(plan.map(p => p.index -> p.hwm))
+    saveWatermarks(plan)
     done
   }
 
@@ -437,122 +414,80 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
     head ++ tail
   }
 
-  /** Incremental CDC sync (T1/T3; reference flows/main_flow.py:316-333,
-    * 366-395,675-707), planned by the same one-aggregate round plan as
-    * [[incrementalSyncInPlace]]: per index — drift check (T11) may force
-    * a full reindex; zero-change skip (P11) from the plan's changed
-    * count; otherwise merge the `[wm, hwm)` batch into the live state and
-    * publish blue/green (atomic even for increments — stronger than the
-    * reference's in-place bulk, same observable result). The drift check
-    * runs for unchanged indexes too: an out-of-band rewrite that moves no
-    * watermark is exactly what it exists to catch. Watermarks advance
-    * per index, to each planned index's own hwm. */
-  def incrementalSync(env: DataFrame, indexes: Option[Seq[String]] = None,
-      timestamp: String): Seq[IndexSyncReport] = {
-    val plan = planRound(env, indexes, buckets = None)
-    def sync(p: IndexPlan): IndexSyncReport = {
-      val idx = p.index
-      val batch = roundBatch(env, p)
-      val staged = s"${idx}_$timestamp"
-      // T8 rollback: a staged build that fails must take its promoted
-      // quarantine with it — the alias never binds, so nothing else
-      // would ever reclaim `_rejects_<staged>`
-      def rollback(e: Throwable): Nothing = {
-        store.deletePhysical(staged)
-        store.deletePhysical(s"${store.RejectPrefix}$staged")
-        throw e
-      }
-      if (isDrifted(idx, env, batch)) {
-        // T11 — schema drift forces a full rebuild of this index
-        try {
-          val rejects = writeStaged(staged, IndexerOps.fullSyncScan(env, Seq(idx)))
-          store.swapAlias(idx, staged)
-          IndexSyncReport(idx, staged, "full", store.count(idx), 0L, rejects)
-        } catch { case NonFatal(e) => rollback(e) }
-      } else if (p.changed == 0) {
-        skipped(idx)
-      } else {
-        try {
-          val (merged, obs) = applyBatch(store.read(idx), batch)
-          val rejects = writeStaged(staged, merged.sortWithinPartitions(Id))
-          store.swapAlias(idx, staged)
-          val m = obs.get
-          val nIds = m("batch_ids").asInstanceOf[Long]
-          val nDels = m("batch_deletes").asInstanceOf[Long]
-          IndexSyncReport(idx, staged, "incremental", nIds - nDels, nDels, rejects)
-        } catch { case NonFatal(e) => rollback(e) }
-      }
-    }
-    val reports = runSmallestFirstLargestParallel(plan)(sync)
-    saveWatermarks(plan.map(p => p.index -> p.hwm))
-    reports
-  }
-
-  /** T11 drift gate: compare the min-id document's drift field between
-    * stored state and source, EXCLUDING ids touched by the pending batch
-    * (an ordinary pending update is not drift — ADVICE r1). Drift
-    * requires a doc on BOTH sides with differing values. */
-  private def isDrifted(idx: String, env: DataFrame, batch: DataFrame): Boolean =
-    store.read(idx).exists { cur =>
-      val pending = batch.select(Id)
-      val stored = cur.join(pending, Seq(Id), "left_anti")
-      val source = env.where(col(Idx) === idx).join(pending, Seq(Id), "left_anti")
-      IndexerOps.schemaDrift(stored, source, driftJsonPath)
-        .where(col("stored_name").isNotNull && col("source_name").isNotNull)
-        .limit(1).count() > 0
-    }
-
-  /** CDC merge with upsert/delete tallies observed ON the merge plan
-    * itself (A7 — the reference's records/errors counters) — zero extra
-    * Spark actions; the metrics materialize with the staged write. */
-  private[sync] def applyBatch(current: Option[DataFrame], batch: DataFrame)
-      : (DataFrame, Observation) = {
-    val cur = current.getOrElse(IndexerOps.emptyEnvelope(batch.sparkSession))
-    val obs = new Observation(s"graft_batch_${System.nanoTime()}")
-    (IndexerOps.cdcMergeObserved(cur, batch, obs), obs)
-  }
-
-  /** In-place bucketed incremental sync — the scale path for increments.
-    * The blue/green [[incrementalSync]] rewrites the WHOLE index per
-    * batch (atomic, but a full copy for a 0.1% delta); this variant
-    * mirrors the reference's actual in-place bulk upsert
-    * (flows/main_flow.py:366-422) at partition granularity: physical
-    * indexes are partitioned by id-hash bucket and ONLY the buckets the
-    * batch touches are rewritten (partition-pruned read, per-bucket
-    * swap). Incremental cost ∝ |delta| × (index/buckets), not |index|.
-    * Requires a bucketed bootstrap via [[fullSyncBucketed]].
+  /** In-place bucketed incremental sync — the one incremental path
+    * (T1/T3; reference flows/main_flow.py:316-333,366-395,673-762). It
+    * mirrors the reference's in-place bulk upsert at partition
+    * granularity: physical indexes are partitioned by id-hash bucket and
+    * ONLY the buckets a batch touches are rewritten (partition-pruned
+    * read, per-bucket swap). Incremental cost ∝ |delta| ×
+    * (index/buckets), not |index|. Bootstrap with [[fullSyncBucketed]];
+    * an index with no bound physical gets a fresh one with `buckets`
+    * buckets from its first merge.
     *
     * A round is planned by ONE grouped aggregate over the source
-    * (per index: row count for smallest-first order, high-water mark,
-    * changed-row count since the index's watermark, affected buckets), so
-    * its fixed Spark cost does not grow with the number of indexes. An
-    * index with no changes reports `skipped` with no further Spark work;
-    * a changed index merges exactly its `[wm, hwm)` rows — the rows the
-    * plan counted — into the planned buckets through [[InPlaceMerge]]. */
+    * ([[planRound]]), so its fixed Spark cost does not grow with the
+    * number of indexes. Per index, in smallest-first order: a drifted
+    * index (T11, from the plan's probe) is rebuilt bucketed at its own
+    * bucket count and reports `full`; an index with no changes reports
+    * `skipped` with no further Spark work; a changed index merges
+    * exactly its `[wm, hwm)` rows — the rows the plan counted — into the
+    * planned buckets through [[syncIndex]]. The drift check runs for
+    * unchanged indexes too: an out-of-band rewrite that moves no
+    * watermark is exactly what it exists to catch. Watermarks advance
+    * per index, to each planned index's own hwm. */
   def incrementalSyncInPlace(env: DataFrame, indexes: Option[Seq[String]] = None,
-      buckets: Int = 64): Seq[IndexSyncReport] = {
+      buckets: Int = DefaultBuckets): Seq[IndexSyncReport] = {
     val plan = planRound(env, indexes, Some(buckets))
-    def sync(p: IndexPlan): IndexSyncReport = {
-      if (p.changed == 0) return skipped(p.index)
-      val physical = store.aliases().getOrElse(p.index,
-        sys.error(s"in-place sync needs a bootstrapped bucketed index for ${p.index}"))
-      // per-record tolerance applies to the in-place path too: poison
-      // rows quarantine instead of merging into the live index
-      val (good, rejects) = quarantineSplit(roundBatch(env, p), physical)
-      if (rejects > 0 && good.isEmpty)
-        return IndexSyncReport(p.index, physical, "incremental", 0L, 0L, rejects)
-      val (ups, dels) = InPlaceMerge(store, physical, good, buckets, p.buckets)
-      IndexSyncReport(p.index, physical, "incremental", ups, dels, rejects)
+    val (drifted, rest) = plan.partition(_.drifted)
+    // rebuilds run before any merge: their orphan cleanup must not race
+    // a merge's fresh physical
+    val rebuilt = drifted.groupBy(p => store.aliases().get(p.index).flatMap(store.bucketCountOf)
+        .getOrElse(buckets)).toSeq
+      .flatMap { case (n, ps) => publishFull(env, ps, Nil, s"drift${System.nanoTime()}", Some(n)) }
+    val merged = runSmallestFirstLargestParallel(rest) { p =>
+      if (p.changed == 0) skipped(p.index)
+      else syncIndex(p.index, roundBatch(env, p), p.buckets, s"sync_${System.nanoTime()}", buckets)
     }
-    val reports = runSmallestFirstLargestParallel(plan)(sync)
-    saveWatermarks(plan.map(p => p.index -> p.hwm))
-    reports
+    saveWatermarks(rest)
+    val byIndex = (rebuilt ++ merged).map(r => r.index -> r).toMap
+    plan.map(p => byIndex(p.index))
+  }
+
+  /** The one incremental step, shared by the batch round and the
+    * stream's micro-batches: quarantine `batch`'s poison rows (K1) in
+    * batch dir `rejectBatch` of the bound physical's quarantine (a rerun
+    * of the same batch overwrites its own dir), then merge the good rows
+    * in place into the `affected` buckets under the retry policy (T10).
+    * The merge reads the index inside the retried thunk, so a retry
+    * after a partial bucket swap lists the files afresh; the merge is
+    * idempotent by id. An alias with no bound physical is first bound
+    * to a fresh, empty bucketed one with `buckets` buckets. With
+    * `observed`, the report carries the merge's upsert/delete tallies;
+    * without — inside a streaming `foreachBatch`, where `Observation`
+    * metrics never fire — they read 0. */
+  private[graft] def syncIndex(alias: String, batch: DataFrame, affected: Seq[Long],
+      rejectBatch: String, buckets: Int, observed: Boolean = true): IndexSyncReport = {
+    val physical = store.aliases().getOrElse(alias, {
+      val fresh = s"${alias}_${System.nanoTime()}"
+      retry.retry(() => store.writePhysicalBucketed(fresh,
+        IndexerOps.emptyEnvelope(store.spark), Id, buckets))
+      store.swapAlias(alias, fresh)
+      fresh
+    })
+    val (good, rejects) = quarantineSplit(batch, quarantineBatch(physical, rejectBatch))
+    val (ups, dels) =
+      if (rejects > 0 && good.isEmpty) (0L, 0L)
+      else retry.retry { () =>
+        if (observed) InPlaceMerge(store, physical, good, buckets, affected)
+        else { InPlaceMerge.applyUnobserved(store, physical, good, buckets, affected); (0L, 0L) }
+      }
+    IndexSyncReport(alias, physical, "incremental", ups, dels, rejects)
   }
 
   /** Bucketed bootstrap for the in-place incremental path: the full
     * sync in the id-hash-bucket layout. */
   def fullSyncBucketed(env: DataFrame, indexes: Option[Seq[String]] = None,
-      timestamp: String, buckets: Int = 64): Seq[IndexSyncReport] =
+      timestamp: String, buckets: Int = DefaultBuckets): Seq[IndexSyncReport] =
     fullSync(env, indexes, timestamp, Some(buckets))
 
   /** Re-bucket a bucketed index to a new bucket count — the growth path
@@ -647,8 +582,38 @@ class SyncPipeline(store: IndexStore, watermarks: WatermarkStore,
 
   /** Advance each synced index's watermark to its own high-water mark
     * (max updated_at + 1 µs, computed in the planning aggregate — the
-    * deterministic analog of the reference's run-timestamp watermark).
-    * Untouched indexes keep their old watermark: no silent skips. */
-  private def saveWatermarks(hwms: Seq[(String, Option[String])]): Unit =
-    hwms.foreach { case (idx, hwm) => hwm.foreach(watermarks.save(idx, _)) }
+    * deterministic analog of the reference's run-timestamp watermark),
+    * saved with its next drift probe. Untouched indexes keep their old
+    * watermark: no silent skips. */
+  private def saveWatermarks(plan: Seq[IndexPlan]): Unit =
+    plan.foreach(p => p.hwm.foreach(watermarks.save(p.index, _, p.probe)))
+}
+
+object SyncPipeline {
+
+  /** T11's drift field: the reference's schema-name path (SURVEY J1). */
+  val DriftJsonPath = "$.schema_maintainer.schema_name"
+
+  /** Bucket count of an index the incremental path creates: the in-place
+    * round's default, and the stream's. */
+  val DefaultBuckets = 64
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `doc`'s [[DriftJsonPath]] value, read as `get_json_object` reads
+    * it (a string's text, any other value's JSON); None for a JSON null,
+    * a missing field or a doc that is not JSON. */
+  private[sync] def driftValue(doc: String): Option[String] =
+    scala.util.Try(json.readTree(doc)).toOption
+      .flatMap(root => DriftJsonPath.stripPrefix("$.").split('.')
+        .foldLeft(Option(root))((node, field) => node.flatMap(n => Option(n.get(field)))))
+      .filterNot(_.isNull)
+      .map(v => if (v.isTextual) v.asText else v.toString)
+
+  /** An index's high-water mark: max `updated_at` + 1 µs (the inclusive
+    * `>=` rescan then skips the boundary row), fixed-width so string
+    * order is time order. */
+  private[graft] def hwmOf: org.apache.spark.sql.Column =
+    date_format(max(col(UpdatedAt)) + expr("INTERVAL 1 MICROSECOND"),
+      "yyyy-MM-dd HH:mm:ss.SSSSSS")
 }

@@ -1,12 +1,15 @@
 package graft.sync
 
+import java.net.{URLDecoder, URLEncoder}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** T2 — persisted CDC watermark (reference save_last_run_config /
   * `last_modified`, flows/main_flow.py:603,611). One timestamp string per
-  * store, atomically replaced. The batch analog of a Structured Streaming
+  * store and one per index (with that index's drift [[Probe]]), each
+  * atomically replaced. The batch analog of a Structured Streaming
   * checkpoint offset; the streaming variant uses `checkpointLocation`
   * instead (graft.streaming). */
 class WatermarkStore(dir: String) {
@@ -38,10 +41,20 @@ class WatermarkStore(dir: String) {
   /** Watermark for one index: its own if present, else the global, else
     * the epoch sentinel. */
   def loadOrEpoch(index: String): String =
-    readFile(indexPath(index)).orElse(load()).getOrElse(Epoch)
+    readFile(indexPath(index)).map(_.linesIterator.next()).orElse(load()).getOrElse(Epoch)
 
-  def save(index: String, watermark: String): Unit =
-    writeAtomic(indexPath(index), watermark)
+  /** Saves an index's watermark together with its drift probe (T11), in
+    * one atomic replace: the probe always describes the state the
+    * watermark says the store holds. A save without a probe drops the
+    * index's probe; the next planned round picks a new one. */
+  def save(index: String, watermark: String, probe: Option[Probe] = None): Unit =
+    writeAtomic(indexPath(index), (watermark +: probe.toSeq.flatMap(p =>
+      Seq(p.id, p.value).map(URLEncoder.encode(_, UTF_8)))).mkString("\n"))
+
+  /** The drift probe saved with an index's watermark, if any. */
+  def probe(index: String): Option[Probe] =
+    readFile(indexPath(index)).map(_.linesIterator.drop(1).map(URLDecoder.decode(_, UTF_8)).toList)
+      .collect { case id :: value :: _ => Probe(id, value) }
 
   /** Every index that has a watermark of its own. */
   def indexes(): Seq[String] =
@@ -62,3 +75,7 @@ class WatermarkStore(dir: String) {
       StandardCopyOption.REPLACE_EXISTING)
   }
 }
+
+/** T11's drift probe: one published doc's id and the value of its drift
+  * field (`SyncPipeline.DriftJsonPath`) as of the save. */
+case class Probe(id: String, value: String)

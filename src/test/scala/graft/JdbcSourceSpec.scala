@@ -221,7 +221,7 @@ class JdbcSourceSpec extends AnyFunSuite with SparkSpec {
     val pipe = new SyncPipeline(store, wms)
 
     // stage 1: full sync off the JDBC source (4 parallel range cursors)
-    val full = pipe.fullSync(readSource(), None, timestamp = "t1")
+    val full = pipe.fullSyncBucketed(readSource(), None, timestamp = "t1", buckets = 4)
     assert(full.map(_.index).toSet === Set("click", "view"))
     assert(store.count("click") === 30L && store.count("view") === 30L)
     assert(pipe.reconcile(readSource(), Seq("click", "view")).isEmpty)
@@ -238,7 +238,7 @@ class JdbcSourceSpec extends AnyFunSuite with SparkSpec {
       st.execute("UPDATE index_documents SET is_deleted = true," +
         " updated_at = TIMESTAMP('2024-01-02 00:10:00') WHERE id = '2'")
     }
-    val inc = pipe.incrementalSync(readSource(), None, timestamp = "t2")
+    val inc = pipe.incrementalSyncInPlace(readSource(), None, buckets = 4)
     val incClick = inc.find(_.index == "click").get
     assert(incClick.mode === "incremental")
     assert(incClick.deletes === 1L) // the tombstone

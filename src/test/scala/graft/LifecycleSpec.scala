@@ -25,8 +25,8 @@ class LifecycleSpec extends AnyFunSuite with SparkSpec {
     val full = Tables.envelope(spark, sf)
     val early = full.where(col(UpdatedAt) < lit(cutoff).cast("timestamp"))
 
-    // 1. bootstrap: blue/green full sync of the early slice
-    val boot = pipe.fullSync(early, Some(indexes), timestamp = "t1")
+    // 1. bootstrap: bucketed blue/green full sync of the early slice
+    val boot = pipe.fullSyncBucketed(early, Some(indexes), timestamp = "t1", buckets = 8)
     assert(boot.map(_.mode).forall(_ == "full"))
     assert(pipe.reconcile(early, indexes).isEmpty)
 
@@ -36,13 +36,13 @@ class LifecycleSpec extends AnyFunSuite with SparkSpec {
       "SELECT count(*) FROM graft_click").collect()(0).getLong(0)
     assert(served === store.count("click"))
 
-    // 3. increment: apply post-cutoff changes incl. tombstone behavior
-    val inc = pipe.incrementalSync(full, Some(indexes), timestamp = "t2")
+    // 3. increment: merge post-cutoff changes in place, incl. tombstones
+    val inc = pipe.incrementalSyncInPlace(full, Some(indexes), buckets = 8)
     assert(inc.forall(r => r.mode == "incremental" || r.mode == "skipped"))
     assert(pipe.reconcile(full, indexes).isEmpty)
 
     // 4. nothing to do → skip (P11)
-    assert(pipe.incrementalSync(full, Some(indexes), timestamp = "t3")
+    assert(pipe.incrementalSyncInPlace(full, Some(indexes), buckets = 8)
       .forall(_.mode == "skipped"))
 
     // 5. streaming catch-up over the SAME store: new late events arrive

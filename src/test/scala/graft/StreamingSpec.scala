@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
-import graft.operators.Analytics
+import graft.operators.{Analytics, IndexerOps}
 import graft.sources.Tables
 import graft.sources.Tables._
 import graft.streaming.{StreamingAgg, StreamingCdc}
@@ -47,7 +47,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     ev.unpersist()
   }
 
-  test("streaming CDC (AvailableNow, multi-batch) ends in the same state as batch incremental sync") {
+  test("streaming CDC (AvailableNow, multi-batch) ends in the state of the one-shot CDC merge") {
     val source = tmp("stream-src")
     writeTimeSlicedSource(source, 3)
 
@@ -60,18 +60,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val batches = sCdc.syncAvailable(spark, source.toString, indexes, "t1")
     assert(batches >= 3, s"expected >=3 micro-batches (one per file), got $batches")
 
-    // batch path over the same data
-    val bRoot = tmp("batch-store").toString
-    val bStore = new IndexStore(spark, bRoot)
-    val pipeline = new SyncPipeline(bStore, new WatermarkStore(bRoot))
+    // the truth: the pure CDC merge of the same data over an empty state
     val env = Tables.envelope(Tables.normalizeTs(spark.read.parquet(source.toString)))
-    pipeline.incrementalSync(env, Some(indexes), "t1")
-
     indexes.foreach { idx =>
       val s = sStore.read(idx).map(_.select(Idx, Id, Document, IsDeleted)
         .orderBy(Id).collect().toSeq).getOrElse(Seq.empty)
-      val b = bStore.read(idx).map(_.select(Idx, Id, Document, IsDeleted)
-        .orderBy(Id).collect().toSeq).getOrElse(Seq.empty)
+      val b = IndexerOps.cdcMerge(IndexerOps.emptyEnvelope(spark), env.where(col(Idx) === idx))
+        .select(Idx, Id, Document, IsDeleted).orderBy(Id).collect().toSeq
       assert(s === b, s"state mismatch for index $idx")
     }
   }
@@ -123,8 +118,62 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .select(Id).distinct().count()
     assert(store.count("click") === expect)
     // the poison row sits in the quarantine, tagged by micro-batch
-    val q = store.rejected("click").get
+    val q = store.rejected(store.aliases()("click")).get
     assert(q.count() === 1L && q.where(col(Id).isNull).count() === 1L)
+  }
+
+  test("one quarantine for both callers: a micro-batch and a batch round reject under the bound physical; a replayed micro-batch rewrites its own dir") {
+    val source = tmp("stream-q-src")
+    writeTimeSlicedSource(source, 2)
+    val last = Tables.events(spark, sf).orderBy(desc("ts")).limit(1)
+    /** Lands a file of one NULL-id (poison) and one new valid click,
+      * `days` after the fixture's last event. */
+    def land(name: String, days: Int, id: Long): Unit = {
+      val stage = tmp("poison-slice")
+      last.select(lit(null).cast("long").as("event_id"), col("ts"), col("user_id"),
+          lit("click").as("event_type"), col("value"), col("props"))
+        .unionByName(last.select(lit(id).as("event_id"), col("ts"), col("user_id"),
+          lit("click").as("event_type"), col("value"), col("props")))
+        .withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
+        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      Files.copy(Files.list(stage).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get, source.resolve(name))
+    }
+    land("slice_zzz_poison.parquet", 1, 990001L)
+
+    val root = tmp("stream-q-store").toString
+    // the in-place write fails once, after the poison batch quarantined
+    var failuresLeft = 1
+    val store = new IndexStore(spark, root) {
+      override def replaceBuckets(name: String, df: DataFrame, affected: Seq[Long]): Unit = {
+        if (failuresLeft > 0 && rejected(name).isDefined) { failuresLeft -= 1; sys.error("sink outage") }
+        super.replaceBuckets(name, df, affected)
+      }
+    }
+    val wms = new WatermarkStore(root)
+    val valid = length(trim(col(Id))) > 0
+    val cdc = new StreamingCdc(store, wms, validity = Some(valid))
+    intercept[Exception](cdc.syncAvailable(spark, source.toString, Seq("click"), "t1"))
+    assert(failuresLeft === 0, "the fault never fired; test is vacuous")
+    cdc.syncAvailable(spark, source.toString, Seq("click"), "t1")
+    val physical = store.aliases()("click")
+    def batches(): Seq[String] = Files.list(java.nio.file.Paths.get(root, s"${store.RejectPrefix}$physical"))
+      .iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("gbatch=")).toSeq.sorted
+    // the replay rewrote its own dir: one row, not two
+    assert(store.rejected(physical).get.count() === 1L)
+    assert(batches().size === 1 && batches().head.startsWith("gbatch=t1_b"), batches())
+
+    // the batch round rejects into the same quarantine
+    land("slice_zzz_poison2.parquet", 2, 990002L)
+    val env = Tables.envelope(Tables.normalizeTs(spark.read.parquet(source.toString)))
+    val r = new SyncPipeline(store, wms, validity = Some(valid))
+      .incrementalSyncInPlace(env, Some(Seq("click")))
+    assert(r.map(x => (x.mode, x.rejects)) === Seq(("incremental", 1L)))
+    assert(store.aliases()("click") === physical)
+    assert(store.rejectedIndexes() === Seq(physical))
+    assert(store.rejected(physical).get.where(col(Id).isNull).count() === 2L)
+    assert(batches().size === 2 && batches().exists(_.startsWith("gbatch=sync_")), batches())
+    assert(store.read("click").get.where(col(Id).isin("990001", "990002")).count() === 2L)
   }
 
   test("map-only curation ops run unchanged on a documents stream (quality filter ≡ batch)") {

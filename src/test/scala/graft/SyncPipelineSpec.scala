@@ -72,8 +72,10 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
   test("full sync ≡ incremental-from-epoch (same final state)") {
     val (storeA, _, pipeA, _) = freshPipeline()
     pipeA.fullSync(env, None, timestamp = "t1")
+    // an empty store: each index's first merge binds a fresh bucketed physical
     val (storeB, _, pipeB, _) = freshPipeline()
-    pipeB.incrementalSync(env, None, timestamp = "t1")
+    pipeB.incrementalSyncInPlace(env, None, buckets = 4)
+    assert(storeB.aliases().values.forall(p => storeB.bucketCountOf(p) === Some(4)))
     for (idx <- Seq("click", "view", "purchase", "signup")) {
       val a = storeA.read(idx).get.select(Id, Document).orderBy(Id)
       val b = storeB.read(idx).get.select(Id, Document).orderBy(Id)
@@ -86,15 +88,15 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     val cutoff = "2024-01-15 00:00:00"
     val early = env.where(col(UpdatedAt) < lit(cutoff).cast("timestamp"))
     // bootstrap with the early slice, watermark persisted from early data
-    pipe.fullSync(early, None, timestamp = "t1")
+    pipe.fullSyncBucketed(early, None, timestamp = "t1", buckets = 4)
     val before = store.count("click")
     // second run over the full data applies only post-watermark changes
-    val reports = pipe.incrementalSync(env, None, timestamp = "t2")
+    val reports = pipe.incrementalSyncInPlace(env, None, buckets = 4)
     val after = store.count("click")
     assert(after > before)
     assert(pipe.reconcile(env, Seq("click", "view", "purchase", "signup")).isEmpty)
     // third run: watermark is max(updated_at) → nothing to do
-    val again = pipe.incrementalSync(env, None, timestamp = "t3")
+    val again = pipe.incrementalSyncInPlace(env, None, buckets = 4)
     assert(again.forall(_.mode == "skipped"))
   }
 
@@ -105,14 +107,14 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
       .select(lit("click").as(Idx), col(Id), col(Document),
         lit(false).as(IsDeleted), col(UpdatedAt))
     val initial = env.where(col(Idx) === "click").unionByName(doc42)
-    pipe.fullSync(initial, Some(Seq("click")), timestamp = "t1")
+    pipe.fullSyncBucketed(initial, Some(Seq("click")), timestamp = "t1", buckets = 4)
     assert(store.read("click").get.where(col(Id) === "42").count() == 1)
     // CDC batch: same doc tombstoned later
     wms.save("2024-02-01 00:00:00")
     val tomb = doc42.select(col(Idx), col(Id), col(Document),
       lit(true).as(IsDeleted),
       lit("2024-02-02 00:00:00").cast("timestamp").as(UpdatedAt))
-    pipe.incrementalSync(tomb, Some(Seq("click")), timestamp = "t2")
+    pipe.incrementalSyncInPlace(tomb, Some(Seq("click")), buckets = 4)
     assert(store.read("click").get.where(col(Id) === "42").count() == 0)
   }
 
@@ -137,7 +139,7 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     val feed = env.where(col(Idx) === "click")
       .unionByName(poisonRow("2024-01-02 00:00:00"))
       .unionByName(nullRow("2024-01-02 00:00:00"))
-    val reports = pipe.fullSync(feed, Some(Seq("click")), timestamp = "t1")
+    val reports = pipe.fullSyncBucketed(feed, Some(Seq("click")), timestamp = "t1", buckets = 4)
     assert(reports.head.rejects === 2L)
     // all good rows landed, none of the poison did
     val live = store.read("click").get
@@ -156,7 +158,7 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
       .unionByName(env.where(col(Idx) === "click").limit(1).select(
         col(Idx), lit("990001").as(Id), col(Document), lit(false).as(IsDeleted),
         lit("2024-03-01 00:00:00").cast("timestamp").as(UpdatedAt)))
-    val inc = pipe.incrementalSync(feed2, Some(Seq("click")), timestamp = "t2")
+    val inc = pipe.incrementalSyncInPlace(feed2, Some(Seq("click")), buckets = 4)
     assert(inc.head.mode === "incremental" && inc.head.rejects >= 1L)
     assert(store.read("click").get.where(col(Id) === "990001").count() === 1)
     assert(store.read("click").get.where(length(trim(col(Id))) === 0).count() === 0)
@@ -420,20 +422,28 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     wms.save("click", "2024-02-01 00:00:00.000000")
     assert(wms.loadOrEpoch("click") == "2024-02-01 00:00:00.000000")
     assert(wms.loadOrEpoch("view") == "2024-01-30 23:26:16.220708")
+    // a drift probe rides in the same file; any id or value round-trips
+    assert(wms.probe("click").isEmpty)
+    val probe = graft.sync.Probe("id\nwith %2B odd\tchars ", "v 1\n")
+    wms.save("click", "2024-02-02 00:00:00.000000", Some(probe))
+    assert(wms.probe("click") === Some(probe))
+    assert(wms.loadOrEpoch("click") == "2024-02-02 00:00:00.000000")
+    wms.save("click", "2024-02-03 00:00:00.000000")
+    assert(wms.probe("click").isEmpty, "a save without a probe drops it")
   }
 
   test("per-index watermarks: a partial sync never skips other indexes' changes") {
     val (store, _, pipe, _) = freshPipeline()
     val cutoff = "2024-01-15 00:00:00"
     val early = env.where(col(UpdatedAt) < lit(cutoff).cast("timestamp"))
-    pipe.fullSync(early, None, timestamp = "t1")
+    pipe.fullSyncBucketed(early, None, timestamp = "t1", buckets = 4)
     val viewBefore = store.count("view")
     // partial sync of ONLY 'click' over the full data — must not advance
     // 'view''s watermark
-    pipe.incrementalSync(env, Some(Seq("click")), timestamp = "t2")
+    pipe.incrementalSyncInPlace(env, Some(Seq("click")), buckets = 4)
     assert(store.count("view") == viewBefore, "partial sync must not touch view")
     // 'view' still catches up on its own later: nothing was lost
-    val r = pipe.incrementalSync(env, Some(Seq("view")), timestamp = "t3")
+    val r = pipe.incrementalSyncInPlace(env, Some(Seq("view")), buckets = 4)
     assert(r.head.mode == "incremental" && r.head.upserts > 0,
       "view's pre-t2 changes must still be applied")
     assert(pipe.reconcile(env, Seq("click", "view")).isEmpty)
@@ -443,8 +453,8 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     val (_, wms, pipe, _) = freshPipeline()
     val cutoff = "2024-01-15 00:00:00"
     val early = env.where(col(UpdatedAt) < lit(cutoff).cast("timestamp"))
-    pipe.fullSync(early, None, timestamp = "t1")
-    val reports = pipe.incrementalSync(env, None, timestamp = "t2")
+    pipe.fullSyncBucketed(early, None, timestamp = "t1", buckets = 4)
+    val reports = pipe.incrementalSyncInPlace(env, None, buckets = 4)
     val late = env.where(col(UpdatedAt) >= lit(cutoff).cast("timestamp"))
     for (idx <- Seq("click", "view", "purchase", "signup")) {
       val expectIds = late.where(col(Idx) === idx).select(Id).distinct().count()
@@ -459,7 +469,7 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(errRep.deletes > 0 && errRep.upserts == 0)
   }
 
-  test("retry wiring: flaky store write recovers; adaptive chunks degrade (no wall-clock sleeps)") {
+  test("retry wiring: a flaky insert write recovers; adaptive chunks degrade (no wall-clock sleeps)") {
     val dir = Files.createTempDirectory("graft-flaky").toString
     var failures = 2
     var writes = Vector.empty[Option[Int]]
@@ -476,7 +486,8 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
       sleep = _ => sleeps += 1)
     val pipe = new SyncPipeline(flaky, new WatermarkStore(dir), retry = policy,
       writeChunk = Some(500))
-    pipe.incrementalSync(env, Some(Seq("click")), timestamp = "t1")
+    def rows(idx: String) = env.where(col(Idx) === idx && !col(IsDeleted)).select(Idx, Id, Document, IsDeleted)
+    pipe.insertInto("click", rows("click"))
     // both failures retried at chunk 500 (inner retry), then success
     assert(writes.count(_.contains(500)) == 3)
     assert(sleeps == 2)
@@ -495,7 +506,7 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     val noRetry = RetryPolicy(maxRetries = 0, sleep = _ => ())
     val pipe2 = new SyncPipeline(sizeSensitive, new WatermarkStore(sizeSensitive.root),
       retry = noRetry, writeChunk = Some(500))
-    pipe2.incrementalSync(env, Some(Seq("view")), timestamp = "t1")
+    pipe2.insertInto("view", rows("view"))
     assert(degWrites.take(3) == Vector(500, 450, 400), degWrites)
     assert(sizeSensitive.count("view") > 0)
   }
@@ -567,7 +578,6 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("a bucketed full sync's Spark job count does not grow with the number of indexes") {
     import spark.implicits._
-    def at(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
     def syncJobs(n: Int): Int = {
       val (store, _, pipe, _) = freshPipeline()
       // an in-memory source: its non-nullable columns reach the writer
@@ -601,47 +611,113 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("parallel publish of the largest indexes gives the same final state") {
-    // an incremental sync publishes index by index (a full sync's publish
+  test("parallel merge of the largest indexes gives the same final state") {
+    // an incremental round merges index by index (a full sync's publish
     // is renames only, with nothing to run in parallel)
-    val (storeA, _, _, _) = freshPipeline()
-    val pipeSeq = new SyncPipeline(storeA, new WatermarkStore(storeA.root),
-      parallelLargest = 0)
-    pipeSeq.incrementalSync(env, None, timestamp = "t1")
-    val (storeB, _, _, _) = freshPipeline()
-    val pipePar = new SyncPipeline(storeB, new WatermarkStore(storeB.root),
-      parallelLargest = 2)
-    pipePar.incrementalSync(env, None, timestamp = "t1")
+    val early = env.where(col(UpdatedAt) < lit("2024-01-15 00:00:00").cast("timestamp"))
+    def round(parallelLargest: Int): IndexStore = {
+      val (store, _, _, _) = freshPipeline()
+      val pipe = new SyncPipeline(store, new WatermarkStore(store.root),
+        parallelLargest = parallelLargest)
+      pipe.fullSyncBucketed(early, None, timestamp = "t1", buckets = 4)
+      assert(pipe.incrementalSyncInPlace(env, None, buckets = 4).count(_.mode == "incremental") > 2)
+      store
+    }
+    val (storeA, storeB) = (round(0), round(2))
     for (idx <- Seq("click", "view", "purchase", "signup", "error")) {
       assert(storeA.count(idx) == storeB.count(idx), s"count differs for $idx")
       assert(storeA.aliases().get(idx) == storeB.aliases().get(idx))
     }
   }
 
-  test("drift gate: a pending update to the probe doc is NOT drift; true drift forces rebuild") {
+  private def at(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
+
+  /** An envelope doc carrying the drift field. */
+  private def driftDoc(schema: String, k: Int) =
+    s"""{"schema_maintainer":{"schema_name":"$schema"},"k":$k}"""
+
+  /** A parquet source of envelope rows, appended to or rewritten by the
+    * drift specs; `read` rereads it. */
+  private class DriftSource {
+    import spark.implicits._
+    private var dir = Files.createTempDirectory("graft-drift").resolve("v0").toString
+    def append(rows: Seq[(String, String, String, Boolean, java.sql.Timestamp)]): Unit =
+      rows.toDF(Idx, Id, Document, IsDeleted, UpdatedAt).write.mode("append").parquet(dir)
+    def read(): org.apache.spark.sql.DataFrame = spark.read.parquet(dir)
+    /** An out-of-band rewrite: `idx`'s documents change schema value,
+      * their `updated_at` does not. */
+    def rewrite(idx: String, schema: String): Unit = {
+      val next = s"${dir}r"
+      read().withColumn(Document, when(col(Idx) === idx,
+          regexp_replace(col(Document), "\"schema_name\":\"[^\"]*\"", s"\"schema_name\":\"$schema\"")
+        ).otherwise(col(Document)))
+        .write.parquet(next)
+      dir = next
+    }
+  }
+
+  private def modes(reports: Seq[graft.sync.IndexSyncReport]): Map[String, String] =
+    reports.map(r => r.index -> r.mode).toMap
+
+  /** `idx`'s live rows are `want`'s. */
+  private def holds(store: IndexStore, idx: String, want: org.apache.spark.sql.DataFrame): Unit = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(Id, Document).orderBy(Id, Document).collect().toSeq
+    assert(rows(store.read(idx).get) === rows(want), idx)
+  }
+
+  /** The latest-per-id state of `idx` in `src`. */
+  private def latest(src: org.apache.spark.sql.DataFrame, idx: String) =
+    IndexerOps.cdcMerge(IndexerOps.emptyEnvelope(spark), src.where(col(Idx) === idx))
+
+  test("drift gate: a pending probe update and an appended second version are not drift; an out-of-band change rebuilds bucketed") {
     val (store, wms, pipe, _) = freshPipeline()
-    pipe.fullSync(env, Some(Seq("click")), timestamp = "t1")
-    // pending batch rewrites doc 0's k value with a later updated_at —
-    // an ordinary update, not schema drift
-    val minId = store.read("click").get.agg(min(col(Id))).collect()(0).getString(0)
-    val bumped = env.where(col(Idx) === "click")
-      .withColumn(Document,
-        when(col(Id) === minId, lit("""{"k": 999999}""")).otherwise(col(Document)))
-      .withColumn(UpdatedAt,
-        when(col(Id) === minId, lit("2030-01-01 00:00:00").cast("timestamp"))
-          .otherwise(col(UpdatedAt)))
-    val r = pipe.incrementalSync(bumped, Some(Seq("click")), timestamp = "t2")
-    assert(r.head.mode == "incremental",
-      "a pending update to the probe doc must not be misclassified as drift")
-    // true drift: stored probe doc's field differs and is NOT in the batch
-    val (store2, _, pipe2, _) = freshPipeline()
-    pipe2.fullSync(env, Some(Seq("click")), timestamp = "t1")
-    val rewired = env.where(col(Idx) === "click")
-      .withColumn(Document,
-        when(col(Id) === minId, lit("""{"k": 777}""")).otherwise(col(Document)))
-    // minId's updated_at is unchanged → excluded from batch → real drift
-    val r2 = pipe2.incrementalSync(rewired, Some(Seq("click")), timestamp = "t2")
-    assert(r2.head.mode == "full", "out-of-band probe change must force a rebuild")
+    val src = new DriftSource
+    src.append(for (i <- 0 until 2; d <- 0 until 20)
+      yield (s"ix$i", s"$i-$d", driftDoc("v1", d), false, at(d)))
+    pipe.fullSyncBucketed(src.read(), None, "t0", buckets = 4)
+    val probe = wms.probe("ix0").get
+    assert(probe.value === "v1" && wms.probe("ix1").isDefined)
+    // an ordinary, pending update of the probe doc to a new schema value
+    src.append(Seq(("ix0", probe.id, driftDoc("v2", 99), false, at(100))))
+    assert(modes(pipe.incrementalSyncInPlace(src.read(), None, buckets = 8)) ===
+      Map("ix0" -> "incremental", "ix1" -> "skipped"))
+    assert(wms.probe("ix0") === Some(graft.sync.Probe(probe.id, "v2")))
+    // the source now holds two versions of the probe id: the latest counts
+    assert(modes(pipe.incrementalSyncInPlace(src.read(), None, buckets = 8)) ===
+      Map("ix0" -> "skipped", "ix1" -> "skipped"))
+    // an out-of-band rewrite of an index with no changes, beside a changed one
+    src.rewrite("ix1", "v9")
+    src.append(Seq(("ix0", "0-3", driftDoc("v2", 3), false, at(101))))
+    val before = store.aliases()("ix1")
+    val drift = pipe.incrementalSyncInPlace(src.read(), None, buckets = 8)
+    assert(modes(drift) === Map("ix0" -> "incremental", "ix1" -> "full"))
+    assert(drift.map(_.index) === Seq("ix1", "ix0"), "smallest first")
+    // rebuilt at its own bucket count, not the round's
+    val rebuilt = store.aliases()("ix1")
+    assert(rebuilt != before && !store.indexExists(before))
+    assert(store.bucketCountOf(rebuilt) === Some(4))
+    assert(wms.probe("ix1").map(_.value) === Some("v9"))
+    Seq("ix0", "ix1").foreach(i => holds(store, i, latest(src.read(), i)))
+    // the rebuild settled the drift
+    assert(modes(pipe.incrementalSyncInPlace(src.read(), None, buckets = 8)).values.toSet === Set("skipped"))
+  }
+
+  test("drift gate: a tombstoned probe hands over to a live doc, and later drift is still caught") {
+    val (store, wms, pipe, _) = freshPipeline()
+    val src = new DriftSource
+    src.append(for (d <- 0 until 20) yield ("ix0", s"0-$d", driftDoc("v1", d), false, at(d)))
+    pipe.fullSyncBucketed(src.read(), None, "t0", buckets = 4)
+    val probe = wms.probe("ix0").get
+    val other = if (probe.id == "0-5") "0-6" else "0-5"
+    src.append(Seq(("ix0", probe.id, driftDoc("v1", 0), true, at(100)),
+      ("ix0", other, driftDoc("v1", 77), false, at(99))))
+    val r = pipe.incrementalSyncInPlace(src.read(), None, buckets = 4)
+    assert(modes(r) === Map("ix0" -> "incremental") && r.head.deletes === 1L)
+    assert(wms.probe("ix0") === Some(graft.sync.Probe(other, "v1")))
+    src.rewrite("ix0", "v2")
+    assert(modes(pipe.incrementalSyncInPlace(src.read(), None, buckets = 4)) === Map("ix0" -> "full"))
+    // rebuilt as a full sync publishes: from the source's live rows
+    holds(store, "ix0", IndexerOps.fullSyncScan(src.read(), Seq("ix0")))
   }
 
   test("registered views expose synced indexes to SQL; swap repoints them") {
@@ -665,10 +741,6 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     // late cutoff → small delta → only SOME of the 16 buckets affected
     val cutoff = "2024-01-29 00:00:00"
     val early = env.where(col(UpdatedAt) < lit(cutoff).cast("timestamp"))
-    // blue/green path as the truth
-    val (storeA, _, pipeA, _) = freshPipeline()
-    pipeA.fullSync(early, Some(Seq("click")), timestamp = "t1")
-    pipeA.incrementalSync(env, Some(Seq("click")), timestamp = "t2")
     // in-place bucketed path
     val (storeB, _, pipeB, _) = freshPipeline()
     pipeB.fullSyncBucketed(early, Some(Seq("click")), timestamp = "t1", buckets = 16)
@@ -685,18 +757,21 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
       }
     }
     val before = (0L until 16L).map(b => b -> bucketFiles(b)).toMap
-    val affected = IndexerOps.incrementalScan(env, Seq("click"),
-        new WatermarkStore(storeB.root).loadOrEpoch("click"))
+    val batch = IndexerOps.incrementalScan(env, Seq("click"),
+      new WatermarkStore(storeB.root).loadOrEpoch("click"))
+    // the truth: the pure CDC merge of the batch over the bootstrap scan
+    val truth = IndexerOps.cdcMerge(IndexerOps.fullSyncScan(early, Seq("click")), batch)
+    val affected = batch
       .select(storeB.bucketExpr(Id, 16).as("b")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(affected.nonEmpty && affected.size < 16,
       s"need a partial-bucket delta for a meaningful test, got ${affected.size}/16")
     val rep = pipeB.incrementalSyncInPlace(env, Some(Seq("click")), buckets = 16)
     assert(rep.head.mode == "incremental")
-    // end state identical to blue/green
-    val a = storeA.read("click").get.select(Id, Document).orderBy(Id).collect()
+    // end state identical to the CDC merge
+    val a = truth.select(Id, Document).orderBy(Id).collect()
     val b = storeB.read("click").get.select(Id, Document).orderBy(Id).collect()
-    assert(a.sameElements(b), "in-place end state diverges from blue/green")
+    assert(a.sameElements(b), "in-place end state diverges from the CDC merge")
     // untouched buckets: identical files, untouched mtimes
     (0L until 16L).filterNot(affected).foreach { bkt =>
       assert(bucketFiles(bkt) === before(bkt), s"unaffected bucket $bkt was rewritten")
@@ -780,6 +855,35 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
     val want = env.where(col(Idx) === "click" && !col(IsDeleted))
       .select(Id).distinct().count()
     assert(store.count("click") === want)
+  }
+
+  test("an in-place merge runs under the retry policy: a partial bucket swap that fails once ends as a clean run") {
+    val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
+    def round(store: IndexStore, retries: Int) = {
+      val pipe = new SyncPipeline(store, new WatermarkStore(store.root),
+        retry = RetryPolicy(maxRetries = retries, sleep = _ => ()))
+      pipe.fullSyncBucketed(env.where(col(UpdatedAt) < cutoff), Some(Seq("click")), "t1", buckets = 4)
+      pipe.incrementalSyncInPlace(env, Some(Seq("click")), buckets = 4)
+    }
+    // a store whose first multi-bucket swap moves half its buckets in,
+    // then fails
+    var failures = 1
+    val flaky = new IndexStore(spark, Files.createTempDirectory("graft-sync").toString) {
+      override def replaceBuckets(name: String, df: org.apache.spark.sql.DataFrame,
+          affected: Seq[Long]): Unit =
+        if (failures > 0 && affected.size > 1) {
+          failures -= 1
+          super.replaceBuckets(name, df, affected.take(affected.size / 2))
+          sys.error("store outage mid-swap")
+        } else super.replaceBuckets(name, df, affected)
+    }
+    val got = round(flaky, retries = 1)
+    assert(failures === 0, "the fault never fired; test is vacuous")
+    val clean = freshPipeline()._1
+    val want = round(clean, retries = 0)
+    assert(got.map(r => (r.mode, r.upserts, r.deletes)) === want.map(r => (r.mode, r.upserts, r.deletes)))
+    def state(s: IndexStore) = s.read("click").get.select(Id, Document).orderBy(Id).collect().toSeq
+    assert(state(flaky) === state(clean))
   }
 
   test("store bootstrap reclaims stranded _merge_/_stage_ dirs past the grace, keeps checkpoints and fresh stages") {
@@ -918,17 +1022,18 @@ class SyncPipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("an in-place round's Spark job count does not grow with the number of indexes") {
     import spark.implicits._
-    def at(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
     /** Jobs of one in-place round over a bucketed store of `n` indexes
-      * of which only `ix0` changed; the source is read before counting. */
+      * of which only `ix0` changed, with every index's drift probe set;
+      * the source is read before counting. */
     def roundJobs(n: Int): Int = {
-      val (_, _, pipe, _) = freshPipeline()
+      val (_, wms, pipe, _) = freshPipeline()
       val src = Files.createTempDirectory("graft-jobs").resolve("source").toString
       (for (i <- 0 until n; d <- 0 until 20)
-        yield (s"ix$i", s"$i-$d", s"""{"k": $d}""", false, at(d)))
+        yield (s"ix$i", s"$i-$d", driftDoc("v1", d), false, at(d)))
         .toDF(Idx, Id, Document, IsDeleted, UpdatedAt).write.parquet(src)
       pipe.fullSyncBucketed(spark.read.parquet(src), None, "t0", buckets = 4)
-      (0 until 10).map(d => ("ix0", s"0-$d", s"""{"k": ${100 + d}}""", d % 5 == 0, at(100 + d)))
+      assert((0 until n).forall(i => wms.probe(s"ix$i").isDefined))
+      (0 until 10).map(d => ("ix0", s"0-$d", driftDoc("v1", 100 + d), d % 5 == 0, at(100 + d)))
         .toDF(Idx, Id, Document, IsDeleted, UpdatedAt).write.mode("append").parquet(src)
       val source = spark.read.parquet(src)
       val (reports, jobs) = countingJobs(pipe.incrementalSyncInPlace(source, None, buckets = 4))
